@@ -162,6 +162,11 @@ def wait_for_quiet(max_wait_s: float = 600.0) -> float:
     return load
 
 
+def _positive(v) -> bool:
+    """A usable time: a real number above zero (not None, not a bool)."""
+    return isinstance(v, (int, float)) and not isinstance(v, bool) and v > 0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -352,14 +357,17 @@ def main() -> None:
         except (OSError, json.JSONDecodeError):
             old_anchor = None
         if old_anchor and old_anchor.get("sf_dir", "").rstrip("/") == sf_dir.rstrip("/"):
-            tot_s = round(
-                sum(s for n, s in times.items() if old_anchor["queries"].get(n)), 3
-            )
-            tot_d = round(
-                sum(d for n, d in old_anchor["queries"].items() if n in times), 3
-            )
+            # Both sums run over ONE name set: queries timed on both
+            # sides with a positive numeric time.
+            shared = [
+                n
+                for n, s in times.items()
+                if _positive(s) and _positive(old_anchor["queries"].get(n))
+            ]
+            tot_s = round(sum(times[n] for n in shared), 3)
+            tot_d = round(sum(old_anchor["queries"][n] for n in shared), 3)
             out["vs_duckdb_r11_anchor"] = {
-                "n_compared": sum(1 for n in times if old_anchor["queries"].get(n)),
+                "n_compared": len(shared),
                 "total_spark_sec": tot_s,
                 "total_duckdb_sec": tot_d,
                 "aggregate_ratio": round(tot_s / tot_d, 3) if tot_d else None,

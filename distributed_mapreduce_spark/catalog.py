@@ -19,6 +19,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_mapreduce_spark.sources.readers import scan_parquet
+
 
 class Catalog:
     """Named-dataset registry over a warehouse directory.
@@ -54,7 +56,7 @@ class Catalog:
             if fmt == "csv":
                 df = self.spark.read.option("header", True).csv(source)
             elif fmt == "parquet":
-                df = self.spark.read.parquet(source)
+                df = scan_parquet(self.spark, source)
             else:
                 df = self.spark.read.text(source)
         df.write.mode("overwrite").parquet(self._path(name))
@@ -62,7 +64,7 @@ class Catalog:
     # -- get: materialize a named dataset (REPL `get`, fileserver.py:1244-1246)
 
     def get(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(name))
+        return scan_parquet(self.spark, self._path(name))
 
     def get_to_local(self, name: str, local_path: str) -> None:
         """Export to one local CSV file (the reference's get writes one

@@ -75,6 +75,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # PySpark's DataFrame-debugging origin capture walks the Python
+        # stack and sends it over py4j on every Column call (24 py4j
+        # commands for `F.col("id").alias("a")` against 4 without it),
+        # a per-builder driver cost on every query. The trade: analysis
+        # errors still raise AnalysisException with the JVM message,
+        # but lose the Python `file:line` query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if extra_conf:

@@ -23,12 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.sources.readers import scan_parquet
+
 
 def read_change_feed(spark: SparkSession, feed_dir: str, max_files: int = 1) -> DataFrame:
     """File-source change feed: each parquet file in `feed_dir` becomes
     (at most `max_files` per trigger) one micro-batch of change rows
     (key + change_type + new-image columns)."""
-    schema = spark.read.parquet(feed_dir).schema
+    schema = scan_parquet(spark, feed_dir).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files)
@@ -46,7 +48,7 @@ def cdc_upsert_sink(state_dir: str, key: str):
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
         try:
-            state = spark.read.parquet(state_dir)
+            state = scan_parquet(spark, state_dir)
             touched = batch_df.select(key).distinct()
             new_images = batch_df.filter(
                 F.col("change_type").isin("insert", "update")

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from distributed_mapreduce_spark.sources.readers import scan_parquet
+
 #: events schema with event-time as TimestampType (micros).
 EVENTS_SCHEMA = T.StructType(
     [
@@ -497,7 +499,7 @@ def windowed_counts_batch_twin(
     delay_s = _interval_seconds(watermark)
 
     parts = [
-        spark.read.parquet(f).withColumn("_seq", F.lit(i))
+        scan_parquet(spark, f).withColumn("_seq", F.lit(i))
         for i, f in enumerate(files_in_order)
     ]
     allr = parts[0]

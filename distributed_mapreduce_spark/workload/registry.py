@@ -9,18 +9,18 @@ match exactly (the driver hashes values after sorting columns by name).
 from __future__ import annotations
 
 import os
+import tempfile
 import zipfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_mapreduce_spark.sources.readers import scan_parquet
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-
-#: SparkContext ids already carrying the package zip (idempotence).
-_SHIPPED: set[int] = set()
 
 
 def _ensure_package_on_workers(spark: SparkSession) -> None:
@@ -38,11 +38,14 @@ def _ensure_package_on_workers(spark: SparkSession) -> None:
     every task's sys.path.
     """
     sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED:
+    # The marker lives on the context object, so it dies with it: a
+    # successor context never inherits it (an `id(sc)` set would, when
+    # the successor lands at the stopped context's address), and the
+    # check costs no py4j call.
+    if getattr(sc, "_graft_shipped", False):
         return
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zip_path = os.path.join("/tmp", "spark_graft_pkg.zip")
+    zip_path = os.path.join(tempfile.gettempdir(), "spark_graft_pkg.zip")
     # rebuild if missing or stale vs any source file
     try:
         zmtime = os.path.getmtime(zip_path)
@@ -58,20 +61,26 @@ def _ensure_package_on_workers(spark: SparkSession) -> None:
         default=0.0,
     )
     if newest > zmtime:
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-            for dp, _, fs in os.walk(pkg_root):
-                for f in fs:
-                    if f.endswith(".py"):
-                        full = os.path.join(dp, f)
-                        rel = os.path.join(
-                            "distributed_mapreduce_spark",
-                            os.path.relpath(full, pkg_root),
-                        )
-                        z.write(full, rel)
-        os.replace(tmp, zip_path)
+        # Stage under a unique name so concurrent processes never
+        # publish each other's half-written zip; os.replace is atomic.
+        fd, tmp = tempfile.mkstemp(prefix="spark_graft_pkg.", suffix=".zip.tmp")
+        try:
+            with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w", zipfile.ZIP_DEFLATED) as z:
+                for dp, _, fs in os.walk(pkg_root):
+                    for f in fs:
+                        if f.endswith(".py"):
+                            full = os.path.join(dp, f)
+                            rel = os.path.join(
+                                "distributed_mapreduce_spark",
+                                os.path.relpath(full, pkg_root),
+                            )
+                            z.write(full, rel)
+            os.replace(tmp, zip_path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
     sc.addPyFile(zip_path)
-    _SHIPPED.add(key)
+    sc._graft_shipped = True
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -104,13 +113,16 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       oracle arithmetic.
     - Historic generators stored TIMESTAMP(NANOS), which Spark's
       vectorized reader rejects; read nanos as long and truncate to
-      micros (what DuckDB does on the oracle side).
+      micros (what DuckDB does on the oracle side). The conf is set
+      for every table, not only events, so a table's read confs (and
+      with them its schema-cache key, `sources.readers.scan_parquet`)
+      do not depend on which table the session read first.
     """
     _ensure_package_on_workers(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
 
         ev = _read_spread(spark, f"{sf_dir}/{name}.parquet", spread=False)
@@ -165,7 +177,7 @@ def _read_spread(spark: SparkSession, path: str, spread: bool):
     monotonically_increasing_id / input_file_name / spark_partition_id
     anywhere in the workload) and every oracle comparison is
     order-insensitive."""
-    df = spark.read.parquet(path)
+    df = scan_parquet(spark, path)
     if not spread:
         return df
     target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))

@@ -48,6 +48,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from distributed_mapreduce_spark.sources.readers import scan_parquet
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Per-process landing cache: source fingerprint -> landed directory.
@@ -204,4 +205,4 @@ def q_stream_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = tempfile.mkdtemp(prefix="spark_graft_stream_landing_result_")
     _LANDED[f"result:{name}"] = out_dir
     result.write.mode("overwrite").parquet(out_dir)
-    return spark.read.parquet(out_dir)
+    return scan_parquet(spark, out_dir)

@@ -166,3 +166,37 @@ def test_driver_contract_location_independent(tmp_path):
         timeout=300,
     )
     assert "LOC_INDEP_OK" in out.stdout, out.stderr[-2000:]
+
+
+def test_package_ships_once_per_context(tmp_path, monkeypatch):
+    """The package zip is shipped once per SparkContext: a new context
+    that lands at a stopped one's address (same `id(sc)`) still gets it.
+    The zip is staged under a unique name in the temp dir and
+    published whole."""
+    import os
+    import tempfile
+    import types
+    import zipfile
+
+    from distributed_mapreduce_spark.workload import registry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    # Every object reports the same id(), as a recycled address would.
+    monkeypatch.setattr(registry, "id", lambda _: 1, raising=False)
+    shipped: list[tuple[str, str]] = []
+
+    def context(app: str) -> types.SimpleNamespace:
+        sc = types.SimpleNamespace()
+        sc.addPyFile = lambda p: shipped.append((app, p))
+        return types.SimpleNamespace(sparkContext=sc)
+
+    first = context("app-1")
+    registry._ensure_package_on_workers(first)
+    registry._ensure_package_on_workers(first)
+    registry._ensure_package_on_workers(context("app-2"))
+
+    zip_path = str(tmp_path / "spark_graft_pkg.zip")
+    assert shipped == [("app-1", zip_path), ("app-2", zip_path)]
+    assert os.listdir(tmp_path) == ["spark_graft_pkg.zip"]
+    with zipfile.ZipFile(zip_path) as z:
+        assert "distributed_mapreduce_spark/workload/registry.py" in z.namelist()

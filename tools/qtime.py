@@ -18,6 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+USAGE = "usage: python tools/qtime.py [sf_dir] query [query ...] [--trials N]"
+
 
 def main() -> int:
     # Accept both `--trials=N` and `--trials N` (ADVICE r12: the
@@ -34,6 +36,9 @@ def main() -> int:
                 trials = int(a.split("=", 1)[1])
             else:
                 i += 1
+                if i == len(argv):
+                    print(USAGE, file=sys.stderr)
+                    return 2
                 trials = int(argv[i])
         elif not a.startswith("--"):
             args.append(a)
