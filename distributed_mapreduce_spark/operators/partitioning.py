@@ -11,32 +11,9 @@ are reproducible and oracle-checkable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-
-def _persist_prefix_input(df: DataFrame) -> DataFrame:
-    """Persist the (narrow) input of a range-shuffle prefix-sum/rank.
-
-    `repartitionByRange` pays a full sampling pass over its child to
-    compute the partition bounds, so without a cache the ENTIRE upstream
-    plan (often a tokenize/explode/aggregate chain much heavier than the
-    narrow rows handed to the prefix sum) executes twice: once for the
-    sample job, once for the shuffle map stage (measured r12:
-    text_packing's tokenize ran 2x, ks_statistic's per-value aggregate
-    3x). Caching the narrow input makes the sample read the cache and
-    costs one pass + a cache of the already-projected rows — the callers
-    all project down to (order cols, value col) before calling, so the
-    cached bytes are a small fraction of their raw input at any scale.
-
-    `SPARK_GRAFT_PREFIXSUM_INPUT_PERSIST=0` restores the uncached
-    behavior (A/B probe switch; default on)."""
-    if os.environ.get("SPARK_GRAFT_PREFIXSUM_INPUT_PERSIST", "1") == "0":
-        return df
-    return df.persist()
 
 
 def _local_row_number(with_pid: DataFrame, out_col: str) -> DataFrame:
@@ -49,31 +26,14 @@ def _local_row_number(with_pid: DataFrame, out_col: str) -> DataFrame:
     zero columns, yet paid for all of them). Row order is the cached
     `sortWithinPartitions` order — projections preserve it, and a lost
     cache partition recomputes through the deterministic range shuffle,
-    the same retry contract the Arrow pass relied on.
+    the same retry contract `global_cumsum`'s Arrow pass relies on.
 
     Bound (ADVICE r12): `monotonically_increasing_id` allots 33 bits to
     the per-partition counter, so a SINGLE physical partition holding
     more than 2^33 (~8.6e9) rows would silently wrap the local index.
     Callers size partitions via `num_partitions`/defaultParallelism;
     keeping partitions under ~10^9 rows (they must, to sort in memory
-    at all) keeps 2^33 unreachable by orders of magnitude.
-
-    `SPARK_GRAFT_JVM_LOCAL_RN=0` restores the mapInPandas numbering
-    (A/B probe switch; default on)."""
-    if os.environ.get("SPARK_GRAFT_JVM_LOCAL_RN", "1") == "0":
-        out_schema = StructType(
-            with_pid.schema.fields + [StructField(out_col, LongType(), False)]
-        )
-
-        def attach_local_rn(batches):
-            seen = 0
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf[out_col] = range(seen + 1, seen + 1 + len(pdf))
-                seen += len(pdf)
-                yield pdf
-
-        return with_pid.mapInPandas(attach_local_rn, schema=out_schema)
+    at all) keeps 2^33 unreachable by orders of magnitude."""
     return with_pid.withColumn(
         out_col,
         (F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)) + 1)
@@ -165,8 +125,8 @@ def row_range_shard_scalable(
 
     1. `repartitionByRange` on the order columns (sampled bounds — the
        parallel sort) + `sortWithinPartitions`.
-    2. One Arrow `mapInPandas` pass attaches a per-partition local row
-       number — narrow, order-preserving, no shuffle.
+    2. A JVM projection (`_local_row_number`) attaches a per-partition
+       local row number — narrow, order-preserving, no shuffle.
     3. Per-partition row counts (tiny: one row per partition) turn into
        cumulative offsets with a window over that P-row relation —
        global, but over ~hundreds of rows, the benign pct-of-total
@@ -182,7 +142,16 @@ def row_range_shard_scalable(
     """
     spark = df.sparkSession
     p = num_partitions or spark.sparkContext.defaultParallelism
-    src = _persist_prefix_input(df)
+    # Persist the (narrow) input: `repartitionByRange` pays a sampling
+    # pass over its child to compute the partition bounds, so without a
+    # cache the whole upstream plan (often a tokenize/explode/aggregate
+    # chain much heavier than the narrow rows handed over here) runs
+    # twice, once for the sample job and once for the shuffle map stage
+    # (measured r12: text_packing's tokenize ran 2x, ks_statistic's
+    # per-value aggregate 3x). Callers project down to (order cols,
+    # value col) first, so the cache is a small fraction of their raw
+    # input. global_cumsum and global_rank do the same.
+    src = df.persist()
     ranged = src.repartitionByRange(p, *[F.col(c) for c in order_cols]).sortWithinPartitions(
         *order_cols
     )
@@ -276,7 +245,7 @@ def global_cumsum(
     """
     spark = df.sparkSession
     p = num_partitions or spark.sparkContext.defaultParallelism
-    src = _persist_prefix_input(df)
+    src = df.persist()  # see row_range_shard_scalable
     ranged = src.repartitionByRange(p, *order_exprs).sortWithinPartitions(*order_exprs)
     # Persist BEFORE fanning out: both consumers below (the local-cumsum
     # mapInPandas and the per-partition sums) must observe the SAME
@@ -327,7 +296,7 @@ def global_rank(
     """
     spark = df.sparkSession
     p = num_partitions or spark.sparkContext.defaultParallelism
-    src = _persist_prefix_input(df)
+    src = df.persist()  # see row_range_shard_scalable
     ranged = src.repartitionByRange(p, *order_exprs).sortWithinPartitions(*order_exprs)
     # Persist before the two-branch fan-out (same rationale as
     # global_cumsum): rank offsets are only correct if the numbered rows

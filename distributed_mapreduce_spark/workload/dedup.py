@@ -510,8 +510,6 @@ def _rare_index_pairs(
     them widens the one existing shuffle by four longs instead."""
     from pyspark.sql import Window
 
-    import os
-
     inv = sh_df.select("doc_id", F.size("bh").alias("sz"),
                        F.explode("bh").alias("gram"))
     df_w = Window.partitionBy("gram")
@@ -528,10 +526,8 @@ def _rare_index_pairs(
     # Generate→Window(gram)→Window(doc) chain appears once per join
     # side). Same checkpoint rationale as `shingle_table`; the cached
     # rows are the df-capped inverted index, strictly smaller than the
-    # raw one. `SPARK_GRAFT_RARE_PERSIST=0` restores the uncached shape
-    # (A/B probe switch).
-    if os.environ.get("SPARK_GRAFT_RARE_PERSIST", "1") != "0":
-        rare = rare.persist()
+    # raw one.
+    rare = rare.persist()
     l = rare.alias("l")
     r = rare.alias("r")
     joined = l.join(

@@ -68,98 +68,53 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     earliest view, the earliest click AFTER that view, the earliest
     purchase AFTER that click, and the stage reached.
 
-    Plan: three filtered min-aggregates, each joined to the previous
-    stage on user_id — same shuffle key throughout, so the exchanges
-    collapse; no global windows, no per-user event collection."""
+    Plan: one projected events scan, one user_id exchange. Each stage
+    time is a per-user window min over the previous stage's window
+    column, and a same-partitioning hash aggregate picks each user's
+    row; no global windows, no per-user event collection."""
     ev = table(spark, sf_dir, "events")
     view, click, purchase = FUNNEL_STAGES
 
-    import os
-
-    if os.environ.get("SPARK_GRAFT_FUNNEL_WINDOW", "1") == "1":
-        # Single-scan shape (r13 default after the paired A/B win,
-        # VERDICT r12 #10): the four events scans of the join shape
-        # (three filtered aggregates + the distinct-user spine)
-        # collapse into ONE projected scan and one user_id exchange.
-        # Each stage time is a per-user window min over the previous
-        # stage's window result (the Window nodes chain on the same
-        # partitioning — one sort, no extra shuffle), and the final
-        # per-user pick is a same-partitioning hash aggregate.
-        # Measured (AB_RFM_FUNNEL_r13.json, cold min-of-3 paired):
-        # 0.475 vs 0.743 s at 32 cores, 0.400 vs 0.502 at 8. At scale
-        # the trade is 3 fewer full scans against shuffling all rows
-        # once instead of the ~60% the join shape moves (funnel types
-        # are 3 of 5 uniform) — net fewer bytes touched. Caveat: a
-        # pathologically hot user serializes into one window task,
-        # where the join shape's partial aggregates would absorb it
-        # map-side (same per-user-window posture as events_sessionize).
-        # SPARK_GRAFT_FUNNEL_WINDOW=0 restores the join shape.
-        w = Window.partitionBy("user_id")
-        rows = ev.select("user_id", "event_type", "ts")
-        rows = rows.withColumn(
-            "t_view",
-            F.min(F.when(F.col("event_type") == view, F.col("ts"))).over(w),
-        )
-        rows = rows.withColumn(
-            "t_click",
-            F.min(
-                F.when(
-                    (F.col("event_type") == click) & (F.col("ts") > F.col("t_view")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        rows = rows.withColumn(
-            "t_purchase",
-            F.min(
-                F.when(
-                    (F.col("event_type") == purchase)
-                    & (F.col("ts") > F.col("t_click")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        per_user = rows.groupBy("user_id").agg(
-            F.min("t_view").alias("t_view"),
-            F.min("t_click").alias("t_click"),
-            F.min("t_purchase").alias("t_purchase"),
-        )
-        stage = (
-            F.when(F.col("t_purchase").isNotNull(), 3)
-            .when(F.col("t_click").isNotNull(), 2)
-            .when(F.col("t_view").isNotNull(), 1)
-            .otherwise(0)
-        )
-        return per_user.select(
-            "user_id",
-            "t_view",
-            "t_click",
-            "t_purchase",
-            stage.cast("int").alias("stage_reached"),
-        )
-
-    s1 = ev.filter(F.col("event_type") == view).groupBy("user_id").agg(
-        F.min("ts").alias("t_view")
+    # Won the paired A/B over the three-join shape (VERDICT r12 #10;
+    # AB_RFM_FUNNEL_r13.json, cold min-of-3 paired): 0.475 vs 0.743 s
+    # at 32 cores, 0.400 vs 0.502 at 8. The join shape scanned events
+    # four times (three filtered aggregates + the distinct-user spine);
+    # here the Window nodes chain on one partitioning — one sort, no
+    # extra shuffle. At scale the trade is 3 fewer full scans against
+    # shuffling all rows once instead of the ~60% the join shape moved
+    # (funnel types are 3 of 5 uniform) — net fewer bytes touched.
+    # Caveat: a pathologically hot user serializes into one window
+    # task, where the join shape's partial aggregates absorbed it
+    # map-side (same per-user-window posture as events_sessionize).
+    w = Window.partitionBy("user_id")
+    rows = ev.select("user_id", "event_type", "ts")
+    rows = rows.withColumn(
+        "t_view",
+        F.min(F.when(F.col("event_type") == view, F.col("ts"))).over(w),
     )
-    s2 = (
-        ev.filter(F.col("event_type") == click)
-        .join(s1, "user_id")
-        .filter(F.col("ts") > F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
+    rows = rows.withColumn(
+        "t_click",
+        F.min(
+            F.when(
+                (F.col("event_type") == click) & (F.col("ts") > F.col("t_view")),
+                F.col("ts"),
+            )
+        ).over(w),
     )
-    s3 = (
-        ev.filter(F.col("event_type") == purchase)
-        .join(s2, "user_id")
-        .filter(F.col("ts") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_purchase"))
+    rows = rows.withColumn(
+        "t_purchase",
+        F.min(
+            F.when(
+                (F.col("event_type") == purchase)
+                & (F.col("ts") > F.col("t_click")),
+                F.col("ts"),
+            )
+        ).over(w),
     )
-    u = ev.select("user_id").distinct()
-    out = (
-        u.join(s1, "user_id", "left")
-        .join(s2, "user_id", "left")
-        .join(s3, "user_id", "left")
+    per_user = rows.groupBy("user_id").agg(
+        F.min("t_view").alias("t_view"),
+        F.min("t_click").alias("t_click"),
+        F.min("t_purchase").alias("t_purchase"),
     )
     stage = (
         F.when(F.col("t_purchase").isNotNull(), 3)
@@ -167,8 +122,12 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("t_view").isNotNull(), 1)
         .otherwise(0)
     )
-    return out.select(
-        "user_id", "t_view", "t_click", "t_purchase", stage.cast("int").alias("stage_reached")
+    return per_user.select(
+        "user_id",
+        "t_view",
+        "t_click",
+        "t_purchase",
+        stage.cast("int").alias("stage_reached"),
     )
 
 
@@ -1098,62 +1057,50 @@ def q_orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             out, F.expr("(_rk - 1) * 4 div total + 1")
         ).drop("_rk", "total")
 
-    import os
-
-    if os.environ.get("SPARK_GRAFT_RFM_PARALLEL", "1") == "1":
-        # Three-narrow-projection shape (r13 default, VERDICT r12 #9):
-        # instead of chaining the three range shuffles over the
-        # progressively wider customer relation (each quartile's output
-        # is the next rank's input — 3 sequential barriers,
-        # ~(4+5+6)-column shuffle rows), rank three INDEPENDENT narrow
-        # projections (2-3 columns each; the branches share the
-        # persisted `cust` scan and their jobs overlap), then recombine
-        # with ONE tagged-union hash aggregate on custkey — map-side
-        # combinable, no join exchanges. Measured
-        # (AB_RFM_FUNNEL_r13.json, cold min-of-3 paired): tie at 32
-        # cores (2.374 both arms), −27% at 8 (1.224 vs 1.680); strictly
-        # fewer shuffled bytes and fewer cached relations either way.
-        # SPARK_GRAFT_RFM_PARALLEL=0 restores the chained shape.
-        cust = cust.persist()
-        branches = []
-        for order_exprs, keep, out in (
-            ([F.col("recency_days"), F.col("custkey")], ["recency_days"], "r_q"),
-            ([F.col("frequency").desc(), F.col("custkey")], ["frequency"], "f_q"),
-            (
-                [F.col("monetary_cents").desc(), F.col("custkey")],
-                ["monetary_cents"],
-                "m_q",
-            ),
-        ):
-            ranked = quartile(cust.select("custkey", *keep), order_exprs, out)
-            branches.append(
-                ranked.select(
-                    "custkey",
-                    F.when(F.lit(out == "r_q"), F.col(out)).alias("_r"),
-                    F.when(F.lit(out == "f_q"), F.col(out)).alias("_f"),
-                    F.when(F.lit(out == "m_q"), F.col(out)).alias("_m"),
-                    (
-                        F.col("monetary_cents")
-                        if out == "m_q"
-                        else F.lit(None).cast("long")
-                    ).alias("_mc"),
-                )
+    # Three-narrow-projection shape (won the paired A/B, VERDICT r12 #9):
+    # instead of chaining the three range shuffles over the
+    # progressively wider customer relation (each quartile's output
+    # is the next rank's input — 3 sequential barriers,
+    # ~(4+5+6)-column shuffle rows), rank three INDEPENDENT narrow
+    # projections (2-3 columns each; the branches share the
+    # persisted `cust` scan and their jobs overlap), then recombine
+    # with ONE tagged-union hash aggregate on custkey — map-side
+    # combinable, no join exchanges. Measured
+    # (AB_RFM_FUNNEL_r13.json, cold min-of-3 paired): tie at 32
+    # cores (2.374 both arms), −27% at 8 (1.224 vs 1.680); strictly
+    # fewer shuffled bytes and fewer cached relations either way.
+    cust = cust.persist()
+    branches = []
+    for order_exprs, keep, out in (
+        ([F.col("recency_days"), F.col("custkey")], ["recency_days"], "r_q"),
+        ([F.col("frequency").desc(), F.col("custkey")], ["frequency"], "f_q"),
+        (
+            [F.col("monetary_cents").desc(), F.col("custkey")],
+            ["monetary_cents"],
+            "m_q",
+        ),
+    ):
+        ranked = quartile(cust.select("custkey", *keep), order_exprs, out)
+        branches.append(
+            ranked.select(
+                "custkey",
+                F.when(F.lit(out == "r_q"), F.col(out)).alias("_r"),
+                F.when(F.lit(out == "f_q"), F.col(out)).alias("_f"),
+                F.when(F.lit(out == "m_q"), F.col(out)).alias("_m"),
+                (
+                    F.col("monetary_cents")
+                    if out == "m_q"
+                    else F.lit(None).cast("long")
+                ).alias("_mc"),
             )
-        u = branches[0].unionAll(branches[1]).unionAll(branches[2])
-        cust = u.groupBy("custkey").agg(
-            F.max("_r").alias("r_q"),
-            F.max("_f").alias("f_q"),
-            F.max("_m").alias("m_q"),
-            F.max("_mc").alias("monetary_cents"),
         )
-    else:
-        cust = quartile(cust, [F.col("recency_days"), F.col("custkey")], "r_q")
-        cust = quartile(
-            cust, [F.col("frequency").desc(), F.col("custkey")], "f_q"
-        )
-        cust = quartile(
-            cust, [F.col("monetary_cents").desc(), F.col("custkey")], "m_q"
-        )
+    u = branches[0].unionAll(branches[1]).unionAll(branches[2])
+    cust = u.groupBy("custkey").agg(
+        F.max("_r").alias("r_q"),
+        F.max("_f").alias("f_q"),
+        F.max("_m").alias("m_q"),
+        F.max("_mc").alias("monetary_cents"),
+    )
     return (
         cust.select(
             F.concat(

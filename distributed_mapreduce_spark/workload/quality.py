@@ -882,12 +882,8 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Generate→Window→Window chain once per branch). Cache rows are the
     # nonstop token stream — the same class as the rare-gram index
     # cache, where recomputing window sorts measured strictly worse
-    # than the cache write. `SPARK_GRAFT_RAKE_PERSIST=0` restores the
-    # uncached shape.
-    import os
-
-    if os.environ.get("SPARK_GRAFT_RAKE_PERSIST", "1") != "0":
-        nonstop = nonstop.persist()
+    # than the cache write.
+    nonstop = nonstop.persist()
     wordstats = nonstop.groupBy("tok").agg(
         F.expr(f"CAST(sum(plen) * {RAKE_SCALE} DIV count(*) AS BIGINT)").alias(
             "wscore"

@@ -44,6 +44,8 @@ Scale shape (100 TB):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -110,21 +112,15 @@ def _two_stage_topk(
     )
 
 
+# Corpus parquet size above which `_bm25_relations` persists its
+# doc-grain relation (rationale there).
+BM25_TF_PERSIST_BYTES = 256 << 20
+
+
 def _bm25_persist_corpus(docs: DataFrame) -> bool:
-    """Adaptive persist decision for the BM25 doc-grain relation.
-
-    Explicit ``SPARK_GRAFT_BM25_TF_PERSIST=0/1`` forces the branch;
-    otherwise persist iff the corpus parquet bytes (driver-side file
-    metadata — no job) exceed ``SPARK_GRAFT_BM25_TF_PERSIST_BYTES``
-    (default 256 MiB). Rationale in `_bm25_relations`."""
-    import os
-
-    forced = os.environ.get("SPARK_GRAFT_BM25_TF_PERSIST")
-    if forced is not None and forced != "":
-        return forced == "1"
-    threshold = int(
-        os.environ.get("SPARK_GRAFT_BM25_TF_PERSIST_BYTES", str(256 << 20))
-    )
+    """Adaptive persist decision for the BM25 doc-grain relation:
+    persist iff the corpus parquet bytes (driver-side file metadata —
+    no job) reach ``BM25_TF_PERSIST_BYTES``."""
     total = 0
     for uri in docs.inputFiles():
         path = uri[7:] if uri.startswith("file://") else uri
@@ -132,9 +128,9 @@ def _bm25_persist_corpus(docs: DataFrame) -> bool:
             total += os.path.getsize(path)
         except OSError:
             return False  # non-local source: stay conservative
-        if total >= threshold:
+        if total >= BM25_TF_PERSIST_BYTES:
             return True
-    return total >= threshold
+    return total >= BM25_TF_PERSIST_BYTES
 
 
 def _bm25_relations(
@@ -176,9 +172,8 @@ def _bm25_relations(
     # partial-agg codegen pipeline and a 0.6 MB corpus pass is cheaper
     # than any cache), but at scale the repeated tokenize passes (3
     # per scored action, 4 for ltr) dominate the tiny cache write.
-    # Decision: persist when the documents parquet exceeds
-    # SPARK_GRAFT_BM25_TF_PERSIST_BYTES (default 256 MiB). Explicit
-    # SPARK_GRAFT_BM25_TF_PERSIST=0/1 still forces either branch.
+    # Decision: persist when the documents parquet reaches
+    # BM25_TF_PERSIST_BYTES (256 MiB).
     if _bm25_persist_corpus(docs):
         docterms = tokd.select(
             "doc_id",

@@ -1,0 +1,67 @@
+"""Source- and data-level contracts that need no Spark session.
+
+- Library code has one plan per query: an A/B env switch must not
+  come back. The only environment reads allowed in the package are the
+  deployment settings and one diagnostic.
+- `latest_event_per_user_agg` packs (ts, event_id) into
+  ``unix_micros(ts) * 10^11 + event_id``. That order is exact only while
+  every event_id is below 10^11 and no ts is before the epoch, so the
+  test data and the scaling harness's shifted ids must stay inside it.
+"""
+
+from __future__ import annotations
+
+import glob
+import os
+import re
+import sys
+
+import duckdb
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "distributed_mapreduce_spark")
+
+#: (path relative to the package, variable) pairs the library may read.
+ALLOWED_ENV_READS = {
+    ("session.py", "SPARK_GRAFT_CPUS"),
+    ("session.py", "SPARK_GRAFT_DRIVER_MEM"),
+    ("workload/streaming_q.py", "TZ"),
+}
+
+PACK = 10**11
+
+
+def test_library_reads_no_env_switch():
+    reads = set()
+    for path in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, PKG)
+        with open(path) as f:
+            for lineno, line in enumerate(f, 1):
+                if not re.search(r"\b(environ|getenv)\b", line):
+                    continue
+                m = re.search(r"""(?:environ|getenv)\s*(?:\.get)?\s*[\[(]\s*["'](\w+)["']""", line)
+                reads.add((rel, m.group(1) if m else f"<unparsed at line {lineno}>"))
+    assert reads <= ALLOWED_ENV_READS, sorted(reads - ALLOWED_ENV_READS)
+
+
+def test_latest_event_packing_bounds_hold_on_test_data(sf_dir):
+    event_sets = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*", "events.parquet")))
+    assert event_sets
+    for events in event_sets:
+        max_id, ts_ok = duckdb.sql(
+            f"SELECT max(event_id), min(ts) >= TIMESTAMP '1970-01-01' "
+            f"FROM read_parquet('{events}')"
+        ).fetchone()
+        assert 0 <= max_id < PACK, events
+        assert ts_ok, events
+
+
+def test_latest_event_packing_bound_covers_scaling_harness(sf_dir):
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from scaling_bench import ID_OFFSET
+
+    events = os.path.join(os.path.dirname(sf_dir), "sf0.1", "events.parquet")
+    (max_id,) = duckdb.sql(f"SELECT max(event_id) FROM read_parquet('{events}')").fetchone()
+    # x1000 = 10 replicas of the x100 corpus at id stride 100, so the
+    # largest shift is (9 * 100 + 99) * ID_OFFSET.
+    assert max_id + 999 * ID_OFFSET < PACK

@@ -119,27 +119,22 @@ def test_row_range_shard_scalable_has_no_single_task_sort(spark):
     assert ", true, 0" not in plan
 
 
-def test_global_rank_jvm_numbering_matches_arrow_pass(spark, monkeypatch):
-    # r12: the per-partition local row number moved from a mapInPandas
-    # pass to a monotonically_increasing_id projection. The two paths
-    # must assign identical global ranks on an adversarial key space
-    # (shuffled order, duplicate-free total order, multiple partitions).
+def test_global_rank_jvm_numbering_is_exact(spark):
+    # The per-partition local row number is a monotonically_increasing_id
+    # projection masked to its low 33 bits. The keys (i*53) % 997 are a
+    # shuffled permutation of 0..996 spread over 8 range partitions, so
+    # the exact global rank of each row is key + 1.
     from distributed_mapreduce_spark.operators.partitioning import global_rank
 
     df = spark.createDataFrame([((i * 53) % 997,) for i in range(997)], ["key"])
-    monkeypatch.setenv("SPARK_GRAFT_JVM_LOCAL_RN", "0")
-    want = {
-        (r["key"], r["rank"], r["total"])
-        for r in global_rank(df, [F.col("key")], num_partitions=8).collect()
-    }
-    spark.catalog.clearCache()
-    monkeypatch.setenv("SPARK_GRAFT_JVM_LOCAL_RN", "1")
-    got = {
-        (r["key"], r["rank"], r["total"])
-        for r in global_rank(df, [F.col("key")], num_partitions=8).collect()
-    }
-    assert got == want
-    assert {r[1] for r in got} == set(range(1, 998))  # dense 1..n
+    try:
+        rows = global_rank(df, [F.col("key")], num_partitions=8).collect()
+    finally:
+        spark.catalog.clearCache()
+    assert len(rows) == 997
+    for r in rows:
+        assert r["rank"] == r["key"] + 1
+        assert r["total"] == 997
 
 
 def test_bucket_assignments_are_deterministic(spark):

@@ -605,6 +605,7 @@ def test_bm25_adaptive_persist_branches_agree(spark, sf_dir, monkeypatch):
     persist branch above it, and (b) produce IDENTICAL rows either way
     — the persist is a plan property, never a result property."""
     from distributed_mapreduce_spark.plans import explain_str
+    from distributed_mapreduce_spark.workload import retrieval
     from distributed_mapreduce_spark.workload.registry import table as _table
     from distributed_mapreduce_spark.workload.retrieval import (
         _bm25_persist_corpus,
@@ -612,24 +613,14 @@ def test_bm25_adaptive_persist_branches_agree(spark, sf_dir, monkeypatch):
     )
 
     docs = _table(spark, sf_dir, "documents")
-    monkeypatch.delenv("SPARK_GRAFT_BM25_TF_PERSIST", raising=False)
     # sf0.001 documents are a few kB — far below the 256 MiB default
     assert _bm25_persist_corpus(docs) is False
-    monkeypatch.setenv("SPARK_GRAFT_BM25_TF_PERSIST_BYTES", "1")
-    assert _bm25_persist_corpus(docs) is True
-    # explicit force beats the threshold in both directions
-    monkeypatch.setenv("SPARK_GRAFT_BM25_TF_PERSIST", "0")
-    assert _bm25_persist_corpus(docs) is False
-    monkeypatch.setenv("SPARK_GRAFT_BM25_TF_PERSIST", "1")
-    assert _bm25_persist_corpus(docs) is True
-
-    monkeypatch.delenv("SPARK_GRAFT_BM25_TF_PERSIST", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_BM25_TF_PERSIST_BYTES", raising=False)
     plain = q_bm25_top_docs(spark, sf_dir)
     assert "InMemoryTableScan" not in explain_str(plain)
     base = sorted(map(tuple, plain.collect()))
 
-    monkeypatch.setenv("SPARK_GRAFT_BM25_TF_PERSIST", "1")
+    monkeypatch.setattr(retrieval, "BM25_TF_PERSIST_BYTES", 1)
+    assert _bm25_persist_corpus(docs) is True
     try:
         cached_df = q_bm25_top_docs(spark, sf_dir)
         assert "InMemoryTableScan" in explain_str(cached_df)

@@ -1,11 +1,11 @@
-"""Dump `.explain("formatted")` for headline queries into plans/r12/.
+"""Dump `.explain("formatted")` for headline queries into plans/<round>/.
 
-Usage: python tools/dump_plans_r12.py <suffix> [query ...]
+Usage: python tools/dump_plans.py <round> <suffix> [query ...]
 
-Writes plans/r12/<query>_<suffix>.txt for each query (default: every
+Writes plans/<round>/<query>_<suffix>.txt for each query (default: every
 bench.py HEADLINE query). `suffix` is typically `before` or `after` —
 the optimization round's evidence files (the judge reads these instead
-of running Spark).
+of running Spark). $SPARK_GRAFT_SF_DIR picks the data (default sf0.01).
 """
 
 from __future__ import annotations
@@ -17,8 +17,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = sys.argv[2:]
+    if len(sys.argv) < 3:
+        print(__doc__, file=sys.stderr)
+        return 2
+    round_tag, suffix = sys.argv[1], sys.argv[2]
+    only = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     from bench import HEADLINE, MATERIALIZING
@@ -26,10 +29,12 @@ def main() -> int:
     from distributed_mapreduce_spark.session import get_spark
     from distributed_mapreduce_spark.workload import QUERIES
 
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
+    out_dir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_tag
+    )
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("dump_plans_r12", cpus=8, shuffle_partitions=8)
+    spark = get_spark("dump_plans", cpus=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     names = only or [n for n in HEADLINE if n not in MATERIALIZING]
