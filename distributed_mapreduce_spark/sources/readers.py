@@ -92,12 +92,13 @@ _SCHEMAS: OrderedDict[tuple, T.StructType] = OrderedDict()
 _SCHEMAS_LOCK = threading.Lock()
 
 
-def _fingerprint(path: str) -> tuple | None:
+def fingerprint(path: str) -> tuple | None:
     """``(relpath, st_size, st_mtime_ns, st_ino)`` of every file under a
     local path, or None when the path is a URI, a glob or unreadable.
     Any rewrite (Spark writes new part files; an in-place write moves
-    size or mtime) yields a new fingerprint, so a stale schema is never
-    served."""
+    size or mtime) yields a new fingerprint, so a memo keyed on it (the
+    schema cache here, the graph wedge and dedup pair volumes) is never
+    served stale."""
     if "://" in path or any(c in path for c in "*?[{"):
         return None
     try:
@@ -131,7 +132,7 @@ def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     with the cached schema and runs no job. A path that cannot be
     fingerprinted (a non-local URI or a glob) infers on every call.
     """
-    files = _fingerprint(path)
+    files = fingerprint(path)
     if files is None:
         return spark.read.parquet(path)
     confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.sources.readers import fingerprint
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: MinHash parameters: k = bands * rows hash functions.
@@ -419,44 +420,12 @@ PAIR_MAX_PARTITIONS = 4096
 _PAIR_ROWS_CACHE: dict[tuple, int] = {}
 
 
-def _dataset_fingerprint(path: str) -> tuple:
-    """Cheap driver-side fingerprint of the data under ``path``: sorted
-    (relpath, mtime_ns, size) of every data file. Regenerating the data
-    in place changes the fingerprint, so a memoized pair volume keyed on
-    it can never go stale within a session (ADVICE r07: the old
-    (sf_dir, max_df) key survived an in-place rewrite and mis-sized the
-    shuffle). Pure ``os.stat`` — no Spark job, no file reads."""
-    import os
-
-    entries = []
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            if fn.endswith((".parquet", ".csv", ".txt", ".orc", ".json")):
-                p = os.path.join(root, fn)
-                try:
-                    st = os.stat(p)
-                except OSError:
-                    continue
-                entries.append(
-                    (os.path.relpath(p, path), st.st_mtime_ns, st.st_size)
-                )
-    if not entries:
-        # Non-local URIs (s3://, hdfs://) and missing dirs walk to
-        # nothing; without the path in the key every such dataset would
-        # collapse onto ONE memo entry and one dataset's measured pair
-        # volume would mis-size another's shuffle (ADVICE r08). Keying
-        # on the raw path keeps them distinct (at the cost of staleness
-        # protection, which os.stat cannot provide for remote stores —
-        # clear_pair_volume_cache() is the escape hatch there).
-        return ("__no_local_listing__", path)
-    return tuple(sorted(entries))
-
-
 def clear_pair_volume_cache() -> None:
     """Explicit invalidation hook for the memoized pair-volume sizing
     aggregate (the fingerprint key makes staleness impossible for
-    on-disk regeneration; this covers exotic cases like a remounted
-    store where mtimes are not trustworthy)."""
+    on-disk regeneration; this covers remote stores, which ``os.stat``
+    cannot fingerprint, and remounts whose mtimes are not
+    trustworthy)."""
     _PAIR_ROWS_CACHE.clear()
 
 
@@ -471,14 +440,16 @@ def _pair_shuffle_parts(rare: DataFrame, cache_key: tuple | None) -> int | None:
     sizing job (a 1-row sum over the rare-gram index) — plan-only
     tests that must stay job-free pass ``sf_dir=None``.
 
-    The memo key is (dataset fingerprint, params), not (path, params):
-    if the files under ``sf_dir`` are regenerated mid-session the
-    fingerprint changes and the volume is re-measured instead of
-    reusing a stale size (ADVICE r07)."""
+    The memo key is (path, file fingerprint, params), not (path,
+    params): if the files under ``sf_dir`` are regenerated mid-session
+    the fingerprint changes and the volume is re-measured instead of
+    reusing a stale size (ADVICE r07). A path that cannot be
+    fingerprinted (a remote URI) keeps its own entry under its path
+    (ADVICE r08)."""
     if cache_key is None:
         return None
-    if cache_key and isinstance(cache_key[0], str):
-        cache_key = (_dataset_fingerprint(cache_key[0]),) + cache_key[1:]
+    sf_dir, *params = cache_key
+    cache_key = (sf_dir, fingerprint(sf_dir), *params)
     if cache_key not in _PAIR_ROWS_CACHE:
         row = rare.agg(
             F.coalesce(

@@ -25,9 +25,10 @@ SESSION_GAP_MIN = 30
 @query(
     "events_tumbling",
     oracle="""
-    SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, event_type,
+    SELECT CAST(time_bucket(INTERVAL '1 hour', ts) AS TIMESTAMP_NS) AS ws, event_type,
            count(*) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS sum_value
+           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS VARCHAR)
+             AS sum_value
     FROM events GROUP BY 1, 2
     """,
 )
@@ -44,13 +45,24 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's ``time_bucket(INTERVAL '1 hour', ts)`` — in EVERY
     session timezone, while ``window`` floors the underlying epoch
     micros. Grouping by the scalar also drops the window-struct
-    construction from the aggregate key (marginally cheaper)."""
+    construction from the aggregate key (marginally cheaper).
+
+    Output types are chosen so both engines' pandas frames carry the
+    same dtypes. ``sum_value`` is the DECIMAL(30,6) sum as text, like
+    `partial_agg_merge`: for a DECIMAL, Spark's ``toPandas`` gives
+    ``Decimal`` objects and DuckDB's ``.df()`` gives float64. The
+    oracle's ``ws`` is cast to TIMESTAMP_NS: DuckDB reads ``events.ts``
+    as a microsecond TIMESTAMP (``datetime64[us]``), Spark always gives
+    ``datetime64[ns]``."""
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("ws"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("decimal(30,6)").alias("sum_value"),
+            F.sum(F.col("value").cast("decimal(18,6)"))
+            .cast("decimal(30,6)")
+            .cast("string")
+            .alias("sum_value"),
         )
         .select("ws", "event_type", "n_events", "sum_value")
     )

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.sources.readers import fingerprint
 from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Deterministic order-key gate bounding the sampled co-occurrence set.
@@ -717,32 +718,35 @@ RA_WEDGE_ROWS_PER_TASK = 2_000_000
 RA_MAX_PARTITIONS = 4096
 
 
-#: Memoized wedge volumes per edge-source dir: the sizing pass is an
-#: eager 2-scan Spark job, and plan-only constructions (plan_report,
-#: the full-registry test sweeps, bench warm-ups) build each graph
-#: query several times per process — without the cache every build
-#: re-pays the job before any action runs. Both callers derive `deg`
-#: deterministically from `_edges(spark, sf_dir)`, so sf_dir is a
-#: complete key.
-_WEDGE_ROWS_CACHE: dict[str, int] = {}
+#: Memoized wedge volumes per version of the edge source: the sizing
+#: pass is an eager 2-scan Spark job, and plan-only constructions
+#: (plan_report, the full-registry test sweeps, bench warm-ups) build
+#: each graph query several times per process — without the cache every
+#: build re-pays the job before any action runs. Both callers derive
+#: `deg` deterministically from `_edges(spark, sf_dir)`, i.e. from
+#: `lineitem` alone, so its path and file fingerprint are a complete
+#: key: an in-place rewrite of `lineitem` re-measures the volume.
+_WEDGE_ROWS_CACHE: dict[tuple, int] = {}
 
 
 def _wedge_shuffle_parts(spark: SparkSession, deg: DataFrame, sf_dir: str) -> int:
     """Input-scaled shuffle width for a wedge-pair aggregate: exact
     wedge volume Σ deg·(deg−1)/2 from the ≤|V|-row degree relation
     (1-row collect — the documented bounded-collect class, memoized
-    per sf_dir so repeated plan-only constructions stay job-free),
-    divided into {RA_WEDGE_ROWS_PER_TASK}-row tasks, clamped to
-    [shuffle.partitions, {RA_MAX_PARTITIONS}]. See
+    per `lineitem` version so repeated plan-only constructions stay
+    job-free), divided into {RA_WEDGE_ROWS_PER_TASK}-row tasks, clamped
+    to [shuffle.partitions, {RA_MAX_PARTITIONS}]. See
     `q_graph_resource_allocation` for the measured rationale."""
-    if sf_dir not in _WEDGE_ROWS_CACHE:
-        _WEDGE_ROWS_CACHE[sf_dir] = int(
+    lineitem = f"{sf_dir}/lineitem.parquet"
+    key = (lineitem, fingerprint(lineitem))
+    if key not in _WEDGE_ROWS_CACHE:
+        _WEDGE_ROWS_CACHE[key] = int(
             deg.agg(
                 F.sum(F.expr("deg * (deg - 1) div 2")).alias("w")
             ).collect()[0][0]
             or 0
         )
-    wedge_rows = _WEDGE_ROWS_CACHE[sf_dir]
+    wedge_rows = _WEDGE_ROWS_CACHE[key]
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return max(
         default_parts,

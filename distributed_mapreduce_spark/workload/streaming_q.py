@@ -99,9 +99,10 @@ def _landing_dir(spark: SparkSession, sf_dir: str) -> str:
 @query(
     "stream_events_tumbling",
     oracle="""
-    SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, event_type,
+    SELECT CAST(time_bucket(INTERVAL '1 hour', ts) AS TIMESTAMP_NS) AS ws, event_type,
            count(*) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS sum_value
+           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS VARCHAR)
+             AS sum_value
     FROM events GROUP BY 1, 2
     """,
 )
@@ -155,7 +156,8 @@ def q_stream_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream(spark, landing), window="1 hour", watermark=None
     )
     run_to_memory(stream, name, output_mode="complete")
-    result = spark.table(name)
+    # The DECIMAL(30,6) sum as text, as in `events_tumbling`.
+    result = spark.table(name).withColumn("sum_value", F.col("sum_value").cast("string"))
 
     # In-session differential vs the batch twin (same plan the oracle
     # grades). exceptAll is multiset difference, so duplicate-row
@@ -167,6 +169,7 @@ def q_stream_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)"))
             .cast("decimal(30,6)")
+            .cast("string")
             .alias("sum_value"),
         )
         .select("ws", "event_type", "n_events", "sum_value")
@@ -201,7 +204,7 @@ def q_stream_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mkdtemp lifecycle as the source landing, cleaned at exit) and
     # return the parquet read — identical rows, zero dependence on
     # sink-table retention. Names/types round-trip exactly
-    # (timestamp/string/long/decimal(30,6)).
+    # (timestamp/string/long/string).
     out_dir = tempfile.mkdtemp(prefix="spark_graft_stream_landing_result_")
     _LANDED[f"result:{name}"] = out_dir
     result.write.mode("overwrite").parquet(out_dir)

@@ -22,9 +22,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "distributed_mapreduce_spark")
 
 #: (path relative to the package, variable) pairs the library may read.
+#: JAVA_HOME and SPARK_CONF_DIR are launcher deployment settings that
+#: session.py reads to mirror `spark-class` when keying and launching
+#: the driver's class-data-sharing archive.
 ALLOWED_ENV_READS = {
     ("session.py", "SPARK_GRAFT_CPUS"),
     ("session.py", "SPARK_GRAFT_DRIVER_MEM"),
+    ("session.py", "JAVA_HOME"),
+    ("session.py", "SPARK_CONF_DIR"),
     ("workload/streaming_q.py", "TZ"),
 }
 

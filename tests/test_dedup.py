@@ -170,58 +170,62 @@ def test_pointer_jump_cc_converges_logarithmically_on_chain(spark):
     assert plain == jump
 
 
-def test_pair_volume_cache_invalidates_on_data_regeneration(tmp_path):
+def _pair_volumes(spark, cache_key, df_values) -> dict:
+    """Run the pair-volume sizing for ``cache_key`` over a rare-gram
+    index with the given doc frequencies; return the memo entries."""
+    from distributed_mapreduce_spark.workload.dedup import (
+        _PAIR_ROWS_CACHE,
+        _pair_shuffle_parts,
+    )
+
+    rare = spark.createDataFrame([(v,) for v in df_values], "df long")
+    _pair_shuffle_parts(rare, cache_key)
+    return {k: v for k, v in _PAIR_ROWS_CACHE.items() if k[0] == cache_key[0]}
+
+
+def test_pair_volume_cache_invalidates_on_data_regeneration(spark, tmp_path):
     """The memoized pair-volume sizing must key on dataset CONTENT, not
     path (ADVICE r07): regenerating files in place under the same
-    sf_dir changes the fingerprint, so a stale volume can never mis-size
-    the shuffle. Driver-side only — no Spark session involved."""
+    sf_dir changes the file fingerprint, so a stale volume can never
+    mis-size the shuffle."""
     import os
-    import time as _time
 
-    from distributed_mapreduce_spark.workload.dedup import (
-        _dataset_fingerprint,
-        clear_pair_volume_cache,
-    )
+    from distributed_mapreduce_spark.workload.dedup import clear_pair_volume_cache
 
     d = tmp_path / "sfX"
     d.mkdir()
     f = d / "documents.parquet"
     f.write_bytes(b"v1")
-    fp1 = _dataset_fingerprint(str(d))
-    assert fp1 == _dataset_fingerprint(str(d))  # stable when untouched
+    key = (str(d), 7)
+    assert list(_pair_volumes(spark, key, [3, 5]).values()) == [3]
+    # untouched data: the memo is hit, the new index is never measured
+    assert list(_pair_volumes(spark, key, [9]).values()) == [3]
 
-    # same path, regenerated content -> different fingerprint (size or
-    # mtime_ns moves; bump mtime explicitly so same-size rewrites on
-    # coarse-mtime filesystems still register)
+    # same path, regenerated content -> re-measured (size moves; then
+    # mtime alone, so same-size rewrites still register)
     f.write_bytes(b"v2-longer")
-    fp2 = _dataset_fingerprint(str(d))
-    assert fp2 != fp1
+    assert sorted(_pair_volumes(spark, key, [9]).values()) == [3, 4]
     st = os.stat(f)
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
-    assert _dataset_fingerprint(str(d)) != fp2
-
-    # non-data files are ignored; the explicit hook exists and is a
-    # no-op-safe clear
-    (d / "_SUCCESS").write_bytes(b"")
-    assert len(_dataset_fingerprint(str(d))) == 1
+    assert sorted(_pair_volumes(spark, key, [11]).values()) == [3, 4, 5]
     clear_pair_volume_cache()
+    assert list(_pair_volumes(spark, key, [3]).values()) == [1]
 
 
-def test_dataset_fingerprint_nonlocal_paths_stay_distinct(tmp_path):
-    """Paths that walk to zero data files (remote URIs, missing dirs)
-    must NOT collapse to one memo key — the raw path is folded in so two
-    different unwalkable datasets never share a cached pair volume
-    (ADVICE r08)."""
-    from distributed_mapreduce_spark.workload.dedup import _dataset_fingerprint
-
-    fp_s3a = _dataset_fingerprint("s3a://bucket-a/corpus")
-    fp_s3b = _dataset_fingerprint("s3a://bucket-b/corpus")
-    fp_missing = _dataset_fingerprint(str(tmp_path / "does_not_exist"))
-    assert fp_s3a != fp_s3b
-    assert fp_s3a != fp_missing
-    assert fp_s3a == _dataset_fingerprint("s3a://bucket-a/corpus")  # stable
-    # a local dir WITH data files keeps the stat-based key (no path leak)
+def test_pair_volume_key_keeps_nonlocal_paths_distinct(spark, tmp_path):
+    """Paths that cannot be fingerprinted (remote URIs, missing dirs)
+    must NOT collapse to one memo key — the raw path is part of the key,
+    so two different unwalkable datasets never share a cached pair
+    volume (ADVICE r08)."""
+    a = _pair_volumes(spark, ("s3a://bucket-a/corpus", 7), [3])
+    b = _pair_volumes(spark, ("s3a://bucket-b/corpus", 7), [5])
+    missing = _pair_volumes(spark, (str(tmp_path / "does_not_exist"), 7), [7])
+    assert list(a.values()) == [1] and list(b.values()) == [2]
+    assert list(missing.values()) == [3]
+    assert list(a) == [("s3a://bucket-a/corpus", None, 7)]
+    # a local dir with data keeps the stat-based part of the key
     d = tmp_path / "sfY"
     d.mkdir()
     (d / "x.parquet").write_bytes(b"v1")
-    assert "__no_local_listing__" not in str(_dataset_fingerprint(str(d))[0])
+    (key,) = _pair_volumes(spark, (str(d), 7), [3])
+    assert key[1] is not None and key[1][0][0] == "x.parquet"

@@ -87,3 +87,33 @@ def test_kcore_monotone_shrink(spark, sf_dir):
     for a, b in zip(rows, rows[1:]):
         assert b.n_nodes <= a.n_nodes
         assert b.n_edges <= a.n_edges
+
+
+def test_wedge_volume_is_remeasured_after_an_in_place_rewrite(spark, sf_dir, tmp_path):
+    """The wedge-volume memo keys on the file version of `lineitem`, not
+    on the data directory: rewriting the table in place with fewer rows
+    makes the next build measure a new, smaller volume instead of
+    sizing the shuffle from the old one."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from distributed_mapreduce_spark.workload import graph
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    lineitem = f"{sf}/lineitem.parquet"
+    shutil.copy(f"{sf_dir}/lineitem.parquet", lineitem)
+
+    def volumes() -> list[int]:
+        return [v for k, v in graph._WEDGE_ROWS_CACHE.items() if k[0] == lineitem]
+
+    QUERIES["graph_resource_allocation"](spark, str(sf))
+    (before,) = volumes()
+    assert before > 0
+
+    t = pq.read_table(lineitem)
+    pq.write_table(t.slice(0, t.num_rows // 2), lineitem)
+    QUERIES["graph_resource_allocation"](spark, str(sf))
+    assert len(volumes()) == 2
+    assert volumes()[1] < before
