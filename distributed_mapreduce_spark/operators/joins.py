@@ -30,11 +30,6 @@ def join_inner(
     return left.join(r, on=on, how="inner")
 
 
-def join_dim(left: DataFrame, dim: DataFrame, on: str | list[str]) -> DataFrame:
-    """Fact ⋈ small-dimension: always broadcast the dimension."""
-    return left.join(F.broadcast(dim), on=on, how="inner")
-
-
 def join_semi(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:
     """EXISTS-style semi join (no right columns, no row duplication)."""
     return left.join(right, on=on, how="left_semi")

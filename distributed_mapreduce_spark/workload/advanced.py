@@ -9,11 +9,11 @@ capability is made real, still with exact DuckDB oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.operators.asof import asof_join, range_join_binned
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 
 # ---------------------------------------------------------------------------
@@ -129,9 +129,11 @@ def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Pivot
 # ---------------------------------------------------------------------------
 
-@query(
+# Pivot as one conditional count per explicit status value (no scan for
+# the distinct pivot values on a large input).
+sql_query(
     "pivot_status",
-    oracle="""
+    """
     SELECT o_orderpriority,
            count(*) FILTER (WHERE o_orderstatus = 'F') AS f_cnt,
            count(*) FILTER (WHERE o_orderstatus = 'O') AS o_cnt,
@@ -139,30 +141,18 @@ def q_cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY o_orderpriority
     """,
 )
-def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with an explicit value list (never let Spark scan for
-    distinct pivot values on a large input)."""
-    orders = table(spark, sf_dir, "orders")
-    p = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.count(F.lit(1)))
-    )
-    return p.select(
-        "o_orderpriority",
-        F.coalesce(F.col("F"), F.lit(0)).alias("f_cnt"),
-        F.coalesce(F.col("O"), F.lit(0)).alias("o_cnt"),
-        F.coalesce(F.col("P"), F.lit(0)).alias("p_cnt"),
-    )
 
 
 # ---------------------------------------------------------------------------
 # Lag/lead analytics
 # ---------------------------------------------------------------------------
 
-@query(
+# lag/lead over a total deterministic per-key ordering — (orderkey,
+# linenumber) is not unique in the harness data, so the sort extends
+# through every remaining column (see window_running).
+sql_query(
     "window_lag_lead",
-    oracle="""
+    """
     SELECT l_suppkey, l_orderkey, l_linenumber,
            lag(CAST(l_quantity AS DECIMAL(18,2)))
              OVER (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber,
@@ -173,32 +163,17 @@ def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     """,
 )
-def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead over a total deterministic per-key ordering —
-    (orderkey, linenumber) is not unique in the harness data, so the
-    sort extends through every remaining column (see window_running)."""
-    li = table(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_suppkey").orderBy(
-        "l_shipdate", "l_orderkey", "l_linenumber",
-        "l_partkey", "l_quantity", "l_extendedprice",
-    )
-    qty = F.col("l_quantity").cast("decimal(18,2)")
-    return li.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        F.lag(qty).over(w).alias("prev_qty"),
-        F.lead(qty).over(w).alias("next_qty"),
-    )
 
 
 # ---------------------------------------------------------------------------
 # Exact multi-statistics
 # ---------------------------------------------------------------------------
 
-@query(
+# count / exact count-distinct / min / max in one aggregation (min/max
+# of doubles pass through bit-identical — no arithmetic).
+sql_query(
     "agg_stats",
-    oracle="""
+    """
     SELECT l_returnflag,
            count(*) AS cnt,
            count(DISTINCT l_partkey) AS n_parts,
@@ -207,16 +182,6 @@ def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY l_returnflag
     """,
 )
-def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """count / exact count-distinct / min / max in one aggregation
-    (min/max of doubles pass through bit-identical — no arithmetic)."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.min("l_quantity").alias("min_qty"),
-        F.max("l_quantity").alias("max_qty"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -315,9 +280,11 @@ def q_array_agg_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUZZY_MAX_DIST = 3
 
 
-@query(
+# Blocked fuzzy matching: edit-distance pairs within (brand, size)
+# blocks — the classic entity-resolution plan.
+sql_query(
     "fuzzy_match_levenshtein",
-    oracle=f"""
+    f"""
     SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
            CAST(levenshtein(a.p_name, b.p_name) AS INTEGER) AS dist
     FROM part a
@@ -327,36 +294,14 @@ FUZZY_MAX_DIST = 3
       AND a.p_name <> b.p_name
     """,
 )
-def q_fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked fuzzy matching: edit-distance pairs within
-    (brand, size) blocks — the classic entity-resolution plan. Blocking
-    keeps the candidate set per-block O(m²) instead of corpus-wide
-    O(n²); Spark's `levenshtein` and DuckDB's agree exactly (unit edit
-    costs). Same-name pairs are excluded (those are `dedup_exact`'s
-    job); this finds the *near* misses."""
-    part = table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size", "p_name")
-    a = part.alias("a")
-    b = part.alias("b")
-    dist = F.levenshtein(F.col("a.p_name"), F.col("b.p_name"))
-    return (
-        a.join(
-            b,
-            (F.col("a.p_brand") == F.col("b.p_brand"))
-            & (F.col("a.p_size") == F.col("b.p_size"))
-            & (F.col("a.p_partkey") < F.col("b.p_partkey")),
-        )
-        .filter((dist <= FUZZY_MAX_DIST) & (F.col("a.p_name") != F.col("b.p_name")))
-        .select(
-            F.col("a.p_partkey").alias("key_a"),
-            F.col("b.p_partkey").alias("key_b"),
-            dist.cast("int").alias("dist"),
-        )
-    )
 
 
-@query(
+# Unpivot (melt): wide per-status counts back to long form — the inverse
+# of `pivot_status`, via the native `unpivot` operator (an Expand node,
+# one pass, no union-of-selects).
+sql_query(
     "unpivot_status",
-    oracle="""
+    """
     WITH p AS (
       SELECT o_orderpriority,
              count(*) FILTER (WHERE o_orderstatus = 'F') AS f_cnt,
@@ -368,25 +313,6 @@ def q_fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p UNPIVOT (cnt FOR status IN (f_cnt, o_cnt, p_cnt))
     """,
 )
-def q_unpivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unpivot (melt): wide per-status counts back to long form — the
-    inverse of `pivot_status`, via the native `unpivot` operator (an
-    Expand node, one pass, no union-of-selects)."""
-    orders = table(spark, sf_dir, "orders")
-    wide = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.count(F.lit(1)))
-        .select(
-            "o_orderpriority",
-            F.coalesce(F.col("F"), F.lit(0)).alias("f_cnt"),
-            F.coalesce(F.col("O"), F.lit(0)).alias("o_cnt"),
-            F.coalesce(F.col("P"), F.lit(0)).alias("p_cnt"),
-        )
-    )
-    return wide.unpivot(
-        ["o_orderpriority"], ["f_cnt", "o_cnt", "p_cnt"], "status", "cnt"
-    )
 
 
 @query(
@@ -437,9 +363,11 @@ def q_bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# first/last/nth_value + percent_rank + cume_dist in one pass over one
+# window ordering (c_custkey is unique → total order).
+sql_query(
     "window_analytics_suite",
-    oracle="""
+    """
     SELECT c_custkey, c_nationkey,
            first_value(c_custkey) OVER w AS richest,
            last_value(c_custkey)
@@ -452,27 +380,6 @@ def q_bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)
     """,
 )
-def q_window_analytics_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first/last/nth_value + percent_rank + cume_dist in one pass over
-    one window ordering (c_custkey is unique → total order).
-    `last_value` needs the full-partition frame spelled out — the
-    default frame stops at CURRENT ROW, a classic SQL footgun both
-    engines share. percent_rank/cume_dist divide small ints in doubles,
-    which is correctly rounded and bit-identical everywhere."""
-    customer = table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return customer.select(
-        "c_custkey",
-        "c_nationkey",
-        F.first("c_custkey").over(w).alias("richest"),
-        F.last("c_custkey").over(w_full).alias("poorest"),
-        F.nth_value("c_custkey", 2).over(w).alias("runner_up"),
-        F.percent_rank().over(w).alias("pr"),
-        F.cume_dist().over(w).alias("cd"),
-    )
 
 
 @query(
@@ -587,9 +494,14 @@ def q_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "ts", "ts_asof")
 
 
-@query(
+# One-pass table profile (the ANALYZE/data-quality summary every
+# ingestion step emits): row count, null/empty counts, distinct
+# cardinality, key and date ranges, exact decimal total — all in a
+# single aggregate, so a 100 TB profile costs one scan + one 1-row
+# reduction, not a query per metric.
+sql_query(
     "profile_table",
-    oracle="""
+    """
     SELECT count(*) AS n_rows,
            CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_price,
            CAST(sum(CASE WHEN o_orderstatus = '' THEN 1 ELSE 0 END) AS BIGINT) AS empty_status,
@@ -601,24 +513,6 @@ def q_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
 )
-def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass table profile (the ANALYZE/data-quality summary every
-    ingestion step emits): row count, null/empty counts, distinct
-    cardinality, key and date ranges, exact decimal total — all in a
-    single aggregate, so a 100 TB profile costs one scan + one 1-row
-    reduction, not a query per metric."""
-    orders = table(spark, sf_dir, "orders")
-    return orders.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("o_totalprice").isNull(), 1).otherwise(0)).cast("long").alias("null_price"),
-        F.sum(F.when(F.col("o_orderstatus") == "", 1).otherwise(0)).cast("long").alias("empty_status"),
-        F.countDistinct("o_orderstatus").alias("n_statuses"),
-        F.min("o_orderkey").alias("min_key"),
-        F.max("o_orderkey").alias("max_key"),
-        F.min("o_orderdate").alias("first_order"),
-        F.max("o_orderdate").alias("last_order"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("decimal(30,2)").alias("total_price"),
-    )
 
 
 @query(
@@ -1191,9 +1085,16 @@ def q_basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.desc("lift_ppm"), "ante", "cons").limit(MB_TOP_K)
 
 
-@query(
+# Ranking-function TIE semantics in one pass — the corner
+# `window_analytics_suite` (unique ordering) cannot reach: ordering by
+# the 5-value priority inside each status makes every peer group
+# thousands of rows wide, so rank gaps (rank jumps by group size),
+# dense_rank compaction, percent_rank's (rank−1)/(n−1) on tied rank, and
+# cume_dist's peers-inclusive numerator all take distinct, tie-
+# determined values.
+sql_query(
     "window_ties_suite",
-    oracle="""
+    """
     SELECT DISTINCT o_orderstatus, o_orderpriority,
            CAST(count(*) OVER (PARTITION BY o_orderstatus, o_orderpriority)
                 AS BIGINT) AS n_rows,
@@ -1205,30 +1106,3 @@ def q_basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_orderpriority)
     """,
 )
-def q_window_ties_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking-function TIE semantics in one pass — the corner
-    `window_analytics_suite` (unique ordering) cannot reach: ordering
-    by the 5-value priority inside each status makes every peer group
-    thousands of rows wide, so rank gaps (rank jumps by group size),
-    dense_rank compaction, percent_rank's (rank−1)/(n−1) on tied rank,
-    and cume_dist's peers-inclusive numerator all take distinct,
-    tie-determined values. All measures are functions of the ORDER
-    key alone, so projecting DISTINCT per (status, priority) collapses
-    the result to ≤|status|·|priority| deterministic rows; the two
-    ratios are single IEEE divisions of exact ints (bit-identical in
-    both engines).
-
-    Plan: one window over the status shuffle + a distinct hash-agg to
-    the tiny measure table."""
-    orders = table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderstatus").orderBy("o_orderpriority")
-    wp = Window.partitionBy("o_orderstatus", "o_orderpriority")
-    return orders.select(
-        "o_orderstatus",
-        "o_orderpriority",
-        F.count(F.lit(1)).over(wp).cast("long").alias("n_rows"),
-        F.rank().over(w).cast("long").alias("rnk"),
-        F.dense_rank().over(w).cast("long").alias("drnk"),
-        F.percent_rank().over(w).alias("pr"),
-        F.cume_dist().over(w).alias("cd"),
-    ).distinct()

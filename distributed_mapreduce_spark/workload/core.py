@@ -26,7 +26,6 @@ from distributed_mapreduce_spark.functions.strings import (
 )
 from distributed_mapreduce_spark.operators.aggregates import (
     agg_count_per_machine,
-    agg_count_per_value,
     agg_global_count,
     agg_pct_of_total,
 )
@@ -36,10 +35,9 @@ from distributed_mapreduce_spark.operators.filters import (
     filter_rlike_line,
     grep_filter,
 )
-from distributed_mapreduce_spark.operators.joins import join_anti, join_dim, join_inner, join_semi
 from distributed_mapreduce_spark.operators.partitioning import hash_bucket, range_bucket
-from distributed_mapreduce_spark.operators.setops import distinct_rows, top_k, union_all
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.operators.setops import distinct_rows
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 # SQL fragment twins of functions.strings (oracle side).
 # Go-TrimSpace-parity trim (see functions.strings.WS_CLASS): real control
@@ -176,14 +174,12 @@ def q_filter_min_arity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return filter_min_arity(docs, "text", " ", 50).select("doc_id")
 
 
-@query(
+# Single-column projection (data/maple-exe.go:28,64) — the scan should
+# read exactly one column (ReadSchema pruning).
+sql_query(
     "project_column",
-    oracle="SELECT l_returnflag FROM lineitem",
+    "SELECT l_returnflag FROM lineitem",
 )
-def q_project_column(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-column projection (data/maple-exe.go:28,64) — the scan
-    should read exactly one column (ReadSchema pruning)."""
-    return table(spark, sf_dir, "lineitem").select("l_returnflag")
 
 
 @query(
@@ -218,16 +214,14 @@ def q_sanitize_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Aggregations
 # ---------------------------------------------------------------------------
 
-@query(
+# Count per (key, value) group (data/juice-exe.go:26-31).
+sql_query(
     "group_count",
-    oracle="""
+    """
     SELECT l_returnflag, l_linestatus, count(*) AS cnt
     FROM lineitem GROUP BY 1, 2
     """,
 )
-def q_group_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count per (key, value) group (data/juice-exe.go:26-31)."""
-    return agg_count_per_value(table(spark, sf_dir, "lineitem"), "l_returnflag", "l_linestatus")
 
 
 @query(
@@ -404,54 +398,40 @@ def q_approx_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Joins (declared-but-dead in the reference, fileserver.py:1383-1384)
 # ---------------------------------------------------------------------------
 
-@query(
+# Fact ⋈ customer equi-join.
+sql_query(
     "join_inner",
-    oracle="""
+    """
     SELECT o_orderkey, c_name, o_totalprice
     FROM orders JOIN customer ON o_custkey = c_custkey
     """,
 )
-def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact ⋈ customer equi-join. No explicit broadcast hint: customer
-    scales with SF, so the strategy is left to AQE (broadcast while the
-    build side fits, shuffle join beyond)."""
-    orders = table(spark, sf_dir, "orders")
-    customer = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    joined = join_inner(orders, customer, orders.o_custkey == customer.c_custkey)
-    return joined.select("o_orderkey", "c_name", "o_totalprice")
 
 
-@query(
+# EXISTS semi-join — no row duplication, right side never projected.
+sql_query(
     "join_semi",
-    oracle="""
+    """
     SELECT c_custkey, c_name FROM customer c
     WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
 )
-def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS semi-join — no row duplication, right side never projected."""
-    customer = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return join_semi(customer, orders, "c_custkey").select("c_custkey", "c_name")
 
 
-@query(
+# NOT EXISTS anti-join (customers with no orders).
+sql_query(
     "join_anti",
-    oracle="""
+    """
     SELECT c_custkey, c_name FROM customer c
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
 )
-def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT EXISTS anti-join (customers with no orders)."""
-    customer = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return join_anti(customer, orders, "c_custkey").select("c_custkey", "c_name")
 
 
-@query(
+# Star-schema rollup: fact ⋈ dims, then aggregate.
+sql_query(
     "join_multiway",
-    oracle="""
+    """
     SELECT r_name, count(*) AS n_orders,
            CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS total_price
     FROM orders
@@ -461,42 +441,21 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY r_name
     """,
 )
-def q_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-schema rollup: fact ⋈ dims, then aggregate. nation/region
-    are fixed-size and carry explicit broadcast hints; customer scales
-    with SF so its join strategy is left to AQE (broadcast while small).
-    At 100 TB the fact streams through the dim joins before the final
-    (tiny, 5-group) aggregation."""
-    orders = table(spark, sf_dir, "orders")
-    customer = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    region = table(spark, sf_dir, "region")
-    df = orders.join(customer, orders.o_custkey == customer.c_custkey)
-    df = join_dim(df, nation, df.c_nationkey == nation.n_nationkey)
-    df = join_dim(df, region, df.n_regionkey == region.r_regionkey)
-    return df.groupBy("r_name").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("decimal(30,2)").alias("total_price"),
-    )
 
 
 # ---------------------------------------------------------------------------
 # Windows, sort, limit, set ops
 # ---------------------------------------------------------------------------
 
-@query(
+# Ranking window (beyond the reference, which has none — §2.5).
+sql_query(
     "window_rank",
-    oracle="""
+    """
     SELECT c_custkey, c_nationkey,
            rank() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rnk
     FROM customer
     """,
 )
-def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking window (beyond the reference, which has none — §2.5)."""
-    customer = table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
-    return customer.select("c_custkey", "c_nationkey", F.rank().over(w).alias("rnk"))
 
 
 @query(
@@ -539,28 +498,21 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# ORDER BY + LIMIT k → TakeOrderedAndProject (per-partition top-k,
+# driver merges n×k rows; no global sort).
+sql_query(
     "topk",
-    oracle="""
+    """
     SELECT o_orderkey, o_totalprice FROM orders
     ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
     """,
 )
-def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORDER BY + LIMIT k → TakeOrderedAndProject (per-partition top-k,
-    driver merges n×k rows; no global sort)."""
-    orders = table(spark, sf_dir, "orders")
-    return top_k(
-        orders.select("o_orderkey", "o_totalprice"),
-        10,
-        F.col("o_totalprice").desc(),
-        F.col("o_orderkey"),
-    )
 
 
-@query(
+# Union + distinct (conglomerate concatenation, fileserver.py:598-631).
+sql_query(
     "union_distinct",
-    oracle="""
+    """
     SELECT DISTINCT nationkey FROM (
       SELECT c_nationkey AS nationkey FROM customer
       UNION ALL
@@ -568,11 +520,6 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
 )
-def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Union + distinct (conglomerate concatenation, fileserver.py:598-631)."""
-    c = table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return distinct_rows(union_all(c, s))
 
 
 # ---------------------------------------------------------------------------

@@ -45,6 +45,7 @@ from distributed_mapreduce_spark.workload.quality import (
 from distributed_mapreduce_spark.workload.quality import _ngrams, _sql_ngrams
 from distributed_mapreduce_spark.workload.registry import (
     query,
+    sql_query,
     table,
     wide_shuffle_parts,
 )
@@ -337,38 +338,10 @@ _INCR_SQL = f"""
 """
 
 
-@query("dedup_incremental", oracle=_INCR_SQL)
-def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental dedup — the shape a daily ingestion run executes:
-    classify each NEW document (deterministic batch gate) as a
-    duplicate of the existing corpus, a duplicate within its own
-    batch, or genuinely new.
-
-    Plan: fingerprints only (md5, never text) on both sides; the
-    corpus side collapses to DISTINCT hashes before the join (at real
-    scale this relation IS the persisted fingerprint index a pipeline
-    maintains); within-batch firsts use a window partitioned by
-    fingerprint — bounded per-key state, no global sort."""
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents")
-    fp = docs.select(
-        "doc_id",
-        F.md5(F.col("text")).alias("fp"),
-        (F.col("doc_id") % INCR_BATCH_MOD == INCR_BATCH_REM).alias("is_new"),
-    )
-    corpus = fp.filter(~F.col("is_new")).select("fp").distinct().withColumn(
-        "in_corpus", F.lit(True)
-    )
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    batch = fp.filter(F.col("is_new")).withColumn("rn", F.row_number().over(w))
-    return batch.join(corpus, "fp", "left").select(
-        "doc_id",
-        F.when(F.col("in_corpus").isNotNull(), F.lit("dup_of_corpus"))
-        .when(F.col("rn") > 1, F.lit("dup_within_batch"))
-        .otherwise(F.lit("new"))
-        .alias("status"),
-    )
+# Incremental dedup — the shape a daily ingestion run executes: classify
+# each NEW document (deterministic batch gate) as a duplicate of the
+# existing corpus, a duplicate within its own batch, or genuinely new.
+sql_query("dedup_incremental", _INCR_SQL)
 
 
 #: Filter thresholds (Gopher-rule-shaped, tuned to the harness corpus):

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.sources.readers import fingerprint
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: MinHash parameters: k = bands * rows hash functions.
 MINHASH_BANDS = 4
@@ -111,22 +111,15 @@ def _sql_bh() -> str:
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Exact dedup: hash-groupBy on the content fingerprint, keep the
+# smallest doc_id as the canonical representative.
+sql_query(
     "dedup_exact",
-    oracle="""
+    """
     SELECT md5(text) AS fp, min(doc_id) AS keep_id, count(*) AS cnt
     FROM documents GROUP BY md5(text)
     """,
 )
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: hash-groupBy on the content fingerprint, keep the
-    smallest doc_id as the canonical representative. Grouping on the
-    128-bit hash instead of the text keeps shuffle rows tiny."""
-    docs = table(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.md5(F.col("text")).alias("fp"))
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 def shingle_table(docs: DataFrame) -> DataFrame:

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.workload.registry import (
     query,
+    sql_query,
     table,
     wide_shuffle_parts,
 )
@@ -68,9 +69,11 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Gap-based sessionization (30-min inactivity gap): lag + running sum of
+# session-start flags, then per-session rollup.
+sql_query(
     "events_sessionize",
-    oracle=f"""
+    f"""
     WITH ordered AS (
       SELECT user_id, ts, event_id,
              CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -90,35 +93,6 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sess GROUP BY user_id, session_id
     """,
 )
-def q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min inactivity gap): lag + running
-    sum of session-start flags, then per-session rollup. Streaming twin:
-    session_window / applyInPandasWithState."""
-    ev = table(spark, sf_dir, "events")
-    order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(order)
-    # Microsecond-exact gap (cast-to-long would truncate to seconds and
-    # disagree with the oracle's exact interval comparison).
-    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(prev_ts)
-    is_new = F.when(prev_ts.isNull() | (gap_us > SESSION_GAP_MIN * 60 * 1_000_000), 1).otherwise(0)
-    running = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.sum(is_new).over(running).alias("session_id"),
-    )
-    return sess.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-    ).select(
-        "user_id",
-        F.col("session_id").cast("long").alias("session_id"),
-        "session_start",
-        "session_end",
-        "n_events",
-    )
 
 
 @query(
@@ -243,19 +217,17 @@ _SESSIONIZE_SQL = """
     """
 
 
-@query("sessionize_sql", oracle=_SESSIONIZE_SQL)
-def q_sessionize_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands sessionization as VERBATIM SQL (lag → new-session
-    flag → running sum → group): the same text Spark SQL and DuckDB both
-    execute — the declarative twin of `events_sessionize`'s DataFrame
-    construction."""
-    table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_SESSIONIZE_SQL)
+# Gaps-and-islands sessionization in one SQL text (lag → new-session
+# flag → running sum → group). Both this row and `events_sessionize`
+# now run their oracle through `spark.sql`, so the two rows exercise
+# the same plan shape; kept as a separate registry row.
+sql_query("sessionize_sql", _SESSIONIZE_SQL)
 
 
-@query(
+# Keep-latest-per-key: the CDC/compaction primitive (last event wins).
+sql_query(
     "latest_event_per_user",
-    oracle="""
+    """
     SELECT user_id, event_id, ts, event_type FROM (
       SELECT user_id, event_id, ts, event_type,
              row_number() OVER (PARTITION BY user_id
@@ -264,20 +236,6 @@ def q_sessionize_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rn = 1
     """,
 )
-def q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keep-latest-per-key: the CDC/compaction primitive (last event
-    wins). Deterministic via the (ts, event_id) total order —
-    `dropDuplicates` can't express "latest", only "any". One shuffle
-    on the key, per-partition sort, no global sort."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "ts", "event_type")
-    )
 
 
 @query(
@@ -318,9 +276,13 @@ def q_busiest_hours_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Hypertable-style continuous-aggregate shape: daily, hourly, and
+# hourly-per-type rollups of the event stream in ONE pass via GROUPING
+# SETS — the single-scan multi-resolution materialization a time-series
+# store keeps incrementally.
+sql_query(
     "events_multi_rollup",
-    oracle="""
+    """
     SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
            CASE WHEN GROUPING(date_trunc('hour', ts)) = 0
                 THEN CAST(date_trunc('hour', ts) AS TIMESTAMP) END AS hour,
@@ -335,34 +297,6 @@ def q_busiest_hours_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
 )
-def q_events_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style continuous-aggregate shape: daily, hourly, and
-    hourly-per-type rollups of the event stream in ONE pass via
-    GROUPING SETS — the single-scan multi-resolution materialization a
-    time-series store keeps incrementally. At 100 TB this beats three
-    separate aggregations: one shuffle keyed on the finest grouping,
-    coarser levels folded from the same exchange. NULL level columns
-    are normalized through GROUPING() so rollup rows hash identically
-    across engines."""
-    ev = table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts"))
-    hour = F.date_trunc("hour", F.col("ts"))
-    df = ev.select(day.alias("day"), hour.alias("hour"), "event_type", "value")
-    # GROUPING SETS is SQL-only surface in Spark; run it through the
-    # session SQL front-end on a temp view (itself part of the tested
-    # surface — see `sessionize_sql`).
-    df.createOrReplaceTempView("_ev_rollup_in")
-    return spark.sql(
-        """
-        SELECT day,
-               CASE WHEN GROUPING(hour) = 0 THEN hour END AS hour,
-               CASE WHEN GROUPING(event_type) = 0 THEN event_type END AS event_type,
-               count(*) AS n_events,
-               CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS sum_value
-        FROM _ev_rollup_in
-        GROUP BY GROUPING SETS ((day), (day, hour), (day, hour, event_type))
-        """
-    )
 
 
 #: Per-class sampling rates in basis points (reproducible downsampling:
@@ -553,9 +487,11 @@ def q_events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# User-acquisition curve: per day, first-seen user count and the running
+# cumulative total — the growth chart every event pipeline publishes.
+sql_query(
     "cumulative_new_users",
-    oracle="""
+    """
     WITH first_day AS (
       SELECT user_id, CAST(date_trunc('day', min(ts)) AS TIMESTAMP) AS d0
       FROM events GROUP BY user_id
@@ -570,29 +506,6 @@ def q_events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_day
     """,
 )
-def q_cumulative_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-acquisition curve: per day, first-seen user count and the
-    running cumulative total — the growth chart every event pipeline
-    publishes. The running total uses the distributed `global_cumsum`
-    prefix sum (`operators/partitioning.py`) over the aggregated day
-    grain: tiny here, but the identical plan holds when the grain is
-    (day × country × app) and the aggregate relation is itself large.
-
-    Plan: per-user min (hash aggregate) → per-day count → distributed
-    prefix sum (range shuffle + broadcast offsets; no unpartitioned
-    window anywhere)."""
-    from distributed_mapreduce_spark.operators.partitioning import global_cumsum
-
-    ev = table(spark, sf_dir, "events")
-    first_day = ev.groupBy("user_id").agg(
-        F.date_trunc("day", F.min("ts")).alias("d0")
-    )
-    per_day = first_day.groupBy(F.col("d0").alias("day")).agg(
-        F.count(F.lit(1)).alias("n_new")
-    )
-    return global_cumsum(
-        per_day, [F.col("day")], "n_new", cumsum_col="cum_users"
-    ).select("day", "n_new", F.col("cum_users").cast("long"))
 
 
 @query(
@@ -792,21 +705,12 @@ _DAU_WAU_MAU_SQL = """
 """
 
 
-@query("dau_wau_mau", oracle=_DAU_WAU_MAU_SQL)
-def q_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU/WAU/MAU in ONE pass: distinct active users at day, week and
-    month grain via GROUPING SETS — the engagement triple every
-    product dashboard tracks, without three separate scans (Expand
-    replicates each row once per grain; the distinct then
-    de-duplicates per (grain, bucket, user) with map-side partials
-    before the final count).
-
-    The IDENTICAL SQL text runs on Spark and DuckDB (the verbatim-SQL
-    certification pattern of `sessionize_sql` — GROUPING SETS,
-    GROUPING() and date_trunc share semantics across both dialects),
-    so this also differentially tests Spark's SQL front-end."""
-    table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_DAU_WAU_MAU_SQL)
+# DAU/WAU/MAU in ONE pass: distinct active users at day, week and month
+# grain via GROUPING SETS — the engagement triple every product
+# dashboard tracks, without three separate scans (Expand replicates each
+# row once per grain; the distinct then de-duplicates per (grain,
+# bucket, user) with map-side partials before the final count).
+sql_query("dau_wau_mau", _DAU_WAU_MAU_SQL)
 
 
 @query(

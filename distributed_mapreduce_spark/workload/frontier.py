@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 from distributed_mapreduce_spark.workload.text import _sql_tokens, _tokens
 
 #: Hash groups for the local-frontier phase.
@@ -240,9 +240,13 @@ def q_ivm_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# The NON-subtractable side of incremental view maintenance (VERDICT r03
+# #7): min/max cannot absorb a delete batch by arithmetic — when a
+# retracted row WAS a group's extremum, that group must be rebuilt from
+# its retained rows.
+sql_query(
     "ivm_retraction_minmax",
-    oracle="""
+    """
     WITH base AS (
       SELECT event_type, min(value) AS mn, max(value) AS mx
       FROM events GROUP BY event_type
@@ -262,31 +266,6 @@ def q_ivm_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY e.event_type
     """,
 )
-def q_ivm_retraction_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The NON-subtractable side of incremental view maintenance
-    (VERDICT r03 #7): min/max cannot absorb a delete batch by
-    arithmetic — when a retracted row WAS a group's extremum, that
-    group must be rebuilt from its retained rows. The engine does the
-    minimal correct work: groups whose deleted values never touch the
-    materialized extremum keep their MATERIALIZED min/max untouched
-    (no rescan); only groups where the delete batch contains the
-    current min or max are re-aggregated, and only over those groups'
-    retained rows (semi-join-pruned scan). The oracle recomputes every
-    group from retained rows and derives the same affected-set flag —
-    equality proves both the shortcut for untouched groups and the
-    rebuild for affected ones (a group whose rows are ALL deleted
-    correctly vanishes from both sides).
-
-    Plan: two hash aggregates (view + delete partials), a tiny
-    groups-only join to find affected keys, a semi join to prune the
-    rebuild scan to affected groups — history is rescanned only where
-    provably necessary. The `rebuilt` flag exposes which path each
-    group took, so the oracle checks the DECISION, not just the
-    values."""
-    ev = table(spark, sf_dir, "events")
-    return maintain_minmax_after_delete(
-        ev, F.col("event_id") % 13 == 0, key_col="event_type", value_col="value"
-    )
 
 
 def maintain_minmax_after_delete(

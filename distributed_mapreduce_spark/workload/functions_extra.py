@@ -21,12 +21,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 
-@query(
+# Math/bit scalar library in one projection: abs, sign, mod, pmod,
+# greatest/least, popcount, shifts, factorial, integer powers, and a
+# floor-scaled sqrt (sqrt is IEEE correctly-rounded on both engines, so
+# floor(×1000) is portable).
+sql_query(
     "math_functions_suite",
-    oracle="""
+    """
     SELECT p_partkey,
            CAST(abs(p_size - 25) AS INTEGER) AS abs_off,
            CAST(sign(p_size - 25) AS INTEGER) AS sign_off,
@@ -44,34 +48,15 @@ from distributed_mapreduce_spark.workload.registry import query, table
     FROM part
     """,
 )
-def q_math_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math/bit scalar library in one projection: abs, sign, mod, pmod,
-    greatest/least, popcount, shifts, factorial, integer powers, and a
-    floor-scaled sqrt (sqrt is IEEE correctly-rounded on both engines,
-    so floor(×1000) is portable)."""
-    part = table(spark, sf_dir, "part")
-    off = F.col("p_size") - 25
-    pk = F.col("p_partkey")
-    return part.select(
-        "p_partkey",
-        F.abs(off).cast("int").alias("abs_off"),
-        F.signum(off.cast("double")).cast("int").alias("sign_off"),
-        (pk % 7).cast("long").alias("mod7"),
-        F.pmod(pk, F.lit(7)).cast("long").alias("pmod7"),
-        F.greatest(F.col("p_size"), F.lit(25)).cast("int").alias("hi25"),
-        F.least(F.col("p_size"), F.lit(25)).cast("int").alias("lo25"),
-        F.bit_count(pk.cast("long")).cast("int").alias("popcount"),
-        F.shiftleft(F.col("p_size").cast("long"), 3).cast("long").alias("shl3"),
-        F.shiftright(pk.cast("long"), 2).cast("long").alias("shr2"),
-        F.factorial(F.col("p_size") % 10).cast("long").alias("fact_mod"),
-        F.pow(F.lit(2), F.col("p_size") % 16).alias("pow2"),
-        F.floor(F.sqrt(pk.cast("double")) * 1000).cast("long").alias("sqrt_milli"),
-    )
 
 
-@query(
+# Conditional / null-handling library in one projection: nullif,
+# coalesce, boolean flags, simple + searched CASE, null-safe presence
+# checks, greatest/least on doubles (comparison-only — no float
+# arithmetic, so exact).
+sql_query(
     "conditional_functions_suite",
-    oracle="""
+    """
     SELECT o_orderkey,
            nullif(o_orderstatus, 'F') AS status_or_null,
            coalesce(nullif(o_orderstatus, 'F'), 'FINAL') AS status_filled,
@@ -89,34 +74,6 @@ def q_math_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     """,
 )
-def q_conditional_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional / null-handling library in one projection: nullif,
-    coalesce, boolean flags, simple + searched CASE, null-safe
-    presence checks, greatest/least on doubles (comparison-only — no
-    float arithmetic, so exact)."""
-    orders = table(spark, sf_dir, "orders")
-    st = F.col("o_orderstatus")
-    return orders.select(
-        "o_orderkey",
-        F.nullif(st, F.lit("F")).alias("status_or_null"),
-        F.coalesce(F.nullif(st, F.lit("F")), F.lit("FINAL")).alias("status_filled"),
-        F.when(st == "F", 1).otherwise(0).cast("int").alias("is_final"),
-        F.when(st == "F", "done")
-        .when(st == "O", "open")
-        .otherwise("partial")
-        .alias("status_word"),
-        F.when(
-            F.nullif(F.col("o_orderpriority"), st).isNull(), 1
-        )
-        .otherwise(0)
-        .cast("int")
-        .alias("prio_eq_status"),
-        F.greatest(F.col("o_totalprice"), F.lit(100000.0)).alias("price_hi"),
-        F.least(F.col("o_totalprice"), F.lit(100000.0)).alias("price_lo"),
-        F.when(F.col("o_totalprice").isNull(), "missing")
-        .otherwise("present")
-        .alias("price_presence"),
-    )
 
 
 @query(

@@ -2,9 +2,10 @@
 SCD-2 style status islands over `orders`, weekly retention cohorts.
 
 These are the sequential-behavior shapes a product-analytics or
-warehouse pipeline runs daily: each is a pure DataFrame plan (staged
-conditional aggregates, gaps-and-islands windows, cohort joins) with
-an exact DuckDB oracle.
+warehouse pipeline runs daily (staged conditional aggregates,
+gaps-and-islands windows, cohort joins), each with an exact DuckDB
+oracle; the ones whose oracle Spark runs as fast are SQL-first
+(`registry.sql_query`).
 
 Reference parity note: the reference has no sequential operators —
 its closest shape is the juice-side per-key reduce
@@ -27,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: Ordered funnel stages over `events.event_type`.
 FUNNEL_STAGES = ("view", "click", "purchase")
@@ -131,9 +132,13 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# SCD-2 style history build: collapse each customer's consecutive run of
+# identical order statuses (ordered by orderdate, orderkey) into one
+# [valid_from, valid_to] interval — the gaps-and-islands pattern (change
+# flag via lag, island id via running sum).
+sql_query(
     "scd2_status_islands",
-    oracle="""
+    """
     WITH ordered AS (
       SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
              CASE WHEN lag(o_orderstatus) OVER w IS NULL
@@ -154,36 +159,6 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM isl GROUP BY o_custkey, island_id, o_orderstatus
     """,
 )
-def q_scd2_status_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD-2 style history build: collapse each customer's consecutive
-    run of identical order statuses (ordered by orderdate, orderkey)
-    into one [valid_from, valid_to] interval — the gaps-and-islands
-    pattern (change flag via lag, island id via running sum).
-
-    Plan: both windows partition by o_custkey with bounded per-key
-    state; the final rollup re-aggregates on the same key."""
-    orders = table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    prev = F.lag("o_orderstatus").over(w)
-    chg = F.when(prev.isNull() | (prev != F.col("o_orderstatus")), 1).otherwise(0)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    isl = orders.select(
-        "o_custkey",
-        "o_orderstatus",
-        "o_orderdate",
-        F.sum(chg).over(run).cast("long").alias("island_id"),
-    )
-    return (
-        isl.groupBy("o_custkey", "island_id", F.col("o_orderstatus").alias("status"))
-        .agg(
-            F.min("o_orderdate").alias("valid_from"),
-            F.max("o_orderdate").alias("valid_to"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .select(
-            "o_custkey", "island_id", "status", "valid_from", "valid_to", "n_orders"
-        )
-    )
 
 
 @query(
@@ -232,9 +207,12 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# First-order Markov transition matrix of user behavior: counts of
+# consecutive event-type pairs per user timeline, with row-normalized
+# transition probabilities in exact basis points.
+sql_query(
     "event_transitions",
-    oracle="""
+    """
     WITH seq AS (
       SELECT user_id, event_type,
              lag(event_type) OVER (PARTITION BY user_id
@@ -253,34 +231,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pairs
     """,
 )
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix of user behavior: counts of
-    consecutive event-type pairs per user timeline, with row-normalized
-    transition probabilities in exact basis points.
-
-    Plan: one lag window partitioned by user_id (bounded state), a hash
-    aggregate to the |types|² matrix, and a normalizing window over the
-    *aggregated* matrix rows (≤25 rows — the benign global-window
-    class)."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).filter(F.col("prev_type").isNotNull())
-    pairs = seq.groupBy("prev_type", F.col("event_type").alias("curr_type")).agg(
-        F.count(F.lit(1)).alias("n_transitions")
-    )
-    wn = Window.partitionBy("prev_type")
-    return pairs.select(
-        "prev_type",
-        "curr_type",
-        "n_transitions",
-        F.floor(
-            F.col("n_transitions") * 10000.0 / F.sum("n_transitions").over(wn)
-        )
-        .cast("long")
-        .alias("prob_bp"),
-    )
 
 
 @query(
@@ -522,9 +472,12 @@ def q_events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Top-10 three-step behavior paths (event-type trigrams along each
+# user's timeline) — the path-analysis query behind "what do users do
+# before purchasing".
+sql_query(
     "top_event_paths",
-    oracle="""
+    """
     WITH seq AS (
       SELECT event_type AS e3,
              lag(event_type, 1) OVER w AS e2,
@@ -539,27 +492,6 @@ def q_events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
 )
-def q_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 three-step behavior paths (event-type trigrams along each
-    user's timeline) — the path-analysis query behind "what do users do
-    before purchasing".
-
-    Plan: two lags in one window pass per user (bounded state), hash
-    aggregate to the ≤|types|³ path table, TakeOrdered for the
-    deterministic top-k (total order: count desc then path)."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        F.col("event_type").alias("e3"),
-        F.lag("event_type", 1).over(w).alias("e2"),
-        F.lag("event_type", 2).over(w).alias("e1"),
-    ).filter(F.col("e1").isNotNull())
-    return (
-        seq.groupBy("e1", "e2", "e3")
-        .agg(F.count(F.lit(1)).alias("n_paths"))
-        .orderBy(F.desc("n_paths"), "e1", "e2", "e3")
-        .limit(10)
-    )
 
 
 _SCD2_ASOF_SQL = """
@@ -600,67 +532,12 @@ _SCD2_ASOF_SQL = """
 """
 
 
-@query("scd2_asof_status", oracle=_SCD2_ASOF_SQL)
-def q_scd2_asof_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal (as-of) join of a fact table to an SCD-2 dimension:
-    each lineitem picks the customer's status interval in effect at
-    its ship date (latest valid_from <= l_shipdate) — the canonical
-    warehouse pattern for joining facts to slowly-changing dimensions,
-    rolled up by matched status.
-
-    Plan: the SCD-2 intervals reuse `scd2_status_islands`' bounded
-    per-customer windows; the temporal match is a custkey equi-join
-    (fan-out bounded by the customer's interval count) + a per-fact-row
-    window keeping the latest applicable interval — no interval
-    cross product, no global sort."""
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    prev = F.lag("o_orderstatus").over(w)
-    chg = F.when(prev.isNull() | (prev != F.col("o_orderstatus")), 1).otherwise(0)
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    isl = orders.select(
-        "o_custkey",
-        "o_orderstatus",
-        "o_orderdate",
-        F.sum(chg).over(run).cast("long").alias("island_id"),
-    )
-    dim = (
-        isl.groupBy("o_custkey", "island_id", "o_orderstatus")
-        .agg(F.min("o_orderdate").alias("valid_from"))
-        .select(
-            F.col("o_custkey").alias("custkey"),
-            "island_id",
-            F.col("o_orderstatus").alias("status"),
-            "valid_from",
-        )
-    )
-    fact = li.join(
-        orders.select("o_orderkey", "o_custkey"),
-        li["l_orderkey"] == F.col("o_orderkey"),
-    ).select(
-        "l_orderkey",
-        "l_linenumber",
-        F.col("o_custkey").alias("custkey"),
-        "l_shipdate",
-    )
-    joined = fact.join(
-        dim,
-        (dim["custkey"] == fact["custkey"])
-        & (F.col("valid_from") <= F.col("l_shipdate")),
-    )
-    wf = Window.partitionBy("l_orderkey", "l_linenumber").orderBy(
-        F.col("valid_from").desc(), F.col("island_id").desc()
-    )
-    matched = (
-        joined.withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") == 1)
-        .select("l_orderkey", "l_linenumber", "status")
-    )
-    return matched.groupBy(F.col("status").alias("status_at_ship")).agg(
-        F.count(F.lit(1)).alias("n_lines")
-    )
+# Temporal (as-of) join of a fact table to an SCD-2 dimension: each
+# lineitem picks the customer's status interval in effect at its ship
+# date (latest valid_from <= l_shipdate) — the canonical warehouse
+# pattern for joining facts to slowly-changing dimensions, rolled up by
+# matched status.
+sql_query("scd2_asof_status", _SCD2_ASOF_SQL)
 
 
 @query(
@@ -1275,9 +1152,14 @@ def q_attribution_position_credit(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@query(
+# Second-order sequential patterns: counts of consecutive event-type
+# TRIPLES per user timeline with the conditional P(t3 | t1,t2) in exact
+# basis points — the order-2 Markov model that `event_transitions`
+# (order 1) cannot express; comparing the two conditionals is the
+# standard test for whether user behavior has memory beyond one step.
+sql_query(
     "event_type_trigrams",
-    oracle="""
+    """
     WITH seq AS (
       SELECT user_id, event_type,
              lag(event_type) OVER w AS prev1,
@@ -1297,43 +1179,6 @@ def q_attribution_position_credit(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM tri
     """,
 )
-def q_event_type_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second-order sequential patterns: counts of consecutive
-    event-type TRIPLES per user timeline with the conditional
-    P(t3 | t1,t2) in exact basis points — the order-2 Markov model that
-    `event_transitions` (order 1) cannot express; comparing the two
-    conditionals is the standard test for whether user behavior has
-    memory beyond one step.
-
-    Plan: the same single user-partitioned window produces both lags
-    (one shuffle on user_id, bounded per-user state), a hash aggregate
-    to ≤|types|³ rows, and the normalizing window runs over those
-    aggregated matrix rows partitioned by the (t1, t2) prefix — never
-    a global or raw-row window."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type",
-        F.lag("event_type").over(w).alias("prev1"),
-        F.lag("event_type", 2).over(w).alias("prev2"),
-    ).filter(F.col("prev2").isNotNull())
-    tri = seq.groupBy(
-        F.col("prev2").alias("t1"),
-        F.col("prev1").alias("t2"),
-        F.col("event_type").alias("t3"),
-    ).agg(F.count(F.lit(1)).alias("n_occurrences"))
-    wn = Window.partitionBy("t1", "t2")
-    return tri.select(
-        "t1",
-        "t2",
-        "t3",
-        "n_occurrences",
-        F.floor(
-            F.col("n_occurrences") * 10000.0 / F.sum("n_occurrences").over(wn)
-        )
-        .cast("long")
-        .alias("cond_prob_bp"),
-    )
 
 
 @query(

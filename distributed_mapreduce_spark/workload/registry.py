@@ -9,6 +9,8 @@ match exactly (the driver hashes values after sorting columns by name).
 from __future__ import annotations
 
 import os
+import re
+import sys
 import tempfile
 import zipfile
 from collections.abc import Callable
@@ -21,6 +23,15 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+#: Queries whose builder runs their oracle text (:func:`sql_query`).
+SQL_FIRST: set[str] = set()
+
+#: The harness tables (TESTDATA.md), one ``{name}.parquet`` each.
+TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+_TABLE_WORD = re.compile(r"\b(" + "|".join(TABLES) + r")\b")
 
 
 def _ensure_package_on_workers(spark: SparkSession) -> None:
@@ -96,6 +107,34 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
+
+
+def sql_query(name: str, sql: str) -> QueryFn:
+    """Register ONE SQL text as both the oracle and the builder: the
+    builder gives every harness table the text names a temp view
+    through :func:`table` and returns ``spark.sql(sql)``, so Spark's
+    SQL front-end and DuckDB run the same query.
+
+    A query is SQL-first when its oracle analyzes verbatim in Spark,
+    returns the same rows and dtypes, and the DataFrame form does not
+    beat it in a paired A/B; the kept builders and their measured
+    reasons are listed in ``tests/test_sql_first.py``. Views are bound
+    at analysis, so a later call for another ``sf_dir`` never changes
+    a frame already returned. The builder reports its caller's module,
+    which keeps per-family attribution (``tools/check_correctness.py``
+    groups cost by ``fn.__module__``)."""
+    names = sorted(set(_TABLE_WORD.findall(sql)))
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        for t in names:
+            table(spark, sf_dir, t).createOrReplaceTempView(t)
+        return spark.sql(sql)
+
+    fn.__module__ = sys._getframe(1).f_globals["__name__"]
+    fn.__name__ = fn.__qualname__ = f"q_{name}"
+    query(name, oracle=sql)(fn)
+    SQL_FIRST.add(name)
+    return fn
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -3,8 +3,12 @@ tables — the relational depth the reference's declared-but-dead SQL
 surface (`SELECT` grammar at file_server/fileserver.py:1372-1382, dead
 JOIN stub at fileserver.py:1383-1384) implies but never implements.
 
-Every query is pure DataFrame API; Catalyst supplies pushdown, pruning,
-join ordering, and AQE picks broadcast vs shuffle join at runtime.
+Most queries are SQL-first (`registry.sql_query`): the oracle text is
+also the Spark builder. The DataFrame builders left are the ones that
+beat that text or keep a scale property it loses (reasons in
+tests/test_sql_first.py). Either way Catalyst supplies pushdown,
+pruning and join ordering, and AQE picks broadcast vs shuffle join at
+runtime.
 
 Determinism rules (same as workload.core): DECIMAL-cast sums with
 pinned scale (double aggregation is order-dependent), integer
@@ -17,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: Q3-style cutoff: orders placed before / shipped after this instant.
 Q3_CUT = "1998-01-01"
@@ -44,56 +48,32 @@ _SQL_REVENUE = (
 )
 
 
-@query(
+# TPC-H Q3 shape: top-10 unshipped-revenue orders. Both date filters
+# reach the parquet scans and the LIMIT lowers to TakeOrderedAndProject.
+# Revenue is summed per orderkey BEFORE the joins (eager aggregation by
+# hand: Catalyst does not move aggregates through joins), so the join
+# shuffles one row per order instead of one per lineitem. The grouping
+# is the same because o_orderdate/o_orderpriority depend on the key, and
+# decimal sums are exact in any order.
+sql_query(
     "tpch_q3_shipping",
-    oracle=f"""
-    SELECT l_orderkey,
-           CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue,
-           o_orderdate, o_orderpriority
-    FROM customer
-    JOIN orders ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
+    f"""
+    WITH rev AS (
+      SELECT l_orderkey,
+             CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue
+      FROM lineitem
+      WHERE l_shipdate > TIMESTAMP '{Q3_CUT}'
+      GROUP BY l_orderkey
+    )
+    SELECT l_orderkey, revenue, o_orderdate, o_orderpriority
+    FROM rev
+    JOIN orders ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
     WHERE o_orderdate < TIMESTAMP '{Q3_CUT}'
-      AND l_shipdate > TIMESTAMP '{Q3_CUT}'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
     ORDER BY revenue DESC, l_orderkey
     LIMIT 10
     """,
 )
-def q_tpch_q3_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: top-10 unshipped-revenue orders.
-
-    Both date filters reach the parquet scans (PushedFilters) and the
-    LIMIT becomes TakeOrderedAndProject — no global sort at any scale.
-
-    Revenue is aggregated per orderkey BEFORE the joins (manual
-    eager-aggregation pushdown — Catalyst doesn't move aggs through
-    joins): the map-side combine collapses lineitems to one row per
-    order, so the join shuffles |orders| rows instead of |lineitems|
-    (measured 27% faster at sf0.1; the gap widens with fan-out). The
-    grouping is equivalent because o_orderdate/o_orderpriority are
-    functionally dependent on the key, and decimal sums are exact in
-    any grouping order.
-    """
-    cust = table(spark, sf_dir, "customer").select("c_custkey")
-    orders = table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit(Q3_CUT).cast("timestamp")
-    )
-    li = table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit(Q3_CUT).cast("timestamp")
-    )
-    rev_per_order = li.groupBy("l_orderkey").agg(
-        F.sum(_revenue()).cast("decimal(30,4)").alias("revenue")
-    )
-    j = (
-        rev_per_order.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-    )
-    return (
-        j.orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-    )
 
 
 @query(
@@ -201,9 +181,11 @@ def q_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# TPC-H Q4 shape: orders with at least one slow-shipping lineitem (>= 90
+# days after order date), counted by priority.
+sql_query(
     "exists_shiplag",
-    oracle="""
+    """
     SELECT o_orderpriority, count(*) AS n_orders
     FROM orders o
     WHERE EXISTS (
@@ -214,26 +196,12 @@ def q_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
 )
-def q_exists_shiplag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: orders with at least one slow-shipping lineitem
-    (>= 90 days after order date), counted by priority. EXISTS with a
-    non-equi conjunct → left-semi join; no row duplication however many
-    lineitems match."""
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    cond = (F.col("l_orderkey") == F.col("o_orderkey")) & (
-        F.col("l_shipdate") >= F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-    )
-    return (
-        orders.join(li, cond, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
 
 
-@query(
+# TPC-H Q17 shape: lines below 20% of their part's average quantity.
+sql_query(
     "scalar_subquery_lowqty",
-    oracle="""
+    """
     WITH stats AS (
       SELECT l_partkey,
              CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS sq,
@@ -250,73 +218,38 @@ def q_exists_shiplag(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p_brand
     """,
 )
-def q_scalar_subquery_lowqty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: lines below 20% of their part's average quantity.
-
-    The correlated scalar subquery becomes a per-part aggregate joined
-    back to the fact. `qty < 0.2 * avg` is evaluated as
-    `qty * 5 * count < sum` — exact decimal integer arithmetic, no
-    engine-dependent float division.
-    """
-    li = table(spark, sf_dir, "lineitem")
-    part = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    qty = F.col("l_quantity").cast(_DEC)
-    stats = li.groupBy(F.col("l_partkey").alias("sp_partkey")).agg(
-        F.sum(qty).cast("decimal(30,2)").alias("sq"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    return (
-        li.join(stats, F.col("l_partkey") == F.col("sp_partkey"))
-        .filter(qty * 5 * F.col("n") < F.col("sq"))
-        .join(part, F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand")
-        .agg(
-            F.sum(F.col("l_extendedprice").cast(_DEC))
-            .cast("decimal(30,2)")
-            .alias("low_qty_spend"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
 
 
-@query(
+# INTERSECT (set semantics): customers with both a finished and an open
+# order.
+sql_query(
     "intersect_customers",
-    oracle="""
+    """
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
     INTERSECT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
     """,
 )
-def q_intersect_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT (set semantics): customers with both a finished and an
-    open order. Absent from the reference (§2.7) — completes the set-op
-    family alongside union/except."""
-    orders = table(spark, sf_dir, "orders")
-    f = orders.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
-    o = orders.filter(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))
-    return f.intersect(o)
 
 
-@query(
+# EXCEPT (set semantics): customers with a finished order but no open
+# one.
+sql_query(
     "except_customers",
-    oracle="""
+    """
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
     EXCEPT
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
     """,
 )
-def q_except_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (set semantics): customers with a finished order but no
-    open one."""
-    orders = table(spark, sf_dir, "orders")
-    f = orders.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("custkey"))
-    o = orders.filter(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("custkey"))
-    return f.subtract(o)
 
 
-@query(
+# GROUPING SETS beyond rollup/cube: per-flag, per-status, and grand
+# totals in one pass (Expand + single aggregate — one shuffle instead of
+# three unioned jobs).
+sql_query(
     "grouping_sets_agg",
-    oracle="""
+    """
     SELECT coalesce(l_returnflag, 'ALL') AS rflag,
            coalesce(l_linestatus, 'ALL') AS lstatus,
            CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS sum_qty
@@ -324,22 +257,6 @@ def q_except_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
     """,
 )
-def q_grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS beyond rollup/cube: per-flag, per-status, and grand
-    totals in one pass (Expand + single aggregate — one shuffle instead
-    of three unioned jobs). The harness data has no NULL group keys, so
-    coalesce labels the set totals unambiguously."""
-    li = table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("li_gs")
-    return li.sparkSession.sql(
-        """
-        SELECT coalesce(l_returnflag, 'ALL') AS rflag,
-               coalesce(l_linestatus, 'ALL') AS lstatus,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS sum_qty
-        FROM li_gs
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
 
 
 @query(
@@ -372,9 +289,11 @@ def q_window_moving_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Calendar-bucketed aggregate (date_trunc) — the batch twin of the
+# streaming tumbling window over `events`.
+sql_query(
     "monthly_order_stats",
-    oracle="""
+    """
     SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
            count(*) AS n_orders,
            CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS total_price
@@ -382,22 +301,14 @@ def q_window_moving_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
 )
-def q_monthly_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-bucketed aggregate (date_trunc) — the batch twin of the
-    streaming tumbling window over `events`."""
-    orders = table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(F.date_trunc("month", F.col("o_orderdate")).alias("month"))
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast(_DEC)).cast("decimal(30,2)").alias("total_price"),
-        )
-    )
 
 
-@query(
+# TPC-H Q14 shape: conditional aggregation (promo revenue share) over a
+# fact ⋈ part join — one pass, no second scan for the denominator; the
+# share reported in exact basis points.
+sql_query(
     "tpch_q14_promo",
-    oracle=f"""
+    f"""
     SELECT CAST(sum(CASE WHEN p_type = 'PROMO' THEN {_SQL_REVENUE} ELSE 0 END)
                 AS DECIMAL(30,4)) AS promo_revenue,
            CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS total_revenue,
@@ -406,33 +317,12 @@ def q_monthly_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem JOIN part ON l_partkey = p_partkey
     """,
 )
-def q_tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: conditional aggregation (promo revenue share)
-    over a fact ⋈ part join — one pass, no second scan for the
-    denominator; the share reported in exact basis points. part scales
-    with SF, so no explicit broadcast hint — AQE broadcasts while it
-    fits and shuffle-joins beyond that."""
-    li = table(spark, sf_dir, "lineitem")
-    part = table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = _revenue()
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast(_DEC))
-    agg = (
-        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.sum(promo).cast("decimal(30,4)").alias("promo_revenue"),
-            F.sum(rev).cast("decimal(30,4)").alias("total_revenue"),
-        )
-    )
-    bp = F.floor(
-        F.col("promo_revenue").cast("double") * 10000.0
-        / F.col("total_revenue").cast("double")
-    ).cast("long")
-    return agg.select("promo_revenue", "total_revenue", bp.alias("promo_bp"))
 
 
-@query(
+# TPC-H Q19 shape: OR-of-ANDs predicates spanning both join sides.
+sql_query(
     "tpch_q19_disjunctive",
-    oracle=f"""
+    f"""
     SELECT CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue,
            count(*) AS n_lines
     FROM lineitem JOIN part ON p_partkey = l_partkey
@@ -444,56 +334,28 @@ def q_tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
            AND l_quantity BETWEEN 20 AND 40)
     """,
 )
-def q_tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: OR-of-ANDs predicates spanning both join sides.
-    Catalyst extracts the common join key (partkey equi-join survives),
-    pushes the single-side conjuncts into each scan, and evaluates the
-    residual disjunction post-join — the textbook disjunctive-predicate
-    plan."""
-    li = table(spark, sf_dir, "lineitem")
-    part = table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    j = li.join(part, F.col("p_partkey") == F.col("l_partkey"))
-    qty = F.col("l_quantity")
-    size = F.col("p_size")
-    brand = F.col("p_brand")
-    cond = (
-        ((brand == "Brand#1") & size.between(1, 10) & qty.between(1, 20))
-        | ((brand == "Brand#2") & size.between(11, 25) & qty.between(10, 30))
-        | ((brand == "Brand#3") & size.between(26, 50) & qty.between(20, 40))
-    )
-    return j.filter(cond).agg(
-        F.sum(_revenue()).cast("decimal(30,4)").alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
 
 
-@query(
+# LEFT OUTER join + aggregate: every customer appears, orderless
+# customers with n_orders = 0 (count over the nullable key skips NULLs —
+# the outer-join row survives the count correctly).
+sql_query(
     "join_left_outer",
-    oracle="""
+    """
     SELECT c_custkey, c_name, CAST(count(o_orderkey) AS BIGINT) AS n_orders,
            CAST(coalesce(sum(CAST(o_totalprice AS DECIMAL(18,2))), 0) AS DECIMAL(30,2)) AS spend
     FROM customer LEFT JOIN orders ON o_custkey = c_custkey
     GROUP BY c_custkey, c_name
     """,
 )
-def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER join + aggregate: every customer appears, orderless
-    customers with n_orders = 0 (count over the nullable key skips
-    NULLs — the outer-join row survives the count correctly)."""
-    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    orders = table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
-    j = cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-    return j.groupBy("c_custkey", "c_name").agg(
-        F.count("o_orderkey").cast("long").alias("n_orders"),
-        F.coalesce(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")), F.lit(0)
-        ).cast("decimal(30,2)").alias("spend"),
-    )
 
 
-@query(
+# FULL OUTER join of two aggregates: nations present on either side
+# survive with zero-filled counts — the reconciliation-report shape
+# (aggregate-then-join keeps the outer join tiny).
+sql_query(
     "join_full_outer",
-    oracle="""
+    """
     SELECT coalesce(c.k, s.k) AS nationkey,
            CAST(coalesce(c.n_cust, 0) AS BIGINT) AS n_cust,
            CAST(coalesce(s.n_supp, 0) AS BIGINT) AS n_supp
@@ -503,26 +365,6 @@ def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ON c.k = s.k
     """,
 )
-def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER join of two aggregates: nations present on either
-    side survive with zero-filled counts — the reconciliation-report
-    shape (aggregate-then-join keeps the outer join tiny)."""
-    cust = (
-        table(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("ck"))
-        .agg(F.count(F.lit(1)).alias("n_cust"))
-    )
-    supp = (
-        table(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("sk"))
-        .agg(F.count(F.lit(1)).alias("n_supp"))
-    )
-    j = cust.join(supp, cust.ck == supp.sk, "full_outer")
-    return j.select(
-        F.coalesce(F.col("ck"), F.col("sk")).alias("nationkey"),
-        F.coalesce(F.col("n_cust"), F.lit(0)).cast("long").alias("n_cust"),
-        F.coalesce(F.col("n_supp"), F.lit(0)).cast("long").alias("n_supp"),
-    )
 
 
 @query(
@@ -552,27 +394,18 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     return u.groupBy("party", "custkey", "suppkey").agg(F.count(F.lit(1)).alias("n"))
 
 
-@query(
+# Calendar-part extraction (year/quarter) + aggregate — the date
+# function family the reference lacks entirely (SURVEY §2.10: strings
+# only).
+sql_query(
     "date_parts_agg",
-    oracle="""
+    """
     SELECT CAST(extract(year FROM o_orderdate) AS INTEGER) AS yr,
            CAST(extract(quarter FROM o_orderdate) AS INTEGER) AS qtr,
            count(*) AS n_orders
     FROM orders GROUP BY 1, 2
     """,
 )
-def q_date_parts_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-part extraction (year/quarter) + aggregate — the date
-    function family the reference lacks entirely (SURVEY §2.10: strings
-    only)."""
-    orders = table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            F.year("o_orderdate").alias("yr"),
-            F.quarter("o_orderdate").alias("qtr"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
 
 
 @query(
@@ -604,9 +437,12 @@ def q_string_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Fixed-width histogram: floor-division bucketing + per-bucket stats —
+# the distribution-profiling pass a pipeline runs before choosing
+# partition bounds or salting thresholds.
+sql_query(
     "histogram_prices",
-    oracle="""
+    """
     SELECT CAST(floor(o_totalprice / 30000.0) AS INTEGER) AS bucket,
            count(*) AS n,
            min(o_totalprice) AS lo,
@@ -614,23 +450,6 @@ def q_string_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY 1
     """,
 )
-def q_histogram_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram: floor-division bucketing + per-bucket
-    stats — the distribution-profiling pass a pipeline runs before
-    choosing partition bounds or salting thresholds. (Identical
-    floor(x / w) expression on both engines; correctly-rounded double
-    division makes it exact.)"""
-    orders = table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            F.floor(F.col("o_totalprice") / 30000.0).cast("int").alias("bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("o_totalprice").alias("lo"),
-            F.max("o_totalprice").alias("hi"),
-        )
-    )
 
 
 @query(
@@ -704,9 +523,11 @@ def q_array_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# MERGE/upsert emulation on plain parquet: full-outer join of base vs
+# updates, update-wins coalesce, action audit column.
+sql_query(
     "merge_upsert",
-    oracle="""
+    """
     WITH base AS (
       SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 != 0
     ), updates AS (
@@ -721,28 +542,6 @@ def q_array_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM base b FULL OUTER JOIN updates u ON b.o_orderkey = u.o_orderkey
     """,
 )
-def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE/upsert emulation on plain parquet: full-outer join of base
-    vs updates, update-wins coalesce, action audit column. This is the
-    engine-level kernel under Delta/Iceberg MERGE INTO — here surfaced
-    as a pure DataFrame transform (doubles pass through untouched, so
-    no decimal casts needed)."""
-    orders = table(spark, sf_dir, "orders")
-    base = orders.filter(F.col("o_orderkey") % 3 != 0).select(
-        F.col("o_orderkey").alias("bk"), F.col("o_totalprice").alias("bp")
-    )
-    updates = orders.filter(F.col("o_orderkey") % 2 == 0).select(
-        F.col("o_orderkey").alias("uk"), (F.col("o_totalprice") * 2).alias("up")
-    )
-    j = base.join(updates, base.bk == updates.uk, "full_outer")
-    return j.select(
-        F.coalesce(F.col("uk"), F.col("bk")).alias("o_orderkey"),
-        F.coalesce(F.col("up"), F.col("bp")).alias("o_totalprice"),
-        F.when(F.col("uk").isNotNull() & F.col("bk").isNotNull(), "updated")
-        .when(F.col("uk").isNotNull(), "inserted")
-        .otherwise("kept")
-        .alias("action"),
-    )
 
 
 #: Shared Q17-style correlated-subquery text — run verbatim by BOTH
@@ -763,21 +562,21 @@ _CORRELATED_SQL = """
     """
 
 
-@query("correlated_subquery_sql", oracle=_CORRELATED_SQL)
-def q_correlated_subquery_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME correlated-scalar-subquery SQL text on both engines:
-    Spark's SQL front-end decorrelates the two scalar subqueries into
-    aggregate+join under the hood (what `scalar_subquery_lowqty` wrote
-    by hand) — proving the declarative surface, not just the DataFrame
-    API, is complete."""
-    for t in ("lineitem", "part"):
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_CORRELATED_SQL)
+# The SAME correlated-scalar-subquery SQL text on both engines: Spark's
+# SQL front-end decorrelates the two scalar subqueries into
+# aggregate+join under the hood (what `scalar_subquery_lowqty` wrote by
+# hand) — proving the declarative surface, not just the DataFrame API,
+# is complete.
+sql_query("correlated_subquery_sql", _CORRELATED_SQL)
 
 
-@query(
+# Top-k over a NULLABLE key with explicit NULLS LAST: Spark orders nulls
+# FIRST by default in descending sorts while DuckDB orders them LAST —
+# any ordering over nullable keys must spell the placement out or the
+# two engines silently disagree.
+sql_query(
     "topk_nulls_last",
-    oracle="""
+    """
     SELECT o_orderkey, k FROM (
       SELECT o_orderkey,
              CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_totalprice END AS k
@@ -787,24 +586,14 @@ def q_correlated_subquery_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
 )
-def q_topk_nulls_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k over a NULLABLE key with explicit NULLS LAST: Spark orders
-    nulls FIRST by default in descending sorts while DuckDB orders them
-    LAST — any ordering over nullable keys must spell the placement out
-    or the two engines silently disagree."""
-    orders = table(spark, sf_dir, "orders")
-    keyed = orders.select(
-        "o_orderkey",
-        F.when(F.col("o_orderstatus") == "P", None)
-        .otherwise(F.col("o_totalprice"))
-        .alias("k"),
-    )
-    return keyed.orderBy(F.col("k").desc_nulls_last(), F.col("o_orderkey")).limit(10)
 
 
-@query(
+# Conditional exact distinct counts in one aggregation: the FILTER
+# clause becomes count_distinct over a NULL-when-excluded key (NULLs
+# don't count) — three distinct-count columns, one pass, one Expand.
+sql_query(
     "filtered_distinct_counts",
-    oracle="""
+    """
     SELECT o_orderpriority,
            count(DISTINCT o_custkey) AS n_cust_all,
            count(DISTINCT o_custkey) FILTER (WHERE o_orderstatus = 'F') AS n_cust_f,
@@ -812,25 +601,15 @@ def q_topk_nulls_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY o_orderpriority
     """,
 )
-def q_filtered_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional exact distinct counts in one aggregation: the FILTER
-    clause becomes count_distinct over a NULL-when-excluded key (NULLs
-    don't count) — three distinct-count columns, one pass, one Expand."""
-    orders = table(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderpriority").agg(
-        F.count_distinct("o_custkey").alias("n_cust_all"),
-        F.count_distinct(
-            F.when(F.col("o_orderstatus") == "F", F.col("o_custkey"))
-        ).alias("n_cust_f"),
-        F.count_distinct(
-            F.when(F.col("o_orderstatus") == "O", F.col("o_custkey"))
-        ).alias("n_cust_o"),
-    )
 
 
-@query(
+# Two-grain aggregate: per-supplier quantity, then each supplier's share
+# of its NATION's total as a window over the aggregated rows (the
+# percent-of-total pattern one level up — the window sees |suppliers|
+# rows, never |lineitems|).
+sql_query(
     "supplier_share_of_nation",
-    oracle="""
+    """
     WITH per_supp AS (
       SELECT s_nationkey, l_suppkey,
              CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS qty
@@ -842,29 +621,6 @@ def q_filtered_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_supp
     """,
 )
-def q_supplier_share_of_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-grain aggregate: per-supplier quantity, then each supplier's
-    share of its NATION's total as a window over the aggregated rows
-    (the percent-of-total pattern one level up — the window sees
-    |suppliers| rows, never |lineitems|). Exact decimal sums, integer
-    basis points."""
-    li = table(spark, sf_dir, "lineitem").select("l_suppkey", "l_quantity")
-    supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    per_supp = (
-        li.join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .groupBy("s_nationkey", "l_suppkey")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("decimal(30,2)")
-            .alias("qty")
-        )
-    )
-    w = Window.partitionBy("s_nationkey")
-    share = F.floor(
-        F.col("qty").cast("double") * 10000.0
-        / F.sum("qty").over(w).cast("double")
-    ).cast("long")
-    return per_supp.select("s_nationkey", "l_suppkey", "qty", share.alias("share_bp"))
 
 
 @query(
@@ -905,10 +661,13 @@ def q_map_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# TPC-H Q10 shape: top-20 customers by revenue lost to returns. The
+# MERGE hint keeps the filtered lineitem on the sort-merge path: its
+# pruned-scan estimate looks small enough to broadcast at bench SF.
+sql_query(
     "tpch_q10_returned_items",
-    oracle=f"""
-    SELECT c_custkey, c_name,
+    f"""
+    SELECT /*+ MERGE(lineitem) */ c_custkey, c_name,
            CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue,
            n_name
     FROM customer
@@ -921,35 +680,16 @@ def q_map_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 20
     """,
 )
-def q_tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top-20 customers by revenue lost to returns.
-    The returnflag filter is pushed to the lineitem scan; customer joins
-    without a broadcast hint (SF-scaling — AQE's call); nation is a
-    hinted broadcast; ORDER BY + LIMIT lowers to TakeOrderedAndProject
-    (per-partition heads, no global sort)."""
-    cust = table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
-    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    j = (
-        li.hint("merge")
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-    )
-    agg = j.groupBy("c_custkey", "c_name", "n_name").agg(
-        F.sum(_revenue()).cast("decimal(30,4)").alias("revenue")
-    )
-    return (
-        agg.orderBy(F.col("revenue").desc(), F.col("c_custkey"))
-        .limit(20)
-        .select("c_custkey", "c_name", "revenue", "n_name")
-    )
 
 
-@query(
+# TPC-H Q2 shape (adapted: no partsupp table in the harness, so lineitem
+# stands in as the part-supplier price relation): for each small part,
+# every supplier achieving the minimum observed price — the correlated-
+# min subquery, decorrelated by hand into aggregate + self-equi-join on
+# (key, min).
+sql_query(
     "tpch_q2_min_cost_supplier",
-    oracle="""
+    """
     WITH cost AS (
       SELECT l_partkey, l_suppkey,
              min(CAST(l_extendedprice AS DECIMAL(18,2))) AS min_price
@@ -967,44 +707,15 @@ def q_tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p_size <= 10
     """,
 )
-def q_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape (adapted: no partsupp table in the harness, so
-    lineitem stands in as the part-supplier price relation): for each
-    small part, every supplier achieving the minimum observed price —
-    the correlated-min subquery, decorrelated by hand into aggregate +
-    self-equi-join on (key, min). At scale both aggregations are
-    map-side partial over the same (partkey[, suppkey]) shuffle; ties
-    (several suppliers at the best price) are all kept, which is why
-    the join, not row_number, is the right decorrelation."""
-    li = table(spark, sf_dir, "lineitem")
-    part = table(spark, sf_dir, "part").filter(F.col("p_size") <= 10).select("p_partkey", "p_brand")
-    supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    cost = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.min(F.col("l_extendedprice").cast("decimal(18,2)")).alias("min_price")
-    )
-    best = cost.groupBy(F.col("l_partkey").alias("b_partkey")).agg(
-        F.min("min_price").alias("best_price")
-    )
-    return (
-        cost.join(
-            best,
-            (F.col("l_partkey") == F.col("b_partkey"))
-            & (F.col("min_price") == F.col("best_price")),
-        )
-        .join(part, F.col("p_partkey") == F.col("l_partkey"))
-        .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
-        .select(
-            F.col("l_partkey").alias("partkey"),
-            "p_brand",
-            "s_name",
-            F.col("min_price").cast("decimal(18,2)").alias("price"),
-        )
-    )
 
 
-@query(
+# TPC-H Q22 shape (nation key instead of phone prefixes): customers
+# richer than the positive-balance average with no PENDING order (every
+# harness customer has ordered at least once, so the original never-
+# ordered predicate is vacuously empty), rolled up by nation.
+sql_query(
     "tpch_q22_idle_rich_customers",
-    oracle="""
+    """
     SELECT n_name, count(*) AS n_cust,
            CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS total_bal
     FROM customer
@@ -1018,45 +729,6 @@ def q_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n_name
     """,
 )
-def q_tpch_q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (nation key instead of phone prefixes): customers
-    richer than the positive-balance average with no PENDING order
-    (every harness customer has ordered at least once, so the original
-    never-ordered predicate is vacuously empty), rolled up by nation.
-    The scalar AVG subquery is a 1-row aggregate attached via broadcast
-    cross join (same pattern as parse_extract_ids — never a global
-    window over raw rows); the NOT EXISTS is a left-anti join against
-    the filtered orders (filter pushed under the anti-join's build).
-
-    DECIMAL avg: Spark yields DECIMAL(22,6) for avg(DECIMAL(18,2)) and
-    DuckDB widens differently, but the comparison `c_acctbal > avg` is
-    exact either way because both engines compare at full precision."""
-    cust = table(spark, sf_dir, "customer")
-    orders = (
-        table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus") == "P")
-        .select(F.col("o_custkey"))
-    )
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
-        F.avg(F.col("c_acctbal").cast("decimal(18,2)")).alias("avg_bal")
-    )
-    rich = (
-        cust.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .drop("avg_bal")
-    )
-    idle = rich.join(
-        orders, rich.c_custkey == orders.o_custkey, "left_anti"
-    )
-    return (
-        idle.join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_cust"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("decimal(30,2)").alias("total_bal"),
-        )
-    )
 
 
 @query(
@@ -1205,42 +877,19 @@ ORDER BY ancestor
 """
 
 
-@query("sql_recursive_hierarchy_rollup", oracle=_RECURSIVE_ROLLUP_SQL)
-def q_sql_recursive_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical (BOM-style) rollup through a recursive CTE — the
-    classic WITH RECURSIVE workload (org charts, bill-of-materials,
-    account trees), here over the implicit decimal-digit tree
-    parent(k) = ⌊k/10⌋: every part's whole-dollar retail price is
-    propagated up its ancestor chain and summed per ancestor. The SAME
-    SQL text executes on Spark 4's recursive-CTE front-end and on
-    DuckDB — proving the engine's declarative recursion surface, the
-    complement of the driver-loop iteration family
-    (`graph_sssp_bounded`, `pagerank_converge`) where the loop lives
-    in Python and each round is a checkpointed DataFrame.
-
-    Termination/scale: the hierarchy is a FOREST (one parent per
-    node, strictly decreasing key), so UNION ALL recursion emits
-    exactly depth(k) ≤ ⌈log₁₀ max_key⌉ rows per part — the recursion
-    is linear in input, no walk explosion; each round is one
-    hash-join-free projection and the final rollup is a single
-    hash-agg over ~depth·n rows.
-
-    Spark guards runaway recursion with
-    spark.sql.cteRecursionRowLimit (default 1M TOTAL emitted rows) —
-    a data-size limit, not a depth limit, so a perfectly terminating
-    linear recursion trips it once depth·|part| crosses 1M (first hit
-    at sf1.0: 200k parts x ~9 digit levels ≈ 1.8M rows). The 100M
-    scale envelope is session posture in session.get_spark() (ADVICE
-    r09: a builder must not mutate shared-session conf — the limit is
-    read at execution time, so it cannot be restored after build); a
-    bare driver-supplied session keeps Spark's 1M default and this
-    query simply errors loudly past it rather than silently weakening
-    the guard for every later recursive query. The real runaway
-    guard, the depth limit (cteRecursionLevelLimit = 100), stays at
-    its default everywhere — this forest's depth is
-    ≤ ⌈log₁₀ max_key⌉ ≈ 10."""
-    table(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_RECURSIVE_ROLLUP_SQL)
+# Hierarchical (BOM-style) rollup through a recursive CTE — the classic
+# WITH RECURSIVE workload (org charts, bill-of-materials, account
+# trees), here over the implicit decimal-digit tree parent(k) = ⌊k/10⌋:
+# every part's whole-dollar retail price is propagated up its ancestor
+# chain and summed per ancestor. The forest (one parent per node,
+# strictly decreasing key) makes UNION ALL emit depth(k) <= ceil(log10
+# max_key) rows per part, so the recursion is linear in input. Spark
+# caps the TOTAL rows a recursive CTE emits at
+# spark.sql.cteRecursionRowLimit (default 1M, first crossed at sf1.0);
+# session.get_spark() raises it, and a bare driver session keeps the
+# default and errors loudly past it. The depth guard
+# (cteRecursionLevelLimit = 100) stays at its default everywhere.
+sql_query("sql_recursive_hierarchy_rollup", _RECURSIVE_ROLLUP_SQL)
 
 
 @query(
@@ -1268,25 +917,16 @@ def q_intersect_all_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return f.intersectAll(o)
 
 
-@query(
+# EXCEPT ALL (bag semantics): each customer key appears max(#finished −
+# #open, 0) times — multiset difference.
+sql_query(
     "except_all_customers",
-    oracle="""
+    """
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
     EXCEPT ALL
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
     """,
 )
-def q_except_all_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT ALL (bag semantics): each customer key appears
-    max(#finished − #open, 0) times — multiset difference."""
-    orders = table(spark, sf_dir, "orders")
-    f = orders.filter(F.col("o_orderstatus") == "F").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    o = orders.filter(F.col("o_orderstatus") == "O").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return f.exceptAll(o)
 
 
 # ---------------------------------------------------------------------------
@@ -1426,19 +1066,10 @@ FROM region r, LATERAL (
 """
 
 
-@query("sql_lateral_topn_per_region", oracle=_LATERAL_TOPN_SQL)
-def q_sql_lateral_topn_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim-SQL LATERAL dependent join: per region, the top-2
-    nations by customer count from a correlated lateral subquery with
-    its own GROUP BY / ORDER BY / LIMIT — the SAME SQL text executes
-    on Spark and on the oracle engine (the dependent-join surface an
-    engine must expose for migrating SQL verbatim, the LATERAL sibling
-    of `sql_recursive_hierarchy_rollup`). Ties break on nation name.
-
-    Plan: Catalyst decorrelates the lateral into a join + per-region
-    ranked aggregate (DecorrelateInnerQuery); with 5 regions the
-    outer side is the tiny one — the dependent join never iterates.
-    """
-    for t in ("region", "nation", "customer"):
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_LATERAL_TOPN_SQL)
+# Verbatim-SQL LATERAL dependent join: per region, the top-2 nations by
+# customer count from a correlated lateral subquery with its own GROUP
+# BY / ORDER BY / LIMIT — the SAME SQL text executes on Spark and on the
+# oracle engine (the dependent-join surface an engine must expose for
+# migrating SQL verbatim, the LATERAL sibling of
+# `sql_recursive_hierarchy_rollup`).
+sql_query("sql_lateral_topn_per_region", _LATERAL_TOPN_SQL)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from distributed_mapreduce_spark.operators.partitioning import global_cumsum
 from distributed_mapreduce_spark.workload.registry import (
     query,
+    sql_query,
     table,
     wide_shuffle_parts,
 )
@@ -802,9 +803,12 @@ def q_top_terms_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Power-of-two document-length histogram per source (band =
+# floor(log2(n_chars))): the heavy-tail shape check run before setting
+# chunking and packing parameters.
+sql_query(
     "docs_length_bands",
-    oracle="""
+    """
     WITH b AS (
       SELECT source,
              CAST(length(bin(CAST(n_chars AS BIGINT))) - 1 AS INTEGER)
@@ -819,26 +823,6 @@ def q_top_terms_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM b GROUP BY 1, 2
     """,
 )
-def q_docs_length_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power-of-two document-length histogram per source (band =
-    floor(log2(n_chars))): the heavy-tail shape check run before
-    setting chunking and packing parameters. The band is computed as
-    `length(bin(n)) - 1` — pure integer/string ops on BOTH engines, no
-    float log2 (libm rounding is not portable; bin() is).
-
-    Plan: per-row banding + one hash-agg; nothing else.
-    """
-    docs = table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    band = (F.length(F.bin(F.col("n_chars").cast("bigint"))) - 1).cast("int")
-    return (
-        docs.select("source", band.alias("band"), "n_chars")
-        .groupBy("source", "band")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("n_chars").cast("long").alias("min_chars"),
-            F.max("n_chars").cast("long").alias("max_chars"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -22,15 +22,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 YOY_YEAR_A = 1996
 YOY_YEAR_B = 1997
 
 
-@query(
+# Declarative data-quality suite: PK uniqueness, FK integrity (anti-
+# joins), domain membership, range checks, and a cross-table temporal
+# sanity rule — one (check_name, n_violations) row each.
+sql_query(
     "dq_checks",
-    oracle="""
+    """
     SELECT 'orders_pk_unique' AS check_name,
            CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) AS n_violations
     FROM orders
@@ -63,59 +66,15 @@ YOY_YEAR_B = 1997
     WHERE l.l_shipdate < o.o_orderdate
     """,
 )
-def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative data-quality suite: PK uniqueness, FK integrity
-    (anti-joins), domain membership, range checks, and a cross-table
-    temporal sanity rule — one (check_name, n_violations) row each.
-
-    Plan: per-table rule groups share a scan; FK checks are left-anti
-    joins (shuffle carries keys only); the cross-table rule is an
-    equi-join filtered before aggregation. Every branch reduces to one
-    row, so the union is driver-cheap regardless of table size."""
-    orders = table(spark, sf_dir, "orders")
-    lineitem = table(spark, sf_dir, "lineitem")
-    customer = table(spark, sf_dir, "customer")
-
-    pk = orders.agg(
-        (F.count(F.lit(1)) - F.countDistinct("o_orderkey")).cast("long").alias("n_violations")
-    ).select(F.lit("orders_pk_unique").alias("check_name"), "n_violations")
-    fk_oc = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey, "left_anti")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_violations"))
-        .select(F.lit("orders_fk_customer").alias("check_name"), "n_violations")
-    )
-    fk_lo = (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey, "left_anti")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_violations"))
-        .select(F.lit("lineitem_fk_orders").alias("check_name"), "n_violations")
-    )
-    dom = (
-        orders.filter(~F.col("o_orderstatus").isin("F", "O", "P"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_violations"))
-        .select(F.lit("orders_status_domain").alias("check_name"), "n_violations")
-    )
-    price = (
-        orders.filter((F.col("o_totalprice") <= 0) | F.col("o_totalprice").isNull())
-        .agg(F.count(F.lit(1)).cast("long").alias("n_violations"))
-        .select(F.lit("orders_price_positive").alias("check_name"), "n_violations")
-    )
-    qty = (
-        lineitem.filter((F.col("l_quantity") < 1) | (F.col("l_quantity") > 50))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_violations"))
-        .select(F.lit("lineitem_qty_range").alias("check_name"), "n_violations")
-    )
-    temporal = (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .filter(F.col("l_shipdate") < F.col("o_orderdate"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_violations"))
-        .select(F.lit("ship_before_order").alias("check_name"), "n_violations")
-    )
-    return pk.unionAll(fk_oc).unionAll(fk_lo).unionAll(dom).unionAll(price).unionAll(qty).unionAll(temporal)
 
 
-@query(
+# Snapshot diff: per-customer order counts in YOY_YEAR_A vs
+# YOY_YEAR_B, the delta, and a new/lost/retained classification — the
+# CDC-style comparison shape (two aggregated snapshots, full-outer
+# joined on the business key).
+sql_query(
     "yoy_customer_orders",
-    oracle=f"""
+    f"""
     WITH a AS (
       SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_a
       FROM orders WHERE year(o_orderdate) = {YOY_YEAR_A} GROUP BY 1
@@ -133,40 +92,6 @@ def q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM a FULL OUTER JOIN b ON a.o_custkey = b.o_custkey
     """,
 )
-def q_yoy_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot diff: per-customer order counts in {YOY_YEAR_A} vs
-    {YOY_YEAR_B}, the delta, and a new/lost/retained classification —
-    the CDC-style comparison shape (two aggregated snapshots,
-    full-outer joined on the business key).
-
-    Plan: both snapshots are year-pruned aggregates of the same scan
-    lineage (one row per customer each), full-outer joined on custkey —
-    the join input is already reduced, so the shuffle is key+counter
-    wide only."""
-    orders = table(spark, sf_dir, "orders")
-    a = (
-        orders.filter(F.year("o_orderdate") == YOY_YEAR_A)
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_a"))
-    )
-    b = (
-        orders.filter(F.year("o_orderdate") == YOY_YEAR_B)
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_b"))
-    )
-    j = a.alias("a").join(b.alias("b"), F.col("a.o_custkey") == F.col("b.o_custkey"), "full_outer")
-    return j.select(
-        F.coalesce(F.col("a.o_custkey"), F.col("b.o_custkey")).alias("custkey"),
-        F.coalesce(F.col("n_a"), F.lit(0)).cast("long").alias(f"n_{YOY_YEAR_A}"),
-        F.coalesce(F.col("n_b"), F.lit(0)).cast("long").alias(f"n_{YOY_YEAR_B}"),
-        (F.coalesce(F.col("n_b"), F.lit(0)) - F.coalesce(F.col("n_a"), F.lit(0)))
-        .cast("long")
-        .alias("delta"),
-        F.when(F.col("a.o_custkey").isNull(), "new")
-        .when(F.col("b.o_custkey").isNull(), "lost")
-        .otherwise("retained")
-        .alias("cohort"),
-    )
 
 
 @query(
@@ -225,9 +150,14 @@ def q_join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Cross-modal-table reconciliation: the documents↔embeddings id
+# alignment a training pipeline must verify before embedding-keyed dedup
+# or retrieval — documents still awaiting embedding (pipeline backlog)
+# and orphan vectors whose source text is gone (must be purged, e.g.
+# after a takedown).
+sql_query(
     "embedding_doc_reconcile",
-    oracle="""
+    """
     WITH d AS (SELECT doc_id FROM documents),
     e AS (SELECT vec_id FROM embeddings)
     SELECT
@@ -243,39 +173,6 @@ def q_join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         AS n_orphan_vectors
     """,
 )
-def q_embedding_doc_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-modal-table reconciliation: the documents↔embeddings id
-    alignment a training pipeline must verify before embedding-keyed
-    dedup or retrieval — documents still awaiting embedding (pipeline
-    backlog) and orphan vectors whose source text is gone (must be
-    purged, e.g. after a takedown). Inner/anti join counts in one row.
-
-    Plan: key-only projections, one equi-join and two anti joins on
-    the same key — each a single shuffle of ids, no payload movement
-    (embeddings' float arrays are never read: check scan_cols)."""
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    vecs = table(spark, sf_dir, "embeddings").select("vec_id")
-    matched = docs.join(vecs, docs.doc_id == vecs.vec_id).agg(
-        F.count(F.lit(1)).cast("long").alias("n_matched")
-    )
-    unemb = docs.join(vecs, docs.doc_id == vecs.vec_id, "left_anti").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs_unembedded")
-    )
-    orphans = vecs.join(docs, docs.doc_id == vecs.vec_id, "left_anti").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orphan_vectors")
-    )
-    nd = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    nv = vecs.agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
-    return (
-        nd.crossJoin(nv)
-        .crossJoin(matched)
-        .crossJoin(unemb)
-        .crossJoin(orphans)
-        .select(
-            "n_docs", "n_vectors", "n_matched", "n_docs_unembedded",
-            "n_orphan_vectors",
-        )
-    )
 
 
 #: k-anonymity threshold for the governance audit.

@@ -134,3 +134,38 @@ def test_landing_is_per_process_and_cached(spark):
     ) or a != "/tmp/spark_graft_stream_landing", (
         "the round-10 shared cache root must no longer be the landing target"
     )
+
+
+def test_landing_is_fresh_after_in_place_part_rewrite(spark, tmp_path):
+    """A directory source whose part file is rewritten in place keeps
+    the directory's size and mtime, so only a per-file key sees the new
+    version: the landing must be redone, not reused."""
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{SF}/events.parquet")
+    src = tmp_path / "events.parquet"
+    src.mkdir()
+    pq.write_table(events, src / "part-0.parquet")
+    pq.write_table(events, src / "part-1.parquet")
+    first = _landing_dir(spark, str(tmp_path))
+    dir_stat = os.stat(src)
+
+    with open(src / "part-1.parquet", "r+b") as fh:  # same inode, new bytes
+        fh.truncate(0)
+        pq.write_table(events.slice(0, 10), fh)
+    assert os.stat(src).st_mtime_ns == dir_stat.st_mtime_ns
+
+    second = _landing_dir(spark, str(tmp_path))
+    assert second != first, "a rewritten part file must land afresh"
+    assert spark.read.parquet(second).count() == events.num_rows + 10
+
+
+def test_unfingerprinted_source_is_never_memoized(spark, monkeypatch):
+    from distributed_mapreduce_spark.workload import streaming_q
+
+    monkeypatch.setattr(streaming_q, "fingerprint", lambda path: None)
+    before = dict(_LANDED)
+    a = _landing_dir(spark, SF)
+    b = _landing_dir(spark, SF)
+    assert a != b
+    assert _LANDED == before
