@@ -67,7 +67,7 @@ def hash_bucket(df: DataFrame, key_col: str, num_buckets: int, bucket_col: str =
     Portable across engines (md5 is standardized), unlike Python
     `hash()` (run-to-run nondeterministic, fileserver.py:693) or Spark's
     Murmur3 `F.hash` (engine-specific). SQL twin:
-    ``('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 8))::BIGINT % n``.
+    ``('0x' || substr(md5(CAST(k AS STRING)), 1, 8))::BIGINT % n``.
     """
     h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10).cast("long")
     return df.withColumn(bucket_col, (h % F.lit(num_buckets)).cast("int"))

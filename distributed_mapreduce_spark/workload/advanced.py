@@ -520,14 +520,14 @@ sql_query(
     oracle="""
     SELECT 'orders' AS tbl, count(*) AS n_rows,
            CAST(sum(('0x' || substr(md5(
-               CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR) || '|' ||
-               o_orderstatus || '|' || CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR)
+               CAST(o_orderkey AS STRING) || '|' || CAST(o_custkey AS STRING) || '|' ||
+               o_orderstatus || '|' || CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS STRING)
            ), 1, 8))::BIGINT) AS BIGINT) AS checksum
     FROM orders
     UNION ALL
     SELECT 'customer', count(*),
            CAST(sum(('0x' || substr(md5(
-               CAST(c_custkey AS VARCHAR) || '|' || c_name || '|' || CAST(c_nationkey AS VARCHAR)
+               CAST(c_custkey AS STRING) || '|' || c_name || '|' || CAST(c_nationkey AS STRING)
            ), 1, 8))::BIGINT) AS BIGINT)
     FROM customer
     """,

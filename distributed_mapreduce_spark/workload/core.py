@@ -105,9 +105,9 @@ def q_filter_eq_param(spark: SparkSession, sf_dir: str) -> DataFrame:
     "select_regex",
     oracle=f"""
     SELECT doc_id,
-           concat_ws(',', CAST(doc_id AS VARCHAR), text, lang, source) AS line
+           concat_ws(',', CAST(doc_id AS STRING), text, lang, source) AS line
     FROM documents
-    WHERE regexp_matches(concat_ws(',', CAST(doc_id AS VARCHAR), text, lang, source),
+    WHERE regexp_matches(concat_ws(',', CAST(doc_id AS STRING), text, lang, source),
                          '{SELECT_PATTERN}')
     """,
 )
@@ -256,44 +256,23 @@ def q_pct_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg_pct_of_total(table(spark, sf_dir, "lineitem"), "l_returnflag")
 
 
-@query(
+# Multi-aggregate pricing summary (TPC-H Q1 shape). DECIMAL sums with a
+# pinned scale, surfaced as fixed-scale strings so every engine's row
+# hasher sees the same digits (double sums are order-dependent).
+sql_query(
     "agg_q1",
-    oracle="""
+    """
     SELECT l_returnflag, l_linestatus,
-           CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS VARCHAR) AS sum_qty,
-           CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS VARCHAR) AS sum_base_price,
+           CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS STRING) AS sum_qty,
+           CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(30,2)) AS STRING) AS sum_base_price,
            CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(30,4)) AS VARCHAR) AS revenue,
+                    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(30,4)) AS STRING) AS revenue,
            count(*) AS count_order
     FROM lineitem
     WHERE l_quantity <= 25
     GROUP BY 1, 2
     """,
 )
-def q_agg_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-aggregate pricing summary (TPC-H Q1 shape) — the upgraded
-    form of the reference's count/sum reducers. DECIMAL sums with pinned
-    scale: double sums are non-associative and engine-order-dependent.
-
-    The DECIMAL aggregates are surfaced as canonical fixed-scale strings:
-    a pinned-scale decimal renders identical digit strings in any engine,
-    which makes the output hash-stable across comparator implementations
-    (round-1 driver hashed DECIMAL columns differently despite value-equal
-    rows — VERDICT r01 "What's wrong" #1)."""
-    li = table(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast("decimal(18,2)")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    return (
-        li.filter(F.col("l_quantity") <= 25)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty).cast("decimal(30,2)").cast("string").alias("sum_qty"),
-            F.sum(price).cast("decimal(30,2)").cast("string").alias("sum_base_price"),
-            F.sum(price * (F.lit(1).cast("decimal(18,2)") - disc)).cast("decimal(30,4)").cast("string").alias("revenue"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
 
 
 @query(
@@ -458,44 +437,22 @@ sql_query(
 )
 
 
-@query(
+# Running-sum window with a total ordering: (l_orderkey, l_linenumber) is
+# not unique in this data, so the order runs through every remaining
+# column; rows that still tie are full duplicates.
+sql_query(
     "window_running",
-    oracle="""
+    """
     SELECT l_suppkey, l_orderkey, l_linenumber,
            CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
                 OVER (PARTITION BY l_suppkey
                       ORDER BY l_shipdate, l_orderkey, l_linenumber,
                                l_partkey, l_quantity, l_extendedprice
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS DECIMAL(30,2)) AS VARCHAR) AS running_qty
+                AS DECIMAL(30,2)) AS STRING) AS running_qty
     FROM lineitem
     """,
 )
-def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running-sum analytic window with a total deterministic ordering.
-
-    (l_orderkey, l_linenumber) is NOT unique in the harness data, so the
-    order extends through every remaining column — rows that still tie
-    are full duplicates, whose outputs are identical either way.
-
-    running_qty is surfaced as a fixed-scale decimal string for
-    comparator hash stability (VERDICT r01 "What's wrong" #1); the sum
-    itself stays DECIMAL internally."""
-    li = table(spark, sf_dir, "lineitem")
-    w = (
-        Window.partitionBy("l_suppkey")
-        .orderBy(
-            "l_shipdate", "l_orderkey", "l_linenumber",
-            "l_partkey", "l_quantity", "l_extendedprice",
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return li.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).over(w).cast("decimal(30,2)").cast("string").alias("running_qty"),
-    )
 
 
 # ORDER BY + LIMIT k → TakeOrderedAndProject (per-partition top-k,
@@ -530,7 +487,7 @@ sql_query(
     "partition_hash_assign",
     oracle="""
     SELECT bucket, count(*) AS cnt FROM (
-      SELECT CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT % 8 AS INTEGER) AS bucket
+      SELECT CAST(('0x' || substr(md5(CAST(o_orderkey AS STRING)), 1, 8))::BIGINT % 8 AS INTEGER) AS bucket
       FROM orders
     ) GROUP BY bucket
     """,
@@ -647,8 +604,8 @@ RV_NODES = 8
       SELECT k FROM generate_series(0, {RV_NODES - 1}) t(k)
     ), w AS (
       SELECT o.o_orderkey, n.k,
-             ('0x' || substr(md5('rv_' || CAST(o.o_orderkey AS VARCHAR)
-                                 || '|node' || CAST(n.k AS VARCHAR)), 1, 8))::BIGINT
+             ('0x' || substr(md5('rv_' || CAST(o.o_orderkey AS STRING)
+                                 || '|node' || CAST(n.k AS STRING)), 1, 8))::BIGINT
                AS wt
       FROM orders o CROSS JOIN nodes n
     ), ranked AS (
@@ -830,7 +787,7 @@ def _ring_oracle() -> str:
              list_min(list_filter([{lits}], p -> p // 16 >= h)),
              {_ring_points(vn)[0]}) % 16 AS node
     FROM (SELECT o_orderkey,
-                 ('0x' || substr(md5('ringk_' || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT AS h
+                 ('0x' || substr(md5('ringk_' || CAST(o_orderkey AS STRING)), 1, 8))::BIGINT AS h
           FROM orders)"""
         )
     assign = " UNION ALL ".join(parts)

@@ -44,6 +44,7 @@ from distributed_mapreduce_spark.workload.quality import (
 )
 from distributed_mapreduce_spark.workload.quality import _ngrams, _sql_ngrams
 from distributed_mapreduce_spark.workload.registry import (
+    hex_bigint,
     query,
     sql_query,
     table,
@@ -908,68 +909,36 @@ PRIO_K = 100
 QUOTA_PER_SOURCE = 5
 
 
-@query(
+# Deterministic uniform k-sample (priority sampling): the k smallest md5
+# priorities win, reproducible across engines and cluster sizes.
+sql_query(
     "priority_sample_k",
-    oracle=f"""
+    f"""
     SELECT doc_id, source,
-           {_sql_hash_u32("CAST(doc_id AS VARCHAR)", 'prio_')} AS prio
+           {hex_bigint("md5('prio_' || CAST(doc_id AS STRING))")} AS prio
     FROM documents
     ORDER BY prio, doc_id
     LIMIT {PRIO_K}
     """,
 )
-def q_priority_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic uniform k-sample (priority sampling): every doc
-    gets an md5 priority, the k smallest win — statistically a uniform
-    without-replacement sample, but reproducible across engines, runs,
-    and cluster sizes (rand()-based sampling is none of those). The
-    eval-subset / human-annotation selection shape.
-
-    Plan: TakeOrderedAndProject — per-partition top-k then a k-row
-    driver merge; no global sort, no full shuffle, at any corpus
-    size."""
-    docs = table(spark, sf_dir, "documents")
-    prio = _hash_u32(F.col("doc_id").cast("string"), "prio_")
-    return (
-        docs.select("doc_id", "source", prio.alias("prio"))
-        .orderBy("prio", "doc_id")
-        .limit(PRIO_K)
-    )
 
 
-@query(
+# Balanced subset: QUOTA_PER_SOURCE docs per source, picked by md5
+# priority within the source (one window per source partition).
+sql_query(
     "stratified_quota_sample",
-    oracle=f"""
+    f"""
     SELECT doc_id, source, CAST(rn AS INTEGER) AS rn
     FROM (
       SELECT doc_id, source,
              row_number() OVER (
                PARTITION BY source
-               ORDER BY {_sql_hash_u32("CAST(doc_id AS VARCHAR)", 'quota_')}, doc_id
+               ORDER BY {hex_bigint("md5('quota_' || CAST(doc_id AS STRING))")}, doc_id
              ) AS rn
       FROM documents
     ) WHERE rn <= {QUOTA_PER_SOURCE}
     """,
 )
-def q_stratified_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Balanced subset: exactly {QUOTA_PER_SOURCE} docs per source
-    (fewer only if the source is smaller), chosen by hash priority
-    within each source — the class-balanced eval/annotation sampler
-    (quota complement of the rate-based `corpus_mixture_sample`).
-
-    Plan: one window per source partition (bounded per-key state —
-    never a global sort); the hash priority makes the per-group pick
-    order-independent and reproducible."""
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents")
-    prio = _hash_u32(F.col("doc_id").cast("string"), "quota_")
-    w = Window.partitionBy("source").orderBy(prio, F.col("doc_id"))
-    return (
-        docs.select("doc_id", "source", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= QUOTA_PER_SOURCE)
-        .select("doc_id", "source", F.col("rn").cast("int").alias("rn"))
-    )
 
 
 @query(
@@ -1106,7 +1075,7 @@ EPOCH_HEAD_CW, EPOCH_MID_CW, EPOCH_TAIL_CW = 250, 100, 40
              CASE WHEN CAST(substr(source, 4) AS INTEGER) < 5 THEN {EPOCH_HEAD_CW}
                   WHEN CAST(substr(source, 4) AS INTEGER) < 15 THEN {EPOCH_MID_CW}
                   ELSE {EPOCH_TAIL_CW} END AS cw,
-             ('0x' || substr(md5('epoch_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+             ('0x' || substr(md5('epoch_' || CAST(doc_id AS STRING)), 1, 8))::BIGINT
                % 100 AS h
       FROM documents
     ), r AS (
@@ -1395,13 +1364,16 @@ def q_source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 WPRIO_K = 64
 
 
-@query(
+# Weight-proportional sample (Duffield-Lund-Thorup priority sampling):
+# priority n_chars / (1 + md5 uniform), k largest win. One IEEE division
+# of exact integers, so both engines compute bit-identical doubles.
+sql_query(
     "weighted_sample_priority",
-    oracle=f"""
+    f"""
     WITH pr AS (
       SELECT doc_id, source, CAST(n_chars AS BIGINT) AS weight,
              CAST(n_chars AS DOUBLE)
-               / (1 + {_sql_hash_u32("CAST(doc_id AS VARCHAR)", 'wprio_')})
+               / (1 + {hex_bigint("md5('wprio_' || CAST(doc_id AS STRING))")})
                AS prio
       FROM documents
     )
@@ -1409,37 +1381,6 @@ WPRIO_K = 64
     FROM pr ORDER BY prio DESC, doc_id LIMIT {WPRIO_K}
     """,
 )
-def q_weighted_sample_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weight-proportional without-replacement sample (priority
-    sampling, Duffield-Lund-Thorup): each document draws priority
-    weight/u with a deterministic per-doc uniform u (md5-derived, like
-    `priority_sample_k`); the k largest priorities win, giving
-    inclusion probability ~ proportional to n_chars — the
-    length-weighted eval-set / upsampling selection an LLM data
-    pipeline uses, reproducible across engines, runs and cluster
-    sizes.
-
-    Exactness: the priority is ONE IEEE division of exact integers
-    (both engines divide the same numerator by the same 33-bit-bounded
-    denominator; division is correctly rounded, so the doubles are
-    bit-identical) with doc_id tie-break.
-
-    Plan: per-partition top-k + k-row driver merge
-    (TakeOrderedAndProject) — no global sort, no shuffle of the
-    corpus, at any scale.
-    """
-    docs = table(spark, sf_dir, "documents")
-    u = _hash_u32(F.col("doc_id").cast("string"), "wprio_")
-    return (
-        docs.select(
-            "doc_id",
-            "source",
-            F.col("n_chars").cast("long").alias("weight"),
-            (F.col("n_chars").cast("double") / (u + F.lit(1))).alias("prio"),
-        )
-        .orderBy(F.col("prio").desc(), "doc_id")
-        .limit(WPRIO_K)
-    )
 
 
 @query(

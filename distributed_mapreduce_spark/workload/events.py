@@ -28,7 +28,7 @@ SESSION_GAP_MIN = 30
     oracle="""
     SELECT CAST(time_bucket(INTERVAL '1 hour', ts) AS TIMESTAMP_NS) AS ws, event_type,
            count(*) AS n_events,
-           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS VARCHAR)
+           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS STRING)
              AS sum_value
     FROM events GROUP BY 1, 2
     """,
@@ -309,7 +309,7 @@ SAMPLE_BP = {"click": 2500, "view": 1000, "purchase": 10000, "signup": 10000, "e
     oracle=f"""
     SELECT event_type, count(*) AS n_sampled
     FROM events
-    WHERE ('0x' || substr(md5('samp_' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 10000
+    WHERE ('0x' || substr(md5('samp_' || CAST(event_id AS STRING)), 1, 8))::BIGINT % 10000
           < CASE event_type
               WHEN 'click' THEN {SAMPLE_BP["click"]}
               WHEN 'view' THEN {SAMPLE_BP["view"]}
@@ -376,45 +376,19 @@ def q_events_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Trailing-hour decimal sum per event via a RANGE frame; equal
+# timestamps are peers in both engines, so no tiebreaker is needed.
+sql_query(
     "window_trailing_1h",
-    oracle="""
+    """
     SELECT event_id, user_id, ts,
            CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) OVER (
              PARTITION BY user_id ORDER BY ts
              RANGE BETWEEN INTERVAL '1 hour' PRECEDING AND CURRENT ROW
-           ) AS DECIMAL(30,6)) AS VARCHAR) AS trail_1h_sum
+           ) AS DECIMAL(30,6)) AS STRING) AS trail_1h_sum
     FROM events
     """,
 )
-def q_window_trailing_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-based sliding aggregate via a RANGE window frame: per
-    event, the exact decimal sum of the same user's values in the
-    trailing hour (inclusive). RANGE frames treat equal timestamps as
-    peers on both engines, so the result is order-insensitive even
-    under ts collisions — no tiebreaker column needed.
-
-    Plan: one window partitioned by user_id ordered by event time with
-    a value-bounded frame — WindowExec keeps only the trailing-hour
-    buffer per key (bounded state), the streaming-compatible shape.
-    The decimal result is surfaced as a pinned-scale string (driver
-    hash canonicalization, VERDICT r1 #1)."""
-    ev = table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros(F.col("ts")))
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.sum(F.col("value").cast("decimal(18,6)"))
-        .over(w)
-        .cast("decimal(30,6)")
-        .cast("string")
-        .alias("trail_1h_sum"),
-    )
 
 
 #: Anomaly gate: trailing window length (hours) and minimum history.
@@ -719,8 +693,8 @@ sql_query("dau_wau_mau", _DAU_WAU_MAU_SQL)
     SELECT event_type AS partition_key,
            CAST(count(*) AS BIGINT) AS n_rows,
            CAST(sum(('0x' || substr(md5(
-               CAST(event_id AS VARCHAR) || '|' || CAST(user_id AS VARCHAR) || '|' ||
-               CAST(epoch_us(ts) AS VARCHAR)
+               CAST(event_id AS STRING) || '|' || CAST(user_id AS STRING) || '|' ||
+               CAST(epoch_us(ts) AS STRING)
            ), 1, 8))::BIGINT) AS BIGINT) AS checksum
     FROM events GROUP BY event_type
     """,

@@ -152,7 +152,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n_events,
-           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS VARCHAR)
+           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS STRING)
              AS sum_value,
            min(value) AS min_value,
            max(value) AS max_value
@@ -201,7 +201,7 @@ def q_partial_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n_events,
-           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS VARCHAR)
+           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS STRING)
              AS sum_value
     FROM events
     WHERE event_id % 13 <> 0
@@ -268,47 +268,6 @@ sql_query(
 )
 
 
-def maintain_minmax_after_delete(
-    df: DataFrame, delete_pred, key_col: str, value_col: str
-) -> DataFrame:
-    """Min/max view maintenance under a delete batch — the reusable
-    core of `ivm_retraction_minmax` (also unit-tested with synthetic
-    extremum deletions in tests/test_operators.py). Returns
-    (key, min_value, max_value, rebuilt): untouched groups carry the
-    materialized extrema forward, groups whose delete batch contains
-    the current extremum are re-aggregated over retained rows only."""
-    base = df.groupBy(key_col).agg(
-        F.min(value_col).alias("mn"), F.max(value_col).alias("mx")
-    )
-    dels = (
-        df.filter(delete_pred)
-        .groupBy(key_col)
-        .agg(F.min(value_col).alias("dmn"), F.max(value_col).alias("dmx"))
-    )
-    affected = (
-        base.join(dels, key_col)
-        .filter((F.col("dmn") == F.col("mn")) | (F.col("dmx") == F.col("mx")))
-        .select(key_col)
-    )
-    untouched = base.join(affected, key_col, "left_anti").select(
-        key_col,
-        F.col("mn").alias("min_value"),
-        F.col("mx").alias("max_value"),
-        F.lit(False).alias("rebuilt"),
-    )
-    rebuilt = (
-        df.filter(~delete_pred)
-        .join(affected, key_col, "left_semi")
-        .groupBy(key_col)
-        .agg(
-            F.min(value_col).alias("min_value"),
-            F.max(value_col).alias("max_value"),
-        )
-        .withColumn("rebuilt", F.lit(True))
-    )
-    return untouched.unionByName(rebuilt)
-
-
 @query(
     "ivm_join_delta",
     oracle="""
@@ -320,7 +279,7 @@ def maintain_minmax_after_delete(
     )
     SELECT c_nationkey,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(CAST(sum(price) AS DECIMAL(30,2)) AS VARCHAR) AS sum_price,
+           CAST(CAST(sum(price) AS DECIMAL(30,2)) AS STRING) AS sum_price,
            CAST(count(*) FILTER (is_delta) AS BIGINT) AS delta_orders
     FROM j GROUP BY c_nationkey
     """,

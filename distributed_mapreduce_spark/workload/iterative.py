@@ -429,7 +429,7 @@ def _mis_prio_sql(u: str) -> str:
     # (unique per node even on hash collisions) that fits int64 for
     # node ids < 2^32.
     return (
-        f"((('0x' || substr(md5('mis_' || CAST({u} AS VARCHAR)), 1, 8))::BIGINT >> 1)"
+        f"((('0x' || substr(md5('mis_' || CAST({u} AS STRING)), 1, 8))::BIGINT >> 1)"
         f" * 4294967296 + {u})"
     )
 
@@ -547,8 +547,8 @@ MATCH_ROUNDS = 3
 
 def _match_prio_sql() -> str:
     return (
-        "(('0x' || substr(md5('me_' || CAST(u AS VARCHAR) || '_' ||"
-        " CAST(v AS VARCHAR)), 1, 8))::BIGINT)"
+        "(('0x' || substr(md5('me_' || CAST(u AS STRING) || '_' ||"
+        " CAST(v AS STRING)), 1, 8))::BIGINT)"
     )
 
 

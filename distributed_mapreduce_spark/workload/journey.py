@@ -28,7 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, sql_query, table
+from distributed_mapreduce_spark.workload.registry import (
+    hex_bigint,
+    query,
+    sql_query,
+    table,
+)
 
 #: Ordered funnel stages over `events.event_type`.
 FUNNEL_STAGES = ("view", "click", "purchase")
@@ -233,12 +238,16 @@ sql_query(
 )
 
 
-@query(
+# Deterministic A/B readout: users md5-assigned to arms, per-arm exposure
+# and conversion, exact decimal purchase value as a pinned-scale string.
+# The arm is the parity of the md5 prefix's u32, which is the parity of
+# its last (8th) hex digit, so only that digit is read.
+sql_query(
     "ab_split_metrics",
-    oracle="""
+    f"""
     WITH assigned AS (
       SELECT user_id, event_type, value,
-             CASE WHEN ('0x' || substr(md5('ab_' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2 = 0
+             CASE WHEN {hex_bigint("md5('ab_' || CAST(user_id AS STRING))", 8, 1)} % 2 = 0
                   THEN 'control' ELSE 'treatment' END AS arm
       FROM events
     )
@@ -251,45 +260,10 @@ sql_query(
                       * 10000.0 / count(*)) AS BIGINT) AS purchase_bp,
            CAST(CAST(sum(CASE WHEN event_type = 'purchase'
                               THEN CAST(value AS DECIMAL(18,6)) END)
-                     AS DECIMAL(30,6)) AS VARCHAR) AS purchase_value
+                     AS DECIMAL(30,6)) AS STRING) AS purchase_value
     FROM assigned GROUP BY arm
     """,
 )
-def q_ab_split_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic A/B experiment readout: users hash-assigned to
-    arms (md5 gate — order-independent, re-derivable, the same property
-    the sampling family relies on), per-arm exposure and conversion
-    metrics, exact decimal purchase value surfaced as a pinned-scale
-    string.
-
-    Plan: a stateless projection assigns arms, one hash aggregate per
-    arm; count(DISTINCT) rewrites to a two-level aggregate — no raw
-    event ever leaves its partition unaggregated."""
-    ev = table(spark, sf_dir, "events")
-    arm = F.when(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ab_"), F.col("user_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
-        "control",
-    ).otherwise("treatment")
-    assigned = ev.select("user_id", "event_type", "value", arm.alias("arm"))
-    is_p = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-    return assigned.groupBy("arm").agg(
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(is_p).cast("long").alias("n_purchases"),
-        F.floor(F.sum(is_p) * 10000.0 / F.count(F.lit(1))).cast("long").alias("purchase_bp"),
-        F.sum(
-            F.when(F.col("event_type") == "purchase", F.col("value").cast("decimal(18,6)"))
-        )
-        .cast("decimal(30,6)")
-        .cast("string")
-        .alias("purchase_value"),
-    )
 
 
 @query(
@@ -386,7 +360,7 @@ def q_funnel_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH spend AS (
       SELECT o_custkey,
              CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
-                       AS DECIMAL(30,4)) AS VARCHAR) AS total_spend,
+                       AS DECIMAL(30,4)) AS STRING) AS total_spend,
              CAST(ntile(4) OVER (ORDER BY sum(CAST(o_totalprice AS DECIMAL(18,4))) DESC,
                                  o_custkey) AS INTEGER) AS quartile
       FROM orders GROUP BY o_custkey

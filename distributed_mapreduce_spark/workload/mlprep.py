@@ -129,9 +129,9 @@ def q_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH assigned AS MATERIALIZED (
       SELECT user_id, event_id,
              CASE
-               WHEN {_sql_hash_u32("CAST(user_id AS VARCHAR)", "gs")}
+               WHEN {_sql_hash_u32("CAST(user_id AS STRING)", "gs")}
                     % {SPLIT_BUCKETS} < {SPLIT_TRAIN_LT} THEN 'train'
-               WHEN {_sql_hash_u32("CAST(user_id AS VARCHAR)", "gs")}
+               WHEN {_sql_hash_u32("CAST(user_id AS STRING)", "gs")}
                     % {SPLIT_BUCKETS} < {SPLIT_VAL_LT} THEN 'val'
                ELSE 'test'
              END AS split
@@ -211,7 +211,7 @@ KFOLD_K = 5
     oracle=f"""
     WITH assigned AS MATERIALIZED (
       SELECT o_orderkey, o_custkey,
-             CAST({_sql_hash_u32("CAST(o_custkey AS VARCHAR)", "kf")}
+             CAST({_sql_hash_u32("CAST(o_custkey AS STRING)", "kf")}
                   % {KFOLD_K} AS INTEGER) AS fold,
              CASE WHEN o_totalprice > {TE_PRICE_CUT} THEN 1 ELSE 0 END AS y
       FROM orders
@@ -524,7 +524,7 @@ NEG_K = 4
       WHERE doc_id % {NEG_ANCHOR_MOD} = 0
     ), scored AS (
       SELECT a.anchor_id, d.doc_id AS neg_id,
-             {_sql_hash_u32("CAST(a.anchor_id AS VARCHAR) || '_' || CAST(d.doc_id AS VARCHAR)", "neg")} AS h
+             {_sql_hash_u32("CAST(a.anchor_id AS STRING) || '_' || CAST(d.doc_id AS STRING)", "neg")} AS h
       FROM anch a JOIN documents d ON d.source <> a.a_source
     )
     SELECT anchor_id, neg_id, h, rnk FROM (
@@ -573,7 +573,7 @@ def q_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _split_case_sql(key: str) -> str:
     """train/val/test CASE over the md5 bucket of `key` (same geometry
     as `group_split_audit`)."""
-    h = _sql_hash_u32(f"CAST({key} AS VARCHAR)", "cs")
+    h = _sql_hash_u32(f"CAST({key} AS STRING)", "cs")
     return f"""CASE
       WHEN {h} % {SPLIT_BUCKETS} < {SPLIT_TRAIN_LT} THEN 'train'
       WHEN {h} % {SPLIT_BUCKETS} < {SPLIT_VAL_LT} THEN 'val'

@@ -21,13 +21,13 @@ from distributed_mapreduce_spark.multimodal import (
     extract_image_features,
     sample_frames,
 )
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: Fake-blob layout (multimodal.attach_fake_media): 128 hex chars =
 #: 64 bytes = md5 || reverse(md5) || md5 || reverse(md5).
 _SQL_HEXBLOB = (
-    "md5(CAST(doc_id AS VARCHAR)) || reverse(md5(CAST(doc_id AS VARCHAR)))"
-    " || md5(CAST(doc_id AS VARCHAR)) || reverse(md5(CAST(doc_id AS VARCHAR)))"
+    "md5(CAST(doc_id AS STRING)) || reverse(md5(CAST(doc_id AS STRING)))"
+    " || md5(CAST(doc_id AS STRING)) || reverse(md5(CAST(doc_id AS STRING)))"
 )
 
 
@@ -35,10 +35,10 @@ _SQL_HEXBLOB = (
     "multimodal_features",
     oracle=f"""
     SELECT doc_id,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))::INT + 1 AS INTEGER) AS width,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2))::INT + 1 AS INTEGER) AS height,
+           CAST(('0x' || substr(md5(CAST(doc_id AS STRING)), 1, 2))::INT + 1 AS INTEGER) AS width,
+           CAST(('0x' || substr(md5(CAST(doc_id AS STRING)), 3, 2))::INT + 1 AS INTEGER) AS height,
            CAST(64 AS BIGINT) AS n_bytes,
-           CAST(NULL AS VARCHAR) AS decode_error
+           CAST(NULL AS STRING) AS decode_error
     FROM documents
     """,
 )
@@ -62,15 +62,15 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id,
            CASE WHEN doc_id % 7 = 0 THEN NULL
-                ELSE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))::INT + 1
+                ELSE CAST(('0x' || substr(md5(CAST(doc_id AS STRING)), 1, 2))::INT + 1
                           AS INTEGER) END AS width,
            CASE WHEN doc_id % 7 = 0 THEN NULL
-                ELSE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2))::INT + 1
+                ELSE CAST(('0x' || substr(md5(CAST(doc_id AS STRING)), 3, 2))::INT + 1
                           AS INTEGER) END AS height,
            CASE WHEN doc_id % 7 = 0 THEN CAST(1 AS BIGINT)
                 ELSE CAST(64 AS BIGINT) END AS n_bytes,
            CASE WHEN doc_id % 7 = 0 THEN 'undecodable: payload too short'
-                ELSE CAST(NULL AS VARCHAR) END AS decode_error
+                ELSE CAST(NULL AS STRING) END AS decode_error
     FROM documents
     """,
 )
@@ -153,7 +153,7 @@ def q_multimodal_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(list_sum(list_transform(range(0, 64),
                i -> ('0x' || substr({_SQL_HEXBLOB}, i * 2 + 1, 2))::INT))
              AS BIGINT) AS loudness,
-           CAST(NULL AS VARCHAR) AS decode_error
+           CAST(NULL AS STRING) AS decode_error
     FROM documents
     """,
 )
@@ -179,19 +179,23 @@ def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 MEDIA_DUP_MOD = 97
 
 _SQL_DUP_HEXBLOB = (
-    "md5(CAST(doc_id % 97 AS VARCHAR))"
-    " || reverse(md5(CAST(doc_id % 97 AS VARCHAR)))"
-    " || md5(CAST(doc_id % 97 AS VARCHAR))"
-    " || reverse(md5(CAST(doc_id % 97 AS VARCHAR)))"
+    "md5(CAST(doc_id % 97 AS STRING))"
+    " || reverse(md5(CAST(doc_id % 97 AS STRING)))"
+    " || md5(CAST(doc_id % 97 AS STRING))"
+    " || reverse(md5(CAST(doc_id % 97 AS STRING)))"
 )
 
 
-@query(
+# Exact dedup of binary media: each BINARY blob (`unhex` of the fake
+# media's hex) is fingerprinted as md5 of its hex encoding (DuckDB's md5
+# takes text only), grouped per fingerprint, lowest doc_id kept. Blobs
+# repeat across doc_id % MEDIA_DUP_MOD, so groups hold real duplicates.
+sql_query(
     "multimodal_dedup_exact",
-    oracle=f"""
+    f"""
     WITH m AS (
-      SELECT doc_id, md5(upper({_SQL_DUP_HEXBLOB})) AS fingerprint
-      FROM documents
+      SELECT doc_id, md5(hex(media)) AS fingerprint
+      FROM (SELECT doc_id, unhex({_SQL_DUP_HEXBLOB}) AS media FROM documents)
     )
     SELECT fingerprint,
            CAST(count(*) AS BIGINT) AS n_copies,
@@ -200,35 +204,6 @@ _SQL_DUP_HEXBLOB = (
     FROM m GROUP BY fingerprint
     """,
 )
-def q_multimodal_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup of BINARY media columns: fingerprint each blob
-    byte-for-byte (md5 over its hex encoding — DuckDB's md5 is
-    VARCHAR-only, so the hex round-trip is the portable form), group
-    identical payloads, keep the lowest doc_id per group. The media
-    twin of `dedup_exact`: the thing a crawl pipeline runs before any
-    expensive decode, since re-crawled images dedup on bytes long
-    before perceptual hashing is needed. The synthetic corpus shares
-    blobs across doc_id % {MEDIA_DUP_MOD}, so groups genuinely contain
-    duplicates.
-
-    Plan: fingerprinting is a JVM-side projection over the binary
-    column (no Python boundary — hashing never needs the decode
-    path); dedup is one hash-agg on the 16-byte digest, map-side
-    partials. At 100 TB the digest-groupBy shuffles digests, not
-    blobs.
-    """
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    key = (F.col("doc_id") % MEDIA_DUP_MOD).cast("string")
-    hexblob = F.concat(
-        F.md5(key), F.reverse(F.md5(key)), F.md5(key), F.reverse(F.md5(key))
-    )
-    media = docs.select("doc_id", F.unhex(hexblob).alias("media"))
-    fp = media.select("doc_id", F.md5(F.hex(F.col("media"))).alias("fingerprint"))
-    return fp.groupBy("fingerprint").agg(
-        F.count(F.lit(1)).alias("n_copies"),
-        F.min("doc_id").alias("keep_doc"),
-        (F.count(F.lit(1)) - 1).cast("long").alias("n_discard"),
-    )
 
 
 def _sql_phash() -> str:
@@ -243,7 +218,7 @@ def _sql_phash() -> str:
     return f"""
     SELECT doc_id,
            CAST({terms} AS BIGINT) AS phash,
-           CAST(NULL AS VARCHAR) AS decode_error
+           CAST(NULL AS STRING) AS decode_error
     FROM (SELECT doc_id, {_SQL_HEXBLOB} AS hb FROM documents)
     """
 
@@ -274,7 +249,7 @@ def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: so perceptual pairs genuinely exist and the differential compares
 #: real rows instead of two empty sets.
 _SQL_HEXBLOB_DUP = _SQL_HEXBLOB.replace(
-    "CAST(doc_id AS VARCHAR)", f"CAST(doc_id % {MEDIA_DUP_MOD} AS VARCHAR)"
+    "CAST(doc_id AS STRING)", f"CAST(doc_id % {MEDIA_DUP_MOD} AS STRING)"
 )
 
 

@@ -91,7 +91,7 @@ def _sql_ngrams(toks: str, n: int) -> str:
     return (
         f"CASE WHEN len({toks}) >= {n} THEN "
         f"list_transform(generate_series(1, len({toks})-{n - 1}), i -> {parts}) "
-        f"ELSE CAST([] AS VARCHAR[]) END"
+        f"ELSE CAST([] AS STRING[]) END"
     )
 
 

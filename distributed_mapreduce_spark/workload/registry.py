@@ -122,7 +122,15 @@ def sql_query(name: str, sql: str) -> QueryFn:
     at analysis, so a later call for another ``sf_dir`` never changes
     a frame already returned. The builder reports its caller's module,
     which keeps per-family attribution (``tools/check_correctness.py``
-    groups cost by ``fn.__module__``)."""
+    groups cost by ``fn.__module__``).
+
+    The text is written in the dialect both engines share: ``STRING``,
+    not DuckDB's bare ``VARCHAR`` (Spark rejects it), and
+    :func:`hex_bigint` for an md5 hex prefix read as an integer, in
+    place of DuckDB's ``('0x' || …)::BIGINT`` cast. DuckDB-only
+    spellings (``AS MATERIALIZED`` CTEs, ``[…]`` list literals, ``//``
+    division, ``list_*`` routines) keep a query on its DataFrame
+    builder."""
     names = sorted(set(_TABLE_WORD.findall(sql)))
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,6 +143,28 @@ def sql_query(name: str, sql: str) -> QueryFn:
     query(name, oracle=sql)(fn)
     SQL_FIRST.add(name)
     return fn
+
+
+def hex_bigint(hex_sql: str, start: int = 1, n: int = 8) -> str:
+    """SQL for the BIGINT value of the ``n`` hex digits of ``hex_sql``
+    from position ``start``, in a form Spark and DuckDB both run.
+
+    DuckDB's ``('0x' || substr(h, start, n))::BIGINT`` analyzes in
+    Spark but fails on every row (CAST_INVALID_INPUT), so each digit
+    is read as ``(ascii(d) - 48) % 39`` and weighted by its power of
+    16. Valid for LOWERCASE hex only (``'a'`` is 97, 97 - 48 = 49,
+    49 % 39 = 10), which is what ``md5`` returns in both engines.
+
+    Spark pays about twice ``conv``'s cost per value for this parse,
+    and a filter evaluates ``hex_sql`` once per digit, so over a large
+    table a DataFrame builder with ``conv`` can win (the measured keeps
+    in ``tests/test_sql_first.py``)."""
+    digits = " + ".join(
+        f"CAST((ascii(substr({hex_sql}, {start + i}, 1)) - 48) % 39 AS BIGINT)"
+        f" * {16 ** (n - 1 - i)}"
+        for i in range(n)
+    )
+    return f"({digits})"
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

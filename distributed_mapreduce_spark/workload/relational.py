@@ -414,7 +414,7 @@ sql_query(
     SELECT p_partkey,
            upper(p_name) AS uname,
            substr(p_name, 1, 5) AS prefix5,
-           lpad(CAST(p_partkey AS VARCHAR), 9, '0') AS padded_key,
+           lpad(CAST(p_partkey AS STRING), 9, '0') AS padded_key,
            replace(p_name, ' ', '_') AS snake,
            CAST(length(p_name) AS INTEGER) AS name_len,
            CAST(strpos(p_name, ' ') AS INTEGER) AS space_at

@@ -89,7 +89,7 @@ def _salt(col: Column, tag: str, mod: int) -> Column:
 
 
 def _sql_salt(col: str, tag: str, mod: int) -> str:
-    return f"({_sql_hash_u32(f'CAST({col} AS VARCHAR)', tag)} % {mod})"
+    return f"({_sql_hash_u32(f'CAST({col} AS STRING)', tag)} % {mod})"
 
 
 def _two_stage_topk(

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: Winsorization clip quantiles.
 WINSOR_LO, WINSOR_HI = 0.05, 0.95
@@ -40,7 +40,7 @@ ROLLING_DAYS = 7
            CAST(count(*) AS BIGINT) AS n_orders,
            b.lo AS p05, b.hi AS p95,
            CAST(CAST(sum(CAST(least(greatest(o.o_totalprice, b.lo), b.hi)
-                              AS DECIMAL(18,4))) AS DECIMAL(30,4)) AS VARCHAR)
+                              AS DECIMAL(18,4))) AS DECIMAL(30,4)) AS STRING)
              AS winsorized_sum
     FROM orders o JOIN b ON o.o_orderstatus = b.o_orderstatus
     GROUP BY o.o_orderstatus, b.lo, b.hi
@@ -260,7 +260,7 @@ def q_supplier_return_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
              sum(wt) OVER () AS total
       FROM w
     )
-    SELECT CAST(min(price) AS VARCHAR) AS weighted_median,
+    SELECT CAST(min(price) AS STRING) AS weighted_median,
            CAST(min(total) AS BIGINT) AS total_weight
     FROM cum WHERE 2 * c >= total
     """,
@@ -294,9 +294,11 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Exact weighted median (price weighted by quantity) per return flag:
+# a partitioned running weight, crossing at half the group's weight.
+sql_query(
     "weighted_median_by_flag",
-    oracle="""
+    """
     WITH w AS (
       SELECT l_returnflag AS flag,
              CAST(l_extendedprice AS DECIMAL(18,2)) AS price,
@@ -309,44 +311,12 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
              sum(wt) OVER (PARTITION BY flag) AS total
       FROM w
     )
-    SELECT flag, CAST(min(price) AS VARCHAR) AS weighted_median,
+    SELECT flag, CAST(min(price) AS STRING) AS weighted_median,
            CAST(min(total) AS BIGINT) AS total_weight
     FROM cum WHERE 2 * c >= total
     GROUP BY flag
     """,
 )
-def q_weighted_median_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group exact weighted median (price weighted by quantity,
-    one median per return flag): the grouped sibling of
-    `weighted_median_price`. Here the running weight is a PARTITIONED
-    window (per-key state bounded by the group's rows — the scale-safe
-    window class), crossing at half the group's weight.
-
-    Plan: one shuffle on the group key, per-partition sort, two window
-    passes, then a per-group min over crossing rows."""
-    li = table(spark, sf_dir, "lineitem")
-    w = li.select(
-        F.col("l_returnflag").alias("flag"),
-        F.col("l_extendedprice").cast("decimal(18,2)").alias("price"),
-        F.col("l_quantity").cast("long").alias("wt"),
-    )
-    win = Window.partitionBy("flag").orderBy("price", "wt").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = w.select(
-        "flag",
-        "price",
-        F.sum("wt").over(win).alias("c"),
-        F.sum("wt").over(Window.partitionBy("flag")).alias("total"),
-    )
-    return (
-        cum.filter(2 * F.col("c") >= F.col("total"))
-        .groupBy("flag")
-        .agg(
-            F.min("price").cast("string").alias("weighted_median"),
-            F.min("total").cast("long").alias("total_weight"),
-        )
-    )
 
 
 @query(
@@ -1262,7 +1232,7 @@ def _cuped_oracle() -> str:
     return f"""
     WITH per_user AS (
       SELECT user_id,
-             ('0x' || substr(md5('ab_' || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
+             ('0x' || substr(md5('ab_' || CAST(user_id AS STRING)), 1, 8))::BIGINT
                  % 2 AS grp,
              CAST(sum(CASE WHEN ts <  TIMESTAMP '{CUPED_CUTOFF}'
                            THEN floor(CAST(value AS DECIMAL(18,2)) * 100)

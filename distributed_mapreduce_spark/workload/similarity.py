@@ -257,7 +257,7 @@ def near_dup_pairs_cell_capped(emb: DataFrame, cap: int = EMBED_CELL_CAP) -> Dat
     oracle=f"""
     WITH c AS (
       SELECT vec_id, label, embedding,
-             ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             ('0x' || substr(md5(CAST(vec_id AS STRING)), 1, 8))::BIGINT
                % ((count(*) OVER (PARTITION BY label) + {EMBED_CELL_CAP - 1}) // {EMBED_CELL_CAP}) AS sub
       FROM embeddings
     )
@@ -518,7 +518,7 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ELSE list_transform(embedding,
                            x -> CAST(x AS DOUBLE) / sqrt({_sql_dot('embedding', 'embedding')}))
                END,
-               x -> CAST(CAST(floor(x * 1000000.0) AS BIGINT) AS VARCHAR)),
+               x -> CAST(CAST(floor(x * 1000000.0) AS BIGINT) AS STRING)),
              ',') AS unit_u,
            CAST(floor(sqrt({_sql_dot('embedding', 'embedding')}) * 1000000.0) AS BIGINT) AS norm_u
     FROM embeddings
@@ -807,7 +807,7 @@ def q_jl_distance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE c AS (
       SELECT vec_id, label, embedding,
-             ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             ('0x' || substr(md5(CAST(vec_id AS STRING)), 1, 8))::BIGINT
                % ((count(*) OVER (PARTITION BY label) + {EMBED_CELL_CAP - 1}) // {EMBED_CELL_CAP}) AS sub
       FROM embeddings
     ), verified AS (
@@ -1617,7 +1617,7 @@ def q_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH c AS MATERIALIZED (
       SELECT vec_id, label, embedding,
-             ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             ('0x' || substr(md5(CAST(vec_id AS STRING)), 1, 8))::BIGINT
                % ((count(*) OVER (PARTITION BY label) + {EMBED_CELL_CAP - 1}) // {EMBED_CELL_CAP}) AS sub
       FROM embeddings
     ), pairs AS MATERIALIZED (
@@ -1704,7 +1704,7 @@ from distributed_mapreduce_spark.workload.dedup import _sql_hash_u32  # noqa: E4
 #: Canonical portable hash for the QA draw — same single-source idiom
 #: as every other oracle (never re-inline first-8-hex-of-md5).
 _QA_HASH_SQL = _sql_hash_u32(
-    "CAST(vec_a AS VARCHAR) || '_' || CAST(vec_b AS VARCHAR)", "qa"
+    "CAST(vec_a AS STRING) || '_' || CAST(vec_b AS STRING)", "qa"
 )
 
 
@@ -1713,7 +1713,7 @@ _QA_HASH_SQL = _sql_hash_u32(
     oracle=f"""
     WITH c AS MATERIALIZED (
       SELECT vec_id, label, embedding,
-             ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT
+             ('0x' || substr(md5(CAST(vec_id AS STRING)), 1, 8))::BIGINT
                % ((count(*) OVER (PARTITION BY label) + {EMBED_CELL_CAP - 1}) // {EMBED_CELL_CAP}) AS sub
       FROM embeddings
     ), pairs AS MATERIALIZED (

@@ -52,7 +52,7 @@ def _pos(key: Column, j: int) -> Column:
 
 def _sql_pos(key: str, j: int) -> str:
     return (
-        f"(('0x' || substr(md5('bl{j}_' || CAST({key} AS VARCHAR)), 1, 8))::BIGINT"
+        f"(('0x' || substr(md5('bl{j}_' || CAST({key} AS STRING)), 1, 8))::BIGINT"
         f" % {BLOOM_BITS})"
     )
 
@@ -367,7 +367,7 @@ _PRUNED_JOIN_SQL = f"""
     SELECT
       (SELECT CAST(count(*) AS BIGINT) FROM joined) AS n_joined,
       (SELECT CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(30,2))
-                   AS VARCHAR) FROM joined) AS revenue,
+                   AS STRING) FROM joined) AS revenue,
       (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_input,
       (SELECT CAST(count(*) AS BIGINT) FROM pruned) AS n_after_prune,
       ((SELECT count(*) FROM orders) - (SELECT count(*) FROM pruned)) * 10000

@@ -49,12 +49,12 @@ _SKEW_SQL = f"""
              event_id
       FROM events
     ), small AS (
-      SELECT CAST(i AS BIGINT) AS k, md5(CAST(i AS VARCHAR)) AS seed
+      SELECT CAST(i AS BIGINT) AS k, md5(CAST(i AS STRING)) AS seed
       FROM range(0, {HOT_MOD}) t(i)
     )
     SELECT CAST(count(*) AS BIGINT) AS n_rows,
            CAST(sum(('0x' || substr(
-               sha256(repeat(seed, {SEED_REPEAT}) || CAST(event_id AS VARCHAR)),
+               sha256(repeat(seed, {SEED_REPEAT}) || CAST(event_id AS STRING)),
                1, 8))::BIGINT) AS BIGINT) AS checksum
     FROM big JOIN small USING (k)
 """

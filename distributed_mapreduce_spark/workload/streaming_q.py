@@ -107,7 +107,7 @@ def _landing_dir(spark: SparkSession, sf_dir: str) -> str:
     oracle="""
     SELECT CAST(time_bucket(INTERVAL '1 hour', ts) AS TIMESTAMP_NS) AS ws, event_type,
            count(*) AS n_events,
-           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS VARCHAR)
+           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DECIMAL(30,6)) AS STRING)
              AS sum_value
     FROM events GROUP BY 1, 2
     """,

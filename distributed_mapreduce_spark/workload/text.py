@@ -260,8 +260,8 @@ SPLIT_TRAIN_PCT, SPLIT_VAL_PCT = 80, 90
            CAST(sum(len({_sql_tokens('text')})) AS BIGINT) AS n_tokens
     FROM (
       SELECT text,
-             CASE WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
-                  WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < {SPLIT_VAL_PCT} THEN 'val'
+             CASE WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS STRING)), 1, 8))::BIGINT % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
+                  WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS STRING)), 1, 8))::BIGINT % 100 < {SPLIT_VAL_PCT} THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
     ) GROUP BY split
@@ -384,12 +384,12 @@ def _sql_scrub(c: str) -> str:
     oracle=f"""
     WITH injected AS (
       SELECT doc_id,
-             text || ' reach user' || CAST(doc_id AS VARCHAR)
+             text || ' reach user' || CAST(doc_id AS STRING)
                   || '@example.com or 415-555-'
-                  || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+                  || lpad(CAST(doc_id % 10000 AS STRING), 4, '0')
                   || ' ssn 987-65-4321 from 192.168.'
-                  || CAST(doc_id % 256 AS VARCHAR) || '.'
-                  || CAST((doc_id * 7) % 256 AS VARCHAR) AS dirty
+                  || CAST(doc_id % 256 AS STRING) || '.'
+                  || CAST((doc_id * 7) % 256 AS STRING) AS dirty
       FROM documents
     )
     SELECT doc_id, {_sql_scrub('dirty')} AS scrubbed,
@@ -504,8 +504,8 @@ def build_corpus_prep(docs: DataFrame, with_telemetry: bool = False):
       FROM kept GROUP BY md5(text)
     )
     SELECT split, count(*) AS n_docs FROM (
-      SELECT CASE WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
-                  WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < {SPLIT_VAL_PCT} THEN 'val'
+      SELECT CASE WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS STRING)), 1, 8))::BIGINT % 100 < {SPLIT_TRAIN_PCT} THEN 'train'
+                  WHEN ('0x' || substr(md5('split_' || CAST(doc_id AS STRING)), 1, 8))::BIGINT % 100 < {SPLIT_VAL_PCT} THEN 'val'
                   ELSE 'test' END AS split
       FROM deduped
     ) GROUP BY split
@@ -631,7 +631,7 @@ MIX_HEAD_BP, MIX_MID_BP, MIX_TAIL_BP = 10000, 2500, 500
     oracle=f"""
     SELECT source, count(*) AS n_kept, min(doc_id) AS min_doc
     FROM documents
-    WHERE ('0x' || substr(md5('mix_' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
+    WHERE ('0x' || substr(md5('mix_' || CAST(doc_id AS STRING)), 1, 8))::BIGINT % 10000
           < CASE WHEN CAST(substr(source, 4) AS INTEGER) < 5 THEN {MIX_HEAD_BP}
                  WHEN CAST(substr(source, 4) AS INTEGER) < 15 THEN {MIX_MID_BP}
                  ELSE {MIX_TAIL_BP} END

@@ -54,6 +54,8 @@ sql_query(
 
 
 # TPC-H Q7: bilateral shipping volume between two nations by year.
+# Spark joins in FROM order, so the supplier-nation filter is joined
+# before orders: it cuts lineitem before the lineitem ⋈ orders shuffle.
 sql_query(
     "tpch_q7_nation_volume",
     f"""
@@ -63,9 +65,9 @@ sql_query(
            CAST(sum({_SQL_REVENUE}) AS DECIMAL(30,4)) AS revenue
     FROM lineitem
     JOIN supplier ON s_suppkey = l_suppkey
+    JOIN nation n1 ON n1.n_nationkey = s_nationkey
     JOIN orders ON o_orderkey = l_orderkey
     JOIN customer ON c_custkey = o_custkey
-    JOIN nation n1 ON n1.n_nationkey = s_nationkey
     JOIN nation n2 ON n2.n_nationkey = c_nationkey
     WHERE n1.n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
       AND n2.n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
@@ -313,7 +315,7 @@ sql_query(
     )
     SELECT CAST(count(*) AS BIGINT) AS n_lines,
            CAST(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2)))
-                AS DECIMAL(30,2)) AS VARCHAR) AS sum_price,
+                AS DECIMAL(30,2)) AS STRING) AS sum_price,
            CAST(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) * 100
                 AS BIGINT) // 7 AS BIGINT) AS avg_yearly_cents
     FROM lineitem l

@@ -433,7 +433,7 @@ BENFORD_PPM = {
         f"({d}, {p})" for d, p in sorted(BENFORD_PPM.items())
     )}),
     obs AS MATERIALIZED (
-      SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1)
+      SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS STRING), 1, 1)
                   AS INTEGER) AS digit,
              CAST(count(*) AS BIGINT) AS n_obs
       FROM orders GROUP BY 1
@@ -587,8 +587,8 @@ SUBSAMPLE_B = 16
              CAST(sum(n_chars) AS BIGINT) AS s_b
       FROM documents,
            unnest([{', '.join(str(b) for b in range(SUBSAMPLE_B))}]) AS t(b)
-      WHERE ('0x' || substr(md5('bs' || CAST(t.b AS VARCHAR) || '_'
-                                 || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+      WHERE ('0x' || substr(md5('bs' || CAST(t.b AS STRING) || '_'
+                                 || CAST(doc_id AS STRING)), 1, 8))::BIGINT
             % 2 = 0
       GROUP BY 1
     ), mm AS (

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: Deterministic version-history gates (see module docstring).
 INS_MOD, UPD_MOD, DEL_MOD = 11, 13, 17
@@ -55,8 +55,8 @@ _ENC_SPARK = lambda: F.concat_ws(  # noqa: E731
 )
 
 _ENC_SQL = (
-    "CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR) || '|' "
-    "|| o_orderstatus || '|' || CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR)"
+    "CAST(o_orderkey AS STRING) || '|' || CAST(o_custkey AS STRING) || '|' "
+    "|| o_orderstatus || '|' || CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS STRING)"
 )
 
 #: v1 (previous snapshot) in SQL — keep in lockstep with _snapshot_v1.
@@ -118,9 +118,11 @@ def snapshot_diff(v1: DataFrame, v2: DataFrame, key: str = "o_orderkey") -> Data
     )
 
 
-@query(
+# Snapshot diff: insert / delete / update per key between the derived
+# previous snapshot and the current orders, by one full outer equi-join.
+sql_query(
     "snapshot_diff_orders",
-    oracle=f"""
+    f"""
     WITH v1 AS ({_V1_SQL}),
     a AS (SELECT o_orderkey AS k, {_ENC_SQL} AS enc_old, o_orderstatus AS old_status
           FROM v1),
@@ -137,15 +139,6 @@ def snapshot_diff(v1: DataFrame, v2: DataFrame, key: str = "o_orderkey") -> Data
     WHERE enc_old IS NULL OR enc_new IS NULL OR enc_old <> enc_new
     """,
 )
-def q_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot-to-snapshot diff (the table-versioning primitive):
-    classify every key as insert / delete / update between the derived
-    previous snapshot and the current orders table. One full outer
-    equi-join; unchanged rows (the overwhelming mass at scale) are
-    filtered in-stage and never leave the join task."""
-    orders = table(spark, sf_dir, "orders")
-    v2 = orders.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    return snapshot_diff(_snapshot_v1(orders), v2)
 
 
 @query(
@@ -215,12 +208,12 @@ def q_cdc_apply_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "partition_merkle_checksums",
     oracle=f"""
-    SELECT CAST(('0x' || substr(md5('mk_' || CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT
+    SELECT CAST(('0x' || substr(md5('mk_' || CAST(l_orderkey AS STRING)), 1, 8))::BIGINT
                 % {MERKLE_BUCKETS} AS INTEGER) AS bucket,
            CAST(count(*) AS BIGINT) AS n_rows,
            CAST(sum(('0x' || substr(md5(
-               CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)
-               || '|' || CAST(l_partkey AS VARCHAR) || '|' || l_returnflag
+               CAST(l_orderkey AS STRING) || '|' || CAST(l_linenumber AS STRING)
+               || '|' || CAST(l_partkey AS STRING) || '|' || l_returnflag
            ), 1, 8))::BIGINT) AS BIGINT) AS checksum
     FROM lineitem
     GROUP BY 1
@@ -270,7 +263,7 @@ COMPACT_TARGET_ROWS = 12000
     "compaction_plan",
     oracle=f"""
     WITH buckets AS (
-      SELECT CAST(('0x' || substr(md5('mk_' || CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT
+      SELECT CAST(('0x' || substr(md5('mk_' || CAST(l_orderkey AS STRING)), 1, 8))::BIGINT
                   % {MERKLE_BUCKETS} AS INTEGER) AS bucket,
              CAST(count(*) AS BIGINT) AS n_rows
       FROM lineitem GROUP BY 1

@@ -234,44 +234,6 @@ def test_orc_roundtrip_documents(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, docs.collect()))
 
 
-def test_minmax_retraction_rebuilds_only_affected_groups(spark):
-    """IVM boundary (VERDICT r03 #7): deleting a group's extremum must
-    force a rebuild of THAT group from retained rows; groups whose
-    deleted rows were interior keep materialized extrema (rebuilt
-    False). A fully-deleted group vanishes."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.workload.frontier import (
-        maintain_minmax_after_delete,
-    )
-
-    rows = [
-        # group "a": delete the max (50) -> rebuild -> (1, 9)
-        ("a", 1.0, False), ("a", 9.0, False), ("a", 50.0, True),
-        # group "b": delete an interior value -> materialized (2, 8) kept
-        ("b", 2.0, False), ("b", 5.0, True), ("b", 8.0, False),
-        # group "c": no deletes -> untouched
-        ("c", 3.0, False), ("c", 4.0, False),
-        # group "d": all rows deleted -> absent from the result
-        ("d", 7.0, True), ("d", 7.5, True),
-        # group "e": delete the min -> rebuild -> (6, 6)
-        ("e", 0.5, True), ("e", 6.0, False),
-    ]
-    df = spark.createDataFrame(rows, ["k", "v", "is_del"])
-    out = {
-        r["k"]: (r["min_value"], r["max_value"], r["rebuilt"])
-        for r in maintain_minmax_after_delete(
-            df, F.col("is_del"), key_col="k", value_col="v"
-        ).collect()
-    }
-    assert out == {
-        "a": (1.0, 9.0, True),
-        "b": (2.0, 8.0, False),
-        "c": (3.0, 4.0, False),
-        "e": (6.0, 6.0, True),
-    }
-
-
 def test_snapshot_diff_classifies_changes(spark):
     """Versioning primitive: insert/delete/update classification from a
     full-outer key diff on synthetic snapshots."""

@@ -179,41 +179,3 @@ def test_salted_join_equals_plain_join(spark, big_rows, salt):
         )
     )
     assert plain == salted
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["a", "b", "c"]),
-            st.integers(-50, 50),
-            st.booleans(),
-        ),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_minmax_retraction_equals_recompute(spark, rows):
-    """maintain_minmax_after_delete must equal a full recompute over
-    retained rows for ANY deletion pattern — including extremum
-    deletions, full-group deletions, and no-op batches."""
-    from collections import defaultdict
-
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.workload.frontier import (
-        maintain_minmax_after_delete,
-    )
-
-    df = spark.createDataFrame(rows, ["k", "v", "is_del"])
-    got = {
-        r["k"]: (r["min_value"], r["max_value"])
-        for r in maintain_minmax_after_delete(
-            df, F.col("is_del"), key_col="k", value_col="v"
-        ).collect()
-    }
-    expect: dict[str, list[int]] = defaultdict(list)
-    for k, v, is_del in rows:
-        if not is_del:
-            expect[k].append(v)
-    assert got == {k: (min(vs), max(vs)) for k, vs in expect.items() if vs}

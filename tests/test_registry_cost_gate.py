@@ -13,8 +13,10 @@ the always-on tests.
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -53,6 +55,22 @@ def test_gate_fails_on_regression():
     assert not ok
 
 
+def test_cost_artifact_lands_in_the_scripts_own_checkout(tmp_path, monkeypatch):
+    """A run from another checkout (a parent copy timed for a paired
+    comparison) must import and write that checkout, not this one."""
+    import check_correctness
+
+    copy = tmp_path / "tools" / "check_correctness.py"
+    copy.parent.mkdir()
+    copy.write_text(Path(check_correctness.__file__).read_text())
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    spec = importlib.util.spec_from_file_location("check_correctness_copy", copy)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.REGISTRY_COST == tmp_path / "REGISTRY_COST.json"
+    assert sys.path[0] == str(tmp_path)
+
+
 def test_pinned_baseline_is_sane():
     base = json.load(open(BASELINE_PATH))
     assert base["n_queries"] >= 394
@@ -65,11 +83,11 @@ def test_full_registry_cost_within_gate():
     """Opt-in (~6 min): run the whole registry at sf0.01, require ALL
     PASS, then gate the freshly written REGISTRY_COST.json against the
     pinned baseline."""
-    from check_correctness import registry_cost_within, run
+    from check_correctness import REGISTRY_COST, registry_cost_within, run
 
     failures = run("/root/testdata/sf0.01")
     assert failures == 0, f"{failures} correctness failures"
-    measured = json.load(open("/root/repo/REGISTRY_COST.json"))
+    measured = json.load(open(REGISTRY_COST))
     baseline = json.load(open(BASELINE_PATH))
     ok, msg = registry_cost_within(measured, baseline)
     assert ok, f"registry cost regression: {msg}"

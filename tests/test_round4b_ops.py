@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.workload import QUERIES
 from distributed_mapreduce_spark.workload.advanced import (
     ZONEMAP_BUCKETS,
     q_equidepth_histogram,
@@ -17,10 +18,7 @@ from distributed_mapreduce_spark.workload.clustering import (
     PQ_M,
     q_ann_pq_adc,
 )
-from distributed_mapreduce_spark.workload.corpus import (
-    WPRIO_K,
-    q_weighted_sample_priority,
-)
+from distributed_mapreduce_spark.workload.corpus import WPRIO_K
 from distributed_mapreduce_spark.workload.journey import (
     q_sessions_peak_concurrency,
 )
@@ -83,7 +81,7 @@ def test_peak_concurrency_matches_bruteforce(spark, sf_dir):
 def test_weighted_sample_prefers_long_docs(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     mean_all = docs.agg(F.avg("n_chars")).first()[0]
-    sample = q_weighted_sample_priority(spark, sf_dir)
+    sample = QUERIES["weighted_sample_priority"](spark, sf_dir)
     assert sample.count() == min(WPRIO_K, docs.count())
     mean_sample = sample.agg(F.avg("weight")).first()[0]
     # Length-weighted inclusion must pull the sampled mean above the
@@ -134,13 +132,10 @@ def test_cdc_time_travel_consistency(spark, sf_dir):
 
 
 def test_multimodal_dedup_groups(spark, sf_dir):
-    from distributed_mapreduce_spark.workload.multimodal_q import (
-        MEDIA_DUP_MOD,
-        q_multimodal_dedup_exact,
-    )
+    from distributed_mapreduce_spark.workload.multimodal_q import MEDIA_DUP_MOD
     from distributed_mapreduce_spark.workload.registry import table
 
-    rows = q_multimodal_dedup_exact(spark, sf_dir).collect()
+    rows = QUERIES["multimodal_dedup_exact"](spark, sf_dir).collect()
     n_docs = table(spark, sf_dir, "documents").count()
     # Group count == number of distinct residues present; total copies
     # re-add to the corpus size; keep+discard accounting is exact.

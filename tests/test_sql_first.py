@@ -12,12 +12,20 @@ DataFrame builder against `spark.sql(oracle)` over `table()` views.
 
 from __future__ import annotations
 
+import re
+
+import duckdb
 import pytest
 from pyspark.errors import PySparkException
 
 from distributed_mapreduce_spark.plans.checks import explain_str
 from distributed_mapreduce_spark.workload import ORACLES, QUERIES
-from distributed_mapreduce_spark.workload.registry import SQL_FIRST, TABLES, table
+from distributed_mapreduce_spark.workload.registry import (
+    SQL_FIRST,
+    TABLES,
+    hex_bigint,
+    table,
+)
 
 #: Builders kept although Spark analyzes their oracle verbatim.
 BUILDER_KEPT = {
@@ -33,6 +41,16 @@ BUILDER_KEPT = {
     "pareto_frontier_parts": "scale: the SQL skyline is one unpartitioned window over every distinct point; the builder prunes per hash group first (SQL faster at sf0.1: 0.31 vs 0.43 s)",
     "graph_triangles_degree_ordered": "engine surface: the degree-ordered O(m^1.5) wedge plan; its oracle is graph_triangle_counts' id-ordered text",
     "latest_event_per_user_agg": "engine surface: the window-free packed hash-aggregate plan; its oracle is latest_event_per_user's window text",
+    "partition_hash_assign": "engine surface: the graded row for operators.hash_bucket, twin of partition_range_assign (hex_bigint SQL loses: sf0.1 0.32 vs 0.48 s, 0/8)",
+    "multimodal_features": "engine surface: blobs decode through multimodal.extract_image_features (mapInPandas); the oracle re-derives the dimensions from md5 hex",
+    "multimodal_decode_errors": "engine surface: corrupt blobs become error rows in multimodal.extract_image_features; the oracle re-derives both populations",
+    "multimodal_frames": "engine surface: multimodal.sample_frames explodes each blob into frame rows; the oracle slices the md5 hex",
+    "multimodal_phash": "engine surface: multimodal.perceptual_hash over Arrow batches; the oracle re-derives the dHash from md5 hex",
+    "cdc_apply_patch": "engine surface: the MERGE decomposition (anti join + union) certified by checksum; the oracle checksums v2 twice and pins TRUE",
+    "partial_agg_merge": "engine surface: per-shard partial aggregates merged by re-aggregation; the oracle is the plain aggregate they must equal",
+    "ivm_retraction": "engine surface: a retraction batch's partials subtracted from the base aggregate; the oracle is the recompute it must equal",
+    "ntile_spend_quartiles": "scale: the SQL ntile is one unpartitioned window over every customer; the builder ranks with operators.global_rank (SQL faster at sf0.1: 0.43 vs 0.65 s)",
+    "weighted_median_price": "scale: the SQL running weight is one unpartitioned window over lineitem; the builder uses operators.global_cumsum (SQL faster at sf0.1: 1.47 vs 2.77 s)",
     # The SQL plan runs or scales worse.
     "parse_extract_ids": "SQL fails at run time: CAST_INVALID_INPUT on '' under ANSI",
     "join_not_in_null_aware": "scale: SQL NOT IN plans a broadcast-only null-aware anti join of customer; the builder shuffles",
@@ -47,7 +65,45 @@ BUILDER_KEPT = {
     "distinct_values": "sf0.1 A/B: builder 0.118 s vs SQL 0.134 s, 2/8, beyond the SQL IQR 0.015 s",
     "tpch_q5_region_volume": "sf0.1 A/B: builder 0.77 s vs SQL 1.07 s, 1/8 (SQL wins sf0.01: 0.33 vs 0.40 s)",
     "intersect_all_customers": "sf0.1 A/B: builder 0.290 s vs SQL 0.308 s, 2/8, beyond the SQL IQR 0.013 s",
+    # With the md5 prefix read by hex_bigint: Spark parses it digit by
+    # digit, about twice conv's cost per value, and re-evaluates md5 per
+    # digit inside a filter.
+    "events_stratified_sample": "sf0.1 A/B: builder 0.30 s vs hex_bigint SQL 0.91 s, 0/8 (sf0.01: 0.22 vs 0.33 s, 0/8)",
+    "partition_merkle_checksums": "sf0.1 A/B: builder 1.62 s vs hex_bigint SQL 3.10 s, 0/8 (sf0.01: 0.43 vs 0.58 s, 0/8)",
+    "table_checksum": "sf0.1 A/B: builder 0.52 s vs hex_bigint SQL 0.69 s, 0/8, beyond the SQL IQR 0.15 s",
+    "corpus_mixture_sample": "sf0.01 A/B: builder 0.235 s vs hex_bigint SQL 0.265 s, 1/8, beyond the SQL IQR 0.021 s",
 }
+
+
+def test_oracles_use_the_shared_dialect():
+    """Spark rejects DuckDB's bare ``VARCHAR`` (``STRING`` is the same
+    type in both), and DuckDB's ``('0x' || h)::BIGINT`` analyzes in
+    Spark but fails on every row, so a SQL-first text spells it with
+    ``hex_bigint``."""
+    bare_varchar = re.compile(r"\bVARCHAR\b(?!\s*\()", re.IGNORECASE)
+    assert sorted(n for n, sql in ORACLES.items() if bare_varchar.search(sql)) == []
+    hex_cast = re.compile(r"'0x'\s*\|\|")
+    assert sorted(n for n in SQL_FIRST if hex_cast.search(ORACLES[n])) == []
+
+
+def test_hex_bigint_matches_both_engines_hex_reads(spark):
+    """``hex_bigint`` equals DuckDB's ``0x`` cast and Spark's ``conv``
+    on md5 prefixes, and both engines type it BIGINT."""
+    h = "md5(CAST(i AS STRING))"
+    con = duckdb.connect()
+    rel = con.sql(
+        f"SELECT {hex_bigint(h)} AS a, ('0x' || substr({h}, 1, 8))::BIGINT AS b,"
+        f" {hex_bigint(h, 7, 2)} AS c, ('0x' || substr({h}, 7, 2))::BIGINT AS d"
+        " FROM range(0, 2000) t(i)"
+    )
+    assert [str(t) for t in rel.types][::2] == ["BIGINT", "BIGINT"]
+    assert all(a == b and c == d for a, b, c, d in rel.fetchall())
+    df = spark.sql(
+        f"SELECT {hex_bigint(h)} AS a, CAST(conv(substr({h}, 1, 8), 16, 10) AS BIGINT) AS b"
+        " FROM (SELECT id AS i FROM range(0, 2000))"
+    )
+    assert dict(df.dtypes)["a"] == "bigint"
+    assert df.filter("a <> b").count() == 0
 
 
 @pytest.fixture(scope="module")

@@ -4,6 +4,7 @@ order-insensitive values. Mirrors the driver's CORRECTNESS check so
 mismatches surface before a round ends.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+       python tools/check_correctness.py [sf_dir] [query ...] --dtype-audit
 """
 
 from __future__ import annotations
@@ -13,10 +14,14 @@ import os
 import sys
 import time
 from decimal import Decimal
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+#: The checkout this script belongs to: imported from, and written to.
+REPO = Path(__file__).resolve().parents[1]
+REGISTRY_COST = REPO / "REGISTRY_COST.json"
+sys.path.insert(0, str(REPO))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -128,12 +133,8 @@ def run(
             log_fh.close()
 
 
-def _run_inner(sf_dir, only, spark, print):  # noqa: A002
-    from distributed_mapreduce_spark.session import get_spark
-    from distributed_mapreduce_spark.workload import ORACLES, QUERIES
-
-    if spark is None:
-        spark = get_spark("check_correctness", cpus=8, shuffle_partitions=8)
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per harness table at ``sf_dir``."""
     con = duckdb.connect()
     # Bound the oracle engine's memory so a heavy sf1.0 oracle SPILLS
     # instead of ballooning: DuckDB's default limit is 80% of RAM
@@ -151,6 +152,16 @@ def _run_inner(sf_dir, only, spark, print):  # noqa: A002
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
+
+
+def _run_inner(sf_dir, only, spark, print):  # noqa: A002
+    from distributed_mapreduce_spark.session import get_spark
+    from distributed_mapreduce_spark.workload import ORACLES, QUERIES
+
+    if spark is None:
+        spark = get_spark("check_correctness", cpus=8, shuffle_partitions=8)
+    con = oracle_connection(sf_dir)
 
     failures = []
     spark_secs: dict[str, float] = {}
@@ -262,7 +273,7 @@ def _run_inner(sf_dir, only, spark, print):  # noqa: A002
                 sorted(spark_secs.items(), key=lambda kv: -kv[1])[:15]
             ),
         }
-        with open("/root/repo/REGISTRY_COST.json", "w") as f:
+        with open(REGISTRY_COST, "w") as f:
             json.dump(cost, f, indent=2)
             f.write("\n")
         print(f"registry cost: {cost['total_spark_sec']} s over {cost['n_queries']} queries")
@@ -291,6 +302,74 @@ def _run_inner(sf_dir, only, spark, print):  # noqa: A002
     return len(failures)
 
 
+def frame_dtypes(pdf) -> dict[str, str]:
+    """Each column's pandas dtype, exactly as the frame carries it. An
+    ``object`` column also names the Python type of its first non-null
+    value (``object[Decimal]``), since that is what a row hasher sees."""
+    out = {}
+    for col in pdf.columns:
+        s = pdf[col]
+        label = str(s.dtype)
+        if label == "object":
+            vals = s.dropna()
+            if len(vals):
+                label += f"[{type(vals.iloc[0]).__name__}]"
+        out[col] = label
+    return out
+
+
+def dtype_audit(sf_dir: str, only: set[str] | None = None, spark=None) -> dict:
+    """Compare Spark ``toPandas()`` dtypes with DuckDB ``.df()`` dtypes
+    per query and column, with no normalisation. Returns the audit
+    record; every mismatch is also printed, one line per column."""
+    from distributed_mapreduce_spark.session import get_spark
+    from distributed_mapreduce_spark.workload import ORACLES, QUERIES
+
+    if spark is None:
+        spark = get_spark("dtype_audit", cpus=8, shuffle_partitions=8)
+    con = oracle_connection(sf_dir)
+    mismatches: dict[str, dict[str, list[str | None]]] = {}
+    errors: dict[str, str] = {}
+    n = 0
+    for name, fn in QUERIES.items():
+        if (only and name not in only) or name not in ORACLES:
+            continue
+        n += 1
+        try:
+            got = frame_dtypes(fn(spark, sf_dir).toPandas())
+            want = frame_dtypes(con.execute(ORACLES[name]).df())
+        except Exception as e:
+            errors[name] = str(e).splitlines()[0][:200]
+            print(f"ERROR {name}: {errors[name]}", flush=True)
+            continue
+        diff = {
+            c: [got.get(c), want.get(c)]
+            for c in sorted(set(got) | set(want))
+            if got.get(c) != want.get(c)
+        }
+        if diff:
+            mismatches[name] = diff
+            for c, (a, b) in diff.items():
+                print(f"DTYPE {name}.{c}: spark={a} duckdb={b}", flush=True)
+    classes: dict[str, int] = {}
+    for diff in mismatches.values():
+        for a, b in diff.values():
+            k = f"spark={a} duckdb={b}"
+            classes[k] = classes.get(k, 0) + 1
+    print(
+        f"dtype audit: {len(mismatches)} of {n} queries differ in "
+        f"{sum(classes.values())} columns; {len(errors)} errors"
+    )
+    return {
+        "sf_dir": sf_dir,
+        "n_queries": n,
+        "n_queries_differing": len(mismatches),
+        "classes": dict(sorted(classes.items(), key=lambda kv: -kv[1])),
+        "mismatches": mismatches,
+        "errors": errors,
+    }
+
+
 def resume_subset(start_after: str) -> set[str]:
     """The queries to run when resuming after `start_after`: everything
     STRICTLY AFTER it in registration order (the crashed log's tail —
@@ -309,6 +388,7 @@ def resume_subset(start_after: str) -> set[str]:
 def main() -> int:
     """CLI: check_correctness.py [sf_dir] [query ...]
                                  [--start-after NAME] [--sf4-set]
+                                 [--dtype-audit]
 
     `--sf4-set` runs exactly the committed deep-scale selection
     (SF4_SET above) — use with an sf4 directory built by
@@ -318,13 +398,20 @@ def main() -> int:
     AFTER `NAME` in registration order (VERDICT r10 #3: resumes must be
     derived from the crashed log's tail, not a hand-picked subset, and
     the partial-coverage footer above makes the remaining hole visible
-    either way)."""
+    either way).
+
+    `--dtype-audit` compares pandas dtypes instead of values (see
+    :func:`dtype_audit`); a whole-registry run writes the record to
+    ``DTYPE_AUDIT.json`` in this checkout."""
     args = sys.argv[1:]
     start_after = None
     if "--start-after" in args:
         i = args.index("--start-after")
         start_after = args[i + 1]
         del args[i : i + 2]
+    audit = "--dtype-audit" in args
+    if audit:
+        args.remove("--dtype-audit")
     use_sf4_set = "--sf4-set" in args
     if use_sf4_set:
         args.remove("--sf4-set")
@@ -345,6 +432,13 @@ def main() -> int:
             f"resuming after {start_after!r}: {len(only)} of {len(QUERIES)} "
             f"queries (registration order)"
         )
+    if audit:
+        record = dtype_audit(sf_dir, only)
+        if not only:
+            with open(REPO / "DTYPE_AUDIT.json", "w") as f:
+                json.dump(record, f, indent=2)
+                f.write("\n")
+        return 1 if record["errors"] else 0
     return 1 if run(sf_dir, only) else 0
 
 
