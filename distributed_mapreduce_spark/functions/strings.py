@@ -33,12 +33,6 @@ def trim_ws(col: Column | str) -> Column:
     return F.regexp_replace(c, _TRIM_RE, "")
 
 
-def sql_trim_ws(expr: str) -> str:
-    """DuckDB twin of :func:`trim_ws` (real control chars embedded —
-    DuckDB standard strings don't interpret backslash escapes)."""
-    return f"regexp_replace({expr}, '{_TRIM_RE}', '', 'g')"
-
-
 def normalize_empty(col: Column | str) -> Column:
     """trim (Go TrimSpace semantics), then empty → ``"empty"``.
 

@@ -11,10 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Below this estimated size, hint the dimension side for broadcast.
-BROADCAST_ROW_HINT = 10_000_000
-
-
 def join_inner(
     left: DataFrame,
     right: DataFrame,

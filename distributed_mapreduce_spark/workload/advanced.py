@@ -231,9 +231,14 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# EXACT percentiles (median/p25/p90) per group — Spark `percentile` and
+# DuckDB `quantile_cont` share the same linear-interpolation definition,
+# so the doubles match bit-for-bit. The approx_percentile sketch is the
+# 100 TB default; the exact form is the oracle-checkable ground truth it
+# is tuned against.
+sql_query(
     "percentile_stats",
-    oracle="""
+    """
     SELECT l_returnflag,
            quantile_cont(l_quantity, 0.5) AS median_qty,
            quantile_cont(l_extendedprice, 0.25) AS p25_price,
@@ -241,18 +246,6 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem GROUP BY l_returnflag
     """,
 )
-def q_percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT percentiles (median/p25/p90) per group — Spark `percentile`
-    and DuckDB `quantile_cont` share the same linear-interpolation
-    definition, so the doubles match bit-for-bit. The approx_percentile
-    sketch is the 100 TB default; the exact form is the oracle-checkable
-    ground truth it is tuned against."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.expr("percentile(l_quantity, 0.5)").alias("median_qty"),
-        F.expr("percentile(l_extendedprice, 0.25)").alias("p25_price"),
-        F.expr("percentile(l_extendedprice, 0.9)").alias("p90_price"),
-    )
 
 
 @query(
@@ -515,9 +508,16 @@ sql_query(
 )
 
 
-@query(
+# Order-independent content checksum per table: sum of per-row
+# md5-derived uint32s over a canonical string encoding. Commutative, so
+# it parallelizes as an ordinary map-side-partial aggregate and is
+# identical on any engine, partitioning, or row order — the
+# cross-cluster integrity check you run after a 100 TB migration or
+# replication pass (the Spark-native form of the reference's SDFS
+# re-replication audit, fileserver.py:739-790).
+sql_query(
     "table_checksum",
-    oracle="""
+    """
     SELECT 'orders' AS tbl, count(*) AS n_rows,
            CAST(sum(('0x' || substr(md5(
                CAST(o_orderkey AS STRING) || '|' || CAST(o_custkey AS STRING) || '|' ||
@@ -532,39 +532,6 @@ sql_query(
     FROM customer
     """,
 )
-def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-independent content checksum per table: sum of per-row
-    md5-derived uint32s over a canonical string encoding. Commutative,
-    so it parallelizes as an ordinary map-side-partial aggregate and is
-    identical on any engine, partitioning, or row order — the
-    cross-cluster integrity check you run after a 100 TB migration or
-    replication pass (the Spark-native form of the reference's SDFS
-    re-replication audit, fileserver.py:739-790)."""
-
-    def cksum(df: DataFrame, tbl: str, enc: F.Column) -> DataFrame:
-        h = F.conv(F.substring(F.md5(enc), 1, 8), 16, 10).cast("long")
-        return df.agg(
-            F.lit(tbl).alias("tbl"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(h).cast("long").alias("checksum"),
-        )
-
-    orders = table(spark, sf_dir, "orders")
-    cust = table(spark, sf_dir, "customer")
-    o_enc = F.concat_ws(
-        "|",
-        F.col("o_orderkey").cast("string"),
-        F.col("o_custkey").cast("string"),
-        F.col("o_orderstatus"),
-        F.col("o_totalprice").cast("decimal(18,2)").cast("string"),
-    )
-    c_enc = F.concat_ws(
-        "|",
-        F.col("c_custkey").cast("string"),
-        F.col("c_name"),
-        F.col("c_nationkey").cast("string"),
-    )
-    return cksum(orders, "orders", o_enc).unionAll(cksum(cust, "customer", c_enc))
 
 
 @query(
@@ -641,9 +608,19 @@ def q_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 WALK_MASS0 = 1_000_000
 
 
-@query(
+# Two-step random-walk mass on the supplier↔part bipartite graph
+# (distinct lineitem edges): every supplier starts with 1e6 micro-units,
+# spreads them equally over its parts, parts spread what they received
+# back over their suppliers — the PageRank/HITS power-iteration step,
+# hand-unrolled. All arithmetic is integer floor division, so the
+# iteration is bit-exact in any engine (float PageRank is
+# order-dependent and unportable). Each round is one join + one
+# aggregate on the edge list — the scalable Pregel step; more rounds =
+# repeat the same stage (cf. connected_components' localCheckpoint loop
+# for the dynamic-round variant).
+sql_query(
     "bipartite_walk_mass",
-    oracle=f"""
+    f"""
     WITH edges AS (
       SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem
     ), sdeg AS (
@@ -663,37 +640,6 @@ WALK_MASS0 = 1_000_000
     SELECT s AS suppkey, CAST(m AS BIGINT) AS mass FROM smass
     """,
 )
-def q_bipartite_walk_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-step random-walk mass on the supplier↔part bipartite graph
-    (distinct lineitem edges): every supplier starts with 1e6 micro-
-    units, spreads them equally over its parts, parts spread what they
-    received back over their suppliers — the PageRank/HITS power-
-    iteration step, hand-unrolled. All arithmetic is integer floor
-    division, so the iteration is bit-exact in any engine (float
-    PageRank is order-dependent and unportable). Each round is one
-    join + one aggregate on the edge list — the scalable Pregel step;
-    more rounds = repeat the same stage (cf. connected_components'
-    localCheckpoint loop for the dynamic-round variant)."""
-    li = table(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct()
-    sdeg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-    pmass = (
-        edges.join(sdeg, "s")
-        .select("p", F.floor(F.lit(WALK_MASS0) / F.col("d")).cast("long").alias("share"))
-        .groupBy("p")
-        .agg(F.sum("share").alias("m"))
-    )
-    pdeg = edges.groupBy("p").agg(F.count(F.lit(1)).alias("d"))
-    smass = (
-        edges.join(pmass, "p")
-        .join(pdeg, "p")
-        .select("s", F.floor(F.col("m") / F.col("d")).cast("long").alias("share"))
-        .groupBy("s")
-        .agg(F.sum("share").cast("long").alias("mass"))
-    )
-    return smass.select(F.col("s").alias("suppkey"), "mass")
 
 
 _HILBERT_BASE = (

@@ -665,7 +665,7 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         adc.withColumn("rnk", F.row_number().over(wq))
         .filter(F.col("rnk") <= _TOP_K)
-        .select("query_id", "neighbor_id", "adc_micro", "rnk")
+        .select("query_id", "neighbor_id", "adc_micro", F.col("rnk").cast("long").alias("rnk"))
     )
 
 
@@ -751,7 +751,8 @@ def q_ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= HARD_NEG_K)
         .select(
-            "query_id", "neighbor_id", "anchor_label", "neg_label", "cos_u", "rnk"
+            "query_id", "neighbor_id", "anchor_label", "neg_label", "cos_u",
+            F.col("rnk").cast("long").alias("rnk"),
         )
     )
 

@@ -32,7 +32,6 @@ from distributed_mapreduce_spark.operators.aggregates import (
 from distributed_mapreduce_spark.operators.filters import (
     filter_eq_param,
     filter_min_arity,
-    filter_rlike_line,
     grep_filter,
 )
 from distributed_mapreduce_spark.operators.partitioning import hash_bucket, range_bucket
@@ -101,9 +100,13 @@ def q_filter_eq_param(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# `SELECT ALL FROM ds WHERE <regex>` — whole-line regex semantics
+# (data/sql-juice.go:42-60). The line is the comma-joined row, so the
+# pattern can express column adjacency like the reference's
+# `Video,Radio` (README.md:52-56).
+sql_query(
     "select_regex",
-    oracle=f"""
+    f"""
     SELECT doc_id,
            concat_ws(',', CAST(doc_id AS STRING), text, lang, source) AS line
     FROM documents
@@ -111,17 +114,6 @@ def q_filter_eq_param(spark: SparkSession, sf_dir: str) -> DataFrame:
                          '{SELECT_PATTERN}')
     """,
 )
-def q_select_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`SELECT ALL FROM ds WHERE <regex>` — whole-line regex semantics
-    (data/sql-juice.go:42-60). The line is the comma-joined row, so the
-    pattern can express column adjacency like the reference's
-    `Video,Radio` (README.md:52-56)."""
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
-    line = F.concat_ws(
-        ",", F.col("doc_id").cast("string"), F.col("text"), F.col("lang"), F.col("source")
-    ).alias("line")
-    with_line = docs.select("doc_id", line)
-    return with_line.filter(F.col("line").rlike(SELECT_PATTERN))
 
 
 @query(
@@ -224,26 +216,23 @@ sql_query(
 )
 
 
-@query(
+# Canonical MapReduce wordcount: mapper emits (word,1), reducer sums
+# (hadoop/TrafficMapper.java:48-49 + TrafficReducer.java:22-31). Spark's
+# hash aggregate applies the map-side combine automatically.
+sql_query(
     "wordcount",
-    oracle="""
+    """
     SELECT word, count(*) AS cnt
     FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
     WHERE word <> '' GROUP BY word
     """,
 )
-def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical MapReduce wordcount: mapper emits (word,1), reducer sums
-    (hadoop/TrafficMapper.java:48-49 + TrafficReducer.java:22-31).
-    Spark's hash aggregate applies the map-side combine automatically."""
-    docs = table(spark, sf_dir, "documents")
-    words = docs.select(F.explode(F.split(F.col("text"), " ", -1)).alias("word"))
-    return words.filter(F.col("word") != "").groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-@query(
+# Percent-of-total distribution (data/juice-exe.go:85-102).
+sql_query(
     "pct_by_group",
-    oracle=f"""
+    f"""
     WITH g AS (
       SELECT l_returnflag, count(*) AS cnt FROM lineitem GROUP BY 1
     )
@@ -251,9 +240,6 @@ def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g
     """,
 )
-def q_pct_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percent-of-total distribution (data/juice-exe.go:85-102)."""
-    return agg_pct_of_total(table(spark, sf_dir, "lineitem"), "l_returnflag")
 
 
 # Multi-aggregate pricing summary (TPC-H Q1 shape). DECIMAL sums with a
@@ -339,9 +325,16 @@ def q_approx_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# KLL/GK-style percentile sketch (`approx_percentile`) certified against
+# the exact interpolated percentile, same scheme as
+# `approx_distinct_counts`: the sketch is the scale path (bounded state,
+# mergeable; exact percentile needs a global sort), the exact value
+# rides along only to prove `|approx - exact| <= 1% * exact`. Spark's
+# exact `percentile` ≡ DuckDB `quantile_cont` bit-for-bit (same linear
+# interpolation), so `exact_val` is hash-stable.
+sql_query(
     "approx_percentile_prices",
-    oracle="""
+    """
     SELECT CAST(0.5 AS DOUBLE) AS p, quantile_cont(o_totalprice, 0.5) AS exact_val,
            TRUE AS within_1pct
     FROM orders
@@ -351,26 +344,6 @@ def q_approx_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(0.99 AS DOUBLE), quantile_cont(o_totalprice, 0.99), TRUE FROM orders
     """,
 )
-def q_approx_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KLL/GK-style percentile sketch (`approx_percentile`) certified
-    against the exact interpolated percentile, same scheme as
-    `approx_distinct_counts`: the sketch is the scale path (bounded
-    state, mergeable; exact percentile needs a global sort), the exact
-    value rides along only to prove `|approx - exact| <= 1% * exact`.
-    Spark's exact `percentile` ≡ DuckDB `quantile_cont` bit-for-bit
-    (same linear interpolation), so `exact_val` is hash-stable."""
-    orders = table(spark, sf_dir, "orders")
-
-    def one(p: float) -> DataFrame:
-        exact = F.expr(f"percentile(o_totalprice, CAST({p} AS DOUBLE))")
-        approx = F.expr(f"approx_percentile(o_totalprice, CAST({p} AS DOUBLE), 10000)")
-        return orders.agg(
-            F.lit(p).alias("p"),
-            exact.alias("exact_val"),
-            (F.abs(approx - exact) <= F.abs(exact) * 0.01).alias("within_1pct"),
-        )
-
-    return one(0.5).unionAll(one(0.9)).unionAll(one(0.99))
 
 
 # ---------------------------------------------------------------------------
@@ -431,7 +404,8 @@ sql_query(
     "window_rank",
     """
     SELECT c_custkey, c_nationkey,
-           rank() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rnk
+           CAST(rank() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey)
+                AS BIGINT) AS rnk
     FROM customer
     """,
 )

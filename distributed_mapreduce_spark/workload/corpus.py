@@ -44,7 +44,6 @@ from distributed_mapreduce_spark.workload.quality import (
 )
 from distributed_mapreduce_spark.workload.quality import _ngrams, _sql_ngrams
 from distributed_mapreduce_spark.workload.registry import (
-    hex_bigint,
     query,
     sql_query,
     table,
@@ -109,13 +108,12 @@ def q_decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on the u32 gram hash + one per-doc aggregate. Gram
     strings never shuffle — only their hashes."""
     docs = table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
 
     def side_grams(pred) -> DataFrame:
         # Filter BEFORE the CPU-heavy shingle+md5 stage: the eval side
         # is ~1% of the corpus, so hashing it from the full relation
         # would do 100x the needed work (measured 4x whole-query cost).
-        side = docs.filter(pred).select("doc_id", "text").repartition(par)
+        side = docs.filter(pred).select("doc_id", "text")
         # token array materialized once per row: _ngrams references its
         # input ~5x inside non-codegen HOF lambdas, so an inlined
         # tokenizer would re-run per reference
@@ -464,9 +462,7 @@ def q_dedup_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gh → doc count, the Heaps'-sublinear relation); one equi-join
     back + per-doc aggregate. Map-side partials throughout, no
     self-join of the raw corpus."""
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = table(spark, sf_dir, "documents")
     g = (
         # token array materialized once per row (see decontam note)
         docs.select("doc_id", _tokens(F.col("text")).alias("__toks"))
@@ -712,9 +708,7 @@ def q_dedup_exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = table(spark, sf_dir, "documents")
     g = (
         # token array materialized once per row (see decontam note)
         docs.select("doc_id", _tokens(F.col("text")).alias("__toks"))
@@ -814,9 +808,7 @@ def q_dedup_exact_substring_strip(spark: SparkSession, sf_dir: str) -> DataFrame
     here with a hash aggregate instead of a suffix array."""
     from pyspark.sql import Window as _W  # noqa: F401 (parity with runs)
 
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.posexplode(_tokens(F.col("text"))).alias("t", "tok")
     )
@@ -915,7 +907,7 @@ sql_query(
     "priority_sample_k",
     f"""
     SELECT doc_id, source,
-           {hex_bigint("md5('prio_' || CAST(doc_id AS STRING))")} AS prio
+           {_sql_hash_u32("CAST(doc_id AS STRING)", 'prio_')} AS prio
     FROM documents
     ORDER BY prio, doc_id
     LIMIT {PRIO_K}
@@ -933,7 +925,7 @@ sql_query(
       SELECT doc_id, source,
              row_number() OVER (
                PARTITION BY source
-               ORDER BY {hex_bigint("md5('quota_' || CAST(doc_id AS STRING))")}, doc_id
+               ORDER BY {_sql_hash_u32("CAST(doc_id AS STRING)", 'quota_')}, doc_id
              ) AS rn
       FROM documents
     ) WHERE rn <= {QUOTA_PER_SOURCE}
@@ -1067,9 +1059,16 @@ def q_quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 EPOCH_HEAD_CW, EPOCH_MID_CW, EPOCH_TAIL_CW = 250, 100, 40
 
 
-@query(
+# Epoch construction manifest: per-document repeat counts under
+# fractional source weights (floor(w) guaranteed copies + one more with
+# probability frac(w), decided by the deterministic hash gate) — the
+# up-sampling complement of `corpus_mixture_sample`'s down-sampling:
+# curated heads repeat 2.5x per epoch, the crawl tail thins to 0.4x. A
+# re-run on any cluster reproduces the exact same epoch. Rolled up per
+# source for the mixture audit.
+sql_query(
     "epoch_repeat_manifest",
-    oracle=f"""
+    f"""
     WITH w AS (
       SELECT doc_id, source,
              CASE WHEN CAST(substr(source, 4) AS INTEGER) < 5 THEN {EPOCH_HEAD_CW}
@@ -1092,44 +1091,6 @@ EPOCH_HEAD_CW, EPOCH_MID_CW, EPOCH_TAIL_CW = 250, 100, 40
     FROM r GROUP BY source
     """,
 )
-def q_epoch_repeat_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Epoch construction manifest: per-document repeat counts under
-    fractional source weights (floor(w) guaranteed copies + one more
-    with probability frac(w), decided by the deterministic hash gate) —
-    the up-sampling complement of `corpus_mixture_sample`'s
-    down-sampling: curated heads repeat 2.5x per epoch, the crawl tail
-    thins to 0.4x. A re-run on any cluster reproduces the exact same
-    epoch. Rolled up per source for the mixture audit.
-
-    Plan: pure per-row arithmetic + one hash aggregate — free at any
-    scale; the actual materialization is `explode(sequence(1,
-    n_repeats))` downstream when the trainer wants physical copies."""
-    docs = table(spark, sf_dir, "documents")
-    src_n = F.substring(F.col("source"), 4, 10).cast("int")
-    cw = (
-        F.when(src_n < 5, EPOCH_HEAD_CW)
-        .when(src_n < 15, EPOCH_MID_CW)
-        .otherwise(EPOCH_TAIL_CW)
-    )
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("epoch_"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    n_repeats = F.floor(cw / 100).cast("long") + F.when(h < cw % 100, 1).otherwise(0)
-    r = docs.select("source", n_repeats.cast("long").alias("n_repeats"))
-    return r.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_repeats").cast("long").alias("epoch_copies"),
-        F.sum(F.when(F.col("n_repeats") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_dropped"),
-    )
 
 
 #: Minimum support for a token pair to be reported (low enough to
@@ -1373,7 +1334,7 @@ sql_query(
     WITH pr AS (
       SELECT doc_id, source, CAST(n_chars AS BIGINT) AS weight,
              CAST(n_chars AS DOUBLE)
-               / (1 + {hex_bigint("md5('wprio_' || CAST(doc_id AS STRING))")})
+               / (1 + {_sql_hash_u32("CAST(doc_id AS STRING)", 'wprio_')})
                AS prio
       FROM documents
     )

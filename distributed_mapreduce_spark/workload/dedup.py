@@ -137,13 +137,10 @@ def shingle_table(docs: DataFrame) -> DataFrame:
     the md5 shingle hashing into every downstream reference. At real
     scale this is the signature table a pipeline would checkpoint.
 
-    The input is rebalanced up to the default parallelism first: the
-    hash map is the CPU-bound stage, and a small parquet file (or a
-    skewed upstream) would otherwise pin it to a handful of tasks.
+    The hash map is the CPU-bound stage; its input spread is the one
+    ``table()`` gives ``documents``. Building the relation launches no
+    job (``.rdd`` on a spread frame would run the pending exchange).
     """
-    parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < parallelism:
-        docs = docs.repartition(parallelism)
     sh = shingles(F.col("text"))
     out = docs.select(F.col("doc_id"), sh.alias("sh")).select(
         F.col("doc_id"),
@@ -611,10 +608,11 @@ def simhash_table(docs: DataFrame) -> DataFrame:
     return votes.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-@query("dedup_simhash", oracle=_sql_simhash())
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash over the harness documents (see :func:`simhash_table`)."""
-    return simhash_table(table(spark, sf_dir, "documents"))
+# SimHash over the harness documents (see :func:`simhash_table`).
+sql_query(
+    "dedup_simhash",
+    _sql_simhash(),
+)
 
 
 #: SimHash near-dup: pairs within this Hamming distance. With
@@ -1318,11 +1316,6 @@ def _fp_norm() -> Column:
     return F.md5(
         F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " "))
     )
-
-
-_SQL_FP_NORM = (
-    "md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))"
-)
 
 
 @query(

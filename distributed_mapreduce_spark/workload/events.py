@@ -304,9 +304,16 @@ sql_query(
 SAMPLE_BP = {"click": 2500, "view": 1000, "purchase": 10000, "signup": 10000, "error": 10000}
 
 
-@query(
+# Deterministic stratified sampling — the reproducible-downsample every
+# training pipeline needs (thin the hot classes, keep the rare ones).
+# NOT `sampleBy`: rand(seed) depends on row/partition order, so reruns
+# on different partitionings disagree. Hash-gating on a salted key
+# (`md5('samp_' || event_id) % 10000 < class_bp`) is order-independent,
+# engine-portable, and exactly re-derivable — the same row set forever,
+# verified here by exact per-class counts.
+sql_query(
     "events_stratified_sample",
-    oracle=f"""
+    f"""
     SELECT event_type, count(*) AS n_sampled
     FROM events
     WHERE ('0x' || substr(md5('samp_' || CAST(event_id AS STRING)), 1, 8))::BIGINT % 10000
@@ -317,31 +324,6 @@ SAMPLE_BP = {"click": 2500, "view": 1000, "purchase": 10000, "signup": 10000, "e
     GROUP BY event_type
     """,
 )
-def q_events_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling — the reproducible-downsample
-    every training pipeline needs (thin the hot classes, keep the rare
-    ones). NOT `sampleBy`: rand(seed) depends on row/partition order,
-    so reruns on different partitionings disagree. Hash-gating on a
-    salted key (`md5('samp_' || event_id) % 10000 < class_bp`) is
-    order-independent, engine-portable, and exactly re-derivable — the
-    same row set forever, verified here by exact per-class counts."""
-    ev = table(spark, sf_dir, "events")
-    h = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("samp_"), F.col("event_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 10000
-    )
-    bp = F.when(F.col("event_type") == "click", SAMPLE_BP["click"]).when(
-        F.col("event_type") == "view", SAMPLE_BP["view"]
-    ).otherwise(10000)
-    return (
-        ev.filter(h < bp)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_sampled"))
-    )
 
 
 @query(
@@ -687,9 +669,15 @@ _DAU_WAU_MAU_SQL = """
 sql_query("dau_wau_mau", _DAU_WAU_MAU_SQL)
 
 
-@query(
+# Per-partition export manifest: row count + order-independent content
+# checksum for every output partition — the handoff artifact a pipeline
+# publishes next to its files so the consumer can verify each partition
+# independently (the per-group form of `table_checksum`'s whole-table
+# digest). Commutative md5-derived uint32 sum: identical on any engine,
+# partitioning or row order.
+sql_query(
     "export_manifest",
-    oracle="""
+    """
     SELECT event_type AS partition_key,
            CAST(count(*) AS BIGINT) AS n_rows,
            CAST(sum(('0x' || substr(md5(
@@ -699,25 +687,6 @@ sql_query("dau_wau_mau", _DAU_WAU_MAU_SQL)
     FROM events GROUP BY event_type
     """,
 )
-def q_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-partition export manifest: row count + order-independent
-    content checksum for every output partition — the handoff artifact
-    a pipeline publishes next to its files so the consumer can verify
-    each partition independently (the per-group form of
-    `table_checksum`'s whole-table digest). Commutative md5-derived
-    uint32 sum: identical on any engine, partitioning or row order."""
-    ev = table(spark, sf_dir, "events")
-    enc = F.concat_ws(
-        "|",
-        F.col("event_id").cast("string"),
-        F.col("user_id").cast("string"),
-        F.unix_micros(F.col("ts")).cast("string"),
-    )
-    h = F.conv(F.substring(F.md5(enc), 1, 8), 16, 10).cast("long")
-    return ev.groupBy(F.col("event_type").alias("partition_key")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(h).cast("long").alias("checksum"),
-    )
 
 
 @query(
@@ -971,9 +940,15 @@ SLO_LONG_H = 6
 SLO_BURN_X10 = 20  # threshold: 2.0x budget, in tenths
 
 
-@query(
+# Multiwindow multi-burn-rate SLO alerting (the SRE workbook pattern):
+# hourly error ratios against a SLO_BUDGET_BP-bp budget, burn rate over
+# a SLO_SHORT_Hh short and SLO_LONG_Hh long trailing window in exact
+# tenths-of-budget (e*1e5 DIV (n*budget)), alert = BOTH windows burning
+# >= SLO_BURN_X10 / 10 times the budget — the AND is what kills blip pages
+# (short-only spikes) and stale pages (long-only tails).
+sql_query(
     "events_slo_burn_alerts",
-    oracle=f"""
+    f"""
     WITH hourly AS (
       SELECT date_trunc('hour', ts) AS h,
              CAST(count(*) AS BIGINT) AS n,
@@ -1001,49 +976,3 @@ SLO_BURN_X10 = 20  # threshold: 2.0x budget, in tenths
     FROM win
     """,
 )
-def q_events_slo_burn_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiwindow multi-burn-rate SLO alerting (the SRE workbook
-    pattern): hourly error ratios against a {SLO_BUDGET_BP}-bp budget,
-    burn rate over a {SLO_SHORT_H}h short and {SLO_LONG_H}h long
-    trailing window in exact tenths-of-budget (e*1e5 DIV (n*budget)),
-    alert = BOTH windows burning >= {SLO_BURN_X10 / 10}x budget —
-    the AND is what kills blip pages (short-only spikes) and stale
-    pages (long-only tails).
-
-    Plan: one hourly hash-agg of the scan, then trailing-ROWS window
-    sums over the BOUNDED hourly relation (one row per hour of the
-    observation range — the input-bounded window class, same as the
-    anomaly/seasonality family); per-row integer arithmetic after.
-
-    Reference parity: alerting extension of the reference's
-    grep-count surface (SURVEY.md section 2.4 `agg_global_count` over
-    error lines).
-    """
-    ev = table(spark, sf_dir, "events")
-    hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-        .cast("long")
-        .alias("errs"),
-    )
-    ws = Window.orderBy("h").rowsBetween(-(SLO_SHORT_H - 1), 0)
-    wl = Window.orderBy("h").rowsBetween(-(SLO_LONG_H - 1), 0)
-    win = hourly.select(
-        "h",
-        "n",
-        "errs",
-        F.sum("n").over(ws).alias("n_s"),
-        F.sum("errs").over(ws).alias("e_s"),
-        F.sum("n").over(wl).alias("n_l"),
-        F.sum("errs").over(wl).alias("e_l"),
-    )
-    burn_s = F.expr(f"CAST(e_s * 100000 DIV (n_s * {SLO_BUDGET_BP}) AS BIGINT)")
-    burn_l = F.expr(f"CAST(e_l * 100000 DIV (n_l * {SLO_BUDGET_BP}) AS BIGINT)")
-    return win.select(
-        "h",
-        "n",
-        "errs",
-        burn_s.alias("burn_short_x10"),
-        burn_l.alias("burn_long_x10"),
-        ((burn_s >= SLO_BURN_X10) & (burn_l >= SLO_BURN_X10)).alias("alert"),
-    )

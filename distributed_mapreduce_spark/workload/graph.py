@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.sources.readers import fingerprint
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: Deterministic order-key gate bounding the sampled co-occurrence set.
 EDGE_GATE_MOD = 7
@@ -629,9 +629,15 @@ def _lpa_round_sql(k: int) -> str:
     )"""
 
 
-@query(
+# Community detection by synchronous label propagation (Raghavan et al.
+# 2007), LPA_ROUNDS rounds: every node starts labeled with its own id;
+# each round it adopts the label the PLURALITY of its neighbors hold
+# (ties → smallest label, making the synchronous schedule fully
+# deterministic — no random tie coin, no visit-order dependence).
+# Output: surviving communities with size and smallest member.
+sql_query(
     "graph_label_propagation",
-    oracle=f"""
+    f"""
     WITH e AS MATERIALIZED ({_EDGES_SQL}),
     adj AS MATERIALIZED (
       SELECT src AS u, dst AS v FROM e
@@ -646,27 +652,6 @@ def _lpa_round_sql(k: int) -> str:
     FROM l{LPA_ROUNDS} GROUP BY 1
     """,
 )
-def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection by synchronous label propagation
-    (Raghavan et al. 2007), {LPA_ROUNDS} rounds: every node starts
-    labeled with its own id; each round it adopts the label the
-    PLURALITY of its neighbors hold (ties → smallest label, making
-    the synchronous schedule fully deterministic — no random tie
-    coin, no visit-order dependence). Output: surviving communities
-    with size and smallest member.
-
-    Plan (100 TB): one round = adjacency >< labels equi-join, a
-    (node, label) hash-agg with map-side partials, and a per-node
-    plurality window (bounded by each node's distinct neighbor
-    labels) — the Pregel message-combine shape, like
-    `pagerank_converge`, with label frequencies as the combined
-    message. State between rounds is one (node, label) row per node.
-    """
-    labels, _ = _lpa_labels(spark, sf_dir)
-    out = labels.groupBy(F.col("lbl").alias("community")).agg(
-        F.count(F.lit(1)).alias("n_nodes"), F.min("node").alias("min_node")
-    )
-    return out
 
 
 def _lpa_labels(spark: SparkSession, sf_dir: str):
@@ -1003,73 +988,20 @@ def _temporal_oracle(hops: int) -> str:
     return "WITH " + "".join(ctes) + f"\nSELECT node, arr AS arr_us FROM a{hops}"
 
 
-@query("graph_temporal_reachability", oracle=_temporal_oracle(TEMPORAL_HOPS))
-def q_graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-respecting reachability (earliest-arrival): an edge
-    (u, v, t) — parts co-ordered on a day t — is traversable only
-    STRICTLY AFTER the walker reached u, so influence propagates
-    forward in time (the temporal-graph semantics of Holme & Saramäki,
-    Phys. Rep. 2012; static reachability over-counts paths that go
-    backwards in time). {TEMPORAL_HOPS} Bellman-Ford-style rounds from
-    seed parts (id % {TEMPORAL_SEED_MOD} = 0, arrival −1 = before all
-    edges); per round each frontier node relaxes through its temporal
-    adjacency and per-node arrivals fold to the minimum — the
-    supply-chain-contagion / diffusion shape.
-
-    Plan (100 TB posture): temporal edges derive from one
-    lineitem⋈orders equi-join (gated like every graph-family edge
-    set), hash-partitioned on u and persisted; each round shuffles
-    only the (node, arrival) frontier; `localCheckpoint` keeps the
-    plan O(1) in rounds (the `graph_sssp_bounded` discipline). All
-    arrivals are integer micros — the unrolled-CTE oracle matches
-    bit-for-bit."""
-    par = spark.sparkContext.defaultParallelism
-    li = (
-        table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % EDGE_GATE_MOD == 0)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    orders = table(spark, sf_dir, "orders").select(
-        "o_orderkey", F.unix_micros("o_orderdate").alias("t")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    te = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-        )
-        .join(orders, F.col("a.l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.col("a.l_partkey").alias("u"),
-            F.col("b.l_partkey").alias("v"),
-            "t",
-        )
-        .distinct()
-        .repartition(par, "u")
-        .persist()
-    )
-    arr = (
-        te.filter(F.col("u") % TEMPORAL_SEED_MOD == 0)
-        .select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.lit(-1).cast("long").alias("arr"))
-        .localCheckpoint()
-    )
-    for _ in range(TEMPORAL_HOPS):
-        relax = arr.join(
-            te, (arr.node == te.u) & (te.t > arr.arr)
-        ).select(F.col("v").alias("node"), F.col("t").alias("arr"))
-        arr = (
-            arr.unionAll(relax)
-            .groupBy("node")
-            .agg(F.min("arr").cast("long").alias("arr"))
-            .localCheckpoint()
-        )
-    te.unpersist()
-    return arr.select("node", F.col("arr").alias("arr_us"))
+# Time-respecting reachability (earliest-arrival): an edge (u, v, t) —
+# parts co-ordered on a day t — is traversable only STRICTLY AFTER the
+# walker reached u, so influence propagates forward in time (the
+# temporal-graph semantics of Holme & Saramäki, Phys. Rep. 2012; static
+# reachability over-counts paths that go backwards in time).
+# TEMPORAL_HOPS Bellman-Ford-style rounds from seed parts (id %
+# TEMPORAL_SEED_MOD = 0, arrival −1 = before all edges); per round each
+# frontier node relaxes through its temporal adjacency and per-node
+# arrivals fold to the minimum — the supply-chain-contagion / diffusion
+# shape.
+sql_query(
+    "graph_temporal_reachability",
+    _temporal_oracle(TEMPORAL_HOPS),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1102,9 +1034,14 @@ def _edge_support(e: DataFrame) -> DataFrame:
     )
 
 
-@query(
+# Per-EDGE triangle support — the quantity k-truss decomposition peels
+# on (an edge is in the k-truss iff its support survives >= k-2 through
+# peeling; support is round 0 of that loop, and the peel itself composes
+# this query with the bounded-round pattern of `graph_kcore_peel`).
+# Edges in no triangle are absent (support 0).
+sql_query(
     "graph_edge_support",
-    oracle=f"""
+    f"""
     WITH e AS MATERIALIZED ({_EDGES_SQL}),
     tri AS MATERIALIZED (
       SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
@@ -1120,21 +1057,6 @@ def _edge_support(e: DataFrame) -> DataFrame:
     FROM sides GROUP BY 1, 2
     """,
 )
-def q_graph_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-EDGE triangle support — the quantity k-truss decomposition
-    peels on (an edge is in the k-truss iff its support survives >=
-    k-2 through peeling; support is round 0 of that loop, and the
-    peel itself composes this query with the bounded-round pattern of
-    `graph_kcore_peel`). Edges in no triangle are absent (support 0).
-
-    Plan: triangles enumerate once via the degree-ordered
-    compact-forward orientation (`_triangle_counts_degree_ordered`'s
-    wedge shape, O(m^1.5) intermediate — hub-safe at 100x skew); each
-    triangle explodes to its three sides, canonicalized to the
-    original src<dst id orientation with least/greatest, then one
-    hash-agg per edge. The oracle enumerates in id orientation — same
-    triangle set, engine-independent."""
-    return _edge_support(_edges(spark, sf_dir).cache())
 
 
 def _support_sql(e: str, out: str) -> str:
@@ -1499,7 +1421,7 @@ def q_graph_richclub_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         nk.join(ek, "k", "left")
         .select(
-            F.col("k").cast("long").alias("k"),
+            "k",
             "n_rich",
             F.coalesce("e_rich", F.lit(0)).cast("long").alias("e_rich"),
             F.expr(

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.workload.registry import (
-    hex_bigint,
     query,
     sql_query,
     table,
@@ -240,14 +239,12 @@ sql_query(
 
 # Deterministic A/B readout: users md5-assigned to arms, per-arm exposure
 # and conversion, exact decimal purchase value as a pinned-scale string.
-# The arm is the parity of the md5 prefix's u32, which is the parity of
-# its last (8th) hex digit, so only that digit is read.
 sql_query(
     "ab_split_metrics",
-    f"""
+    """
     WITH assigned AS (
       SELECT user_id, event_type, value,
-             CASE WHEN {hex_bigint("md5('ab_' || CAST(user_id AS STRING))", 8, 1)} % 2 = 0
+             CASE WHEN ('0x' || substr(md5('ab_' || CAST(user_id AS STRING)), 1, 8))::BIGINT % 2 = 0
                   THEN 'control' ELSE 'treatment' END AS arm
       FROM events
     )
@@ -565,9 +562,14 @@ def q_order_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 CEP_WINDOW_S = 3600
 
 
-@query(
+# Complex-event pattern with a NEGATIVE condition: click → purchase
+# within CEP_WINDOW_Ss for the same user, EXCLUDING pairs with an
+# intervening error event — the "A then B within T, no C between" shape
+# plain funnels can't express (MATCH_RECOGNIZE territory, built from
+# joins).
+sql_query(
     "funnel_with_exclusion",
-    oracle=f"""
+    f"""
     WITH c AS (
       SELECT user_id, event_id AS click_id, ts AS c_ts
       FROM events WHERE event_type = 'click'
@@ -595,62 +597,18 @@ CEP_WINDOW_S = 3600
       ON pr.click_id = d.click_id AND pr.purchase_id = d.purchase_id
     """,
 )
-def q_funnel_with_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Complex-event pattern with a NEGATIVE condition: click →
-    purchase within {CEP_WINDOW_S}s for the same user, EXCLUDING pairs
-    with an intervening error event — the "A then B within T, no C
-    between" shape plain funnels can't express (MATCH_RECOGNIZE
-    territory, built from joins).
-
-    Plan: both the pair join and the exclusion probe are user-keyed
-    equi-joins with a time-interval refinement (the
-    `range_join_conversions` treatment — per-user fan-out bounded by
-    events-per-user-per-hour, never a time cross product); the
-    exclusion is a LEFT join against the DISTINCT dirty-pair set, so
-    the anti-count is exact even with multiple errors inside one
-    window."""
-    ev = table(spark, sf_dir, "events")
-    c = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("c_ts")
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    pairs = c.join(
-        p,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("p_ts") > F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr(f"INTERVAL {CEP_WINDOW_S} SECONDS")),
-    ).select("user_id", "click_id", "purchase_id", "c_ts", "p_ts")
-    err = ev.filter(F.col("event_type") == "error").select(
-        F.col("user_id").alias("e_user"), F.col("ts").alias("e_ts")
-    )
-    dirty = (
-        pairs.join(
-            err,
-            (F.col("e_user") == F.col("user_id"))
-            & (F.col("e_ts") > F.col("c_ts"))
-            & (F.col("e_ts") < F.col("p_ts")),
-        )
-        .select("click_id", "purchase_id")
-        .distinct()
-        .withColumn("is_dirty", F.lit(1))
-    )
-    joined = pairs.join(dirty, ["click_id", "purchase_id"], "left")
-    return joined.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        (F.count(F.lit(1)) - F.count("is_dirty")).cast("long").alias("n_clean"),
-        F.expr("((count(1) - count(is_dirty)) * 10000) DIV count(1)")
-        .cast("long")
-        .alias("clean_bp"),
-    )
 
 
-@query(
+# Peak simultaneous sessions (capacity-planning sweep-line): sessionized
+# activity intervals become +1/-1 endpoint events, the running sum in
+# global endpoint order is the live concurrency curve, and the output is
+# its maximum with the earliest instant it is reached. Endpoint order
+# puts +1 before -1 at equal timestamps (a session ending exactly when
+# another starts counts as overlapping), with (user, session) tie-breaks
+# making the order total.
+sql_query(
     "sessions_peak_concurrency",
-    oracle="""
+    """
     WITH ordered AS (
       SELECT user_id, ts, event_id,
              CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id
@@ -686,84 +644,6 @@ def q_funnel_with_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
            (SELECT CAST(count(*) AS BIGINT) FROM iv) AS n_sessions
     """,
 )
-def q_sessions_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak simultaneous sessions (capacity-planning sweep-line):
-    sessionized activity intervals become +1/-1 endpoint events, the
-    running sum in global endpoint order is the live concurrency
-    curve, and the output is its maximum with the earliest instant it
-    is reached. Endpoint order puts +1 before -1 at equal timestamps
-    (a session ending exactly when another starts counts as
-    overlapping), with (user, session) tie-breaks making the order
-    total.
-
-    Plan (100 TB): sessionization is per-user windows (hash shuffle on
-    user_id, bounded state); the sweep-line's global running sum is
-    `operators.partitioning.global_cumsum` — range shuffle +
-    per-partition prefix sums + broadcast offsets, never a
-    single-task global window (the oracle's bare `OVER (ORDER BY)` is
-    the semantics, not the plan); the final readout aggregates the
-    curve's max over partition-local maxima.
-    """
-    from distributed_mapreduce_spark.operators.partitioning import global_cumsum
-
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(w)
-    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(prev_ts)
-    is_new = F.when(
-        prev_ts.isNull() | (gap_us > 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    sess = ev.withColumn("is_new", is_new).withColumn(
-        "session_id",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    iv = sess.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("s"), F.max("ts").alias("e")
-    )
-    # One explode, not a two-branch union: a UNION of two projections of
-    # `iv` plans the ENTIRE sessionize chain (scan -> per-user windows ->
-    # interval aggregate) once per branch — the r12 before-plan shows the
-    # scan+Window+HashAggregate subtree twice. Exploding each interval
-    # into its two endpoint rows computes the chain once (guide §2.4:
-    # share, don't recompute).
-    pts = iv.select(
-        "user_id",
-        "session_id",
-        F.explode(
-            F.array(
-                F.struct(F.col("s").alias("ts"), F.lit(1).alias("delta")),
-                F.struct(
-                    F.timestamp_micros(F.unix_micros(F.col("e")) + 1).alias("ts"),
-                    F.lit(-1).alias("delta"),
-                ),
-            )
-        ).alias("pt"),
-    ).select(F.col("pt.ts").alias("ts"), F.col("pt.delta").alias("delta"), "user_id", "session_id")
-    run = global_cumsum(
-        pts,
-        [F.col("ts"), F.col("delta").desc(), F.col("user_id"), F.col("session_id")],
-        "delta",
-        cumsum_col="conc",
-    )
-    # Single-pass readout: max(struct(conc, -micros)) is lexicographic —
-    # highest concurrency, then EARLIEST instant reaching it — and each
-    # session contributes exactly two endpoint rows, so n_sessions =
-    # count/2. One aggregation consumes the curve once (an earlier cut
-    # re-ran the whole cumsum pipeline for a second "argmax" join and
-    # went super-linear at x100 in SCALING_r04).
-    return run.agg(
-        F.max(
-            F.struct(
-                F.col("conc").cast("long").alias("c"),
-                (-F.unix_micros(F.col("ts"))).alias("nts"),
-            )
-        ).alias("m"),
-        (F.count(F.lit(1)) / 2).cast("long").alias("n_sessions"),
-    ).select(
-        F.col("m.c").alias("peak_concurrency"),
-        F.timestamp_micros(-F.col("m.nts")).alias("peak_ts"),
-        "n_sessions",
-    )
 
 
 @query(
@@ -1030,9 +910,16 @@ ATTR_LAST_BP = 4000
 ATTR_MID_BP = 2000
 
 
-@query(
+# Multi-touch position-based ("U-shaped") attribution: every purchase
+# distributes 10 000 bp of credit over the user's clicks in the prior
+# ATTR_LOOKBACK_H h — first touch ATTR_FIRST_BP, last touch
+# ATTR_LAST_BP, middles splitting ATTR_MID_BP with the integer remainder
+# awarded to the EARLIEST middles (largest-remainder rule, so every
+# purchase's credits sum to exactly 10 000 with no float splits). Credit
+# rolls up by click hour-of-day — "which hours earn conversions".
+sql_query(
     "attribution_position_credit",
-    oracle=f"""
+    f"""
     WITH touches AS (
       SELECT p.event_id AS purchase_id, c.event_id AS click_id,
              hour(c.ts) AS click_hour,
@@ -1063,67 +950,6 @@ ATTR_MID_BP = 2000
     FROM credited GROUP BY 1
     """,
 )
-def q_attribution_position_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-touch position-based ("U-shaped") attribution: every
-    purchase distributes 10 000 bp of credit over the user's clicks in
-    the prior {ATTR_LOOKBACK_H} h — first touch {ATTR_FIRST_BP},
-    last touch {ATTR_LAST_BP}, middles splitting {ATTR_MID_BP} with
-    the integer remainder awarded to the EARLIEST middles (largest-
-    remainder rule, so every purchase's credits sum to exactly 10 000
-    with no float splits). Credit rolls up by click hour-of-day —
-    "which hours earn conversions".
-
-    Plan: purchases⋈clicks is a per-user range join (equi on user_id,
-    AQE-planned, band-bounded by the lookback); position/count windows
-    are keyed per purchase (bounded by touches-per-purchase); the
-    rollup is a ≤24-row hash aggregate."""
-    ev = table(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
-    touches = p.join(
-        c,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("c_ts") < F.col("p_ts"))
-        & (
-            F.col("c_ts")
-            >= F.col("p_ts") - F.expr(f"INTERVAL {ATTR_LOOKBACK_H} HOURS")
-        ),
-    )
-    wp = Window.partitionBy("purchase_id")
-    wo = wp.orderBy("c_ts", "click_id")
-    pos = touches.select(
-        "purchase_id",
-        F.hour("c_ts").alias("click_hour"),
-        F.row_number().over(wo).alias("pos"),
-        F.count(F.lit(1)).over(wp).alias("n"),
-    )
-    mid = F.expr(
-        f"{ATTR_MID_BP} div (n - 2)"
-        f" + CASE WHEN pos - 1 <= {ATTR_MID_BP} % (n - 2) THEN 1 ELSE 0 END"
-    )
-    credited = pos.select(
-        "click_hour",
-        F.when(F.col("n") == 1, 10000)
-        .when(F.col("n") == 2, 5000)
-        .when(F.col("pos") == 1, ATTR_FIRST_BP)
-        .when(F.col("pos") == F.col("n"), ATTR_LAST_BP)
-        .otherwise(mid)
-        .alias("credit_bp"),
-    )
-    return credited.groupBy(
-        F.col("click_hour").cast("long").alias("click_hour")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_touches"),
-        F.sum("credit_bp").cast("long").alias("credit_bp"),
-    )
 
 
 # Second-order sequential patterns: counts of consecutive event-type
@@ -1155,9 +981,16 @@ sql_query(
 )
 
 
-@query(
+# Cohort lifetime-value curve: customers grouped by first-order month,
+# each cohort's spend accumulated across month offsets and normalized
+# per cohort member — the LTV triangle that retention counts
+# (`retention_cohorts`) cannot price. Exact to the cent: floor-cents
+# spend, integer month offsets from (year*12+month) deltas (identical on
+# both engines — no fractional months_between), one truncating division
+# per output row.
+sql_query(
     "cohort_cumulative_ltv",
-    oracle="""
+    """
     WITH om AS (
       SELECT o_custkey,
              CAST(date_trunc('month', o_orderdate) AS DATE) AS m,
@@ -1191,66 +1024,6 @@ sql_query(
     FROM per p JOIN csize s ON p.cohort_month = s.cm
     """,
 )
-def q_cohort_cumulative_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort lifetime-value curve: customers grouped by first-order
-    month, each cohort's spend accumulated across month offsets and
-    normalized per cohort member — the LTV triangle that retention
-    counts (`retention_cohorts`) cannot price. Exact to the cent:
-    floor-cents spend, integer month offsets from (year*12+month)
-    deltas (identical on both engines — no fractional months_between),
-    one truncating division per output row.
-
-    Plan: one hash-agg for cohorts (re-agg on the o_custkey shuffle
-    key), equi-join back, aggregate to (cohort, offset) rows, and the
-    running-sum window runs PARTITIONED BY cohort over those
-    aggregated rows — never a raw-row or global window. Cohort sizes
-    join on the ≤|months| relation."""
-    orders = table(spark, sf_dir, "orders")
-    om = orders.select(
-        "o_custkey",
-        F.to_date(F.date_trunc("month", "o_orderdate")).alias("m"),
-        F.floor(F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
-    )
-    cohort = om.groupBy("o_custkey").agg(F.min("m").alias("cm"))
-    csize = cohort.groupBy("cm").agg(
-        F.count(F.lit(1)).cast("long").alias("cohort_size")
-    )
-    per = (
-        om.join(cohort, "o_custkey")
-        .groupBy(
-            F.col("cm").alias("cohort_month"),
-            (
-                (F.year("m") * 12 + F.month("m"))
-                - (F.year("cm") * 12 + F.month("cm"))
-            ).alias("month_offset"),
-        )
-        .agg(
-            F.count_distinct("o_custkey").cast("long").alias("n_active"),
-            F.sum("cents").cast("long").alias("spend_cents"),
-        )
-    )
-    w = Window.partitionBy("cohort_month").orderBy("month_offset")
-    return (
-        per.join(
-            csize.withColumnRenamed("cm", "cohort_month"), "cohort_month"
-        )
-        .select(
-            "cohort_month",
-            F.col("month_offset").cast("long").alias("month_offset"),
-            "n_active",
-            "spend_cents",
-            F.sum("spend_cents").over(w).cast("long").alias("cum_spend_cents"),
-            "cohort_size",
-        )
-        # integer DIV on the materialized cumulative (a float divide
-        # would round past 2^53 cents)
-        .withColumn(
-            "ltv_per_cust_cents",
-            F.expr("CAST(cum_spend_cents DIV cohort_size AS BIGINT)"),
-        )
-    )
 
 
 #: Power-iteration rounds for the stationary distribution (unrolled
@@ -1269,9 +1042,17 @@ def _markov_round_sql(k: int) -> str:
     )"""
 
 
-@query(
+# Stationary distribution of the first-order behavior chain by
+# MARKOV_ITERS exact power-iteration rounds over the `event_transitions`
+# matrix (counts, not pre-truncated probabilities: each round's term is
+# pi·n_ij // n_i, one truncation per term, identical in both engines),
+# compared against the empirical long-run type frequency — the closing
+# member of the Markov family (order-1 matrix → order-2 trigrams → fixed
+# point), and delta_ppm is the model-fit readout: a chain that describes
+# the stream well converges near the empirical mix.
+sql_query(
     "events_markov_stationary",
-    oracle=f"""
+    f"""
     WITH seq AS (
       SELECT user_id, event_type,
              lag(event_type) OVER (PARTITION BY user_id
@@ -1302,73 +1083,6 @@ def _markov_round_sql(k: int) -> str:
     FROM p{MARKOV_ITERS} p JOIN emp e USING (event_type)
     """,
 )
-def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stationary distribution of the first-order behavior chain by
-    {MARKOV_ITERS} exact power-iteration rounds over the
-    `event_transitions` matrix (counts, not pre-truncated
-    probabilities: each round's term is pi·n_ij // n_i, one truncation
-    per term, identical in both engines), compared against the
-    empirical long-run type frequency — the closing member of the
-    Markov family (order-1 matrix → order-2 trigrams → fixed point),
-    and delta_ppm is the model-fit readout: a chain that describes the
-    stream well converges near the empirical mix.
-
-    Plan: ONE raw-scan window builds the matrix (same shuffle as
-    `event_transitions`); every iteration is a join of two bounded
-    aggregates (≤|types| and ≤|types|² rows) — the heavy lifting
-    happens once, the fixed point costs |types|-sized work per round.
-    The normalizing window in `emp` runs over ≤|types| aggregated
-    rows (bounded-window class)."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).filter(F.col("prev_type").isNotNull())
-    wn = Window.partitionBy("prev_type")
-    m = (
-        seq.groupBy("prev_type", F.col("event_type").alias("curr_type"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_transitions"))
-        .withColumn(
-            "n_out", F.sum("n_transitions").over(wn).cast("long")
-        )
-        .persist()
-    )
-    types = m.select(F.col("prev_type").alias("event_type")).distinct()
-    ntypes = types.agg(F.count(F.lit(1)).cast("long").alias("k"))
-    pi = types.crossJoin(F.broadcast(ntypes)).select(
-        "event_type", F.expr("CAST(1000000 DIV k AS BIGINT)").alias("pi_ppm")
-    )
-    for _ in range(MARKOV_ITERS):
-        pi = (
-            pi.join(m, pi["event_type"] == m["prev_type"])
-            .groupBy(F.col("curr_type").alias("event_type"))
-            .agg(
-                F.expr(
-                    "CAST(sum(pi_ppm * n_transitions DIV n_out) AS BIGINT)"
-                ).alias("pi_ppm")
-            )
-        )
-    emp = (
-        ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .select(
-            "event_type",
-            F.expr(
-                "CAST(n_events * 1000000 DIV sum(n_events) OVER () AS BIGINT)"
-            ).alias("empirical_ppm"),
-        )
-    )
-    return (
-        pi.join(emp, "event_type")
-        .select(
-            "event_type",
-            F.col("pi_ppm").alias("stationary_ppm"),
-            "empirical_ppm",
-            F.abs(F.col("pi_ppm") - F.col("empirical_ppm"))
-            .cast("long")
-            .alias("delta_ppm"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1381,9 +1095,16 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 MARKOV_EVAL_CUTOFF = "2024-01-16 00:00:00"
 
 
-@query(
+# Next-event prediction accuracy of the first-order Markov model under a
+# leak-free time split: transition counts from pre-cutoff pairs train
+# the argmax predictor (ties to the lexicographically smallest type),
+# post-cutoff pairs evaluate it, straddling pairs are discarded from
+# both sides. Per prior-event row: the prediction, test support, hits,
+# and accuracy in exact basis points — the out-of-sample companion to
+# `events_markov_stationary`'s in-sample fixed point.
+sql_query(
     "markov_next_event_accuracy",
-    oracle=f"""
+    f"""
     WITH seq AS (
       SELECT user_id, event_type,
              ts < TIMESTAMP '{MARKOV_EVAL_CUTOFF}' AS is_train,
@@ -1421,65 +1142,6 @@ MARKOV_EVAL_CUTOFF = "2024-01-16 00:00:00"
     GROUP BY t.prev_type, p.predicted
     """,
 )
-def q_markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Next-event prediction accuracy of the first-order Markov model
-    under a leak-free time split: transition counts from pre-cutoff
-    pairs train the argmax predictor (ties to the lexicographically
-    smallest type), post-cutoff pairs evaluate it, straddling pairs are
-    discarded from both sides. Per prior-event row: the prediction,
-    test support, hits, and accuracy in exact basis points — the
-    out-of-sample companion to `events_markov_stationary`'s in-sample
-    fixed point.
-
-    Plan: ONE per-user lag window (the same shape every sequence query
-    here uses) tags each transition with both endpoints' periods; the
-    train aggregate is |types|^2 rows, the argmax a |types|-bounded
-    window, and the test join broadcasts the 5-row prediction table.
-
-    Reference parity: sequence-model extension of the reference's
-    count-per-key aggregation (SURVEY.md section 2.4).
-    """
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    is_train = F.col("ts") < F.lit(MARKOV_EVAL_CUTOFF).cast("timestamp")
-    seq = ev.select(
-        "event_type",
-        is_train.alias("is_train"),
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.lag(is_train).over(w).alias("prev_train"),
-    ).filter(F.col("prev_type").isNotNull())
-    train = (
-        seq.filter(F.col("is_train") & F.col("prev_train"))
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    pw = Window.partitionBy("prev_type").orderBy(
-        F.desc("cnt"), F.asc("next_type")
-    )
-    pred = (
-        train.withColumn("rn", F.row_number().over(pw))
-        .filter(F.col("rn") == 1)
-        .select("prev_type", F.col("next_type").alias("predicted"))
-    )
-    test = seq.filter(~F.col("is_train") & ~F.col("prev_train")).select(
-        "prev_type", F.col("event_type").alias("next_type")
-    )
-    return (
-        test.join(F.broadcast(pred), "prev_type")
-        .groupBy("prev_type", "predicted")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_test"),
-            F.sum(
-                F.when(F.col("next_type") == F.col("predicted"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_correct"),
-            F.expr(
-                "CAST(sum(CASE WHEN next_type = predicted THEN 1 ELSE 0 END)"
-                " * 10000 DIV count(*) AS BIGINT)"
-            ).alias("acc_bp"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1579,9 +1241,16 @@ def q_user_gap_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 SESSION_GAP_SWEEP_MIN = (5, 15, 30, 60)
 
 
-@query(
+# Session-gap tuning table: for each candidate inactivity threshold, the
+# session count (cuts + one per active user — a cut is exactly one gap
+# above the threshold, so NO re-sessionization per candidate is needed)
+# and mean events per session in exact micro-units. The elbow of this
+# table is how the sessionize threshold gets picked from data instead of
+# folklore; the engine's actual sessionizers (`events_sessionize`,
+# `sessionize_sql`, streaming `sessionized_counts`) consume the winner.
+sql_query(
     "sessionize_gap_sweep",
-    oracle=f"""
+    f"""
     WITH seq AS (
       SELECT user_id,
              epoch_us(ts) - lag(epoch_us(ts))
@@ -1608,55 +1277,3 @@ SESSION_GAP_SWEEP_MIN = (5, 15, 30, 60)
     FROM sweep CROSS JOIN users
     """,
 )
-def q_sessionize_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-gap tuning table: for each candidate inactivity
-    threshold, the session count (cuts + one per active user — a cut
-    is exactly one gap above the threshold, so NO re-sessionization
-    per candidate is needed) and mean events per session in exact
-    micro-units. The elbow of this table is how the sessionize
-    threshold gets picked from data instead of folklore; the engine's
-    actual sessionizers (`events_sessionize`, `sessionize_sql`,
-    streaming `sessionized_counts`) consume the winner.
-
-    Plan: ONE per-user lag window (shared sequence shape), then a
-    |thresholds|-way literal explode into a 4-group aggregate —
-    sweeping thresholds costs one pass total, not one pass each.
-
-    Reference parity: parameter-tuning extension of the engine's
-    sessionize family (SURVEY.md section 2.5 window surface).
-    """
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.unix_micros(F.col("ts"))
-    seq = ev.select(
-        "user_id", (us - F.lag(us).over(w)).alias("gap_us")
-    ).filter(F.col("gap_us").isNotNull())
-    users = ev.agg(
-        F.count_distinct("user_id").cast("long").alias("n_users"),
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-    )
-    sweep = (
-        seq.select(
-            "gap_us",
-            F.explode(
-                F.array(*[F.lit(m) for m in SESSION_GAP_SWEEP_MIN])
-            ).alias("gap_min"),
-        )
-        .groupBy("gap_min")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("gap_us") > F.col("gap_min").cast("long") * 60_000_000, 1
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_cuts")
-        )
-    )
-    return sweep.crossJoin(F.broadcast(users)).select(
-        F.col("gap_min").cast("long").alias("gap_min"),
-        (F.col("n_cuts") + F.col("n_users")).cast("long").alias("n_sessions"),
-        F.expr(
-            "CAST(n_events * 1000000 DIV (n_cuts + n_users) AS BIGINT)"
-        ).alias("events_per_session_e6"),
-    )

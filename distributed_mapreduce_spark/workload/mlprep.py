@@ -42,7 +42,7 @@ from distributed_mapreduce_spark.workload.dedup import (
     _hash_u32,
     _sql_hash_u32,
 )
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: Binary target: "big order" — totalprice above this cut.
 TE_PRICE_CUT = 150_000.0
@@ -374,9 +374,12 @@ def q_mlprep_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Balanced class weights for a skewed label column — the sklearn-style
+# `n / (k * n_c)` inverse-frequency weight every imbalanced classifier
+# run computes first, in exact truncated ppm.
+sql_query(
     "mlprep_class_weights",
-    oracle="""
+    """
     WITH c AS (
       SELECT label, CAST(count(*) AS BIGINT) AS cnt
       FROM embeddings GROUP BY 1
@@ -392,33 +395,6 @@ def q_mlprep_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.label
     """,
 )
-def q_mlprep_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Balanced class weights for a skewed label column — the
-    sklearn-style `n / (k * n_c)` inverse-frequency weight every
-    imbalanced classifier run computes first, in exact truncated ppm.
-
-    Plan: one hash-agg to ≤|classes| rows, a 1-row total broadcast
-    back over it. Nothing at corpus scale after the scan."""
-    c = (
-        table(spark, sf_dir, "embeddings")
-        .groupBy("label")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    t = c.agg(
-        F.sum("cnt").cast("long").alias("total"),
-        F.count(F.lit(1)).cast("long").alias("n_classes"),
-    )
-    return (
-        c.crossJoin(F.broadcast(t))
-        .select(
-            "label",
-            "cnt",
-            F.expr(
-                "CAST((1000000 * total) DIV (n_classes * cnt) AS BIGINT)"
-            ).alias("weight_ppm"),
-        )
-        .orderBy("label")
-    )
 
 
 #: AUC audit: coarse integer model score (heavy ties exercise the
@@ -516,9 +492,14 @@ NEG_ANCHOR_MOD = 101
 NEG_K = 4
 
 
-@query(
+# Deterministic negative sampling for contrastive training: each anchor
+# document draws the NEG_K hash-smallest negatives from documents of a
+# DIFFERENT source (hash = md5-u32 of "anchor_docid", so the draw is a
+# reproducible pseudo-random sample — reruns and backfills pick
+# identical negatives, and no RNG state crosses engines).
+sql_query(
     "contrastive_negatives",
-    oracle=f"""
+    f"""
     WITH anch AS MATERIALIZED (
       SELECT doc_id AS anchor_id, source AS a_source FROM documents
       WHERE doc_id % {NEG_ANCHOR_MOD} = 0
@@ -527,47 +508,13 @@ NEG_K = 4
              {_sql_hash_u32("CAST(a.anchor_id AS STRING) || '_' || CAST(d.doc_id AS STRING)", "neg")} AS h
       FROM anch a JOIN documents d ON d.source <> a.a_source
     )
-    SELECT anchor_id, neg_id, h, rnk FROM (
+    SELECT anchor_id, neg_id, h, CAST(rnk AS BIGINT) AS rnk FROM (
       SELECT *, row_number() OVER (PARTITION BY anchor_id
                                    ORDER BY h, neg_id) AS rnk
       FROM scored
     ) WHERE rnk <= {NEG_K}
     """,
 )
-def q_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic negative sampling for contrastive training: each
-    anchor document draws the {NEG_K} hash-smallest negatives from
-    documents of a DIFFERENT source (hash = md5-u32 of
-    "anchor_docid", so the draw is a reproducible pseudo-random sample
-    — reruns and backfills pick identical negatives, and no RNG state
-    crosses engines).
-
-    Plan: the anchor set (a residue gate, |docs|/{NEG_ANCHOR_MOD})
-    broadcasts over the corpus scan — the ann_bruteforce shape; the
-    per-anchor top-{NEG_K} is a window partitioned BY ANCHOR, never
-    global. At 100 TB anchors are a training batch (thousands), the
-    candidate pool streams once."""
-    docs = table(spark, sf_dir, "documents")
-    anch = docs.filter(F.col("doc_id") % NEG_ANCHOR_MOD == 0).select(
-        F.col("doc_id").alias("anchor_id"), F.col("source").alias("a_source")
-    )
-    from pyspark.sql import Window
-
-    scored = docs.join(
-        F.broadcast(anch), F.col("source") != F.col("a_source")
-    ).select(
-        "anchor_id",
-        F.col("doc_id").alias("neg_id"),
-        _hash_u32(
-            F.concat_ws("_", F.col("anchor_id"), F.col("doc_id")), "neg"
-        ).alias("h"),
-    )
-    w = Window.partitionBy("anchor_id").orderBy("h", "neg_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= NEG_K)
-        .select("anchor_id", "neg_id", "h", "rnk")
-    )
 
 
 def _split_case_sql(key: str) -> str:
@@ -699,9 +646,19 @@ def q_split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 APPORTION_BP = (("train", 8000), ("val", 1000), ("test", 1000))
 
 
-@query(
+# Exact integer split quotas per stratum by Hamilton's largest-remainder
+# apportionment: each (source, lang) stratum's doc count is divided over
+# the APPORTION_BP splits so that Σ alloc =
+# n_docs EXACTLY — floors of the exact bp quotas first, then the
+# stratum's leftover seats (Σ remainders / 10⁴, an integer because Σ
+# ratio_bp = 10⁴) go one each to the largest remainders (ties broken by
+# split name — deterministic). This is the quota table a stratified
+# splitter must hit; the hash-based assigners (`text_split_assign`,
+# `mlprep_kfold_assign`) only approximate ratios, and the delta IS the
+# audit.
+sql_query(
     "split_apportion_hamilton",
-    oracle=f"""
+    f"""
     WITH strata AS (
       SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs
       FROM documents GROUP BY source, lang
@@ -727,76 +684,6 @@ APPORTION_BP = (("train", 8000), ("val", 1000), ("test", 1000))
     FROM ranked
     """,
 )
-def q_split_apportion_hamilton(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact integer split quotas per stratum by Hamilton's
-    largest-remainder apportionment: each (source, lang) stratum's
-    doc count is divided over the {'/'.join(n for n, _ in APPORTION_BP)}
-    splits so that Σ alloc = n_docs EXACTLY — floors of the exact
-    bp quotas first, then the stratum's leftover seats (Σ remainders /
-    10⁴, an integer because Σ ratio_bp = 10⁴) go one each to the
-    largest remainders (ties broken by split name — deterministic).
-    This is the quota table a stratified splitter must hit; the
-    hash-based assigners (`text_split_assign`, `mlprep_kfold_assign`)
-    only approximate ratios, and the delta IS the audit.
-
-    Plan: one hash-agg to |source × lang| strata, a ×{len(APPORTION_BP)}
-    literal explode, and windows partitioned BY STRATUM over those
-    {len(APPORTION_BP)} rows — nothing global, nothing raw-row."""
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents")
-    strata = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )
-    splits = F.array(
-        *[
-            F.struct(F.lit(n).alias("split"), F.lit(b).alias("ratio_bp"))
-            for n, b in APPORTION_BP
-        ]
-    )
-    quota = strata.select(
-        "source",
-        "lang",
-        "n_docs",
-        F.explode(splits).alias("r"),
-    ).select(
-        "source",
-        "lang",
-        "n_docs",
-        F.col("r.split").alias("split"),
-        F.col("r.ratio_bp").cast("long").alias("ratio_bp"),
-        F.expr("CAST(n_docs * r.ratio_bp DIV 10000 AS BIGINT)").alias(
-            "floor_alloc"
-        ),
-        F.expr("CAST(n_docs * r.ratio_bp % 10000 AS BIGINT)").alias("rem"),
-    )
-    ws = Window.partitionBy("source", "lang")
-    ranked = quota.select(
-        "*",
-        F.row_number()
-        .over(ws.orderBy(F.col("rem").desc(), "split"))
-        .cast("long")
-        .alias("rnk"),
-        F.expr(
-            "CAST(sum(rem) OVER (PARTITION BY source, lang) DIV 10000"
-            " AS BIGINT)"
-        ).alias("deficit"),
-    )
-    return ranked.select(
-        "source",
-        "lang",
-        "split",
-        "n_docs",
-        "ratio_bp",
-        "floor_alloc",
-        "rem",
-        (
-            F.col("floor_alloc")
-            + F.when(F.col("rnk") <= F.col("deficit"), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("alloc"),
-    )
 
 
 # ---------------------------------------------------------------------------

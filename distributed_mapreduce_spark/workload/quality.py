@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.workload.registry import (
     query,
+    sql_query,
     table,
     wide_shuffle_parts,
 )
@@ -134,14 +135,10 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     wordcount skeleton of the reference's `maple_wordcount.py` applied
     per-document.
     """
-    # The harness parquet is a single row group → one input task; the
-    # n-gram build is CPU-bound, so spread it across cores first (same
-    # treatment as dedup's shingle_table). Each branch materializes
-    # only the array it needs — tri stats never build the bigram array
-    # and vice versa.
-    docs = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # `table()` spreads documents for the CPU-bound n-gram build. Each
+    # branch materializes only the array it needs — tri stats never
+    # build the bigram array and vice versa.
+    docs = table(spark, sf_dir, "documents")
     toks = _tokens(F.col("text"))
     tri_stats = docs.select(
         "doc_id", _ngrams(toks, 3).alias("tri")
@@ -404,9 +401,15 @@ def _band_case_sql(rank: str) -> str:
     return f"CASE {whens} ELSE {ZIPF_BANDS} END"
 
 
-@query(
+# Zipf rank-frequency audit: vocabulary ranked by corpus frequency
+# (total order: tf desc, token), rolled into power-of-2 rank bands (band
+# b = ranks [2^b, 2^(b+1))) with token count and frequency mass per band
+# — the corpus-shape diagnostic (a healthy natural corpus has roughly
+# constant mass per band; a template-heavy crawl does not). Banding is
+# integer comparison, never a float log.
+sql_query(
     "zipf_rank_bands",
-    oracle=f"""
+    f"""
     WITH counts AS (
       SELECT tok, CAST(count(*) AS BIGINT) AS tf
       FROM (SELECT unnest({_sql_tokens('text')}) AS tok FROM documents)
@@ -421,47 +424,19 @@ def _band_case_sql(rank: str) -> str:
     FROM ranked GROUP BY 1
     """,
 )
-def q_zipf_rank_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf rank-frequency audit: vocabulary ranked by corpus frequency
-    (total order: tf desc, token), rolled into power-of-2 rank bands
-    (band b = ranks [2^b, 2^(b+1))) with token count and frequency
-    mass per band — the corpus-shape diagnostic (a healthy natural
-    corpus has roughly constant mass per band; a template-heavy crawl
-    does not). Banding is integer comparison, never a float log.
-
-    Plan: explode → hash aggregate → distributed `global_rank` over
-    the aggregated vocabulary (range shuffle + per-partition offsets,
-    no single-task sort) → 20-row aggregate."""
-    from distributed_mapreduce_spark.operators.partitioning import global_rank
-
-    docs = table(spark, sf_dir, "documents")
-    counts = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    ranked = global_rank(
-        counts,
-        [F.col("tf").desc(), F.col("tok").asc()],
-        rank_col="rank",
-        total_col="_t",
-    ).drop("_t")
-    band = F.lit(ZIPF_BANDS)
-    for b in reversed(range(ZIPF_BANDS)):
-        band = F.when(F.col("rank") < (1 << (b + 1)), b).otherwise(band)
-    return ranked.groupBy(band.cast("int").alias("band")).agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum("tf").cast("long").alias("total_tf"),
-    )
 
 
 #: Coverage-curve cutoffs (top-K vocabulary ranks).
 COVERAGE_KS = (100, 500, 2000)
 
 
-@query(
+# Vocabulary coverage curve: what fraction of all corpus token
+# OCCURRENCES the top-K vocabulary entries cover, at K ∈ COVERAGE_KS —
+# the readout that sizes a tokenizer's vocab (the knee of this curve is
+# where bigger vocabularies stop paying).
+sql_query(
     "vocab_coverage_curve",
-    oracle=f"""
+    f"""
     WITH counts AS (
       SELECT tok, CAST(count(*) AS BIGINT) AS tf
       FROM (SELECT unnest({_sql_tokens('text')}) AS tok FROM documents)
@@ -481,45 +456,6 @@ COVERAGE_KS = (100, 500, 2000)
     GROUP BY k
     """,
 )
-def q_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary coverage curve: what fraction of all corpus token
-    OCCURRENCES the top-K vocabulary entries cover, at K ∈
-    {COVERAGE_KS} — the readout that sizes a tokenizer's vocab (the
-    knee of this curve is where bigger vocabularies stop paying).
-
-    Plan: token counts → distributed `global_rank` over the
-    aggregated vocabulary (no single-task sort) → a constant ×
-    {len(COVERAGE_KS)} cutoff explode and one aggregate; all integer
-    arithmetic."""
-    from distributed_mapreduce_spark.operators.partitioning import global_rank
-
-    docs = table(spark, sf_dir, "documents")
-    counts = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    ranked = global_rank(
-        counts, [F.col("tf").desc(), F.col("tok").asc()], rank_col="rank",
-        total_col="_t",
-    ).drop("_t")
-    tot = ranked.agg(F.sum("tf").cast("long").alias("total"))
-    ks = F.explode(F.array(*[F.lit(k) for k in COVERAGE_KS])).alias("k")
-    exploded = ranked.select("tf", "rank", ks).crossJoin(F.broadcast(tot))
-    return (
-        exploded.groupBy("k")
-        .agg(
-            F.sum(F.when(F.col("rank") <= F.col("k"), F.col("tf")).otherwise(0))
-            .cast("long")
-            .alias("covered_tokens"),
-            F.expr(
-                "(sum(CASE WHEN rank <= k THEN tf ELSE 0 END) * 10000)"
-                " DIV min(total)"
-            )
-            .cast("long")
-            .alias("coverage_bp"),
-        )
-    )
 
 
 #: Curriculum phases (quartile buckets).
@@ -613,15 +549,14 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of the repetition filters, and the signal behind
     "contributes nothing new, drop it" corpus pruning.
 
-    Plan: one explode to distinct (doc, gram) pairs (repartitioned
-    before the CPU-heavy n-gram build, like `quality_repetition`), a
+    Plan: one explode to distinct (doc, gram) pairs (over the spread
+    `table()` gives documents, like `quality_repetition`), a
     gram-level min-aggregate (the first-occurrence inverted index,
     map-side partials), and one equi-join back on gram — the
     decontamination join shape; no self-join of the corpus.
     """
-    docs = table(spark, sf_dir, "documents")
     g = (
-        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+        table(spark, sf_dir, "documents")
         # materialize the token array in its own projection: _ngrams
         # references it ~5x (and inside a HOF lambda), and higher-order
         # functions don't codegen, so an inlined split+filter would

@@ -33,6 +33,87 @@ TABLES = (
 )
 _TABLE_WORD = re.compile(r"\b(" + "|".join(TABLES) + r")\b")
 
+#: Quoted literals, quoted identifiers and comments: :func:`to_spark`
+#: never rewrites inside them.
+_OPAQUE = re.compile(r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|--[^\n]*|/\*.*?\*/", re.S)
+_HOLE = re.compile(r"\x00(\d+)\x00")
+
+#: DuckDB spelling -> Spark spelling, one token each.
+_RENAMES = (
+    (re.compile(r"\s*//\s*"), " DIV "),
+    (re.compile(r"\bAS\s+MATERIALIZED\s*\(", re.I), "AS ("),
+    (re.compile(r"\bunnest\s*\(", re.I), "explode("),
+    (re.compile(r"\bstring_split\s*\(", re.I), "split("),
+    (re.compile(r"\blist_filter\s*\(", re.I), "filter("),
+    (re.compile(r"\bregexp_matches\s*\(", re.I), "regexp_like("),
+    (re.compile(r"\bquantile_cont\s*\(", re.I), "percentile("),
+    (re.compile(r"\bepoch_us\s*\(", re.I), "unix_micros("),
+)
+_HEX_OPEN = re.compile(r"\(\s*\x00(\d+)\x00\s*\|\|")
+_HEX_TYPE = re.compile(r"\s*::\s*(BIGINT|INT)\b", re.I)
+#: A ``[`` after one of these (or after no word at all) opens a list
+#: literal; after any other word, ``)`` or ``]`` it indexes.
+_LIST_AFTER = re.compile(
+    r"(?:^|\b(?:SELECT|THEN|ELSE|WHEN|AND|OR|NOT|IN|BY|RETURN)|[^\w)\]\x00\s])\s*$", re.I
+)
+
+
+def _close(s: str, i: int) -> int:
+    """Index of the bracket closing the one at ``s[i]``."""
+    pair = {"(": ")", "[": "]"}[s[i]]
+    depth = 0
+    for j in range(i, len(s)):
+        if s[j] == s[i]:
+            depth += 1
+        elif s[j] == pair:
+            depth -= 1
+            if depth == 0:
+                return j
+    raise ValueError(f"unbalanced {s[i]!r} at {i}")
+
+
+def to_spark(sql: str) -> str:
+    """Spell a DuckDB oracle for Spark's parser with a closed map of ten
+    rules: ``a // b`` -> ``a DIV b``; ``AS MATERIALIZED (`` -> ``AS (``;
+    ``unnest``, ``string_split``, ``list_filter``, ``regexp_matches``,
+    ``quantile_cont`` and ``epoch_us`` -> ``explode``, ``split``,
+    ``filter``, ``regexp_like``, ``percentile`` and ``unix_micros``;
+    ``('0x' || e)::BIGINT`` (or ``::INT``) -> ``CAST(conv(e, 16, 10) AS
+    BIGINT)``; a ``[a, b]`` list literal (not an index) -> ``array(a,
+    b)``. Quoted literals and comments pass through verbatim, so a
+    ``/*+ … */`` hint survives.
+
+    Not every rule keeps the value: DuckDB's ``//`` on a DOUBLE divides
+    exactly where ``DIV`` truncates, ``split`` takes a Java regex where
+    ``string_split`` takes a plain separator, and the regex dialects
+    differ (RE2 against Java). A query runs through this map only once
+    its rows and dtypes equal the oracle's."""
+    opaque: list[str] = []
+
+    def hide(m: re.Match) -> str:
+        opaque.append(m.group(0))
+        return f"\x00{len(opaque) - 1}\x00"
+
+    s = _OPAQUE.sub(hide, sql)
+    for pat, repl in _RENAMES:
+        s = pat.sub(repl, s)
+    pos = 0
+    while m := _HEX_OPEN.search(s, pos):
+        end = _close(s, m.start())
+        cast = _HEX_TYPE.match(s, end + 1)
+        if opaque[int(m.group(1))] != "'0x'" or cast is None:
+            pos = m.end()
+            continue
+        inner = s[m.end():end].strip()
+        s = f"{s[:m.start()]}CAST(conv({inner}, 16, 10) AS {cast.group(1)}){s[cast.end():]}"
+    pos = 0
+    while (i := s.find("[", pos)) >= 0:
+        if _LIST_AFTER.search(s, 0, i):
+            end = _close(s, i)
+            s = f"{s[:i]}array({s[i + 1:end]}){s[end + 1:]}"
+        pos = i + 1
+    return _HOLE.sub(lambda m: opaque[int(m.group(1))], s)
+
 
 def _ensure_package_on_workers(spark: SparkSession) -> None:
     """Ship `distributed_mapreduce_spark` to Python workers via
@@ -111,32 +192,31 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 def sql_query(name: str, sql: str) -> QueryFn:
     """Register ONE SQL text as both the oracle and the builder: the
-    builder gives every harness table the text names a temp view
-    through :func:`table` and returns ``spark.sql(sql)``, so Spark's
-    SQL front-end and DuckDB run the same query.
+    oracle is ``sql`` byte for byte, and the builder gives every harness
+    table the text names a temp view through :func:`table` and returns
+    ``spark.sql(to_spark(sql))``, so Spark's SQL front-end and DuckDB
+    run the same query.
 
-    A query is SQL-first when its oracle analyzes verbatim in Spark,
-    returns the same rows and dtypes, and the DataFrame form does not
-    beat it in a paired A/B; the kept builders and their measured
-    reasons are listed in ``tests/test_sql_first.py``. Views are bound
-    at analysis, so a later call for another ``sf_dir`` never changes
-    a frame already returned. The builder reports its caller's module,
-    which keeps per-family attribution (``tools/check_correctness.py``
-    groups cost by ``fn.__module__``).
+    A query is SQL-first when its oracle analyzes in Spark through
+    :func:`to_spark`, returns the same rows and dtypes, and the
+    DataFrame form does not beat it in a paired A/B; the kept builders
+    and their measured reasons are listed in ``tests/test_sql_first.py``.
+    Views are bound at analysis, so a later call for another ``sf_dir``
+    never changes a frame already returned. The builder reports its
+    caller's module, which keeps per-family attribution
+    (``tools/check_correctness.py`` groups cost by ``fn.__module__``).
 
-    The text is written in the dialect both engines share: ``STRING``,
-    not DuckDB's bare ``VARCHAR`` (Spark rejects it), and
-    :func:`hex_bigint` for an md5 hex prefix read as an integer, in
-    place of DuckDB's ``('0x' || …)::BIGINT`` cast. DuckDB-only
-    spellings (``AS MATERIALIZED`` CTEs, ``[…]`` list literals, ``//``
-    division, ``list_*`` routines) keep a query on its DataFrame
-    builder."""
+    Oracles write ``STRING``, not DuckDB's bare ``VARCHAR``, which Spark
+    rejects. Spellings outside the :func:`to_spark` map (``HUGEINT``,
+    ``list_reduce``, 1-based list indexing, ``regexp_replace(…, 'g')``)
+    keep a query on its DataFrame builder."""
     names = sorted(set(_TABLE_WORD.findall(sql)))
+    spark_sql = to_spark(sql)
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in names:
             table(spark, sf_dir, t).createOrReplaceTempView(t)
-        return spark.sql(sql)
+        return spark.sql(spark_sql)
 
     fn.__module__ = sys._getframe(1).f_globals["__name__"]
     fn.__name__ = fn.__qualname__ = f"q_{name}"
@@ -145,30 +225,8 @@ def sql_query(name: str, sql: str) -> QueryFn:
     return fn
 
 
-def hex_bigint(hex_sql: str, start: int = 1, n: int = 8) -> str:
-    """SQL for the BIGINT value of the ``n`` hex digits of ``hex_sql``
-    from position ``start``, in a form Spark and DuckDB both run.
-
-    DuckDB's ``('0x' || substr(h, start, n))::BIGINT`` analyzes in
-    Spark but fails on every row (CAST_INVALID_INPUT), so each digit
-    is read as ``(ascii(d) - 48) % 39`` and weighted by its power of
-    16. Valid for LOWERCASE hex only (``'a'`` is 97, 97 - 48 = 49,
-    49 % 39 = 10), which is what ``md5`` returns in both engines.
-
-    Spark pays about twice ``conv``'s cost per value for this parse,
-    and a filter evaluates ``hex_sql`` once per digit, so over a large
-    table a DataFrame builder with ``conv`` can win (the measured keeps
-    in ``tests/test_sql_first.py``)."""
-    digits = " + ".join(
-        f"CAST((ascii(substr({hex_sql}, {start + i}, 1)) - 48) % 39 AS BIGINT)"
-        f" * {16 ** (n - 1 - i)}"
-        for i in range(n)
-    )
-    return f"({digits})"
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a harness table (see /root/repo/TESTDATA.md).
+    """Load a harness table (see TESTDATA.md).
 
     Timestamp normalization (applied to whatever session the driver
     passes in — all three confs are runtime-settable):

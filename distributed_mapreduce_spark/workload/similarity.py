@@ -85,9 +85,15 @@ def _sql_cos_u(a: str, b: str) -> str:
 
 def topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     """Per-query top-k by (score desc, neighbor id) — a per-partition
-    window, not a global sort."""
+    window, not a global sort. ``rnk`` is BIGINT, as DuckDB types
+    ``row_number()``; the cast follows the filter, which Catalyst turns
+    into a per-partition window group limit."""
     w = Window.partitionBy("query_id").orderBy(F.col("cos_u").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .withColumn("rnk", F.col("rnk").cast("long"))
+    )
 
 
 @query(

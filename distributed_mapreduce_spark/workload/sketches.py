@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: Filter geometry: 1024 bits as 32 × 32-bit words; 3 hash functions.
 BLOOM_BITS = 1024
@@ -115,13 +115,14 @@ def _bloom_verdicts(filt: DataFrame, probes: DataFrame) -> DataFrame:
     )
 
 
-@query("bloom_build", oracle=_BUILD_SQL)
-def q_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build a {BLOOM_BITS}-bit Bloom filter of the member-customer key
-    set as a relational aggregate: K={BLOOM_K} portable hash positions
-    per key, exploded and bit_or-folded into {BLOOM_BITS // WORD_BITS}
-    words. Deterministic hashes make the filter itself oracle-exact."""
-    return _bloom_build(spark, sf_dir)
+# Build a BLOOM_BITS-bit Bloom filter of the member-customer key set as
+# a relational aggregate: K=BLOOM_K portable hash positions per key,
+# exploded and bit_or-folded into BLOOM_BITS / WORD_BITS words.
+# Deterministic hashes make the filter itself oracle-exact.
+sql_query(
+    "bloom_build",
+    _BUILD_SQL,
+)
 
 
 @query(

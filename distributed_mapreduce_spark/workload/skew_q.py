@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.operators.skew import salted_join
-from distributed_mapreduce_spark.workload.registry import query, table
+from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 #: Key-space size of the cold keys (and the dimension row count).
 HOT_MOD = 5000
@@ -113,9 +113,16 @@ def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _skew_checksum(salted_join(big, small.hint("merge"), "k", salt=SKEW_SALT))
 
 
-@query(
+# Heavy-hitter diagnostic over the same skewed join key the benchmark
+# pair exercises: the top keys with their exact share (basis points),
+# hotness factor (x100 multiple of the mean per-key load), and the salt
+# fan-out the salted-join rewrite would need so the hot key's rows
+# spread to no more than an average task's load at 32-way parallelism —
+# ceil(cnt * 32 / n_rows), the sizing rule `operators.skew.salted_join`
+# callers use.
+sql_query(
     "skew_key_audit",
-    oracle=f"""
+    f"""
     WITH big AS (
       SELECT CASE WHEN event_id % 3 < 2 THEN 0
                   ELSE user_id % {HOT_MOD} END AS k
@@ -137,38 +144,3 @@ def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c.cnt DESC, c.k LIMIT 5
     """,
 )
-def q_skew_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-hitter diagnostic over the same skewed join key the
-    benchmark pair exercises: the top keys with their exact share
-    (basis points), hotness factor (x100 multiple of the mean per-key
-    load), and the salt fan-out the salted-join rewrite would need so
-    the hot key's rows spread to no more than an average task's load at
-    32-way parallelism — ceil(cnt * 32 / n_rows), the sizing rule
-    `operators.skew.salted_join` callers use.
-
-    This is the DETECTION half of skew handling (the benchmark pair is
-    the mitigation half): at 100 TB you run the audit first — one
-    hash-agg + a re-agg over the per-key counts (|keys| rows, not raw
-    rows) + a top-k — and only rewrite the joins whose hot_x100 says
-    the key distribution actually needs it.
-    """
-    big, _ = _skew_inputs(spark, sf_dir)
-    counts = big.groupBy("k").agg(F.count(F.lit(1)).alias("cnt"))
-    totals = counts.agg(
-        F.count(F.lit(1)).alias("n_keys"), F.sum("cnt").alias("n_rows")
-    ).withColumn("j", F.lit(1))
-    return (
-        counts.withColumn("j", F.lit(1))
-        .join(F.broadcast(totals), "j")
-        .select(
-            "k",
-            "cnt",
-            F.expr("cnt * 10000 div n_rows").alias("share_bp"),
-            F.expr("cnt * 100 * n_keys div n_rows").alias("hot_x100"),
-            F.expr("(cnt * 32 + n_rows - 1) div n_rows").alias("suggested_salt"),
-            "n_keys",
-            "n_rows",
-        )
-        .orderBy(F.col("cnt").desc(), "k")
-        .limit(5)
-    )

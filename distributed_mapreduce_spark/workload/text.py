@@ -11,7 +11,7 @@ float division then rounding is not portable across engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.operators.partitioning import global_cumsum
@@ -298,9 +298,17 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Top-3 distinctive terms per document: rank by (term frequency desc,
+# corpus document-frequency asc, term) — the TF-IDF ordering with exact
+# integer keys instead of a float idf (log() is not bit-portable across
+# engines; the integer (tf, df) sort induces the same ranking for fixed
+# tf). Plan: one explode, two aggregations (per-doc tf, global df), a df
+# join left to AQE (the vocabulary grows with the corpus — broadcast
+# while small, shuffle join at scale), and a per-doc window top-k — no
+# global sort.
+sql_query(
     "text_top_terms",
-    oracle=f"""
+    f"""
     WITH tok AS (
       SELECT doc_id, unnest({_sql_tokens('text')}) AS tok FROM documents
     ), tf AS (
@@ -317,31 +325,6 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rnk <= 3
     """,
 )
-def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 distinctive terms per document: rank by (term frequency
-    desc, corpus document-frequency asc, term) — the TF-IDF ordering
-    with exact integer keys instead of a float idf (log() is not
-    bit-portable across engines; the integer (tf, df) sort induces the
-    same ranking for fixed tf). Plan: one explode, two aggregations
-    (per-doc tf, global df), a df join left to AQE (the vocabulary
-    grows with the corpus — broadcast while small, shuffle join at
-    scale), and a per-doc window top-k — no global sort."""
-    docs = table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
-    tok = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
-    tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    df = tok.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tf").desc(), F.col("df").asc(), F.col("tok")
-    )
-    joined = tf.join(df, "tok")
-    return (
-        joined.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= 3)
-        .select("doc_id", "tok", F.col("tf").cast("long").alias("tf"),
-                F.col("df").cast("long").alias("df"), "rnk")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -626,9 +609,15 @@ def q_text_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 MIX_HEAD_BP, MIX_MID_BP, MIX_TAIL_BP = 10000, 2500, 500
 
 
-@query(
+# Training-data mixture construction: per-source sampling rates
+# (up-weight curated sources, thin the crawl tail) applied as the same
+# order-independent hash gate as `events_stratified_sample` — the
+# mixture is a pure function of (doc_id, source), so a re-run on any
+# cluster reproduces the exact corpus. Returns per-source counts for the
+# mixture audit.
+sql_query(
     "corpus_mixture_sample",
-    oracle=f"""
+    f"""
     SELECT source, count(*) AS n_kept, min(doc_id) AS min_doc
     FROM documents
     WHERE ('0x' || substr(md5('mix_' || CAST(doc_id AS STRING)), 1, 8))::BIGINT % 10000
@@ -638,33 +627,6 @@ MIX_HEAD_BP, MIX_MID_BP, MIX_TAIL_BP = 10000, 2500, 500
     GROUP BY source
     """,
 )
-def q_corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-data mixture construction: per-source sampling rates
-    (up-weight curated sources, thin the crawl tail) applied as the
-    same order-independent hash gate as `events_stratified_sample` —
-    the mixture is a pure function of (doc_id, source), so a re-run on
-    any cluster reproduces the exact corpus. Returns per-source counts
-    for the mixture audit."""
-    docs = table(spark, sf_dir, "documents")
-    src_n = F.substring(F.col("source"), 4, 10).cast("int")
-    bp = (
-        F.when(src_n < 5, MIX_HEAD_BP)
-        .when(src_n < 15, MIX_MID_BP)
-        .otherwise(MIX_TAIL_BP)
-    )
-    h = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mix_"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 10000
-    )
-    return (
-        docs.filter(h < bp)
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_kept"), F.min("doc_id").alias("min_doc"))
-    )
 
 
 @query(
@@ -761,46 +723,26 @@ def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Grouped top-k over corpus counts: the 5 most frequent tokens per
+# language — the per-language frequency table a stopword list or
+# language-specific quality rule is built from (global counts hide which
+# tokens dominate WHICH language).
+sql_query(
     "top_terms_by_lang",
-    oracle=f"""
+    f"""
     WITH tok AS (
       SELECT lang, unnest({_sql_tokens('text')}) AS term FROM documents
     ), cnt AS (
       SELECT lang, term, CAST(count(*) AS BIGINT) AS n
       FROM tok GROUP BY 1, 2
     )
-    SELECT lang, term, n, rnk FROM (
+    SELECT lang, term, n, CAST(rnk AS BIGINT) AS rnk FROM (
       SELECT *, row_number() OVER (PARTITION BY lang
                                    ORDER BY n DESC, term) AS rnk
       FROM cnt
     ) WHERE rnk <= 5
     """,
 )
-def q_top_terms_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped top-k over corpus counts: the 5 most frequent tokens per
-    language — the per-language frequency table a stopword list or
-    language-specific quality rule is built from (global counts hide
-    which tokens dominate WHICH language).
-
-    Plan: explode → (lang, term) hash-agg with map-side partials →
-    per-lang top-k window over the aggregated counts (|distinct terms
-    per lang| rows, bounded state) — never a global sort.
-    """
-    docs = table(spark, sf_dir, "documents")
-    cnt = (
-        docs.select("lang", F.explode(_tokens(F.col("text"))).alias("term"))
-        .groupBy("lang", "term")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("lang").orderBy(F.col("n").desc(), "term")
-    return (
-        cnt.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("lang", "term", "n", "rnk")
-    )
 
 
 # Power-of-two document-length histogram per source (band =

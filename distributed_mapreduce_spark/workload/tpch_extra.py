@@ -153,10 +153,10 @@ sql_query(
     "tpch_q12_priority_buckets",
     """
     SELECT l_returnflag,
-           sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS high_line_count,
-           sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS low_line_count
+           CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+           CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
     FROM lineitem
     JOIN orders ON o_orderkey = l_orderkey
     WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -303,9 +303,13 @@ sql_query(
 )
 
 
-@query(
+# TPC-H Q17 (small-quantity-order revenue): revenue lost if orders below
+# 20% of a part's average order quantity were no longer taken, over one
+# brand's small parts (the harness part table has no p_container, so the
+# Brand#23/MED BOX gate is adapted to Brand#1/p_size<=10).
+sql_query(
     "tpch_q17_small_qty_revenue",
-    oracle="""
+    """
     WITH pp AS (
       SELECT p_partkey FROM part WHERE p_brand = 'Brand#1' AND p_size <= 10
     ), pavg AS (
@@ -324,49 +328,6 @@ sql_query(
     WHERE 5 * l.l_quantity * a.qcnt < a.qsum
     """,
 )
-def q_tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 (small-quantity-order revenue): revenue lost if orders
-    below 20% of a part's average order quantity were no longer taken,
-    over one brand's small parts (the harness part table has no
-    p_container, so the Brand#23/MED BOX gate is adapted to
-    Brand#1/p_size<=10).
-
-    Exactness: the correlated `l_quantity < 0.2 * avg(...)` is
-    rewritten division-free as `5*qty*cnt < sum` — quantities are
-    integral floats, so both sides are exact IEEE integers at any
-    scale, no float-division drift. avg_yearly reported in floor cents
-    (decimal sum -> x100 -> integer // 7) rather than engine-specific
-    decimal division.
-
-    Plan: the correlated scalar subquery decorrelates into a per-part
-    aggregate joined back on l_partkey (one hash-agg + two equi-joins);
-    the brand/size filter reaches the part scan and AQE broadcasts the
-    filtered part side.
-    """
-    li = table(spark, sf_dir, "lineitem")
-    pp = (
-        table(spark, sf_dir, "part")
-        .filter((F.col("p_brand") == "Brand#1") & (F.col("p_size") <= 10))
-        .select("p_partkey")
-    )
-    pavg = li.groupBy("l_partkey").agg(
-        F.sum("l_quantity").alias("qsum"), F.count(F.lit(1)).alias("qcnt")
-    )
-    sel = (
-        li.join(pp, li["l_partkey"] == pp["p_partkey"])
-        .join(pavg.withColumnRenamed("l_partkey", "a_partkey"),
-              F.col("a_partkey") == li["l_partkey"])
-        .filter(5 * F.col("l_quantity") * F.col("qcnt") < F.col("qsum"))
-    )
-    dsum = F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-    return sel.agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        dsum.cast("decimal(30,2)").cast("string").alias("sum_price"),
-        F.expr(
-            "cast(sum(cast(l_extendedprice as decimal(18,2))) * 100 as bigint)"
-            " div 7"
-        ).alias("avg_yearly_cents"),
-    )
 
 
 @query(

@@ -426,9 +426,19 @@ BENFORD_PPM = {
 }
 
 
-@query(
+# Benford's-law first-digit audit over order totals — the data-quality
+# screen fraud/anomaly reviews run on financial columns (Benford 1938;
+# Nigrini's forensic-accounting usage): compare the observed
+# first-significant-digit distribution against log10(1+1/d), digit by
+# digit, in exact ppm. The nine expected shares are inlined as integer
+# literals (they sum to exactly 10⁶), so no in-engine logarithm is taken
+# and both engines agree bit-for-bit. Deviations flag synthetic or
+# truncated data — note TPC-H totalprice is a bounded uniform-ish
+# synthetic, so large dev_ppm here is the CORRECT verdict, which is
+# exactly what makes it a useful fixture for the audit.
+sql_query(
     "dq_benford_audit",
-    oracle=f"""
+    f"""
     WITH exp_p(digit, exp_ppm) AS (VALUES {", ".join(
         f"({d}, {p})" for d, p in sorted(BENFORD_PPM.items())
     )}),
@@ -451,54 +461,6 @@ BENFORD_PPM = {
     ORDER BY e.digit
     """,
 )
-def q_dq_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-digit audit over order totals — the
-    data-quality screen fraud/anomaly reviews run on financial
-    columns (Benford 1938; Nigrini's forensic-accounting usage):
-    compare the observed first-significant-digit distribution against
-    log10(1+1/d), digit by digit, in exact ppm. The nine expected
-    shares are inlined as integer literals (they sum to exactly 10⁶),
-    so no in-engine logarithm is taken and both engines agree
-    bit-for-bit. Deviations flag synthetic or truncated data — note
-    TPC-H totalprice is a bounded uniform-ish synthetic, so large
-    dev_ppm here is the CORRECT verdict, which is exactly what makes
-    it a useful fixture for the audit.
-
-    Plan: one scan → 9-group hash-agg, dense digit grid from the
-    9-row literal relation, 1-row total broadcast. Nothing after the
-    scan exceeds nine rows."""
-    orders = table(spark, sf_dir, "orders")
-    obs = (
-        orders.select(
-            F.expr(
-                "CAST(substring(CAST(CAST(o_totalprice AS BIGINT) AS STRING),"
-                " 1, 1) AS INT)"
-            ).alias("digit")
-        )
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-    )
-    exp_df = spark.createDataFrame(
-        sorted(BENFORD_PPM.items()), "digit INT, exp_ppm BIGINT"
-    )
-    tot = obs.agg(F.sum("n_obs").cast("long").alias("n"))
-    return (
-        F.broadcast(exp_df)
-        .join(obs, "digit", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "digit",
-            F.coalesce(F.col("n_obs"), F.lit(0)).cast("long").alias("n_obs"),
-            F.expr("(1000000 * coalesce(n_obs, 0)) DIV n")
-            .cast("long")
-            .alias("obs_ppm"),
-            F.col("exp_ppm").cast("long").alias("exp_ppm"),
-            F.expr("abs((1000000 * coalesce(n_obs, 0)) DIV n - exp_ppm)")
-            .cast("long")
-            .alias("dev_ppm"),
-        )
-        .orderBy("digit")
-    )
 
 
 # ---------------------------------------------------------------------------

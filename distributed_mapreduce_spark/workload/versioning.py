@@ -205,9 +205,17 @@ def q_cdc_apply_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Merkle leaf level of the replication audit: content checksums per
+# deterministic key bucket (MERKLE_BUCKETS leaves), so two replicas that
+# disagree compare MERKLE_BUCKETS digests and re-scan ONLY the divergent
+# buckets — `table_checksum`'s single digest says *whether* replicas
+# diverged; this says *where*. Bucketing uses the portable md5-u32
+# (engine-independent, unlike Murmur3 `F.hash`); the digest is a
+# commutative sum of row hashes, so the whole thing is one
+# map-side-combinable aggregate at any scale.
+sql_query(
     "partition_merkle_checksums",
-    oracle=f"""
+    f"""
     SELECT CAST(('0x' || substr(md5('mk_' || CAST(l_orderkey AS STRING)), 1, 8))::BIGINT
                 % {MERKLE_BUCKETS} AS INTEGER) AS bucket,
            CAST(count(*) AS BIGINT) AS n_rows,
@@ -219,49 +227,22 @@ def q_cdc_apply_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
 )
-def q_partition_merkle_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merkle leaf level of the replication audit: content checksums per
-    deterministic key bucket ({MERKLE_BUCKETS} leaves), so two replicas
-    that disagree compare {MERKLE_BUCKETS} digests and re-scan ONLY the
-    divergent buckets — `table_checksum`'s single digest says *whether*
-    replicas diverged; this says *where*. Bucketing uses the portable
-    md5-u32 (engine-independent, unlike Murmur3 `F.hash`); the digest
-    is a commutative sum of row hashes, so the whole thing is one
-    map-side-combinable aggregate at any scale."""
-    li = table(spark, sf_dir, "lineitem")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mk_"), F.col("l_orderkey").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % MERKLE_BUCKETS
-    ).cast("int")
-    enc = F.concat_ws(
-        "|",
-        F.col("l_orderkey").cast("string"),
-        F.col("l_linenumber").cast("string"),
-        F.col("l_partkey").cast("string"),
-        F.col("l_returnflag"),
-    )
-    h = F.conv(F.substring(F.md5(enc), 1, 8), 16, 10).cast("long")
-    return (
-        li.select(bucket.alias("bucket"), h.alias("h"))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("h").cast("long").alias("checksum"),
-        )
-    )
 
 
 #: Target rows per compacted output file.
 COMPACT_TARGET_ROWS = 12000
 
 
-@query(
+# Small-file compaction planning: treat the MERKLE_BUCKETS Merkle
+# buckets as the file inventory (bucket id = file, n_rows = file size)
+# and deal them, in id order, into output files of ~COMPACT_TARGET_ROWS
+# rows by running-sum grouping — the maintenance pass that turns a
+# small-file-riddled table back into scan-efficient files. Grouping key
+# is the bucket's STARTING offset ÷ target (the `text_packing`
+# convention), so the plan is a pure function of the inventory.
+sql_query(
     "compaction_plan",
-    oracle=f"""
+    f"""
     WITH buckets AS (
       SELECT CAST(('0x' || substr(md5('mk_' || CAST(l_orderkey AS STRING)), 1, 8))::BIGINT
                   % {MERKLE_BUCKETS} AS INTEGER) AS bucket,
@@ -280,47 +261,6 @@ COMPACT_TARGET_ROWS = 12000
     FROM c
     """,
 )
-def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction planning: treat the {MERKLE_BUCKETS}
-    Merkle buckets as the file inventory (bucket id = file, n_rows =
-    file size) and deal them, in id order, into output files of
-    ~{COMPACT_TARGET_ROWS} rows by running-sum grouping — the
-    maintenance pass that turns a small-file-riddled table back into
-    scan-efficient files. Grouping key is the bucket's STARTING offset
-    ÷ target (the `text_packing` convention), so the plan is a pure
-    function of the inventory.
-
-    Plan: one hash aggregate to the inventory grain, then the
-    distributed `global_cumsum` prefix sum (range shuffle + broadcast
-    offsets) — at a 100 TB table the inventory is millions of files,
-    and this plan never single-tasks it; the oracle's window IS the
-    naive single-partition form, which the scalable plan must
-    reproduce exactly."""
-    from distributed_mapreduce_spark.operators.partitioning import global_cumsum
-
-    li = table(spark, sf_dir, "lineitem")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mk_"), F.col("l_orderkey").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % MERKLE_BUCKETS
-    ).cast("int")
-    inv = (
-        li.select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
-    )
-    c = global_cumsum(inv, [F.col("bucket")], "n_rows", cumsum_col="cum_rows")
-    return c.select(
-        "bucket",
-        "n_rows",
-        "cum_rows",
-        F.expr(f"(cum_rows - n_rows) DIV {COMPACT_TARGET_ROWS}").alias("file_group"),
-    )
 
 
 @query(

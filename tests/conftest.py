@@ -5,11 +5,12 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 # Python workers must be able to import module-level test helpers
 # (cloudpickle serializes them by reference).
 os.environ["PYTHONPATH"] = (
-    "/root/repo:/root/repo/tests:" + os.environ.get("PYTHONPATH", "")
+    f"{REPO}:{REPO}/tests:" + os.environ.get("PYTHONPATH", "")
 )
 
 from distributed_mapreduce_spark.session import get_spark  # noqa: E402

@@ -6,8 +6,10 @@ tooling, not prose."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO / "tools"))
 
 
 def test_subset_run_reports_partial_not_all_pass(spark, tmp_path):
@@ -91,7 +93,7 @@ def test_sf4_set_is_registered_and_matches_certified_logs():
 
     assert SF4_SET <= set(QUERIES), sorted(SF4_SET - set(QUERIES))
     logged: set[str] = set()
-    for log in glob.glob("/root/repo/CORRECTNESS_SF4_*.log"):
+    for log in glob.glob(str(REPO / "CORRECTNESS_SF4_*.log")):
         logged.update(
             re.findall(r"^(?:PASS|FAIL|SKIP) ([a-z0-9_]+)", open(log).read(), re.M)
         )

@@ -7,6 +7,8 @@
   ``unix_micros(ts) * 10^11 + event_id``. That order is exact only while
   every event_id is below 10^11 and no ts is before the epoch, so the
   test data and the scaling harness's shifted ids must stay inside it.
+- Tools and tests find the checkout from their own ``__file__``: a run
+  from another copy must read and write that copy, not this one.
 """
 
 from __future__ import annotations
@@ -47,6 +49,19 @@ def test_library_reads_no_env_switch():
                 m = re.search(r"""(?:environ|getenv)\s*(?:\.get)?\s*[\[(]\s*["'](\w+)["']""", line)
                 reads.add((rel, m.group(1) if m else f"<unparsed at line {lineno}>"))
     assert reads <= ALLOWED_ENV_READS, sorted(reads - ALLOWED_ENV_READS)
+
+
+def test_tools_and_tests_derive_the_checkout():
+    hits = []
+    for sub in ("tools", "tests"):
+        for path in glob.glob(os.path.join(REPO, sub, "**", "*.py"), recursive=True):
+            with open(path) as f:
+                hits += [
+                    f"{os.path.relpath(path, REPO)}:{n}"
+                    for n, line in enumerate(f, 1)
+                    if REPO in line
+                ]
+    assert hits == []
 
 
 def test_latest_event_packing_bounds_hold_on_test_data(sf_dir):

@@ -14,6 +14,8 @@ from distributed_mapreduce_spark.workload.dedup import (
     simhash_pairs,
     simhash_table,
 )
+from distributed_mapreduce_spark.workload.registry import table
+from test_schema_cache import _jobs_launched
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -41,6 +43,16 @@ def test_shingles_width_and_dedup(spark):
     assert got[1] == ["a b c", "b c d"]
     assert got[2] == []  # fewer tokens than shingle width
     assert got[3] == ["x x x"]  # distinct shingles
+
+
+def test_shingle_table_over_table_launches_no_job(spark, sf_dir):
+    """`table()` owns the documents spread; building the signature
+    relation over it must not execute that exchange (``.rdd`` on the
+    spread frame would, under AQE)."""
+    docs = table(spark, sf_dir, "documents")
+    built = []
+    assert _jobs_launched(spark, lambda: built.append(shingle_table(docs))) == 0
+    built[0].unpersist()
 
 
 def test_minhash_finds_near_and_exact_dups_not_far(spark, docs):

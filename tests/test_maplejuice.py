@@ -3,6 +3,8 @@ the Engine facade's catalog verbs."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -150,7 +152,7 @@ def test_cli_put_store_select_roundtrip(tmp_path):
 
     wh = str(tmp_path / "wh")
     base = [sys.executable, "-m", "distributed_mapreduce_spark", "--warehouse", wh, "--cpus", "2"]
-    env = {"PYTHONPATH": "/root/repo", "PATH": "/usr/bin:/bin", "HOME": "/root",
+    env = {"PYTHONPATH": str(Path(__file__).resolve().parents[1]), "PATH": "/usr/bin:/bin", "HOME": str(Path.home()),
            "JAVA_HOME": __import__("os").environ.get("JAVA_HOME", "")}
 
     r = subprocess.run(base + ["put", str(src), "traffic"], capture_output=True, text=True, env=env, timeout=240)

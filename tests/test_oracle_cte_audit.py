@@ -17,8 +17,10 @@ instead of spilling at the next deep-scale differential.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO / "tools"))
 
 from oracle_cte_audit import chained_unmaterialized  # noqa: E402
 

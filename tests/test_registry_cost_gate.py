@@ -20,9 +20,10 @@ from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO / "tools"))
 
-BASELINE_PATH = "/root/repo/REGISTRY_COST_BASELINE.json"
+BASELINE_PATH = REPO / "REGISTRY_COST_BASELINE.json"
 
 
 def test_gate_passes_within_factor():

@@ -13,6 +13,7 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
+from distributed_mapreduce_spark.workload import QUERIES
 from distributed_mapreduce_spark.workload.events import (
     INTERP_HOUR_US,
     q_events_gap_fill_interpolate,
@@ -253,10 +254,7 @@ def test_drift_tv_matches_bruteforce(spark, sf_dir):
 
 
 def test_attribution_credit_conserved_per_purchase(spark, sf_dir):
-    from distributed_mapreduce_spark.workload.journey import (
-        ATTR_LOOKBACK_H,
-        q_attribution_position_credit,
-    )
+    from distributed_mapreduce_spark.workload.journey import ATTR_LOOKBACK_H
 
     ev = table(spark, sf_dir, "events")
     rows = ev.select(
@@ -294,7 +292,7 @@ def test_attribution_credit_conserved_per_purchase(spark, sf_dir):
             per_hour[hour] += credit
     got = {
         r["click_hour"]: r
-        for r in q_attribution_position_credit(spark, sf_dir).collect()
+        for r in QUERIES["attribution_position_credit"](spark, sf_dir).collect()
     }
     assert set(got) == set(per_hour)
     for h, r in got.items():
@@ -469,7 +467,6 @@ def test_temporal_reachability_matches_bruteforce(spark, sf_dir):
         EDGE_GATE_MOD,
         TEMPORAL_HOPS,
         TEMPORAL_SEED_MOD,
-        q_graph_temporal_reachability,
     )
 
     li = (
@@ -512,7 +509,7 @@ def test_temporal_reachability_matches_bruteforce(spark, sf_dir):
         arr = new
     got = {
         r["node"]: r["arr_us"]
-        for r in q_graph_temporal_reachability(spark, sf_dir).collect()
+        for r in QUERIES["graph_temporal_reachability"](spark, sf_dir).collect()
     }
     assert got == arr
     # time-respecting invariant: no non-seed arrival precedes a seed hop

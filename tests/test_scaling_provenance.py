@@ -6,8 +6,10 @@ round-8 --merge regression that silently dropped the notes object)."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO / "tools"))
 
 
 def test_merge_carried_preserves_origin_and_notes():

@@ -15,18 +15,20 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
 pytestmark = pytest.mark.sf01cert
 
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO / "tools"))
 
 
 def test_full_registry_sf01_certification():
     from check_correctness import run
 
     round_no = os.environ.get("SPARK_GRAFT_ROUND", "8")
-    log = f"/root/repo/CORRECTNESS_SF01_r{round_no}.log"
+    log = str(REPO / f"CORRECTNESS_SF01_r{round_no}.log")
     failures = run("/root/testdata/sf0.1", log_path=log)
     assert failures == 0, f"sf0.1 certification failed — see {log}"

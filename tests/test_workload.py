@@ -6,10 +6,14 @@ at sf0.01)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
 import pytest
 
 from distributed_mapreduce_spark.workload import ORACLES, QUERIES
+
+REPO = Path(__file__).resolve().parents[1]
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -149,7 +153,7 @@ def test_driver_contract_location_independent(tmp_path):
     import sys
 
     script = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {str(REPO)!r})\n"
         "from pyspark.sql import SparkSession\n"
         "spark = (SparkSession.builder.master('local[4]')\n"
         "         .appName('loc_indep').getOrCreate())\n"

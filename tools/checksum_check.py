@@ -26,8 +26,11 @@ Usage: python tools/checksum_check.py SF_DIR QUERY [QUERY ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+#: The checkout this script belongs to (and imports from).
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 

@@ -8,7 +8,7 @@ an external single-node anchor, the reference's own Hadoop-differential
 methodology (MP4-RUN-Command.txt:17-33) applied to performance.
 
 Usage: python tools/duckdb_anchor.py [sf_dir] [out_json]
-  (defaults: /root/testdata/sf0.1  /root/repo/DUCKDB_ANCHOR.json)
+  (defaults: the sf0.1 test data, and DUCKDB_ANCHOR.json in this checkout)
 
 Per headline query: 1 untimed warm-up + min of TRIALS timed runs of the
 oracle SQL, fully materialized via fetchall() (the closest analog of the
@@ -30,10 +30,13 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+#: The checkout this script belongs to: imported from, and written to.
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -46,7 +49,7 @@ TRIALS = int(os.environ.get("SPARK_GRAFT_ANCHOR_TRIALS", "3"))
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_json = (
-        sys.argv[2] if len(sys.argv) > 2 else "/root/repo/DUCKDB_ANCHOR.json"
+        sys.argv[2] if len(sys.argv) > 2 else str(REPO / "DUCKDB_ANCHOR.json")
     )
 
     from bench import HEADLINE  # single source of truth for the set

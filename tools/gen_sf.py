@@ -33,8 +33,10 @@ from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+#: The checkout this script belongs to (and imports from).
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "tools"))
 
 from scaling_bench import (  # noqa: E402
     BUILDER_VERSION,

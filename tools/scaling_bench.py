@@ -64,7 +64,9 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+#: The checkout this script belongs to: imported from, and written to.
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 #: divisible by every modulus <= 16 (LCM(1..16) = 720720) and by 97.
 ID_OFFSET = 720720 * 97
@@ -489,7 +491,7 @@ def main() -> int:
         else:
             args.append(a)
     src_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.1"
-    out_json = args[1] if len(args) > 1 else "/root/repo/SCALING_r09.json"
+    out_json = args[1] if len(args) > 1 else str(REPO / "SCALING_r09.json")
     run_id = f"{Path(out_json).stem}-{time.strftime('%Y%m%dT%H%M%SZ', time.gmtime())}"
     families = [q for q in FAMILIES if only is None or q in only]
     x100_families = [q for q in X100_FAMILIES if only is None or q in only]

@@ -13,8 +13,11 @@ import glob
 import os
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+#: The checkout this script belongs to (and imports from).
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 def _log_order_key(path: str) -> tuple[int, str]:
@@ -29,7 +32,7 @@ def _log_order_key(path: str) -> tuple[int, str]:
     return (int(m.group(1)) if m else -1, base)
 
 
-def coverage(repo_dir: str = "/root/repo") -> tuple[set[str], set[str], set[str]]:
+def coverage(repo_dir: str = str(REPO)) -> tuple[set[str], set[str], set[str]]:
     """Returns (passed, skipped, uncovered) query-name sets across all
     committed sf1.0 logs vs the live registry.
 
@@ -64,7 +67,7 @@ def coverage(repo_dir: str = "/root/repo") -> tuple[set[str], set[str], set[str]
 
 
 def main() -> int:
-    repo = sys.argv[1] if len(sys.argv) > 1 else "/root/repo"
+    repo = sys.argv[1] if len(sys.argv) > 1 else str(REPO)
     passed, skipped, uncovered = coverage(repo)
     from distributed_mapreduce_spark.workload import QUERIES
 

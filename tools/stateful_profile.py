@@ -25,8 +25,11 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+#: The checkout this script belongs to: imported from, and written to.
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -97,7 +100,7 @@ def run_one(spark: SparkSession, name: str, stream: DataFrame) -> dict:
 
 def main() -> int:
     out_json = (
-        sys.argv[1] if len(sys.argv) > 1 else "/root/repo/STATEFUL_PROFILE_r11.json"
+        sys.argv[1] if len(sys.argv) > 1 else str(REPO / "STATEFUL_PROFILE_r11.json")
     )
     from distributed_mapreduce_spark.session import get_spark
     from distributed_mapreduce_spark.streaming.events_stream import (

@@ -19,7 +19,7 @@ batch count — straight from StreamingQueryProgress, retention raised so
 nothing is evicted (same discipline as the watermark drop audit).
 
 Usage: python tools/stream_bench.py [out_json]
-  (default /root/repo/STREAM_BENCH_r10.json)
+  (default STREAM_BENCH_r10.json in this checkout)
   SPARK_GRAFT_STREAM_SECONDS (default 45) per run;
   SPARK_GRAFT_STREAM_RATES   (default "50000,400000") rows/sec.
 """
@@ -30,8 +30,11 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+#: The checkout this script belongs to: imported from, and written to.
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -104,7 +107,7 @@ def run_one(spark: SparkSession, name: str, df: DataFrame, mode: str) -> dict:
 
 def main() -> int:
     out_json = (
-        sys.argv[1] if len(sys.argv) > 1 else "/root/repo/STREAM_BENCH_r10.json"
+        sys.argv[1] if len(sys.argv) > 1 else str(REPO / "STREAM_BENCH_r10.json")
     )
     from distributed_mapreduce_spark.session import get_spark
     from distributed_mapreduce_spark.streaming.events_stream import (
