@@ -325,16 +325,9 @@ def q_approx_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# KLL/GK-style percentile sketch (`approx_percentile`) certified against
-# the exact interpolated percentile, same scheme as
-# `approx_distinct_counts`: the sketch is the scale path (bounded state,
-# mergeable; exact percentile needs a global sort), the exact value
-# rides along only to prove `|approx - exact| <= 1% * exact`. Spark's
-# exact `percentile` ≡ DuckDB `quantile_cont` bit-for-bit (same linear
-# interpolation), so `exact_val` is hash-stable.
-sql_query(
+@query(
     "approx_percentile_prices",
-    """
+    oracle="""
     SELECT CAST(0.5 AS DOUBLE) AS p, quantile_cont(o_totalprice, 0.5) AS exact_val,
            TRUE AS within_1pct
     FROM orders
@@ -344,6 +337,26 @@ sql_query(
     SELECT CAST(0.99 AS DOUBLE), quantile_cont(o_totalprice, 0.99), TRUE FROM orders
     """,
 )
+def q_approx_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KLL/GK-style percentile sketch (`approx_percentile`) certified
+    against the exact interpolated percentile, same scheme as
+    `approx_distinct_counts`: the sketch is the scale path (bounded
+    state, mergeable; exact percentile needs a global sort), the exact
+    value rides along only to prove `|approx - exact| <= 1% * exact`.
+    Spark's exact `percentile` ≡ DuckDB `quantile_cont` bit-for-bit
+    (same linear interpolation), so `exact_val` is hash-stable."""
+    orders = table(spark, sf_dir, "orders")
+
+    def one(p: float) -> DataFrame:
+        exact = F.expr(f"percentile(o_totalprice, CAST({p} AS DOUBLE))")
+        approx = F.expr(f"approx_percentile(o_totalprice, CAST({p} AS DOUBLE), 10000)")
+        return orders.agg(
+            F.lit(p).alias("p"),
+            exact.alias("exact_val"),
+            (F.abs(approx - exact) <= F.abs(exact) * 0.01).alias("within_1pct"),
+        )
+
+    return one(0.5).unionAll(one(0.9)).unionAll(one(0.99))
 
 
 # ---------------------------------------------------------------------------

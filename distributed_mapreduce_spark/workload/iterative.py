@@ -14,10 +14,7 @@ All arithmetic is integer (micro-unit masses, floor division) so the
 iteration is bit-exact across engines — float PageRank is
 summation-order-dependent and cannot be oracle-checked exactly. The
 DuckDB oracle is the same recurrence unrolled into one CTE per
-iteration. `pagerank_converge` and `graph_ppr_seed` are SQL-first:
-Spark runs that unrolled text as one plan, which grows with the round
-count; the scale notes below are about the DataFrame builders that
-stay.
+iteration.
 
 Scale notes (100 TB):
 - The adjacency list is hash-partitioned on the source node and
@@ -38,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.registry import query, sql_query, table
+from distributed_mapreduce_spark.workload.registry import query, table
 
 #: Initial mass per node, in micro-units.
 PR_M0 = 1_000_000
@@ -117,16 +114,56 @@ def _bipartite_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Damped integer PageRank on the supplier↔part bipartite graph (distinct
-# lineitem edges, both directions; supplier node id 2s, part node id
-# 2p+1), run for PR_ITERS power iterations. Returns one row per
-# iteration: node count, total mass, and the L1 delta vs the previous
-# mass vector — the convergence readout (deltas contract by roughly the
-# damping factor per round).
-sql_query(
-    "pagerank_converge",
-    _pagerank_oracle(PR_ITERS),
-)
+@query("pagerank_converge", oracle=_pagerank_oracle(PR_ITERS))
+def q_pagerank_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Damped integer PageRank on the supplier↔part bipartite graph
+    (distinct lineitem edges, both directions; supplier node id 2s,
+    part node id 2p+1), run for {PR_ITERS} power iterations. Returns
+    one row per iteration: node count, total mass, and the L1 delta
+    vs the previous mass vector — the convergence readout (deltas
+    contract by roughly the damping factor per round).
+
+    mass'(v) = BASE + (85 · Σ_{u→v} mass(u) DIV deg(u)) DIV 100 —
+    all integer floor arithmetic, matching the unrolled-CTE oracle
+    bit-for-bit."""
+    adj = _bipartite_adj(spark, sf_dir)
+    deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    mass = deg.select("u", F.lit(PR_M0).cast("long").alias("m")).localCheckpoint()
+
+    readouts: list[DataFrame] = []
+    for k in range(1, PR_ITERS + 1):
+        contrib = (
+            adj.join(mass, "u")
+            .join(deg, "u")
+            .select("v", F.expr("m DIV d").cast("long").alias("share"))
+        )
+        mass_next = (
+            contrib.groupBy("v")
+            .agg(F.sum("share").alias("insum"))
+            .select(
+                F.col("v").alias("u"),
+                (
+                    F.lit(PR_BASE)
+                    + F.expr(f"({PR_DAMP_NUM} * insum) DIV {PR_DAMP_DEN}")
+                ).cast("long").alias("m"),
+            )
+            .localCheckpoint()
+        )
+        prev = mass.withColumnRenamed("m", "pm")
+        readouts.append(
+            mass_next.join(prev, "u").agg(
+                F.lit(k).cast("int").alias("iter"),
+                F.count(F.lit(1)).cast("long").alias("n_nodes"),
+                F.sum("m").cast("long").alias("total_mass"),
+                F.sum(F.abs(F.col("m") - F.col("pm"))).cast("long").alias("l1_delta"),
+            )
+        )
+        mass = mass_next
+
+    out = readouts[0]
+    for r in readouts[1:]:
+        out = out.unionAll(r)
+    return out
 
 
 #: Personalized PageRank: restart mass concentrates on one seed node
@@ -173,17 +210,57 @@ def _ppr_oracle(rounds: int) -> str:
     )
 
 
-# Personalized PageRank from a single seed (supplier 1) on the
-# supplier↔part bipartite graph, PPR_ROUNDS power rounds of m'(v) = (85
-# · Σ_{u→v} m(u) DIV deg(u)) DIV 100, with the 15% restart mass
-# re-injected at the SEED each round instead of spread uniformly — the
-# seed-relative relevance score used for crawl frontier prioritization
-# and "quality flows from trusted seeds" corpus curation (the TrustRank
-# shape). Output: the top-PPR_TOP_K nodes by final mass.
-sql_query(
-    "graph_ppr_seed",
-    _ppr_oracle(PPR_ROUNDS),
-)
+@query("graph_ppr_seed", oracle=_ppr_oracle(PPR_ROUNDS))
+def q_graph_ppr_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Personalized PageRank from a single seed (supplier 1) on the
+    supplier↔part bipartite graph, {PPR_ROUNDS} power rounds of
+    m'(v) = (85 · Σ_{{u→v}} m(u) DIV deg(u)) DIV 100, with the
+    15% restart mass re-injected at the SEED each round instead of
+    spread uniformly — the seed-relative relevance score used for
+    crawl frontier prioritization and "quality flows from trusted
+    seeds" corpus curation (the TrustRank shape). Output: the
+    top-{PPR_TOP_K} nodes by final mass.
+
+    Plan: mass lives ONLY on reached nodes — round k touches the
+    k-hop ball of the seed, not the whole graph (the frontier-sparse
+    property that makes seed-PPR cheap at 100 TB); adjacency is
+    hash-partitioned once and reused every round; per-round state is
+    `localCheckpoint`ed. Integer µµ-unit masses, floor divisions in a
+    fixed order — bit-exact vs the unrolled-CTE oracle. Final top-k is
+    TakeOrdered (per-partition heads + driver merge), not a global
+    sort."""
+    adj = _bipartite_adj(spark, sf_dir)
+    deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+    spark_seed = spark.range(1).select(
+        F.lit(PPR_SEED_NODE).cast("long").alias("u"),
+        F.lit(PPR_M0).cast("long").alias("m"),
+    )
+    mass = spark_seed.localCheckpoint()
+    restart = spark.range(1).select(
+        F.lit(PPR_SEED_NODE).cast("long").alias("u"),
+        F.lit(PPR_RESTART).cast("long").alias("m"),
+    )
+    for _ in range(PPR_ROUNDS):
+        spread = (
+            adj.join(mass, "u")
+            .join(deg, "u")
+            .select("v", F.expr("m DIV d").cast("long").alias("share"))
+            .groupBy("v")
+            .agg(F.sum("share").alias("insum"))
+            .select(
+                F.col("v").alias("u"),
+                F.expr(f"({PR_DAMP_NUM} * insum) DIV {PR_DAMP_DEN}")
+                .cast("long")
+                .alias("m"),
+            )
+        )
+        mass = (
+            spread.unionAll(restart)
+            .groupBy("u")
+            .agg(F.sum("m").cast("long").alias("m"))
+            .localCheckpoint()
+        )
+    return mass.orderBy(F.desc("m"), "u").limit(PPR_TOP_K)
 
 
 # ---------------------------------------------------------------------------

@@ -1461,14 +1461,9 @@ def q_ks_statistic_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRIM_BP = 500
 
 
-# Per-returnflag trimmed mean (drop the lowest and highest TRIM_BP bp of
-# prices) and winsorized mean (clamp those tails to the cut values) —
-# the robust location pair, in exact hundredths of a cent: tail width k
-# = floor(n * TRIM_BP/10000) per side, and the winsorized sum re-adds k
-# copies of each boundary value instead of the dropped tails.
-sql_query(
+@query(
     "trimmed_mean_by_flag",
-    f"""
+    oracle=f"""
     WITH pts AS (
       SELECT l_returnflag AS flag,
              CAST(floor(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS BIGINT) AS v
@@ -1503,3 +1498,83 @@ sql_query(
     FROM lim GROUP BY flag
     """,
 )
+def q_trimmed_mean_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-returnflag trimmed mean (drop the lowest and highest
+    {TRIM_BP} bp of prices) and winsorized mean (clamp those tails to
+    the cut values) — the robust location pair, in exact hundredths of
+    a cent: tail width k = floor(n * {TRIM_BP}/10000) per side, and
+    the winsorized sum re-adds k copies of each boundary value instead
+    of the dropped tails.
+
+    Plan: per-group ranks ride the range-partitioned two-pass
+    `global_rank` primitive ordered by (flag, v) — per-flag rank =
+    global rank minus the flag's exclusive offset from the broadcast
+    3-row per-flag count relation — so NO task ever holds a whole
+    flag group's window state (the 3-value key would pin ~n/3 rows on
+    one task at the 100 TB design point); then a single grouped
+    aggregate computes both statistics — the boundary values are
+    picked out of the same pass with rank-equality indicators, so no
+    self-join and no second scan. Ties between equal prices get an
+    arbitrary rank order, which cannot change the result: rank-range
+    sums and boundary picks over equal values are permutation
+    invariant.
+
+    Sibling: `winsorized_price_stats` clips to INTERPOLATED [p05,p95]
+    percentile bounds (the metrics-pipeline form); this one trims and
+    winsorizes by exact RANK counts (the estimator-theory form, where
+    exactly k order statistics leave each tail) and adds the trimmed
+    mean the clip variant cannot produce.
+
+    Reference parity: robust-statistics extension of the reference's
+    aggregation surface (SURVEY.md section 2.4).
+    """
+    from distributed_mapreduce_spark.operators.partitioning import global_rank
+
+    li = table(spark, sf_dir, "lineitem")
+    pts = li.select(
+        F.col("l_returnflag").alias("flag"),
+        F.floor(F.col("l_extendedprice").cast("decimal(18,2)") * 100)
+        .cast("long")
+        .alias("v"),
+    )
+    # Per-flag exclusive rank offsets from the tiny (3-row) per-flag
+    # count relation: off(flag) = sum of counts of lexically-smaller
+    # flags. Broadcast nested-loop over <=3 rows — constant build side.
+    fc = pts.groupBy("flag").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    lower = F.broadcast(
+        fc.select(F.col("flag").alias("_lf"), F.col("n").alias("_ln"))
+    )
+    offs = (
+        fc.join(lower, F.col("_lf") < F.col("flag"), "left")
+        .groupBy("flag", "n")
+        .agg(F.coalesce(F.sum("_ln"), F.lit(0)).cast("long").alias("_off"))
+    )
+    gr = global_rank(pts, [F.col("flag"), F.col("v")], rank_col="_grn")
+    rk = (
+        gr.join(F.broadcast(offs), "flag")
+        .select(
+            "flag",
+            "v",
+            (F.col("_grn") - F.col("_off")).alias("rn"),
+            "n",
+        )
+        .withColumn("k", F.expr(f"(n * {TRIM_BP}) DIV 10000"))
+    )
+    mid = F.when((F.col("rn") > F.col("k")) & (F.col("rn") <= F.col("n") - F.col("k")), F.col("v")).otherwise(F.lit(0))
+    lo_b = F.min(F.when(F.col("rn") == F.col("k") + 1, F.col("v")))
+    hi_b = F.min(F.when(F.col("rn") == F.col("n") - F.col("k"), F.col("v")))
+    return rk.groupBy("flag").agg(
+        F.min("n").cast("long").alias("n"),
+        F.min("k").cast("long").alias("k_trimmed_each_side"),
+        F.expr(
+            f"CAST(sum(CASE WHEN rn > k AND rn <= n - k THEN v ELSE 0 END) * 100"
+            f" DIV (min(n) - 2 * min(k)) AS BIGINT)"
+        ).alias("trimmed_mean_c2"),
+        (F.sum(mid) + F.min("k") * (lo_b + hi_b)).cast("long").alias("winsor_sum"),
+        F.expr(
+            "CAST((sum(CASE WHEN rn > k AND rn <= n - k THEN v ELSE 0 END)"
+            " + min(k) * (min(CASE WHEN rn = k + 1 THEN v END)"
+            "             + min(CASE WHEN rn = n - k THEN v END))) * 100"
+            " DIV min(n) AS BIGINT)"
+        ).alias("winsor_mean_c2"),
+    )

@@ -19,6 +19,9 @@ from distributed_mapreduce_spark.workload.clustering import (
     q_ann_pq_adc,
 )
 from distributed_mapreduce_spark.workload.corpus import WPRIO_K
+from distributed_mapreduce_spark.workload.journey import (
+    q_sessions_peak_concurrency,
+)
 from distributed_mapreduce_spark.workload.registry import table
 
 
@@ -46,7 +49,7 @@ def test_equidepth_buckets_balanced(spark, sf_dir):
 
 
 def test_peak_concurrency_matches_bruteforce(spark, sf_dir):
-    got = QUERIES["sessions_peak_concurrency"](spark, sf_dir).first()
+    got = q_sessions_peak_concurrency(spark, sf_dir).first()
     # Brute force in Python over the tiny fixture: sessionize, then
     # scan the merged endpoint list.
     ev = sorted(

@@ -39,6 +39,7 @@ BUILDER_KEPT = {
     "skew_salted_join": "engine surface: salted join with a replicated dim; the oracle is the plain join",
     "hll_merge_audit": "engine surface: merges per-shard HLL sketches; the oracle returns only the exact count",
     "approx_distinct_counts": "engine surface: approx_count_distinct certified against the exact count; the oracle pins TRUE",
+    "approx_percentile_prices": "engine surface: approx_percentile certified against the exact percentile; the oracle pins TRUE",
     "partition_range_assign": "engine surface: the graded row for operators.range_bucket (SQL ties: sf0.1 0.28 vs 0.28 s)",
     "pareto_frontier_parts": "scale: the SQL skyline is one unpartitioned window over every distinct point; the builder prunes per hash group first (SQL faster at sf0.1: 0.31 vs 0.43 s)",
     "graph_triangles_degree_ordered": "engine surface: the degree-ordered O(m^1.5) wedge plan; its oracle is graph_triangle_counts' id-ordered text",
@@ -65,6 +66,8 @@ BUILDER_KEPT = {
     "equidepth_histogram": "scale: the SQL ranks every row in one unpartitioned window; the builder uses operators.global_rank (SQL faster at sf0.1: 2.68 vs 1.59 s)",
     "quantile_grid_sketch_audit": "scale: the SQL ranks every row in one unpartitioned window; the builder uses operators.global_rank (SQL faster at sf0.1: 2.78 vs 1.89 s)",
     "quantile_normalize_sources": "scale: the SQL ranks every row in one unpartitioned window; the builder uses operators.global_rank (SQL faster at sf0.1: 1.09 vs 0.37 s)",
+    "trimmed_mean_by_flag": "scale: the SQL ranks lineitem in one window per l_returnflag, about n/3 rows of window state on each of three tasks; the builder uses operators.global_rank (SQL faster at sf0.1: 2.81 vs 1.42 s)",
+    "sessions_peak_concurrency": "scale: the SQL running sum is one unpartitioned window over every session endpoint; the builder uses operators.global_cumsum (SQL faster at sf0.1: 1.76 vs 1.45 s)",
     # The SQL plan runs or scales worse.
     "parse_extract_ids": "SQL fails at run time: CAST_INVALID_INPUT on '' under ANSI",
     "join_not_in_null_aware": "scale: SQL NOT IN plans a broadcast-only null-aware anti join of customer; the builder shuffles",
@@ -85,6 +88,8 @@ BUILDER_KEPT = {
     "graph_ktruss_peel": "sf0.01 A/B: builder 1.66 s vs SQL 3.37 s, 0/8",
     "graph_clustering_coeff": "sf0.1 A/B: builder 1.77 s vs SQL 2.28 s, 1/8, beyond the SQL IQR 0.24 s (sf0.01: 0.69 vs 0.72 s, 3/8)",
     "graph_jaccard_linkpred": "sf0.1 A/B: builder 4.36 s vs SQL 5.09 s, 0/8, beyond the SQL IQR 0.52 s (sf0.01: 0.92 vs 0.89 s, 4/8)",
+    "graph_ppr_seed": "sf0.1 A/B: builder 3.69 s vs SQL 5.18 s, 1/8, beyond the SQL IQR 0.62 s (an earlier sf0.1 run: 4.73 vs 5.24 s, 1/8, IQR 0.70 s)",
+    "pagerank_converge": "sf0.1 A/B: builder 5.10 s vs SQL 6.92 s, 4/8, beyond the SQL IQR 1.42 s (an earlier sf0.1 run: 7.70 vs 7.88 s, 3/8, IQR 4.21 s)",
     "graph_mis_luby": "SQL does not finish: Spark inlines the chained round CTEs; no result within 240 s at sf0.001",
     "graph_greedy_matching": "SQL does not finish: Spark inlines the chained round CTEs; no result within 240 s at sf0.001",
     # The SQL returns the builder's rows with another output type.
@@ -170,17 +175,18 @@ def test_every_spelling_rule_fires_on_a_sql_first_oracle():
     assert dead == []
 
 
-def test_sql_first_oracles_are_the_duckdb_text(sf_dir):
-    """``ORACLES[name]`` is what DuckDB runs: the map applies on the
-    Spark side only, so every oracle it rewrites still binds in DuckDB
-    as written."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-    rewritten = sorted(n for n in SQL_FIRST if to_spark(ORACLES[n]) != ORACLES[n])
-    assert rewritten
-    for n in rewritten:
-        con.execute("EXPLAIN " + ORACLES[n])
+def test_hex_rule_reads_duckdbs_values(spark):
+    """The rule tests above compare text; this one compares what Spark's
+    ``conv`` and DuckDB's ``'0x'`` cast read from the same hex digits,
+    high bit set included."""
+    duck = (
+        "SELECT s, ('0x' || substr(md5(s), 1, 8))::BIGINT AS b,"
+        " ('0x' || substr(md5(s), 7, 2))::INT AS i"
+        " FROM (VALUES ('a'), ('b'), ('ab_17'), ('')) AS t(s)"
+    )
+    want = sorted(duckdb.sql(duck).fetchall())
+    assert any(b >= 2**31 for _, b, _ in want)
+    assert sorted(tuple(r) for r in spark.sql(to_spark(duck)).collect()) == want
 
 
 @pytest.fixture(scope="module")
@@ -239,3 +245,11 @@ def test_approx_distinct_counts_runs_the_hll_sketch(spark, sf_dir):
     df = QUERIES["approx_distinct_counts"](spark, sf_dir)
     assert explain_str(df).count("approx_count_distinct") >= 3
     assert all(r.within_5pct for r in df.collect())
+
+
+def test_approx_percentile_prices_runs_the_sketch(spark, sf_dir):
+    """As above: the oracle pins ``within_1pct`` to TRUE, so only the
+    builder's plan shows that the percentile sketch runs at all."""
+    df = QUERIES["approx_percentile_prices"](spark, sf_dir)
+    assert explain_str(df).count("approx_percentile") >= 3
+    assert all(r.within_1pct for r in df.collect())
