@@ -271,7 +271,7 @@ def _leaves_covered(sub: list[str]) -> bool:
       is the distinct-row count of a scaling input);
     - a Filter `rank <= k` on a rank produced by a PARTITIONED window
       on the same ancestor path DOES bound (≤|parts|·k rows — the
-      salted two-stage top-k idiom, e.g. `sketches._k_smallest`)."""
+      salted two-stage top-k idiom)."""
     for ri, s in enumerate(sub):
         st = _node_text(s)
         if st.startswith("InMemoryRelation"):

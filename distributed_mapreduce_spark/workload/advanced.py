@@ -564,9 +564,10 @@ def q_secondary_sort_first3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Equal-frequency binning.
+sql_query(
     "decile_stats",
-    oracle="""
+    """
     WITH b AS (
       SELECT quantile_cont(o_totalprice, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS q
       FROM orders
@@ -578,30 +579,6 @@ def q_secondary_sort_first3(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     """,
 )
-def q_decile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal-frequency binning: decile boundaries from one aggregate,
-    broadcast back, bin id as a SUM OF INDICATORS (1 + #boundaries
-    below the value — no 10-way CASE, no per-row global window), then
-    per-bin stats. Spark's exact `percentile` ≡ DuckDB `quantile_cont`
-    bit-for-bit. At 100 TB the boundary step swaps to approx_percentile
-    (certified within 1% by `approx_percentile_prices`); the bin-assign
-    and rollup stages are unchanged."""
-    orders = table(spark, sf_dir, "orders")
-    ps = ", ".join(str(p / 10) for p in range(1, 10))
-    bounds = orders.agg(
-        F.expr(f"percentile(o_totalprice, array({ps}))").alias("q")
-    )
-    binned = orders.crossJoin(F.broadcast(bounds)).select(
-        "o_totalprice",
-        (
-            F.lit(1)
-            + F.size(F.filter("q", lambda x: F.col("o_totalprice") > x))
-        ).cast("int").alias("decile"),
-    )
-    return binned.groupBy("decile").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("decimal(30,2)").alias("total"),
-    )
 
 
 #: Random-walk mass scale: each supplier starts with 1e6 micro-units.
@@ -947,9 +924,11 @@ MB_MIN_SUPPORT = 2
 MB_TOP_K = 20
 
 
-@query(
+# Association-rule mining (Agrawal & Srikant's support/confidence
+# framing plus lift) over order baskets.
+sql_query(
     "basket_association_rules",
-    oracle=f"""
+    f"""
     WITH items AS MATERIALIZED (
       SELECT DISTINCT l_orderkey AS oid, l_partkey AS item FROM lineitem
       WHERE l_orderkey % {MB_GATE_MOD} = 0
@@ -978,57 +957,6 @@ MB_TOP_K = 20
     LIMIT {MB_TOP_K}
     """,
 )
-def q_basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Association-rule mining (Agrawal & Srikant's support/confidence
-    framing plus lift) over order baskets: pair support from a
-    basket-keyed self-join (the graph family's co-occurrence shape,
-    bounded by order arity), confidence_bp = support(a,b)/support(a),
-    lift_ppm = support(a,b)·N / (support(a)·support(b)) — all exact
-    truncated integers; the top-{MB_TOP_K} rules by lift.
-
-    Plan: one distinct-incidence scan (shuffled on the basket key), a
-    per-basket self-join whose fan-out is capped by basket arity, one
-    hash-agg per pair, two broadcast joins against the ≤|items| support
-    relation, a 1-row basket count, TakeOrdered. The same plan at
-    100 TB: nothing global except the final top-k merge."""
-    items = (
-        table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % MB_GATE_MOD == 0)
-        .select(F.col("l_orderkey").alias("oid"), F.col("l_partkey").alias("item"))
-        .distinct()
-    )
-    n = items.agg(F.countDistinct("oid").cast("long").alias("n_baskets"))
-    sup = items.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("n_item"))
-    a = items.alias("a")
-    b = items.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.oid") == F.col("b.oid")) & (F.col("a.item") < F.col("b.item")))
-        .groupBy(F.col("a.item").alias("ante"), F.col("b.item").alias("cons"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pair"))
-        .filter(F.col("n_pair") >= MB_MIN_SUPPORT)
-    )
-    sa = sup.withColumnsRenamed({"item": "ante", "n_item": "n_ante"})
-    sb = sup.withColumnsRenamed({"item": "cons", "n_item": "n_cons"})
-    scored = (
-        pairs.join(F.broadcast(sa), "ante")
-        .join(F.broadcast(sb), "cons")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "ante",
-            "cons",
-            "n_pair",
-            "n_ante",
-            "n_cons",
-            F.expr("CAST(n_pair * 10000 DIV n_ante AS BIGINT)").alias(
-                "confidence_bp"
-            ),
-            F.expr(
-                "CAST(CAST(n_pair AS DECIMAL(38,0)) * n_baskets * 1000000"
-                " DIV (CAST(n_ante AS DECIMAL(38,0)) * n_cons) AS BIGINT)"
-            ).alias("lift_ppm"),
-        )
-    )
-    return scored.orderBy(F.desc("lift_ppm"), "ante", "cons").limit(MB_TOP_K)
 
 
 # Ranking-function TIE semantics in one pass — the corner

@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.workload.dedup import (
-    _fp_norm,
     _hash_u32,
     _sql_hash_u32,
 )
@@ -52,8 +51,6 @@ from distributed_mapreduce_spark.workload.registry import (
 from distributed_mapreduce_spark.workload.text import (
     BPE_REGEX,
     STOPWORDS,
-    _bp,
-    _count_in,
     _sql_bp,
     _sql_count_in,
     _sql_tokens,
@@ -268,9 +265,10 @@ def q_quality_lm_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Tokenizer fertility audit per language.
+sql_query(
     "tokenizer_fertility",
-    oracle=f"""
+    f"""
     SELECT lang,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(len({_sql_tokens('text')})) AS BIGINT) AS n_words,
@@ -285,32 +283,6 @@ def q_quality_lm_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY lang
     """,
 )
-def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility audit per language: BPE-ish tokens per
-    whitespace word and characters per BPE token (both in basis
-    points) — the metric that tells a multilingual pipeline which
-    languages pay a token tax under the current tokenizer. Pure
-    columnar expressions folded into one per-language hash aggregate;
-    integer floor ratios keep the oracle exact."""
-    docs = table(spark, sf_dir, "documents")
-    words = F.size(_tokens(F.col("text")))
-    bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_REGEX), F.lit(0)))
-    agg = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(words).cast("long").alias("n_words"),
-        F.sum(bpe).cast("long").alias("n_bpe_tokens"),
-        F.sum("n_chars").cast("long").alias("n_chars_sum"),
-    )
-    return agg.select(
-        "lang",
-        "n_docs",
-        "n_words",
-        "n_bpe_tokens",
-        F.expr("(n_bpe_tokens * 10000) DIV n_words").cast("long").alias("fertility_bp"),
-        F.expr("(n_chars_sum * 10000) DIV n_bpe_tokens")
-        .cast("long")
-        .alias("chars_per_token_bp"),
-    )
 
 
 #: Incremental-dedup batch gate: the top decile of doc_ids stands in
@@ -352,9 +324,10 @@ QF_MIN_STOPWORD_BP = 200
 QF_MAX_DUP_TRI_BP = 2000
 
 
-@query(
+# Explainable quality filtering.
+q_quality_filter_reasons = sql_query(
     "quality_filter_reasons",
-    oracle=f"""
+    f"""
     WITH t AS (
       SELECT doc_id, text, {_sql_tokens('text')} AS toks FROM documents
     ), s AS (
@@ -379,50 +352,6 @@ QF_MAX_DUP_TRI_BP = 2000
     FROM s
     """,
 )
-def q_quality_filter_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explainable quality filtering: per document, a bitmask of WHICH
-    Gopher-style rules rejected it (too short / punctuation-heavy /
-    stopword-poor / repetitive) plus the keep verdict — the audit
-    artifact a corpus pipeline ships alongside the filtered output so
-    rejection rates per rule can be monitored per source.
-
-    Pure per-row columnar expressions (token array reused across all
-    four signals in one projection), zero shuffle — the filter itself
-    is free at any scale; only the audit aggregate costs anything."""
-    docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    n_chars = F.length(F.col("text"))
-    punct = n_chars - F.length(F.regexp_replace(F.col("text"), "[a-z0-9 ]", ""))
-    tri = _ngrams(F.col("toks"), 3)
-    s = docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        _bp(punct, n_chars).alias("punct_bp"),
-        _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("stopword_bp"),
-        toks.alias("toks"),
-    ).select(
-        "doc_id",
-        "n_tokens",
-        "punct_bp",
-        "stopword_bp",
-        _bp(F.size(tri) - F.size(F.array_distinct(tri)), F.size(tri)).alias("dup_tri_bp"),
-    )
-    mask = (
-        F.when(F.col("n_tokens") < QF_MIN_TOKENS, 1).otherwise(0)
-        + F.when(F.col("punct_bp") > QF_MAX_PUNCT_BP, 2).otherwise(0)
-        + F.when(F.col("stopword_bp") < QF_MIN_STOPWORD_BP, 4).otherwise(0)
-        + F.when(F.col("dup_tri_bp") > QF_MAX_DUP_TRI_BP, 8).otherwise(0)
-    )
-    return s.select(
-        "doc_id",
-        mask.cast("int").alias("reason_mask"),
-        (
-            (F.col("n_tokens") >= QF_MIN_TOKENS)
-            & (F.col("punct_bp") <= QF_MAX_PUNCT_BP)
-            & (F.col("stopword_bp") >= QF_MIN_STOPWORD_BP)
-            & (F.col("dup_tri_bp") <= QF_MAX_DUP_TRI_BP)
-        ).alias("kept"),
-    )
 
 
 #: Passage width (tokens) for cross-document boilerplate detection.
@@ -1006,9 +935,10 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Adaptive quality gate.
+sql_query(
     "quality_percentile_gate",
-    oracle=f"""
+    f"""
     WITH t AS (
       SELECT doc_id, source, len({_sql_tokens('text')}) AS n_tokens FROM documents
     ), b AS (
@@ -1024,34 +954,6 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY source
     """,
 )
-def q_quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adaptive quality gate: keep documents whose token count lies
-    between the corpus's own p10 and p90 — thresholds derived FROM the
-    data rather than fixed constants (the length-outlier trim most
-    corpus pipelines apply before the rule-based filters), rolled up
-    per source.
-
-    Plan: one exact-percentile aggregate (two values), broadcast back
-    over the scan (the legitimate 1-row broadcast, like decile_stats),
-    filter + per-source hash aggregate. Spark's exact `percentile` ≡
-    DuckDB `quantile_cont` bit-for-bit; at 100 TB the boundary step
-    swaps to approx_percentile with the documented error bound."""
-    docs = table(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id", "source", F.size(_tokens(F.col("text"))).alias("n_tokens")
-    )
-    bounds = t.agg(
-        F.expr("percentile(n_tokens, 0.10)").alias("p10"),
-        F.expr("percentile(n_tokens, 0.90)").alias("p90"),
-    )
-    kept = t.crossJoin(F.broadcast(bounds)).filter(
-        (F.col("n_tokens") >= F.col("p10")) & (F.col("n_tokens") <= F.col("p90"))
-    )
-    return kept.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.min("n_tokens").cast("long").alias("min_tokens"),
-        F.max("n_tokens").cast("long").alias("max_tokens"),
-    )
 
 
 #: Epoch weights in centi-repeats by source tier: heads duplicated
@@ -1248,77 +1150,11 @@ _DRIFT_SQL = f"""
 """
 
 
-@query("source_token_drift", oracle=_DRIFT_SQL)
-def q_source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-mixture drift monitor: for every source and every
-    corpus-wide top-{DRIFT_TOPK} token, the EXACT basis-point gap
-    between the token's rate inside the source and its rate in the
-    rest of the corpus — |a/N_src − b/N_rest| cross-multiplied into
-    integers (|a·N_rest − b·N_src|·10⁴ ⫽ N_src·N_rest, operands
-    widened to DECIMAL(38,0)/HUGEINT per the wide-arithmetic policy),
-    with a ≥{DRIFT_BP_MIN} bp drift flag. This is the pipeline alarm
-    that a source's token distribution has shifted (scraper change,
-    contamination, encoding bug) — checked before a new crawl batch
-    joins the training mixture.
-
-    Plan: one explode→(source, term) hash aggregate; per-source totals
-    and the LIMIT-bounded top-k relation are tiny and broadcast (the
-    bounded-hint class); the screen relation is |sources|×{DRIFT_TOPK}
-    regardless of corpus size."""
-    docs = table(spark, sf_dir, "documents")
-    toks = docs.select("source", F.explode(_tokens(F.col("text"))).alias("term"))
-    toks = toks.persist()
-    tot = toks.agg(F.count(F.lit(1)).cast("long").alias("n_all"))
-    topk = (
-        toks.groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt_all"))
-        .orderBy(F.desc("cnt_all"), F.asc("term"))
-        .limit(DRIFT_TOPK)
-    )
-    per_src = toks.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_src")
-    )
-    src_tok = toks.groupBy("source", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    j = (
-        per_src.crossJoin(F.broadcast(topk))
-        .join(src_tok, ["source", "term"], "left")
-        .crossJoin(tot)
-        .select(
-            "source",
-            "term",
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("a"),
-            "n_src",
-            "cnt_all",
-            "n_all",
-        )
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    n_rest = F.col("n_all") - F.col("n_src")
-    b = F.col("cnt_all") - F.col("a")
-    num = F.abs(dec(F.col("a")) * dec(n_rest) - dec(b) * dec(F.col("n_src"))) * 10000
-    den = dec(F.col("n_src")) * dec(n_rest)
-    zero = F.col("n_src") * n_rest == 0
-    return j.select(
-        "source",
-        "term",
-        F.col("a").alias("cnt_src"),
-        "n_src",
-        b.cast("long").alias("cnt_rest"),
-        n_rest.cast("long").alias("n_rest"),
-        F.when(zero, F.lit(0))
-        .otherwise(F.expr(
-            f"CAST(abs(CAST(a AS DECIMAL(38,0)) * (n_all - n_src)"
-            f" - CAST(cnt_all - a AS DECIMAL(38,0)) * n_src) * 10000"
-            f" DIV (CAST(n_src AS DECIMAL(38,0)) * (n_all - n_src)) AS BIGINT)"
-        ))
-        .cast("long")
-        .alias("drift_bp"),
-        F.when(zero, F.lit(False))
-        .otherwise(num >= F.lit(DRIFT_BP_MIN).cast("decimal(38,0)") * den)
-        .alias("drifted"),
-    )
+# Corpus-mixture drift monitor.
+sql_query(
+    "source_token_drift",
+    _DRIFT_SQL,
+)
 
 
 #: Sample size for the weighted priority sample.
@@ -1344,9 +1180,10 @@ sql_query(
 )
 
 
-@query(
+# Deduplicated token budget per source.
+sql_query(
     "source_effective_tokens",
-    oracle=f"""
+    f"""
     WITH d AS MATERIALIZED (
       SELECT doc_id, source,
              CAST(len({_sql_tokens('text')}) AS BIGINT)
@@ -1370,44 +1207,6 @@ sql_query(
     GROUP BY d.source
     """,
 )
-def q_source_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deduplicated token budget per source: tokens count as
-    "effective" only in the FIRST document (by ingestion order)
-    carrying each normalized fingerprint — later byte/format-level
-    copies contribute raw tokens but zero new training signal. The
-    per-source answer to "how much does this source actually add to
-    the token budget?", driving mixture weights and crawl-priority
-    decisions.
-
-    Plan: per-row normalize+fingerprint projection, one fp-level min
-    aggregate (first-occurrence index), one equi-join back, one
-    source-level hash-agg — the decontamination join shape, no
-    self-join of the corpus.
-    """
-    from distributed_mapreduce_spark.workload.text import _bp as _bp_t
-    from distributed_mapreduce_spark.workload.text import _tokens as _toks
-
-    docs = table(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        "source",
-        F.size(_toks(F.col("text"))).cast("long").alias("n_tokens"),
-        _fp_norm().alias("fp"),
-    )
-    first_d = d.groupBy("fp").agg(F.min("doc_id").alias("first_doc"))
-    j = d.join(first_d, "fp")
-    is_first = F.col("first_doc") == F.col("doc_id")
-    return j.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("raw_tokens"),
-        F.sum(F.when(is_first, F.col("n_tokens")).otherwise(0))
-        .cast("long")
-        .alias("effective_tokens"),
-        _bp_t(
-            F.sum(F.when(is_first, F.lit(0)).otherwise(F.col("n_tokens"))),
-            F.sum("n_tokens"),
-        ).alias("dup_token_bp"),
-    )
 
 
 @query(
@@ -1560,9 +1359,11 @@ def q_collocation_pmi_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Temperature-balanced mixture shares (the multilingual-sampling rule
+# behind XLM-R-style corpora, alpha = 0.5).
+sql_query(
     "mixture_temperature_shares",
-    oracle=f"""
+    f"""
     WITH s AS (
       SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
              CAST(sum(len(toks)) AS BIGINT) AS n_tok
@@ -1586,62 +1387,16 @@ def q_collocation_pmi_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w, t
     """.format(tok=_sql_tokens("text")),
 )
-def q_mixture_temperature_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-balanced mixture shares (the multilingual-sampling
-    rule behind XLM-R-style corpora, alpha = 0.5): each source's
-    sampling share goes from its natural token share p_i to
-    q_i = sqrt(n_i) / sum(sqrt(n_j)), damping head sources and boosting
-    tail sources; ``boost_x100`` is the up/down-sampling factor each
-    source receives. Complements the fixed-rate `corpus_mixture_sample`
-    and the quota-count `stratified_quota_sample` with the
-    size-adaptive policy.
-
-    Exactness: IEEE-754 sqrt is correctly rounded in both engines and
-    token counts stay below 2^53, so floor(sqrt(n)) is bit-identical;
-    every share is an integer basis-point floor quotient — no float
-    accumulation.
-
-    Plan: one explode-free per-source token-count aggregate (size() on
-    the token array — no explode), a single-row totals relation
-    broadcast (bounded-hint class), and a |sources|-row projection."""
-    docs = table(spark, sf_dir, "documents")
-    s = docs.select(
-        "source", F.size(_tokens(F.col("text"))).alias("ntok_doc")
-    ).groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("ntok_doc").cast("long").alias("n_tok"),
-    )
-    w = s.withColumn(
-        "sqrt_w",
-        F.floor(F.sqrt(F.col("n_tok").cast("double"))).cast("long"),
-    )
-    t = w.agg(
-        F.sum("n_tok").cast("long").alias("tot_tok"),
-        F.sum("sqrt_w").cast("long").alias("tot_w"),
-    )
-    j = w.crossJoin(F.broadcast(t))
-    raw_bp = F.expr("n_tok * 10000 DIV tot_tok")
-    temp_bp = F.expr("sqrt_w * 10000 DIV tot_w")
-    return j.select(
-        "source",
-        "n_docs",
-        "n_tok",
-        raw_bp.cast("long").alias("raw_share_bp"),
-        temp_bp.cast("long").alias("temp_share_bp"),
-        F.when(raw_bp == 0, F.lit(0))
-        .otherwise(F.expr("(sqrt_w * 10000 DIV tot_w) * 100 DIV (n_tok * 10000 DIV tot_tok)"))
-        .cast("long")
-        .alias("boost_x100"),
-    )
 
 
 #: Waterfilling token budget: keep this share of total corpus tokens.
 WATERFILL_BUDGET_BP = 6000
 
 
-@query(
+# Waterfilling token-budget allocation.
+sql_query(
     "mixture_waterfill_caps",
-    oracle=f"""
+    f"""
     WITH s AS MATERIALIZED (
       SELECT source, CAST(sum(len({_sql_tokens('text')})) AS BIGINT) AS n_tok
       FROM documents GROUP BY source
@@ -1679,90 +1434,6 @@ WATERFILL_BUDGET_BP = 6000
     FROM ranked CROSS JOIN cap CROSS JOIN tot
     """,
 )
-def q_mixture_waterfill_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Waterfilling token-budget allocation: given a global budget of
-    {WATERFILL_BUDGET_BP} bp of corpus tokens, find the unique cap c
-    such that Σ min(n_tok_s, c) fills the budget — small sources stay
-    whole, oversized sources are clipped to the common water level
-    (the principled "cap the heads, keep the tails" mixture rule;
-    cf. the per-source capping step in Gopher/MassiveText-style
-    mixture construction).
-
-    Exact integer solution: sources sorted ascending, k* = the largest
-    prefix kept whole with its equal-share cap
-    c_k = (B − P_k) ⫽ (S − k) still ≥ its own size; degenerate cases
-    (budget ≥ total → cap = total, i.e. a no-op; every source capped →
-    c = B ⫽ S) handled explicitly, so Σ alloc ≤ B always holds with
-    pure integer arithmetic.
-
-    Plan: one exploded-length hash aggregate to |sources| rows; every
-    window/scan after that runs over the aggregated ≤|sources| relation
-    (bounded-window class) — the raw corpus is touched exactly once."""
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents")
-    # Persist the |sources|-row aggregate: every later relation (ranks,
-    # totals, candidates, caps) derives from it — without the cache the
-    # raw-corpus explode would re-run once per reference.
-    s = docs.groupBy("source").agg(
-        F.sum(F.size(_tokens(F.col("text")))).cast("long").alias("n_tok")
-    ).persist()
-    w = Window.orderBy("n_tok", "source")
-    ranked = s.select(
-        "source",
-        "n_tok",
-        F.row_number().over(w).cast("long").alias("k"),
-        F.sum("n_tok")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("long")
-        .alias("pfx"),
-    )
-    tot = s.agg(
-        F.count(F.lit(1)).cast("long").alias("n_src"),
-        F.sum("n_tok").cast("long").alias("t_tok"),
-        F.expr(
-            f"CAST(CAST(sum(n_tok) AS DECIMAL(38,0)) * {WATERFILL_BUDGET_BP}"
-            " DIV 10000 AS BIGINT)"
-        ).alias("budget"),
-    )
-    cand = (
-        ranked.crossJoin(F.broadcast(tot))
-        .filter(F.col("k") < F.col("n_src"))
-        .select(
-            "k",
-            "n_tok",
-            F.expr("(budget - pfx) div (n_src - k)").alias("c"),
-        )
-    )
-    feas = cand.filter(F.col("n_tok") <= F.col("c")).agg(
-        F.max("k").alias("kbest")
-    )
-    cap = (
-        feas.crossJoin(F.broadcast(tot))
-        .join(
-            cand.select(F.col("k").alias("ck"), F.col("c")),
-            F.col("ck") == F.col("kbest"),
-            "left",
-        )
-        .select(
-            F.when(F.col("t_tok") <= F.col("budget"), F.col("t_tok"))
-            .when(F.col("kbest").isNull(), F.expr("budget div n_src"))
-            .otherwise(F.col("c"))
-            .alias("cap_tok")
-        )
-    )
-    return (
-        ranked.crossJoin(F.broadcast(cap))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_tok",
-            F.least("n_tok", "cap_tok").cast("long").alias("alloc_tok"),
-            (F.col("n_tok") > F.col("cap_tok")).alias("capped"),
-            F.col("cap_tok").cast("long").alias("cap_tok"),
-            F.col("budget").alias("budget_tok"),
-        )
-    )
 
 
 #: Greedy max-coverage selection rounds.
@@ -1950,9 +1621,10 @@ def q_decontam_combined_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOMAIN_CAP = 15
 
 
-@query(
+# Domain / source frequency capping.
+sql_query(
     "corpus_domain_cap",
-    oracle=f"""
+    f"""
     WITH scored AS MATERIALIZED (
       SELECT doc_id, source,
              {_sql_bp(_sql_count_in(_sql_tokens('text'), STOPWORDS),
@@ -1975,41 +1647,6 @@ DOMAIN_CAP = 15
     FROM ranked GROUP BY source
     """,
 )
-def q_corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain / source frequency capping: keep at most {DOMAIN_CAP}
-    documents per source, chosen by quality (stopword-ratio basis
-    points, the cheap rule-gate signal) with doc_id tiebreak — the
-    "no single domain dominates the mixture" rule every web-scale
-    corpus applies (C4 kept ≤ some pages per URL-host; RefinedWeb caps
-    per-domain contributions). Output is the per-source audit: totals,
-    kept, dropped, and the kept-quality floor.
-
-    Plan: one scan computes the quality signal columnar-side; the
-    rank is a window PARTITIONED BY SOURCE (per-domain top-k, never a
-    global sort); the audit aggregate is ≤|sources| rows. At 100 TB
-    the shuffle key is the domain — skewed hot domains are exactly the
-    rows the cap discards, and AQE skew-split handles the rank
-    shuffle because row_number only needs per-partition order."""
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    scored = docs.select(
-        "doc_id",
-        "source",
-        _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("q_bp"),
-    )
-    w = Window.partitionBy("source").orderBy(F.col("q_bp").desc(), "doc_id")
-    ranked = scored.withColumn("rnk", F.row_number().over(w))
-    kept = F.when(F.col("rnk") <= DOMAIN_CAP, 1).otherwise(0)
-    return ranked.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_total"),
-        F.sum(kept).cast("long").alias("n_kept"),
-        (F.count(F.lit(1)) - F.sum(kept)).cast("long").alias("n_dropped"),
-        F.min(F.when(F.col("rnk") <= DOMAIN_CAP, F.col("q_bp")))
-        .cast("long")
-        .alias("min_kept_q_bp"),
-    )
 
 
 #: Calibration-curve bucket width over the per-token logit (µ-units).
@@ -2321,64 +1958,11 @@ def _dup_quality_oracle() -> str:
     """
 
 
-@query("dedup_quality_interaction", oracle=_dup_quality_oracle())
-def q_dedup_quality_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-family pipeline audit: do exact duplicates pass the
-    quality gate at a different rate than unique documents? The
-    keep-rate lift (dup vs non-dup, exact cross-multiplied ppm) is the
-    number that decides pipeline ORDER at 100 TB — a lift near 10⁶
-    says dedup and quality filtering are independent (run the cheaper
-    first); a low lift says duplicates are disproportionately junk and
-    deduping first saves quality-gate compute. The interaction query
-    every corpus pipeline should run once before freezing its DAG.
-
-    Plan: fingerprints and the gate verdict are projections of the
-    same scan; group sizes are one hash-agg on the 16-byte digest
-    joined back on it (the `dedup_exact` shape); the 2x2 collapses in
-    ONE 1-row conditional-sum aggregate."""
-    docs = table(spark, sf_dir, "documents")
-    fp = docs.select("doc_id", F.md5("text").alias("f"))
-    gs = fp.groupBy("f").agg(F.count(F.lit(1)).alias("n"))
-    flagged = fp.join(gs, "f").select(
-        "doc_id", (F.col("n") > 1).alias("is_dup")
-    )
-    rk = q_quality_filter_reasons(spark, sf_dir).select("doc_id", "kept")
-    cm = flagged.join(rk, "doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.when(F.col("is_dup"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_dup"),
-        F.sum(F.when(F.col("is_dup") & F.col("kept"), 1).otherwise(0))
-        .cast("long")
-        .alias("keep_dup"),
-        F.sum(F.when(~F.col("is_dup") & F.col("kept"), 1).otherwise(0))
-        .cast("long")
-        .alias("keep_nondup"),
-    )
-    return cm.select(
-        "n_docs",
-        "n_dup",
-        (F.col("n_docs") - F.col("n_dup")).cast("long").alias("n_nondup"),
-        "keep_dup",
-        "keep_nondup",
-        F.expr(
-            "CAST(CASE WHEN n_dup = 0 THEN 0"
-            "          ELSE keep_dup * 10000 DIV n_dup END AS BIGINT)"
-        ).alias("dup_keep_bp"),
-        F.expr(
-            "CAST(CASE WHEN n_docs - n_dup = 0 THEN 0"
-            "          ELSE keep_nondup * 10000 DIV (n_docs - n_dup)"
-            "     END AS BIGINT)"
-        ).alias("nondup_keep_bp"),
-        F.expr(
-            "CAST(CASE WHEN n_dup = 0 OR n_docs - n_dup = 0"
-            "            OR keep_nondup = 0 THEN 0"
-            "          ELSE (CAST(keep_dup AS DECIMAL(38,0))"
-            "                * (n_docs - n_dup) * 1000000)"
-            "               DIV (CAST(keep_nondup AS DECIMAL(38,0)) * n_dup)"
-            "     END AS BIGINT)"
-        ).alias("keep_lift_ppm"),
-    )
+# Cross-family pipeline audit.
+sql_query(
+    "dedup_quality_interaction",
+    _dup_quality_oracle(),
+)
 
 
 def _isotonic_oracle() -> str:

@@ -1318,9 +1318,11 @@ def _fp_norm() -> Column:
     )
 
 
-@query(
+# Exact dedup after text normalization (lowercase, collapse non-
+# alphanumerics, trim).
+sql_query(
     "dedup_exact_normalized",
-    oracle="""
+    """
     WITH n AS (
       SELECT doc_id,
              md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
@@ -1335,27 +1337,6 @@ def _fp_norm() -> Column:
     FROM n GROUP BY fp_norm
     """,
 )
-def q_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup after text normalization (lowercase, collapse
-    non-alphanumerics, trim): catches the trivially-reformatted
-    duplicates — case changes, punctuation, whitespace-only edits —
-    that byte-exact `dedup_exact` misses. `n_raw_variants` counts how
-    many DISTINCT raw fingerprints each normalized group collapses
-    (>1 = normalization did real work there).
-
-    Plan: normalization is a per-row projection; grouping is one
-    hash-agg on the 16-byte digest — same scale posture as
-    `dedup_exact` (shuffle digests, not text).
-    """
-    docs = table(spark, sf_dir, "documents")
-    n = docs.select(
-        "doc_id", _fp_norm().alias("fp_norm"), F.md5("text").alias("fp_raw")
-    )
-    return n.groupBy("fp_norm").agg(
-        F.count(F.lit(1)).alias("n_copies"),
-        F.count_distinct("fp_raw").alias("n_raw_variants"),
-        F.min("doc_id").alias("keep_doc"),
-    )
 
 
 #: Stand-in license tag: sources whose numeric suffix ≡ 0 (mod 4) are
@@ -1675,9 +1656,11 @@ ER_T_MATCH = 500
 ER_T_POSSIBLE = 200
 
 
-@query(
+# Probabilistic record linkage by the Fellegi-Sunter decision rule
+# (Fellegi & Sunter, JASA 1969).
+sql_query(
     "er_fellegi_sunter",
-    oracle=f"""
+    f"""
     WITH rec AS MATERIALIZED (
       SELECT doc_id, lang, source,
              length(text) // {ER_LEN_BUCKET} AS lenbkt,
@@ -1703,59 +1686,6 @@ ER_T_POSSIBLE = 200
     FROM pairs WHERE score_c >= {ER_T_POSSIBLE}
     """,
 )
-def q_er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probabilistic record linkage by the Fellegi-Sunter decision rule
-    (Fellegi & Sunter, JASA 1969): candidate pairs from a blocking key
-    (language + length bucket — never the O(n²) cross join), an
-    agreement VECTOR over comparison fields (source, token-count
-    bucket, leading token), each agreement/disagreement contributing a
-    fixed integer log-likelihood-ratio weight, and the summed score
-    thresholded into match / possible (clerical review) / non-match.
-    The entity-resolution counterpart of the dedup family: near-dup
-    finds same CONTENT, record linkage finds same ENTITY under noisy
-    fields.
-
-    Plan: blocking is a self-equi-join on the (lang, lenbkt) key —
-    shuffle keyed on the block, candidate volume Σ|block|²; the
-    agreement vector and score are pure columnar CASEs; only pairs at
-    or above the review threshold survive to output. At 100 TB the
-    block key is the knob: add more fields until the largest block is
-    task-sized (the EMBED_CELL_CAP discipline applies verbatim)."""
-    toks = _tokens(F.col("text"))
-    rec = table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        "source",
-        (F.length("text") / ER_LEN_BUCKET).cast("long").alias("lenbkt"),
-        (F.size(toks) / ER_TOK_BUCKET).cast("long").alias("tokbkt"),
-        F.coalesce(toks.getItem(0), F.lit("")).alias("firsttok"),
-    )
-    a = rec.alias("a")
-    b = rec.alias("b")
-    w = ER_W
-    score = (
-        F.when(F.col("a.source") == F.col("b.source"), w["source"][0]).otherwise(w["source"][1])
-        + F.when(F.col("a.tokbkt") == F.col("b.tokbkt"), w["tokbkt"][0]).otherwise(w["tokbkt"][1])
-        + F.when(F.col("a.firsttok") == F.col("b.firsttok"), w["firsttok"][0]).otherwise(w["firsttok"][1])
-    ).cast("long")
-    pairs = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.lenbkt") == F.col("b.lenbkt"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        score.alias("score_c"),
-    )
-    return pairs.filter(F.col("score_c") >= ER_T_POSSIBLE).select(
-        "doc_a",
-        "doc_b",
-        "score_c",
-        F.when(F.col("score_c") >= ER_T_MATCH, "match")
-        .otherwise("possible")
-        .alias("verdict"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -377,9 +377,10 @@ sql_query(
 ANOM_WIN, ANOM_MIN_N = 24, 8
 
 
-@query(
+# Hourly-count anomaly detection per event type.
+sql_query(
     "events_hourly_anomaly",
-    oracle=f"""
+    f"""
     WITH hourly AS (
       SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h,
              CAST(count(*) AS BIGINT) AS cnt
@@ -402,45 +403,6 @@ ANOM_WIN, ANOM_MIN_N = 24, 8
           > 9 * (CAST(n AS HUGEINT) * s2 - CAST(s1 AS HUGEINT) * s1)
     """,
 )
-def q_events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly-count anomaly detection per event type: flag hours whose
-    count deviates more than 3 trailing standard deviations from the
-    previous {ANOM_WIN}-hour mean — computed ENTIRELY in integers via
-    the cross-multiplied form (n·x − s1)² > 9(n·s2 − s1²), so no
-    float mean/stddev ever exists and the oracle is exact (a float
-    z-score would drift between engines).
-
-    Plan: one hash aggregate to hourly grain (map-side partials), one
-    bounded ROWS window per event_type over the tiny hourly relation —
-    the raw events are never windowed."""
-    ev = table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("h")
-        .rowsBetween(-ANOM_WIN, -1)
-    )
-    s = hourly.select(
-        "event_type",
-        "h",
-        "cnt",
-        F.count(F.lit(1)).over(w).cast("long").alias("n"),
-        F.coalesce(F.sum("cnt").over(w), F.lit(0)).cast("long").alias("s1"),
-        F.coalesce(F.sum(F.col("cnt") * F.col("cnt")).over(w), F.lit(0))
-        .cast("long")
-        .alias("s2"),
-    )
-    # Widen the OPERANDS before multiplying: dev^2 in 64-bit wraps
-    # silently in Spark (DuckDB BIGINT raises) once hourly counts reach
-    # ~1e9; the whole gate is evaluated in DECIMAL(38,0)/HUGEINT.
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    dev = dec(F.col("n")) * dec(F.col("cnt")) - dec(F.col("s1"))
-    var_n = dec(F.col("n")) * dec(F.col("s2")) - dec(F.col("s1")) * dec(F.col("s1"))
-    return s.filter(
-        (F.col("n") >= ANOM_MIN_N) & (dev * dev > F.lit(9).cast("decimal(38,0)") * var_n)
-    )
 
 
 # User-acquisition curve: per day, first-seen user count and the running
@@ -517,9 +479,10 @@ def q_latest_event_per_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Volume-drift detection per event type.
+sql_query(
     "events_daily_trend",
-    oracle="""
+    """
     WITH daily AS (
       SELECT event_type,
              CAST(date_diff('day', TIMESTAMP '1970-01-01',
@@ -553,46 +516,6 @@ def q_latest_event_per_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM w
     """,
 )
-def q_events_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Volume-drift detection per event type: the least-squares slope
-    of daily counts over epoch-day index, surfaced as the EXACT
-    integer fraction (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²) plus its sign —
-    no float regression, so the oracle matches bit-for-bit and the
-    consumer divides (or compares against a threshold fraction) at
-    whatever precision it wants.
-
-    Plan: day-grain hash aggregate, then one tiny per-type roll-up of
-    the five sufficient statistics — sufficient-statistics regression
-    is a pure map-side-combinable aggregate at any scale."""
-    ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        (F.unix_date(F.date_trunc("day", F.col("ts")).cast("date"))).cast("long").alias("x"),
-    ).agg(F.count(F.lit(1)).alias("y"))
-    s = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    # Widen the OPERANDS before multiplying (64-bit n*sxy wraps
-    # silently in Spark, raises in DuckDB); only the published
-    # slope_num/slope_den narrow back to BIGINT at the end.
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    num = dec(F.col("n")) * dec(F.col("sxy")) - dec(F.col("sx")) * dec(F.col("sy"))
-    den = dec(F.col("n")) * dec(F.col("sxx")) - dec(F.col("sx")) * dec(F.col("sx"))
-    return s.select(
-        "event_type",
-        "n",
-        num.cast("long").alias("slope_num"),
-        den.cast("long").alias("slope_den"),
-        F.when(den == 0, "flat")
-        .when(num > 0, "up")
-        .when(num < 0, "down")
-        .otherwise("flat")
-        .alias("direction"),
-    )
 
 
 @query(
@@ -756,9 +679,11 @@ def q_events_ewma_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Time-weighted average of the value each user "holds" between events
+# (TWAP).
+sql_query(
     "events_time_weighted_value",
-    oracle="""
+    """
     WITH held AS (
       SELECT event_type,
              CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS v6,
@@ -778,49 +703,6 @@ def q_events_ewma_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     """,
 )
-def q_events_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average of the value each user "holds" between
-    events (TWAP): each event's value is weighted by the microseconds
-    until that user's next event (last event per user carries no
-    weight). Complements `events_ewma_trailing` (exponential decay)
-    with the exact integral form a metering / billing pipeline uses.
-
-    Exactness: value enters as DECIMAL(18,6) scaled to integer
-    micro-units (the double->decimal cast both engines share), weights
-    are integer microseconds from unix_micros, and the quotient is a
-    DECIMAL(38,0)/HUGEINT floor division — no float accumulation
-    anywhere, per the wide-arithmetic policy.
-
-    Plan: one lead() window partitioned by user_id (bounded per-key
-    state), then a hash aggregate on the small event_type domain with
-    map-side partials."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    held = ev.select(
-        "event_type",
-        (F.col("value").cast("decimal(18,6)") * 1000000)
-        .cast("long")
-        .alias("v6"),
-        (
-            F.unix_micros(F.lead("ts").over(w)) - F.unix_micros("ts")
-        ).alias("w_micros"),
-    ).where(F.col("w_micros").isNotNull())
-    agg = held.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_weighted"),
-        F.sum("w_micros").cast("long").alias("sum_w_micros"),
-        F.sum(F.col("v6").cast("decimal(38,0)") * F.col("w_micros")).alias(
-            "_vw"
-        ),
-    )
-    return agg.select(
-        "event_type",
-        "n_weighted",
-        "sum_w_micros",
-        F.when(F.col("sum_w_micros") == 0, F.lit(0))
-        .otherwise(F.expr("CAST(_vw DIV sum_w_micros AS BIGINT)"))
-        .cast("long")
-        .alias("twap_value_e6"),
-    )
 
 
 #: Interpolation grid step: one hour in microseconds.

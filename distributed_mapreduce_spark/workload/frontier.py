@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.workload.registry import query, sql_query, table
-from distributed_mapreduce_spark.workload.text import _sql_tokens, _tokens
+from distributed_mapreduce_spark.workload.text import _sql_tokens
 
 #: Hash groups for the local-frontier phase.
 SKYLINE_GROUPS = 16
@@ -104,9 +104,10 @@ def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Representative selection after exact fingerprinting.
+sql_query(
     "dedup_keep_best",
-    oracle=f"""
+    f"""
     WITH scored AS (
       SELECT doc_id, md5(text) AS fp, len({_sql_tokens('text')}) AS n_tokens
       FROM documents
@@ -121,30 +122,6 @@ def q_pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rn = 1
     """,
 )
-def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Representative selection after exact fingerprinting: within each
-    duplicate group (md5 of the full text) keep the best document
-    (longest, ties by lowest doc_id) and report the group size — the
-    corpus-prep convention of keeping the richest copy rather than an
-    arbitrary one.
-
-    Plan: fingerprint in the scan projection, one window per
-    fingerprint group (shuffle carries fp + two ints per row — never
-    the text)."""
-    docs = table(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        F.md5("text").alias("fp"),
-        F.size(_tokens(F.col("text"))).alias("n_tokens"),
-    )
-    w = Window.partitionBy("fp").orderBy(F.desc("n_tokens"), F.asc("doc_id"))
-    wc = Window.partitionBy("fp")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .withColumn("group_size", F.count(F.lit(1)).over(wc).cast("long"))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "fp", "n_tokens", "group_size")
-    )
 
 
 @query(

@@ -1355,9 +1355,10 @@ def q_graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 RICHCLUB_KS = (2, 4, 8, 16)
 
 
-@query(
+# Rich-club coefficient (Zhou & Mondragón 2004).
+sql_query(
     "graph_richclub_coefficient",
-    oracle=f"""
+    f"""
     WITH e AS MATERIALIZED ({_EDGES_SQL}),
     adj AS (
       SELECT src AS u FROM e UNION ALL SELECT dst AS u FROM e
@@ -1384,53 +1385,3 @@ RICHCLUB_KS = (2, 4, 8, 16)
     FROM nk LEFT JOIN ek ON nk.k = ek.k
     """,
 )
-def q_graph_richclub_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rich-club coefficient (Zhou & Mondragón 2004): for each degree
-    threshold k, the density of the subgraph induced by nodes of
-    degree > k — φ(k) = 2·E_k / (N_k·(N_k−1)), exact truncated ppm. A
-    rising φ(k) means hubs preferentially interconnect (the rich-club
-    ordering assortativity alone cannot see; the two together
-    characterize the hub structure that decides skew-handling
-    strategy for graph workloads at scale).
-
-    Plan: one degree aggregate, a broadcast join of the ≤{len(RICHCLUB_KS)}
-    -row threshold relation onto it (the rich sets), and ONE pass over
-    the edge list joining both endpoints against the rich set per
-    threshold — candidate volume ≤ |E|·|ks|, never pairs; the φ
-    arithmetic runs on ≤|ks| aggregated rows."""
-    e = _edges(spark, sf_dir)
-    adj = e.select(F.col("src").alias("u")).unionAll(
-        e.select(F.col("dst").alias("u"))
-    )
-    deg = adj.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("d")
-    )
-    ks = spark.createDataFrame([(k,) for k in RICHCLUB_KS], "k int")
-    rich = deg.crossJoin(F.broadcast(ks)).filter(
-        F.col("d") > F.col("k")
-    ).select("k", "node").persist()
-    nk = rich.groupBy("k").agg(F.count(F.lit(1)).cast("long").alias("n_rich"))
-    r1 = rich.withColumnsRenamed({"node": "src"})
-    r2 = rich.withColumnsRenamed({"node": "dst"})
-    ek = (
-        e.join(r1, "src")
-        .join(r2, ["dst", "k"])
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).cast("long").alias("e_rich"))
-    )
-    return (
-        nk.join(ek, "k", "left")
-        .select(
-            "k",
-            "n_rich",
-            F.coalesce("e_rich", F.lit(0)).cast("long").alias("e_rich"),
-            F.expr(
-                "CAST(CASE WHEN n_rich < 2 THEN 0"
-                "          ELSE CAST(coalesce(e_rich, 0) AS DECIMAL(38,0))"
-                "               * 2000000"
-                "               DIV (CAST(n_rich AS DECIMAL(38,0))"
-                "                    * (n_rich - 1))"
-                "     END AS BIGINT)"
-            ).alias("phi_ppm"),
-        )
-    )

@@ -165,9 +165,10 @@ sql_query(
 )
 
 
-@query(
+# Weekly retention triangle.
+sql_query(
     "retention_cohorts",
-    oracle="""
+    """
     WITH uw AS (
       SELECT DISTINCT user_id, date_trunc('week', ts) AS ws FROM events
     ), cohort AS (
@@ -181,34 +182,6 @@ sql_query(
     GROUP BY 1, 2
     """,
 )
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly retention triangle: users grouped by first-active week
-    (cohort), counted in each later week they were active.
-
-    Plan: distinct user-weeks (hash agg), per-user cohort (re-agg on
-    user_id, same shuffle key), equi-join back on user_id, final small
-    aggregate on (cohort, offset). DuckDB's date_trunc('week') returns
-    DATE while Spark returns TIMESTAMP — the oracle casts (both engines
-    truncate to Monday)."""
-    ev = table(spark, sf_dir, "events")
-    uw = ev.select(
-        "user_id", F.date_trunc("week", F.col("ts")).alias("ws")
-    ).distinct()
-    cohort = uw.groupBy("user_id").agg(F.min("ws").alias("cohort_ws"))
-    joined = uw.join(cohort, "user_id")
-    return (
-        joined.select(
-            "cohort_ws",
-            (
-                F.datediff(F.col("ws").cast("date"), F.col("cohort_ws").cast("date"))
-                / 7
-            )
-            .cast("long")
-            .alias("week_offset"),
-        )
-        .groupBy("cohort_ws", "week_offset")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
 
 
 # First-order Markov transition matrix of user behavior: counts of
@@ -263,9 +236,10 @@ sql_query(
 )
 
 
-@query(
+# Conversion-latency distribution per funnel hop.
+sql_query(
     "funnel_latency_stats",
-    oracle="""
+    """
     WITH s1 AS (
       SELECT user_id, min(ts) AS t_view FROM events
       WHERE event_type = 'view' GROUP BY user_id
@@ -296,59 +270,6 @@ sql_query(
     FROM lat GROUP BY hop
     """,
 )
-def q_funnel_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conversion-latency distribution per funnel hop: exact
-    min/median/p90/max of the microsecond gap between consecutive
-    completed stages (Spark `percentile` ≡ DuckDB `quantile_cont`,
-    bit-identical interpolation over integer micros).
-
-    Plan: reuses the funnel's staged min-aggregates (all shuffles on
-    user_id), derives per-hop latencies with a same-key join, then one
-    small aggregate per hop."""
-    ev = table(spark, sf_dir, "events")
-    view, click, purchase = FUNNEL_STAGES
-    s1 = ev.filter(F.col("event_type") == view).groupBy("user_id").agg(
-        F.min("ts").alias("t_view")
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == click)
-        .join(s1, "user_id")
-        .filter(F.col("ts") > F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == purchase)
-        .join(s2, "user_id")
-        .filter(F.col("ts") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_purchase"))
-    )
-    hop1 = (
-        s1.join(s2, "user_id")
-        .select(
-            F.lit("view_to_click").alias("hop"),
-            (F.unix_micros("t_click") - F.unix_micros("t_view")).alias("us"),
-        )
-    )
-    hop2 = (
-        s2.join(s3, "user_id")
-        .select(
-            F.lit("click_to_purchase").alias("hop"),
-            (F.unix_micros("t_purchase") - F.unix_micros("t_click")).alias("us"),
-        )
-    )
-    return (
-        hop1.unionAll(hop2)
-        .groupBy("hop")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-            F.min("us").cast("long").alias("min_us"),
-            F.percentile("us", F.lit(0.5)).alias("median_us"),
-            F.percentile("us", F.lit(0.9)).alias("p90_us"),
-            F.max("us").cast("long").alias("max_us"),
-        )
-    )
 
 
 @query(
@@ -409,9 +330,10 @@ def q_ntile_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Debounce.
+sql_query(
     "events_debounce",
-    oracle="""
+    """
     WITH seq AS (
       SELECT event_id, user_id, event_type, ts,
              lag(ts) OVER (PARTITION BY user_id, event_type
@@ -424,23 +346,6 @@ def q_ntile_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR date_diff('microsecond', prev_ts, ts) > 300000000
     """,
 )
-def q_events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Debounce: drop an event when the same user emitted the same
-    event type within the previous 5 minutes — the batch twin of
-    streaming `dropDuplicatesWithinWatermark`-style redelivery
-    suppression (keep the first of each burst, microsecond-exact gap).
-
-    Plan: one lag window partitioned by (user_id, event_type) —
-    bounded per-key state, shuffle on the dedup key only."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(prev)
-    return (
-        ev.select("event_id", "user_id", "event_type", "ts", prev.alias("prev_ts"), gap_us.alias("g"))
-        .filter(F.col("prev_ts").isNull() | (F.col("g") > 300_000_000))
-        .select("event_id", "user_id", "event_type", "ts")
-    )
 
 
 # Top-10 three-step behavior paths (event-type trigrams along each
@@ -717,9 +622,13 @@ def q_sessions_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Per-event within-session features — ordinal position and exact
+# microseconds since session start — the positional encodings a sequence
+# model over user journeys trains on (and the feature extraction step
+# between sessionization and example packing).
+sql_query(
     "session_relative_features",
-    oracle="""
+    """
     WITH ordered AS (
       SELECT user_id, ts, event_id,
              CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id
@@ -746,40 +655,6 @@ def q_sessions_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sess
     """,
 )
-def q_session_relative_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event within-session features — ordinal position and exact
-    microseconds since session start — the positional encodings a
-    sequence model over user journeys trains on (and the feature
-    extraction step between sessionization and example packing).
-
-    Plan: sessionization plus both features are windows over the SAME
-    (user_id) / (user_id, session_id) hash partitioning — one shuffle,
-    then bounded-state frames; no global window anywhere.
-    """
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_ts = F.lag("ts").over(w)
-    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(prev_ts)
-    is_new = F.when(
-        prev_ts.isNull() | (gap_us > 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    sess = ev.withColumn("is_new", is_new).withColumn(
-        "session_id",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    ws = Window.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
-    return sess.select(
-        "event_id",
-        "user_id",
-        F.col("session_id").cast("long"),
-        F.row_number().over(ws).cast("long").alias("event_idx"),
-        (
-            F.unix_micros(F.col("ts"))
-            - F.unix_micros(F.min("ts").over(ws.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )))
-        ).alias("us_since_start"),
-    )
 
 
 @query(
@@ -919,9 +794,13 @@ def q_orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Consecutive-calendar-day activity streaks per user — the date-
+# arithmetic flavor of gaps-and-islands (epoch-day minus row_number is
+# constant within a consecutive run), complementing
+# `scd2_status_islands`' change-flag flavor.
+sql_query(
     "user_active_streaks",
-    oracle="""
+    """
     WITH days AS (
       SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
     ), isl AS (
@@ -941,37 +820,6 @@ def q_orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM runs GROUP BY user_id
     """,
 )
-def q_user_active_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consecutive-calendar-day activity streaks per user — the
-    date-arithmetic flavor of gaps-and-islands (epoch-day minus
-    row_number is constant within a consecutive run), complementing
-    `scd2_status_islands`' change-flag flavor.
-
-    Plan: distinct user-days first (collapses the raw table before any
-    window), then a row_number window partitioned by user_id (bounded
-    per-key state), then two hash aggregates on the same key — Spark
-    reuses the user_id partitioning across all three stages."""
-    ev = table(spark, sf_dir, "events")
-    days = ev.select("user_id", F.to_date("ts").alias("d")).distinct()
-    w = Window.partitionBy("user_id").orderBy("d")
-    isl = days.select(
-        "user_id",
-        "d",
-        (
-            F.datediff(F.col("d"), F.lit("1970-01-01").cast("date"))
-            - F.row_number().over(w)
-        ).alias("grp"),
-    )
-    runs = isl.groupBy("user_id", "grp").agg(
-        F.count(F.lit(1)).cast("long").alias("len"),
-        F.min("d").alias("streak_start"),
-    )
-    return runs.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_streaks"),
-        F.sum("len").cast("long").alias("active_days"),
-        F.max("len").cast("long").alias("longest_streak"),
-        F.min("streak_start").alias("first_active_day"),
-    )
 
 
 #: Position-based attribution: lookback window and credit splits (bp).
@@ -1227,9 +1075,10 @@ BOT_CV2_PPM = 250_000
 BOT_MIN_GAPS = 5
 
 
-@query(
+# Automation detection by inter-event timing regularity.
+sql_query(
     "user_gap_regularity",
-    oracle=f"""
+    f"""
     WITH seq AS (
       SELECT user_id,
              epoch_us(ts) - lag(epoch_us(ts))
@@ -1255,54 +1104,6 @@ BOT_MIN_GAPS = 5
     FROM st
     """,
 )
-def q_user_gap_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Automation detection by inter-event timing regularity: per user
-    the coefficient of variation SQUARED of inter-event gaps in exact
-    ppm — cv^2 = var/mean^2 = (n*S2 - S1^2)/S1^2, all integer
-    microsecond moments, no float variance. Near-zero cv^2 means
-    metronome-regular requests (scripted clients); Poisson-bursty
-    humans sit near 1e6 ppm. Flag fires only with >= {BOT_MIN_GAPS}
-    gaps so short histories can't trip it.
-
-    Plan: one per-user lag window (the sequence-query shape shared by
-    the whole journey family), then a per-user moment aggregate —
-    map-side combinable, one shuffle keyed by user. Bounds: gaps are
-    microseconds < 2^42 per month; n*S2 stays inside int128 for any
-    realistic per-user history (documented, HUGEINT/DECIMAL(38)).
-
-    Reference parity: behavioral extension of the reference's
-    per-machine counting (SURVEY.md section 2.4
-    `agg_count_per_machine`).
-    """
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.unix_micros(F.col("ts"))
-    seq = ev.select(
-        "user_id", (us - F.lag(us).over(w)).alias("gap_us")
-    ).filter(F.col("gap_us").isNotNull())
-    st = seq.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_gaps"),
-        F.sum("gap_us").cast("long").alias("s1"),
-        F.expr(
-            "CAST(sum(CAST(gap_us AS DECIMAL(38,0)) * gap_us) AS DECIMAL(38,0))"
-        ).alias("s2"),
-    )
-    cv2 = F.expr(
-        "CAST(CASE WHEN s1 = 0 THEN 0"
-        "     ELSE (n_gaps * s2 - CAST(s1 AS DECIMAL(38,0)) * s1) * 1000000"
-        "          DIV (CAST(s1 AS DECIMAL(38,0)) * s1) END AS BIGINT)"
-    )
-    return st.select(
-        "user_id",
-        "n_gaps",
-        F.expr("CAST(s1 DIV n_gaps AS BIGINT)").alias("mean_gap_us"),
-        cv2.alias("cv2_ppm"),
-        (
-            (F.col("n_gaps") >= BOT_MIN_GAPS)
-            & (F.col("s1") > 0)
-            & (cv2 < BOT_CV2_PPM)
-        ).alias("bot_flag"),
-    )
 
 
 # ---------------------------------------------------------------------------

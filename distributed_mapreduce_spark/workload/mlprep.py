@@ -123,9 +123,11 @@ def q_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Entity-level (user-hashed) train/val/test assignment over events, with
+# the leakage audit in the result.
+sql_query(
     "group_split_audit",
-    oracle=f"""
+    f"""
     WITH assigned AS MATERIALIZED (
       SELECT user_id, event_id,
              CASE
@@ -155,60 +157,19 @@ def q_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM per_split CROSS JOIN tot CROSS JOIN leak
     """,
 )
-def q_group_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity-level (user-hashed) train/val/test assignment over
-    events, with the leakage audit in the result: `leak_users` counts
-    users whose rows landed in more than one split — provably 0 when
-    the split key is the entity hash, and the first column to go red
-    if someone "fixes" it to a row hash.
-
-    Plan: split is a pure md5 row expression (no shuffle); per-split
-    stats are one hash-aggregate with a distinct-user combine; the
-    audit aggregates (user, split) pairs — bounded by |users|·3."""
-    # canonical portable hash (workload/dedup.py:_hash_u32)
-    bucket = _hash_u32(F.col("user_id").cast("string"), "gs") % SPLIT_BUCKETS
-    assigned = table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.when(bucket < SPLIT_TRAIN_LT, "train")
-        .when(bucket < SPLIT_VAL_LT, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
-    per_split = assigned.groupBy("split").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-    )
-    tot = per_split.agg(F.sum("n_events").cast("long").alias("n_total"))
-    leak = (
-        assigned.groupBy("user_id")
-        .agg(F.countDistinct("split").alias("n_splits"))
-        .filter(F.col("n_splits") > 1)
-        .agg(F.count(F.lit(1)).cast("long").alias("leak_users"))
-    )
-    return (
-        per_split.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(leak))
-        .select(
-            "split",
-            "n_events",
-            "n_users",
-            F.expr(
-                "CAST(CAST(n_events AS DECIMAL(38,0)) * 10000"
-                " DIV n_total AS BIGINT)"
-            ).alias("share_bp"),
-            "leak_users",
-        )
-    )
 
 
 #: Cross-validation fold count.
 KFOLD_K = 5
 
 
-@query(
+# K-fold cross-validation assignment (KFOLD_K folds, keyed on the
+# CUSTOMER hash so every customer's orders stay in one fold — grouped
+# CV, the leakage-safe variant) with the balance audit a modeling
+# pipeline reviews before training.
+sql_query(
     "mlprep_kfold_assign",
-    oracle=f"""
+    f"""
     WITH assigned AS MATERIALIZED (
       SELECT o_orderkey, o_custkey,
              CAST({_sql_hash_u32("CAST(o_custkey AS STRING)", "kf")}
@@ -231,43 +192,6 @@ KFOLD_K = 5
     FROM per_fold CROSS JOIN leak
     """,
 )
-def q_mlprep_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-fold cross-validation assignment ({KFOLD_K} folds, keyed on
-    the CUSTOMER hash so every customer's orders stay in one fold —
-    grouped CV, the leakage-safe variant) with the balance audit a
-    modeling pipeline reviews before training: per-fold row/entity
-    counts and the positive-target rate in basis points (fold rates
-    should agree within noise — a skewed fold means the entity hash
-    correlates with the target). `leak_custs` is the in-result proof
-    of entity disjointness (provably 0 for an entity-hash fold key).
-
-    Plan: fold is a pure md5 row expression; one hash aggregate with a
-    distinct-entity combine; the leakage audit aggregates ≤ |customers|
-    (customer, fold) pairs; the 1-row audit relation attaches by
-    broadcast. Same scale posture as `group_split_audit`."""
-    bucket = _hash_u32(F.col("o_custkey").cast("string"), "kf") % KFOLD_K
-    assigned = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        bucket.cast("int").alias("fold"),
-        F.when(F.col("o_totalprice") > TE_PRICE_CUT, 1).otherwise(0).alias("y"),
-    )
-    per_fold = assigned.groupBy("fold").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.countDistinct("o_custkey").cast("long").alias("n_custs"),
-        F.expr(
-            "CAST(CAST(sum(y) AS DECIMAL(38,0)) * 10000 DIV count(1) AS BIGINT)"
-        ).alias("pos_rate_bp"),
-    )
-    leak = (
-        assigned.groupBy("o_custkey")
-        .agg(F.countDistinct("fold").alias("n_folds"))
-        .filter(F.col("n_folds") > 1)
-        .agg(F.count(F.lit(1)).cast("long").alias("leak_custs"))
-    )
-    return per_fold.crossJoin(F.broadcast(leak)).select(
-        "fold", "n_rows", "n_custs", "pos_rate_bp", "leak_custs"
-    )
 
 
 #: Hashing-trick dimensionality (buckets) for the featurizer audit.
@@ -402,9 +326,13 @@ sql_query(
 AUC_SCORE_DIV = 50_000
 
 
-@query(
+# Exact ROC-AUC of a coarse integer model score against the "big order"
+# label, via the Mann-Whitney rank-sum identity AUC = (#concordant +
+# ½·#tied) / (n_pos·n_neg) — the evaluation every trained
+# quality/contamination classifier gets before its scores gate a corpus.
+sql_query(
     "auc_rank_audit",
-    oracle=f"""
+    f"""
     WITH lab AS MATERIALIZED (
       SELECT CAST(floor(o_totalprice) AS BIGINT) // {AUC_SCORE_DIV} AS s,
              CASE WHEN o_totalprice > {TE_PRICE_CUT} THEN 1 ELSE 0 END AS y
@@ -431,57 +359,6 @@ AUC_SCORE_DIV = 50_000
     FROM agg
     """,
 )
-def q_auc_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact ROC-AUC of a coarse integer model score against the
-    "big order" label, via the Mann-Whitney rank-sum identity
-    AUC = (#concordant + ½·#tied) / (n_pos·n_neg) — the evaluation
-    every trained quality/contamination classifier gets before its
-    scores gate a corpus. Everything is integer: per-score positive/
-    negative counts, a running below-count, and
-    2U = Σ_s np(s)·(2·neg_below(s) + nn(s)), reported with
-    auc_ppm = ⌊10⁶·2U / (2·n_pos·n_neg)⌋.
-
-    Plan: one hash-aggregate to ≤|distinct scores| rows (map-side
-    partials over the scan), then a global running window over that
-    bounded aggregate (scores are price DIV {AUC_SCORE_DIV} — the
-    group count is bounded by the price range, not the row count) and
-    a 1-row fold. The INTERNAL products and auc_ppm are
-    DECIMAL(38,0)/HUGEINT-safe to n ~ 10¹² rows (np·below ≤ n² =
-    10²⁴, ×10⁶ = 10³⁰ < 10³⁸); the emitted `two_u` AUDIT column is a
-    BIGINT and overflows past n ≈ 4·10⁹ — at that scale read
-    `auc_ppm` (always ≤ 10⁶) and drop `two_u`, whose only purpose is
-    the harness's independent pairwise recount. The ties path is
-    exercised for real: {AUC_SCORE_DIV}-unit buckets put thousands of
-    orders on each score."""
-    lab = table(spark, sf_dir, "orders").select(
-        F.expr(f"CAST(floor(o_totalprice) AS BIGINT) DIV {AUC_SCORE_DIV}").alias("s"),
-        F.when(F.col("o_totalprice") > TE_PRICE_CUT, 1).otherwise(0).alias("y"),
-    )
-    from pyspark.sql import Window
-
-    per = lab.groupBy("s").agg(
-        F.sum("y").cast("long").alias("np"),
-        (F.count(F.lit(1)) - F.sum("y")).cast("long").alias("nn"),
-    )
-    w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
-    cum = per.withColumn("below", F.coalesce(F.sum("nn").over(w), F.lit(0)))
-    agg = cum.agg(
-        F.sum("np").cast("long").alias("n_pos"),
-        F.sum("nn").cast("long").alias("n_neg"),
-        F.expr(
-            "sum(CAST(np AS DECIMAL(38,0)) * (2 * below)"
-            " + CAST(np AS DECIMAL(38,0)) * nn)"
-        ).alias("two_u_w"),
-    )
-    return agg.select(
-        "n_pos",
-        "n_neg",
-        F.col("two_u_w").cast("long").alias("two_u"),
-        F.expr(
-            "CAST(two_u_w * 1000000"
-            " DIV (2 * CAST(n_pos AS DECIMAL(38,0)) * n_neg) AS BIGINT)"
-        ).alias("auc_ppm"),
-    )
 
 
 #: Contrastive sampling geometry: anchors are a deterministic residue
@@ -692,9 +569,10 @@ sql_query(
 _GG_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 
-@query(
+# Gini-gain feature ranking.
+sql_query(
     "feature_gini_gain",
-    oracle=f"""
+    f"""
     WITH pres AS MATERIALIZED (
       SELECT DISTINCT doc_id, source, unnest(list_distinct({_GG_TOKS})) AS tok
       FROM documents
@@ -736,70 +614,6 @@ _GG_TOKS = "list_filter(string_split(text, ' '), x -> x <> '')"
     FROM per_tok CROSS JOIN tot
     """,
 )
-def q_feature_gini_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini-gain feature ranking: for every vocabulary token, the exact
-    decision-tree split score for predicting `source` from token
-    presence — gain = Gini(parent) - weighted Gini(children), which
-    reduces over sufficient statistics to
-    (S_L*n*n_R + S_R*n*n_L - S_P*n_L*n_R) / (n^2*n_L*n_R) with
-    S_X = sum over classes of member-count^2, so the whole ranking is
-    exact integer arithmetic in ppm (signed split-division). The
-    right-child statistic never needs an outer join: S_R = Q_P - 2*XC
-    + S_L with XC = sum(n_c * n_Lc) over classes present on the left.
-
-    Plan: one distinct (doc, token, source) explode -> (token, source)
-    hash-agg -> (token) re-agg against the broadcast 20-row class
-    table and 1-row totals; per-token arithmetic is a projection.
-    Scales as one shuffle over the presence relation; the class table
-    is the legitimate broadcast (label cardinality, not data size).
-
-    Reference parity: no counterpart; the feature-selection companion
-    to the kNN/Rocchio/logit classifier audits in this family.
-    """
-    docs = table(spark, sf_dir, "documents")
-    pres = docs.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split(F.col("text"), " ", -1), lambda x: x != "")
-            )
-        ).alias("tok"),
-    ).distinct()
-    parent = docs.groupBy("source").agg(
-        F.count_distinct(F.col("doc_id")).cast("long").alias("n_c")
-    )
-    tot = parent.agg(
-        F.sum("n_c").cast("long").alias("n"),
-        F.sum(F.col("n_c") * F.col("n_c")).cast("long").alias("q_p"),
-    )
-    lft = pres.groupBy("tok", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lc")
-    )
-    per_tok = (
-        lft.join(F.broadcast(parent), "source")
-        .groupBy("tok")
-        .agg(
-            F.sum("n_lc").cast("long").alias("n_l"),
-            F.sum(F.col("n_lc") * F.col("n_lc")).cast("long").alias("s_l"),
-            F.sum(F.col("n_c") * F.col("n_lc")).cast("long").alias("xc"),
-        )
-    )
-    return per_tok.crossJoin(F.broadcast(tot)).selectExpr(
-        "tok",
-        "n_l AS n_with",
-        "CAST(n - n_l AS BIGINT) AS n_without",
-        "CAST(CASE WHEN n_l = 0 OR n_l = n THEN 0"
-        "     ELSE (CASE WHEN CAST(s_l AS DECIMAL(38,0)) * n * (n - n_l)"
-        "                     + CAST(q_p - 2 * xc + s_l AS DECIMAL(38,0)) * n * n_l"
-        "                     >= CAST(q_p AS DECIMAL(38,0)) * n_l * (n - n_l)"
-        "                THEN 1 ELSE -1 END)"
-        "          * (abs(CAST(s_l AS DECIMAL(38,0)) * n * (n - n_l)"
-        "                 + CAST(q_p - 2 * xc + s_l AS DECIMAL(38,0)) * n * n_l"
-        "                 - CAST(q_p AS DECIMAL(38,0)) * n_l * (n - n_l)) * 1000000"
-        "             DIV (CAST(n AS DECIMAL(38,0)) * n * n_l * (n - n_l)))"
-        " END AS BIGINT) AS gini_gain_ppm",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -900,9 +714,10 @@ def q_quantile_normalize_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 NEYMAN_BUDGET = 1_000
 
 
-@query(
+# Neyman optimal stratified-sample allocation.
+sql_query(
     "neyman_allocation_sources",
-    oracle=f"""
+    f"""
     WITH st AS (
       SELECT source,
              CAST(count(*) AS BIGINT) AS n_docs,
@@ -936,64 +751,3 @@ NEYMAN_BUDGET = 1_000
     FROM ranked
     """,
 )
-def q_neyman_allocation_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neyman optimal stratified-sample allocation: each source's share
-    of a {NEYMAN_BUDGET}-doc budget proportional to N_h * S_h — which
-    for the integer variance NUMERATOR V_h = N*sum(x^2) - (sum x)^2 is
-    exactly floor(sqrt(V_h)) (N_h*S_h = sqrt(V_h)/1), so the weight
-    needs ONE portable operation beyond integer moments: IEEE-754 sqrt
-    is correctly rounded, hence floor(sqrt(bigint)) is deterministic
-    and identical in both engines. Exact-total rounding by Hamilton's
-    largest remainder (ties by source name), reusing the apportionment
-    contract of `split_apportion_hamilton`: sum(alloc) == budget
-    EXACTLY — minimum-variance sampling under a fixed label budget,
-    the design that beats proportional allocation when strata have
-    unequal spread.
-
-    Plan: one moment hash-agg to |sources| rows; everything after runs
-    on that bounded relation (window over 20 rows).
-
-    Reference parity: sampling-design extension of the reference's
-    count-per-key aggregation (SURVEY.md section 2.4).
-    """
-    from pyspark.sql import Window
-
-    docs = table(spark, sf_dir, "documents")
-    st = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.expr(
-            "CAST(count(*) AS DECIMAL(38,0))"
-            " * sum(CAST(n_chars AS DECIMAL(38,0)) * n_chars)"
-            " - CAST(sum(n_chars) AS DECIMAL(38,0)) * sum(n_chars)"
-        ).alias("vnum"),
-    )
-    wts = st.select(
-        "source",
-        "n_docs",
-        F.floor(F.sqrt(F.col("vnum").cast("double"))).cast("long").alias("w"),
-    )
-    tot = wts.agg(F.sum("w").cast("long").alias("tw"))
-    quota = wts.crossJoin(F.broadcast(tot)).select(
-        "source",
-        "n_docs",
-        "w",
-        F.expr(f"CAST({NEYMAN_BUDGET} * w DIV tw AS BIGINT)").alias("fl"),
-        F.expr(f"CAST({NEYMAN_BUDGET} * w % tw AS BIGINT)").alias("rem"),
-    )
-    seats = quota.agg(
-        (F.lit(NEYMAN_BUDGET) - F.sum("fl")).cast("long").alias("extra")
-    )
-    ranked = quota.withColumn(
-        "rk", F.row_number().over(Window.orderBy(F.desc("rem"), "source"))
-    )
-    return ranked.crossJoin(F.broadcast(seats)).select(
-        "source",
-        "n_docs",
-        F.col("w").alias("neyman_weight"),
-        (
-            F.col("fl")
-            + F.when(F.col("rk") <= F.col("extra"), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("alloc"),
-    )

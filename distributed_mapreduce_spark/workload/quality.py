@@ -602,9 +602,10 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Per-language quality calibration.
+sql_query(
     "quality_by_language",
-    oracle=f"""
+    f"""
     WITH t AS (
       SELECT doc_id, lang,
              CAST(len({_sql_tokens('text')}) AS BIGINT) AS n_tokens
@@ -625,39 +626,6 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r GROUP BY lang
     """,
 )
-def q_quality_by_language(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language quality calibration: exact median and p90 token
-    length per declared language — the grouped thresholds a pipeline
-    needs because a global length gate (`quality_percentile_gate`)
-    systematically over-trims verbose languages and under-trims terse
-    ones.
-
-    Exact rank-based quantiles: position ceil(q*n) in the per-language
-    (n_tokens, doc_id) order — windows partitioned by lang (bounded
-    per-key state, no global sort), one re-agg.
-    """
-    docs = table(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id", "lang", F.size(_tokens(F.col("text"))).cast("long").alias("n_tokens")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("lang").orderBy("n_tokens", "doc_id")
-    r = t.select(
-        "lang",
-        "n_tokens",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(W.partitionBy("lang")).alias("n"),
-    )
-    return r.groupBy("lang").agg(
-        F.max("n").cast("long").alias("n_docs"),
-        F.max(
-            F.when(F.col("rn") == F.expr("(n + 1) div 2"), F.col("n_tokens"))
-        ).cast("long").alias("p50_tokens"),
-        F.max(
-            F.when(F.col("rn") == F.expr("(9 * n + 9) div 10"), F.col("n_tokens"))
-        ).cast("long").alias("p90_tokens"),
-    )
 
 
 #: Rank-blend selection depth.

@@ -40,7 +40,6 @@ _HOLE = re.compile(r"\x00(\d+)\x00")
 
 #: DuckDB spelling -> Spark spelling, one token each.
 _RENAMES = (
-    (re.compile(r"\s*//\s*"), " DIV "),
     (re.compile(r"\bAS\s+MATERIALIZED\s*\(", re.I), "AS ("),
     (re.compile(r"\bunnest\s*\(", re.I), "explode("),
     (re.compile(r"\bstring_split\s*\(", re.I), "split("),
@@ -48,13 +47,60 @@ _RENAMES = (
     (re.compile(r"\bregexp_matches\s*\(", re.I), "regexp_like("),
     (re.compile(r"\bquantile_cont\s*\(", re.I), "percentile("),
     (re.compile(r"\bepoch_us\s*\(", re.I), "unix_micros("),
+    (re.compile(r"\bHUGEINT\b", re.I), "DECIMAL(38, 0)"),
+    (re.compile(r"\blen\s*\(", re.I), "size("),
+    (re.compile(r"\blist_transform\s*\(", re.I), "transform("),
+    (re.compile(r"\b(STRING|BIGINT|INTEGER|INT|DOUBLE)\s*\[\s*\]", re.I), r"ARRAY<\1>"),
 )
 _HEX_OPEN = re.compile(r"\(\s*\x00(\d+)\x00\s*\|\|")
 _HEX_TYPE = re.compile(r"\s*::\s*(BIGINT|INT)\b", re.I)
+
+
+def _series(a: list[str], lit: Callable[[str], str | None]) -> str | None:
+    # Spark's two-argument sequence counts down when start > stop;
+    # DuckDB's generate_series is empty there.
+    if len(a) == 2:
+        return f"CASE WHEN {a[0]} <= {a[1]} THEN sequence({a[0]}, {a[1]}) ELSE array() END"
+    return f"sequence({', '.join(a)})"
+
+
+def _date_diff(a: list[str], lit: Callable[[str], str | None]) -> str | None:
+    # DuckDB counts unit boundaries crossed, Spark whole units elapsed;
+    # the two agree once both ends are truncated to the unit.
+    unit = lit(a[0]) if len(a) == 3 else None
+    if unit is None or not unit[1:-1].isalpha():
+        return None
+    u = unit[1:-1].upper()
+    return f"timestampdiff({u}, date_trunc('{u}', {a[1]}), date_trunc('{u}', {a[2]}))"
+
+
+#: DuckDB call -> Spark spelling, given the call's top-level arguments
+#: and a reader for a quoted-literal argument; ``None`` leaves the call.
+_CALLS = (
+    (re.compile(r"\bregexp_replace\s*\(", re.I),
+     lambda a, lit: f"regexp_replace({', '.join(a[:3])})"
+     if len(a) == 4 and lit(a[3]) == "'g'" else None),
+    (re.compile(r"\bregexp_extract_all\s*\(", re.I),
+     lambda a, lit: f"regexp_extract_all({a[0]}, {a[1]}, 0)" if len(a) == 2 else None),
+    (re.compile(r"\bdate_diff\s*\(", re.I), _date_diff),
+    (re.compile(r"\bgenerate_series\s*\(", re.I), _series),
+    (re.compile(r"\blist_distinct\s*\(", re.I),
+     lambda a, lit: f"array_distinct(filter({a[0]}, x -> x IS NOT NULL))" if len(a) == 1 else None),
+    (re.compile(r"\blist_reduce\s*\(", re.I),
+     lambda a, lit: f"aggregate(slice({a[0]}, 2, size({a[0]})), element_at({a[0]}, 1), {a[1]})"
+     if len(a) == 2 else None),
+)
 #: A ``[`` after one of these (or after no word at all) opens a list
 #: literal; after any other word, ``)`` or ``]`` it indexes.
 _LIST_AFTER = re.compile(
     r"(?:^|\b(?:SELECT|THEN|ELSE|WHEN|AND|OR|NOT|IN|BY|RETURN)|[^\w)\]\x00\s])\s*$", re.I
+)
+_DIV = re.compile(r"\s*//\s*")
+_WORD = re.compile(r"[\w.]+")
+#: Words that end an operand of ``//`` rather than name a column or call.
+_KEYWORDS = frozenset(
+    "SELECT DISTINCT FROM WHERE HAVING THEN ELSE WHEN CASE END AND OR NOT IN IS "
+    "LIKE BETWEEN BY ON AS RETURN DIV".split()
 )
 
 
@@ -72,29 +118,159 @@ def _close(s: str, i: int) -> int:
     raise ValueError(f"unbalanced {s[i]!r} at {i}")
 
 
+def _open(s: str, i: int) -> int:
+    """Index of the bracket opening the one that closes at ``s[i]``."""
+    pair = {")": "(", "]": "["}[s[i]]
+    depth = 0
+    for j in range(i, -1, -1):
+        if s[j] == s[i]:
+            depth += 1
+        elif s[j] == pair:
+            depth -= 1
+            if depth == 0:
+                return j
+    raise ValueError(f"unbalanced {s[i]!r} at {i}")
+
+
+def _split(body: str, sep: str) -> list[str]:
+    """``body`` cut at each ``sep`` outside brackets, parts stripped."""
+    parts, depth, start = [], 0, 0
+    for j, ch in enumerate(body):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == sep and depth == 0:
+            parts.append(body[start:j].strip())
+            start = j + 1
+    return [*parts, body[start:].strip()]
+
+
+def _name_start(s: str, j: int) -> int:
+    """Start of the name (word characters, ``.`` and literal holes)
+    that ends at ``s[j]``; ``j`` when none does."""
+    while j and (s[j - 1].isalnum() or s[j - 1] in "_.\x00"):
+        j -= 1
+    return j
+
+
+def _factor_start(s: str, j: int) -> int | None:
+    """Start of the operand factor ending at ``s[:j]`` (a name, a call,
+    a bracketed group, any of them with ``::T`` casts), or ``None``."""
+    while True:
+        j = len(s[:j].rstrip())
+        if j and s[j - 1] in ")]":
+            j = _open(s, j - 1)
+            if s[j] == "[":  # an index: its base comes before it
+                continue
+            k = len(s[:j].rstrip())
+            if (n := _name_start(s, k)) < k and s[n:k].upper() not in _KEYWORDS:
+                j = n
+        elif (n := _name_start(s, j)) < j and s[n:j].upper() not in _KEYWORDS:
+            j = n
+        else:
+            return None
+        k = len(s[:j].rstrip())
+        if s[k - 2:k] != "::":
+            return j
+        j = k - 2
+
+
+def _operator_before(s: str, j: int) -> int | None:
+    """Start of the ``*``, ``/``, ``%`` or ``DIV`` ending at ``s[:j]``."""
+    k = len(s[:j].rstrip())
+    if k and s[k - 1] in "*%/":
+        return k - 1
+    return k - 3 if s[k - 3:k] == "DIV" and _name_start(s, k) == k - 3 else None
+
+
+def _factor_end(s: str, j: int) -> int | None:
+    """End of the operand factor starting at or after ``s[j]``, or ``None``."""
+    j += len(s[j:]) - len(s[j:].lstrip())
+    if s[j:j + 1] == "(":
+        end = _close(s, j) + 1
+    elif (name := _WORD.match(s, j)) and name.group().upper() not in _KEYWORDS:
+        end = name.end()
+    else:
+        return None
+    while True:
+        k = end + len(s[end:]) - len(s[end:].lstrip())
+        if s[k:k + 1] in ("(", "["):
+            end = _close(s, k) + 1
+        elif s[k:k + 2] == "::" and (name := _WORD.match(s, k + 2)):
+            end = name.end()
+        else:
+            return end
+
+
+def _spell_div(s: str) -> str:
+    """``a // b`` -> ``a DIV b``, except where an operand is a
+    ``HUGEINT``: ``DIV`` returns a BIGINT that wraps past 2^63, so that
+    quotient is spelled ``CAST((a - a % b) / b AS HUGEINT)``, exact in
+    DECIMAL(38, 0) and truncated toward zero like DuckDB's."""
+    pos, huge = 0, "HUGEINT" in s.upper()
+    while m := _DIV.search(s, pos):
+        start = end = None
+        if huge:
+            start = m.start()
+            # The left operand runs back over factors joined by * / % DIV.
+            while (start := _factor_start(s, start)) is not None:
+                if (op := _operator_before(s, start)) is None:
+                    break
+                start = op
+            end = _factor_end(s, m.end())
+        if start is None or end is None or "HUGEINT" not in s[start:end].upper():
+            s = f"{s[:m.start()]} DIV {s[m.end():]}"
+            pos = m.start() + 5
+            continue
+        a, b = s[start:m.start()].strip(), s[m.end():end].strip()
+        s = f"{s[:start]}CAST((({a}) - ({a}) % ({b})) / ({b}) AS HUGEINT){s[end:]}"
+        pos = start + 1
+    return s
+
+
 def to_spark(sql: str) -> str:
-    """Spell a DuckDB oracle for Spark's parser with a closed map of ten
-    rules: ``a // b`` -> ``a DIV b``; ``AS MATERIALIZED (`` -> ``AS (``;
-    ``unnest``, ``string_split``, ``list_filter``, ``regexp_matches``,
-    ``quantile_cont`` and ``epoch_us`` -> ``explode``, ``split``,
-    ``filter``, ``regexp_like``, ``percentile`` and ``unix_micros``;
+    """Spell a DuckDB oracle for Spark's parser with a closed map of
+    twenty-one rules. Renames: ``a // b`` -> ``a DIV b``; ``AS
+    MATERIALIZED (`` -> ``AS (``; ``unnest``, ``string_split``,
+    ``list_filter``, ``regexp_matches``, ``quantile_cont``,
+    ``epoch_us``, ``len`` and ``list_transform`` -> ``explode``,
+    ``split``, ``filter``, ``regexp_like``, ``percentile``,
+    ``unix_micros``, ``size`` and ``transform``; ``HUGEINT`` ->
+    ``DECIMAL(38, 0)``; ``T[]`` -> ``ARRAY<T>``. Calls:
     ``('0x' || e)::BIGINT`` (or ``::INT``) -> ``CAST(conv(e, 16, 10) AS
-    BIGINT)``; a ``[a, b]`` list literal (not an index) -> ``array(a,
-    b)``. Quoted literals and comments pass through verbatim, so a
-    ``/*+ … */`` hint survives.
+    BIGINT)``; ``regexp_replace(s, p, r, 'g')`` drops the flag (Spark
+    always replaces every match); ``regexp_extract_all(s, p)`` gains
+    DuckDB's default group 0; ``date_diff('unit', a, b)`` ->
+    ``timestampdiff`` between the unit-truncated ends;
+    ``generate_series`` -> ``sequence`` (empty, not descending, when
+    start > stop); ``list_distinct(l)`` -> ``array_distinct`` over
+    ``l``'s non-NULL elements; ``list_reduce(l, f)`` -> ``aggregate``
+    from ``l``'s first element. Brackets: a ``[a, b]`` list literal ->
+    ``array(a, b)``; DuckDB's 1-based ``x[i]`` -> ``try_element_at(x,
+    nullif(i, 0))``, which like DuckDB reads NULL past either end and
+    counts a negative ``i`` from the back (a ``'key'`` or a slice is
+    left as it is). Quoted literals and comments pass through verbatim,
+    so a ``/*+ … */`` hint survives.
 
     Not every rule keeps the value: DuckDB's ``//`` on a DOUBLE divides
-    exactly where ``DIV`` truncates, ``split`` takes a Java regex where
-    ``string_split`` takes a plain separator, and the regex dialects
-    differ (RE2 against Java). A query runs through this map only once
-    its rows and dtypes equal the oracle's."""
+    exactly where ``DIV`` truncates, a ``HUGEINT`` that reaches ``//``
+    through a column still meets ``DIV``, ``split`` takes a Java regex
+    where ``string_split`` takes a plain separator, Spark's parser
+    unescapes a backslash in a literal that DuckDB keeps, and the regex
+    dialects differ (RE2 against Java). A query runs through this map
+    only once its rows and dtypes equal the oracle's."""
     opaque: list[str] = []
 
     def hide(m: re.Match) -> str:
         opaque.append(m.group(0))
         return f"\x00{len(opaque) - 1}\x00"
 
-    s = _OPAQUE.sub(hide, sql)
+    def lit(arg: str) -> str | None:
+        hole = _HOLE.fullmatch(arg)
+        return opaque[int(hole.group(1))] if hole else None
+
+    s = _spell_div(_OPAQUE.sub(hide, sql))
     for pat, repl in _RENAMES:
         s = pat.sub(repl, s)
     pos = 0
@@ -106,12 +282,29 @@ def to_spark(sql: str) -> str:
             continue
         inner = s[m.end():end].strip()
         s = f"{s[:m.start()]}CAST(conv({inner}, 16, 10) AS {cast.group(1)}){s[cast.end():]}"
+    for pat, spell in _CALLS:
+        pos = 0
+        while m := pat.search(s, pos):
+            end = _close(s, m.end() - 1)
+            new = spell(_split(s[m.end():end], ","), lit)
+            if new is not None:
+                s = f"{s[:m.start()]}{new}{s[end + 1:]}"
+            pos = m.start() + 1
     pos = 0
     while (i := s.find("[", pos)) >= 0:
-        if _LIST_AFTER.search(s, 0, i):
-            end = _close(s, i)
-            s = f"{s[:i]}array({s[i + 1:end]}){s[end + 1:]}"
+        end = _close(s, i)
+        body = s[i + 1:end]
         pos = i + 1
+        j = len(s[:i].rstrip())
+        # The lookbehind needs only the word before the bracket.
+        if _LIST_AFTER.search(s, max(0, j - 8), i):
+            s = f"{s[:i]}array({body}){s[end + 1:]}"
+        elif lit(body.strip()) is None and len(_split(body.replace("::", ""), ":")) == 1:
+            while s[j - 1] in ")]" and s[(j := _open(s, j - 1))] == "[":
+                pass
+            j = _name_start(s, j)
+            s = f"{s[:j]}try_element_at({s[j:i].rstrip()}, nullif({body}, 0)){s[end + 1:]}"
+            pos = j + len("try_element_at(")
     return _HOLE.sub(lambda m: opaque[int(m.group(1))], s)
 
 
@@ -207,9 +400,9 @@ def sql_query(name: str, sql: str) -> QueryFn:
     (``tools/check_correctness.py`` groups cost by ``fn.__module__``).
 
     Oracles write ``STRING``, not DuckDB's bare ``VARCHAR``, which Spark
-    rejects. Spellings outside the :func:`to_spark` map (``HUGEINT``,
-    ``list_reduce``, 1-based list indexing, ``regexp_replace(…, 'g')``)
-    keep a query on its DataFrame builder."""
+    rejects. Spellings outside the :func:`to_spark` map (``list_zip``,
+    ``range``, ``list_sum``, an ``ORDER BY`` inside an aggregate,
+    ``xor``, ``time_bucket``) keep a query on its DataFrame builder."""
     names = sorted(set(_TABLE_WORD.findall(sql)))
     spark_sql = to_spark(sql)
 

@@ -974,9 +974,11 @@ def q_mode_quantity_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Chi-square test of independence (source x lang contingency).
 
 
-@query(
+# Chi-square test of independence on the source x lang contingency
+# table, exact to the per-cell floor.
+sql_query(
     "independence_chi2_source_lang",
-    oracle="""
+    """
     WITH o AS (
       SELECT source, lang, CAST(count(*) AS BIGINT) AS obs
       FROM documents GROUP BY source, lang
@@ -1002,52 +1004,6 @@ def q_mode_quantity_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cells
     """,
 )
-def q_independence_chi2_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square test of independence on the source x lang
-    contingency table, exact to the per-cell floor: chi2 = sum over
-    ALL cells (including structural zeros, via the dimension cross
-    join) of (obs*N - R*C)^2 / (R*C*N) in millionths — the integer
-    cross-multiplied form of (O-E)^2/E that never materializes a float
-    expectation. Degrees of freedom (|rows|-1)(|cols|-1) reported so a
-    caller can look up the critical value.
-
-    Plan: one contingency hash-agg, two margin re-aggs, a broadcast
-    cross join of the two SMALL margin relations (20 x 4 cells) to
-    restore structural zeros, then a 1-row fold in DECIMAL(38)/
-    HUGEINT. At 100 TB the only data pass is the first aggregate.
-
-    Reference parity: the independence-test companion to the drift
-    chi-square (`events_drift_chi2`), on the corpus dimensions.
-    """
-    docs = table(spark, sf_dir, "documents")
-    o = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("obs")
-    )
-    rm = o.groupBy("source").agg(F.sum("obs").cast("long").alias("r"))
-    cm = o.groupBy("lang").agg(F.sum("obs").cast("long").alias("c"))
-    tot = o.agg(
-        F.sum("obs").cast("long").alias("n"),
-        F.count_distinct("source").cast("long").alias("nr"),
-        F.count_distinct("lang").cast("long").alias("nc"),
-    )
-    cells = (
-        rm.crossJoin(F.broadcast(cm))
-        .join(o, ["source", "lang"], "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.coalesce("obs", F.lit(0)).alias("obs"), "r", "c", "n", "nr", "nc"
-        )
-    )
-    return cells.agg(
-        F.min("n").cast("long").alias("n"),
-        F.expr("CAST(min((nr - 1) * (nc - 1)) AS BIGINT)").alias("dof"),
-        F.expr(
-            "CAST(sum((CAST(obs AS DECIMAL(38,0)) * n - CAST(r AS DECIMAL(38,0)) * c)"
-            " * (CAST(obs AS DECIMAL(38,0)) * n - CAST(r AS DECIMAL(38,0)) * c)"
-            " * 1000000"
-            " DIV (CAST(r AS DECIMAL(38,0)) * c * n)) AS BIGINT)"
-        ).alias("chi2_e6"),
-    )
 
 
 #: Verbatim-SQL LATERAL top-N: the SAME text runs on Spark (lateral

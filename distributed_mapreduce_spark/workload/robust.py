@@ -117,9 +117,10 @@ sql_query(
 )
 
 
-@query(
+# Statistical QC.
+sql_query(
     "supplier_return_outliers",
-    oracle="""
+    """
     WITH per_s AS (
       SELECT l_suppkey,
              CAST(count(*) AS BIGINT) AS n_lines,
@@ -146,49 +147,6 @@ sql_query(
           * CAST(big_n - big_r AS HUGEINT)
     """,
 )
-def q_supplier_return_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical QC: suppliers whose return rate deviates more than
-    3 binomial standard deviations from the corpus-wide rate — the
-    exact inequality N·(N·r_i − n_i·R)² > 9·n_i·R·(N−R) evaluated in
-    DECIMAL(38,0) (no float p̂, no overflow at any scale; the same
-    cross-multiplication trick as `events_hourly_anomaly`).
-
-    Plan: one per-supplier hash aggregate, one 1-row global roll-up
-    broadcast back (legitimate 1-row broadcast), one filter — the
-    whole test is two aggregates regardless of corpus size."""
-    li = table(spark, sf_dir, "lineitem")
-    per_s = li.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-        F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
-        .cast("long")
-        .alias("n_returns"),
-    )
-    g = per_s.agg(
-        F.sum("n_lines").cast("long").alias("big_n"),
-        F.sum("n_returns").cast("long").alias("big_r"),
-    )
-    j = per_s.crossJoin(F.broadcast(g))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    # widen the OPERANDS before the inner products (64-bit
-    # big_n*n_returns wraps silently in Spark, raises in DuckDB)
-    dev = dec(F.col("big_n")) * dec(F.col("n_returns")) - dec(F.col("n_lines")) * dec(
-        F.col("big_r")
-    )
-    lhs = dec(F.col("big_n")) * dev * dev
-    rhs = (
-        dec(F.lit(9))
-        * dec(F.col("n_lines"))
-        * dec(F.col("big_r"))
-        * dec(F.col("big_n") - F.col("big_r"))
-    )
-    return j.filter(lhs > rhs).select(
-        "l_suppkey",
-        "n_lines",
-        "n_returns",
-        F.expr("(CAST(n_returns AS DECIMAL(38,0)) * 10000) DIV n_lines")
-        .cast("long")
-        .alias("return_bp"),
-    )
 
 
 @query(
@@ -334,9 +292,12 @@ def q_supplier_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Herfindahl–Hirschman concentration index of supplier revenue within
+# each nation, in basis points (Σ share_i² · 10⁴ = Σr_i² · 10⁴ //
+# (Σr_i)² — 10000 = monopoly, → 0 = atomized).
+sql_query(
     "nation_supplier_hhi",
-    oracle="""
+    """
     WITH rev AS (
       SELECT s.s_nationkey, l.l_suppkey,
              CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -352,54 +313,12 @@ def q_supplier_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rev GROUP BY s_nationkey
     """,
 )
-def q_nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl–Hirschman concentration index of supplier revenue
-    within each nation, in basis points (Σ share_i² · 10⁴ =
-    Σr_i² · 10⁴ // (Σr_i)² — 10000 = monopoly, → 0 = atomized): the
-    sourcing-concentration audit, computed with exact integer cents
-    and the remainder-corrected floor division (wide products in
-    DECIMAL(38,0) on Spark, HUGEINT in the oracle — the hardened
-    pattern from the assortativity audit).
-
-    Plan: per-(nation, supplier) revenue aggregate, then one
-    per-nation reduce of the squared-sum statistics."""
-    li = table(spark, sf_dir, "lineitem")
-    sup = table(spark, sf_dir, "supplier")
-    rev = (
-        li.join(sup.select("s_suppkey", "s_nationkey"),
-                li["l_suppkey"] == F.col("s_suppkey"))
-        .groupBy("s_nationkey", "l_suppkey")
-        .agg(
-            (F.sum(F.col("l_extendedprice").cast("decimal(18,2)")) * 100)
-            .cast("long")
-            .alias("rc")
-        )
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    s = rev.groupBy("s_nationkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-        F.sum(dec(F.col("rc")) * dec(F.col("rc"))).alias("_sq"),
-        F.sum("rc").cast("long").alias("_tot"),
-    )
-    s = s.withColumn("_num", (F.col("_sq") * 10000).cast("decimal(38,0)")).withColumn(
-        "_den", dec(F.col("_tot")) * dec(F.col("_tot"))
-    )
-    s = s.withColumn("_q0", F.expr("_num DIV _den"))
-    return s.withColumn(
-        "hhi_bp",
-        (
-            F.col("_q0")
-            - F.when(dec(F.col("_q0")) * F.col("_den") > F.col("_num"), 1).otherwise(0)
-            + F.when(
-                dec(F.col("_q0") + 1) * F.col("_den") <= F.col("_num"), 1
-            ).otherwise(0)
-        ).cast("long"),
-    ).select("s_nationkey", "n_suppliers", "hhi_bp")
 
 
-@query(
+# Distribution-drift monitor.
+sql_query(
     "events_drift_tv",
-    oracle="""
+    """
     WITH b AS (
       SELECT (epoch_us(min(ts)) + epoch_us(max(ts))) // 2 AS mid_us
       FROM events
@@ -430,62 +349,13 @@ def q_nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM contrib
     """,
 )
-def q_events_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-drift monitor: total-variation distance between the
-    event-type mix of the stream's first and second time halves
-    (boundary = midpoint of the observed span). TV = ½·Σ|p₁−p₂| is the
-    drift statistic that needs no logarithm, so — unlike PSI or KL —
-    it is computable in EXACT integer arithmetic: per-type contribution
-    ⌊|n₁·t₂ − n₂·t₁|·10⁶ / (2·t₁·t₂)⌋ (cross-multiplied shares;
-    ≤ 10²⁴·10⁶ at 10¹² events — inside HUGEINT/DECIMAL(38,0)), summed
-    to the global score repeated per row.
-
-    Plan: one 2-value bounds aggregate broadcast back over the scan,
-    one hash-aggregate to |event_type| rows; the TV window runs over
-    those ≤|types| aggregated rows (bounded-window class)."""
-    ev = table(spark, sf_dir, "events")
-    b = ev.agg(
-        F.expr(
-            "CAST((unix_micros(min(ts)) + unix_micros(max(ts))) div 2 AS BIGINT)"
-        ).alias("mid_us")
-    )
-    halves = ev.crossJoin(F.broadcast(b)).select(
-        "event_type",
-        F.when(F.unix_micros("ts") <= F.col("mid_us"), 0).otherwise(1).alias("half"),
-    )
-    per = halves.groupBy("event_type").agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).cast("long").alias("n_first"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).cast("long").alias("n_second"),
-    )
-    tot = per.agg(
-        F.sum("n_first").cast("long").alias("t1"),
-        F.sum("n_second").cast("long").alias("t2"),
-    )
-    contrib = per.crossJoin(F.broadcast(tot)).select(
-        "event_type",
-        "n_first",
-        "n_second",
-        F.expr(
-            "CAST(CAST(n_first AS DECIMAL(38,0)) * 10000 DIV t1 AS BIGINT)"
-        ).alias("share_first_bp"),
-        F.expr(
-            "CAST(CAST(n_second AS DECIMAL(38,0)) * 10000 DIV t2 AS BIGINT)"
-        ).alias("share_second_bp"),
-        F.expr(
-            "CAST(abs(CAST(n_first AS DECIMAL(38,0)) * t2"
-            "         - CAST(n_second AS DECIMAL(38,0)) * t1)"
-            " * 1000000 DIV (CAST(2 AS DECIMAL(38,0)) * t1 * t2) AS BIGINT)"
-        ).alias("tv_contrib_e6"),
-    )
-    w = Window.partitionBy()
-    return contrib.withColumn(
-        "tv_total_e6", F.sum("tv_contrib_e6").over(w).cast("long")
-    )
 
 
-@query(
+# Chi-square-kernel drift monitor between the event-type mixes of the
+# stream's two time halves.
+sql_query(
     "events_drift_chi2",
-    oracle="""
+    """
     WITH b AS (
       SELECT (epoch_us(min(ts)) + epoch_us(max(ts))) // 2 AS mid_us
       FROM events
@@ -526,71 +396,6 @@ def q_events_drift_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM terms
     """,
 )
-def q_events_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square-kernel drift monitor between the event-type mixes of
-    the stream's two time halves: per type the kernel (p1-p2)²/p̄ on
-    TRUNCATED-ppm shares — the χ² shape that weights rare-type shifts
-    more than TV does, made integer-exact by the same no-log/no-float
-    policy as `events_drift_tv`. The statistic is a documented integer
-    surrogate: shares are truncated to ppm BEFORE squaring, so every
-    intermediate stays ≤ 10¹² (BIGINT-safe at any corpus size — the
-    exact-rational χ² numerator would overflow int128 at 10¹² events).
-    Divisions only ever see non-negative numerators (abs + separate
-    sign) because DuckDB `//` floors while Spark DIV truncates — they
-    agree only on non-negatives; a sub-ppm pooled share yields a 0
-    kernel term by the documented CASE guard.
-
-    Plan: identical to `events_drift_tv` — one 2-value bounds
-    aggregate broadcast over the scan, one hash-agg to |event_type|
-    rows, the total window over those ≤|types| aggregated rows
-    (bounded-window class)."""
-    ev = table(spark, sf_dir, "events")
-    b = ev.agg(
-        F.expr(
-            "CAST((unix_micros(min(ts)) + unix_micros(max(ts))) div 2 AS BIGINT)"
-        ).alias("mid_us")
-    )
-    halves = ev.crossJoin(F.broadcast(b)).select(
-        "event_type",
-        F.when(F.unix_micros("ts") <= F.col("mid_us"), 0).otherwise(1).alias("half"),
-    )
-    per = halves.groupBy("event_type").agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).cast("long").alias("n_first"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).cast("long").alias("n_second"),
-    )
-    tot = per.agg(
-        F.sum("n_first").cast("long").alias("t1"),
-        F.sum("n_second").cast("long").alias("t2"),
-    )
-    contrib = per.crossJoin(F.broadcast(tot)).select(
-        "event_type",
-        "n_first",
-        "n_second",
-        F.expr(
-            "CAST(CASE WHEN CAST(n_first AS DECIMAL(38,0)) * t2"
-            "               >= CAST(n_second AS DECIMAL(38,0)) * t1"
-            "          THEN 1 ELSE -1 END"
-            "     * (abs(CAST(n_first AS DECIMAL(38,0)) * t2"
-            "            - CAST(n_second AS DECIMAL(38,0)) * t1)"
-            "        * 1000000 DIV (CAST(t1 AS DECIMAL(38,0)) * t2)) AS BIGINT)"
-        ).alias("delta_ppm"),
-        F.expr(
-            "CAST(CAST(n_first + n_second AS DECIMAL(38,0)) * 1000000"
-            " DIV (t1 + t2) AS BIGINT)"
-        ).alias("pooled_ppm"),
-    )
-    terms = contrib.withColumn(
-        "chi_term_e6",
-        F.expr(
-            "CAST(CASE WHEN pooled_ppm = 0 THEN 0"
-            "          ELSE CAST(delta_ppm AS DECIMAL(38,0)) * delta_ppm"
-            "               DIV pooled_ppm END AS BIGINT)"
-        ),
-    )
-    w = Window.partitionBy()
-    return terms.withColumn(
-        "chi2_total_e6", F.sum("chi_term_e6").over(w).cast("long")
-    )
 
 
 @query(
@@ -721,9 +526,11 @@ def q_events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Theil–Sen robust trend per event type — the breakdown-resistant
+# counterpart of `events_daily_trend`'s OLS slope (Sen, JASA 1968).
+sql_query(
     "robust_theil_sen_trend",
-    oracle="""
+    """
     WITH daily AS MATERIALIZED (
       SELECT event_type,
              CAST(date_diff('day', TIMESTAMP '1970-01-01',
@@ -767,78 +574,6 @@ def q_events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY m.event_type
     """,
 )
-def q_robust_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil–Sen robust trend per event type — the breakdown-resistant
-    counterpart of `events_daily_trend`'s OLS slope (Sen, JASA 1968):
-    the slope is the LOWER MEDIAN of all pairwise daily slopes
-    ⌊10⁶(y₂−y₁)/(x₂−x₁)⌋ (exact micro-units, truncation toward zero on
-    both engines), and the intercept is the lower median of the daily
-    residuals 10⁶y − slope·x. Up to ~29% of days can be corrupted
-    (load spikes, outages) without moving the estimate.
-
-    Plan: events aggregate to one row per (type, day) FIRST — the
-    pairwise O(D²) slope join runs over the CALENDAR-bounded daily
-    relation (D grows with elapsed days, not data volume), so at
-    100 TB the cost is still the single scan + one hash-agg. Medians
-    via partitioned rank windows over ≤D² rows per type."""
-    ev = table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            "event_type",
-            F.expr(
-                "CAST(datediff(date_trunc('day', ts),"
-                " TIMESTAMP '1970-01-01') AS BIGINT)"
-            ).alias("x"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-    )
-    nd = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days")
-    )
-    a = daily.alias("a")
-    b = daily.alias("b")
-    slopes = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.col("a.x") < F.col("b.x")),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        F.expr("(1000000 * (b.y - a.y)) DIV (b.x - a.x)").alias("slope_e6"),
-    )
-    ws = Window.partitionBy("event_type").orderBy("slope_e6")
-    wc = Window.partitionBy("event_type")
-    med = (
-        slopes.withColumn("rn", F.row_number().over(ws))
-        .withColumn("n_pairs", F.count(F.lit(1)).over(wc).cast("long"))
-        .filter(F.expr("rn = (n_pairs + 1) DIV 2"))
-        .select("event_type", "n_pairs", "slope_e6")
-    )
-    resid = daily.join(med, "event_type").select(
-        "event_type",
-        (F.lit(1_000_000) * F.col("y") - F.col("slope_e6") * F.col("x")).alias(
-            "r_e6"
-        ),
-    )
-    wr = Window.partitionBy("event_type").orderBy("r_e6")
-    rmed = (
-        resid.withColumn("rn", F.row_number().over(wr))
-        .withColumn("nn", F.count(F.lit(1)).over(wc).cast("long"))
-        .filter(F.expr("rn = (nn + 1) DIV 2"))
-        .select("event_type", F.col("r_e6").alias("intercept_e6"))
-    )
-    return (
-        med.join(nd, "event_type")
-        .join(rmed, "event_type")
-        .select(
-            "event_type",
-            "n_days",
-            "n_pairs",
-            F.col("slope_e6").cast("long").alias("slope_e6"),
-            F.col("intercept_e6").cast("long").alias("intercept_e6"),
-        )
-        .orderBy("event_type")
-    )
 
 
 #: Autocorrelation lags audited (days).

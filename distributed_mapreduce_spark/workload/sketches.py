@@ -38,18 +38,6 @@ BLOOM_K = 3
 MEMBER_NATION_LT = 5
 
 
-def _pos(key: Column, j: int) -> Column:
-    """j-th bit position of a key: md5-derived uint32 % BLOOM_BITS."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"bl{j}_"), key.cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % BLOOM_BITS
-    )
-
-
 def _sql_pos(key: str, j: int) -> str:
     return (
         f"(('0x' || substr(md5('bl{j}_' || CAST({key} AS STRING)), 1, 8))::BIGINT"
@@ -69,52 +57,6 @@ _BUILD_SQL = f"""
 """
 
 
-def _bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = table(spark, sf_dir, "customer").filter(
-        F.col("c_nationkey") < MEMBER_NATION_LT
-    )
-    key = F.col("c_custkey")
-    pos = cust.select(
-        F.explode(F.array(*[_pos(key, j) for j in range(BLOOM_K)])).alias("p")
-    )
-    return (
-        pos.select(
-            (F.col("p") / WORD_BITS).cast("long").alias("word_idx"),
-            # F.shiftleft only accepts a literal shift amount; expr()
-            # reaches the variable-shift form of the same JVM function.
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(p % {WORD_BITS} AS INT))").alias("m"),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("m").cast("long").alias("bits"))
-    )
-
-
-def _bloom_verdicts(filt: DataFrame, probes: DataFrame) -> DataFrame:
-    """(key, maybe) verdict per probe key: all K bit positions set in
-    the filter relation. Shared by the probe-scoring query and the
-    join-pruning query."""
-    key = F.col("key")
-    expanded = probes.select(
-        "key", F.explode(F.array(*[_pos(key, j) for j in range(BLOOM_K)])).alias("p")
-    )
-    mask = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(p % {WORD_BITS} AS INT))")
-    hits = (
-        expanded.withColumn("word_idx", (F.col("p") / WORD_BITS).cast("long"))
-        .join(F.broadcast(filt), "word_idx", "left")
-        .select(
-            "key",
-            F.when(
-                F.col("bits").isNotNull() & ((F.col("bits").bitwiseAND(mask)) == mask), 1
-            )
-            .otherwise(0)
-            .alias("hit"),
-        )
-    )
-    return hits.groupBy("key").agg(
-        F.when(F.sum("hit") == BLOOM_K, 1).otherwise(0).alias("maybe")
-    )
-
-
 # Build a BLOOM_BITS-bit Bloom filter of the member-customer key set as
 # a relational aggregate: K=BLOOM_K portable hash positions per key,
 # exploded and bit_or-folded into BLOOM_BITS / WORD_BITS words.
@@ -125,9 +67,11 @@ sql_query(
 )
 
 
-@query(
+# Probe every distinct order customer key against the built filter and
+# score it against exact ground truth in the same plan.
+sql_query(
     "bloom_probe_stats",
-    oracle=f"""
+    f"""
     WITH filt AS ({_BUILD_SQL}),
     probes AS (SELECT DISTINCT o_custkey AS key FROM orders),
     expanded AS (
@@ -165,41 +109,6 @@ sql_query(
     FROM truth
     """,
 )
-def q_bloom_probe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe every distinct order customer key against the built filter
-    and score it against exact ground truth in the same plan: probe
-    count, maybe-count, true members, false positives (rate in bp) and
-    false negatives (provably 0 — asserted by the oracle match).
-
-    Plan: probes explode to K (key, position) rows, equi-join the
-    {BLOOM_BITS // WORD_BITS}-word filter (broadcast by size), reduce
-    to an all-bits-set verdict per key, join truth, aggregate once."""
-    filt = _bloom_build(spark, sf_dir)
-    probes = table(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("key")
-    ).distinct()
-    verdicts = _bloom_verdicts(filt, probes)
-    cust = table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("key"),
-        F.when(F.col("c_nationkey") < MEMBER_NATION_LT, 1).otherwise(0).alias("is_member"),
-    )
-    truth = verdicts.join(cust, "key")
-    fp = F.sum(F.when((F.col("maybe") == 1) & (F.col("is_member") == 0), 1).otherwise(0))
-    return truth.agg(
-        F.count(F.lit(1)).cast("long").alias("n_probes"),
-        F.sum("maybe").cast("long").alias("n_maybe"),
-        F.sum("is_member").cast("long").alias("n_true"),
-        fp.cast("long").alias("n_false_pos"),
-        F.sum(F.when((F.col("maybe") == 0) & (F.col("is_member") == 1), 1).otherwise(0))
-        .cast("long")
-        .alias("n_false_neg"),
-        F.floor(
-            fp * 10000.0
-            / F.nullif(F.count(F.lit(1)) - F.sum("is_member"), F.lit(0))
-        )
-        .cast("long")
-        .alias("fp_bp"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -264,77 +173,13 @@ _CMS_SQL = f"""
 """
 
 
-@query("cms_heavy_hitters", oracle=_CMS_SQL)
-def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch heavy hitters, certified in-plan against exact
-    counts (the `ann_recall_audit` methodology applied to the third
-    sketch family next to Bloom and HLL): build a {CMS_D}x{CMS_W}
-    counter grid over the token stream with portable md5-u32 row
-    hashes, probe it for the exact top-{CMS_TOPK} terms, and report
-    estimate, overcount (provably >= 0: CMS never undercounts), and
-    whether each estimate sits inside the 2N/w Markov bound — every
-    number exact and engine-portable, so the oracle checks the sketch
-    bit-for-bit.
-
-    Plan: counters are groupBy(row, bucket) counts — map-side
-    combinable, at most {CMS_D}*{CMS_W} rows survive regardless of
-    corpus size (the CMS compression guarantee, materialized
-    relationally); the probe joins {CMS_TOPK}x{CMS_D} rows against
-    that tiny relation. At 100 TB the counter table is still {CMS_D}x
-    {CMS_W} rows — THE reason one uses a CMS."""
-    docs = table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.explode(F.filter(F.split(F.col("text"), " ", -1), lambda x: x != "")).alias(
-            "term"
-        )
-    ).persist()
-
-    total = toks.agg(F.count(F.lit(1)).cast("long").alias("total"))
-    exact = (
-        toks.groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("exact_cnt"))
-        .orderBy(F.desc("exact_cnt"), F.asc("term"))
-        .limit(CMS_TOPK)
-    )
-    counters = None
-    for j in range(CMS_D):
-        cj = (
-            toks.select(_cms_bucket(F.col("term"), j).alias("b"))
-            .groupBy("b")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .select(F.lit(j).alias("j"), "b", "c")
-        )
-        counters = cj if counters is None else counters.unionAll(cj)
-    probes = exact.select(
-        "term",
-        "exact_cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"), _cms_bucket(F.col("term"), j).alias("b")
-                    )
-                    for j in range(CMS_D)
-                ]
-            )
-        ).alias("p"),
-    ).select("term", "exact_cnt", F.col("p.j").alias("j"), F.col("p.b").alias("b"))
-    est = (
-        probes.join(counters, ["j", "b"])
-        .groupBy("term", "exact_cnt")
-        .agg(F.min("c").cast("long").alias("cms_estimate"))
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    return est.crossJoin(total).select(
-        "term",
-        "exact_cnt",
-        "cms_estimate",
-        (F.col("cms_estimate") - F.col("exact_cnt")).cast("long").alias("overcount"),
-        (
-            dec(F.col("cms_estimate") - F.col("exact_cnt")) * CMS_W
-            <= F.lit(2).cast("decimal(38,0)") * dec(F.col("total"))
-        ).alias("within_bound"),
-    )
+# Count-min sketch heavy hitters, certified in-plan against exact counts
+# (the `ann_recall_audit` methodology applied to the third sketch family
+# next to Bloom and HLL).
+sql_query(
+    "cms_heavy_hitters",
+    _CMS_SQL,
+)
 
 
 _PRUNED_JOIN_SQL = f"""
@@ -376,65 +221,11 @@ _PRUNED_JOIN_SQL = f"""
 """
 
 
-@query("bloom_pruned_join", oracle=_PRUNED_JOIN_SQL)
-def q_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Runtime semi-join reduction: prune the FACT side (orders) with
-    the member-customer Bloom filter BEFORE the join, then join exactly
-    — the dynamic-filter / runtime-row-group-pruning pattern every
-    warehouse uses to keep a selective dim⋈fact join from shuffling the
-    whole fact table. Bloom false positives survive the prune and are
-    eliminated by the exact join; false negatives cannot exist, so the
-    final (count, decimal revenue) MUST equal the plain join's — which
-    is exactly what the oracle asserts. `pruned_bp` records how much of
-    the fact side the filter dropped pre-shuffle (the 100 TB win: only
-    maybe-member rows ever enter the exchange).
-
-    Plan: filter build is a {BLOOM_BITS // WORD_BITS}-row aggregate;
-    the fact probe is an explode(K)-join against that broadcast
-    relation + a per-key verdict; the surviving rows take the normal
-    equi-join. At scale the verdict join is per DISTINCT key, not per
-    row (done here via the keys relation), so probe cost follows key
-    cardinality."""
-    filt = _bloom_build(spark, sf_dir)
-    orders = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    keys = orders.select(F.col("o_custkey").alias("key")).distinct()
-    passing = (
-        _bloom_verdicts(filt, keys)
-        .filter(F.col("maybe") == 1)
-        .select(F.col("key").alias("o_custkey"))
-    )
-    pruned = orders.join(passing, "o_custkey", "left_semi")
-    members = (
-        table(spark, sf_dir, "customer")
-        .filter(F.col("c_nationkey") < MEMBER_NATION_LT)
-        .select(F.col("c_custkey").alias("o_custkey"))
-    )
-    joined = pruned.join(members, "o_custkey")
-
-    agg_join = joined.agg(
-        F.count(F.lit(1)).cast("long").alias("n_joined"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("decimal(30,2)")
-        .cast("string")
-        .alias("revenue"),
-    )
-    agg_in = orders.agg(F.count(F.lit(1)).cast("long").alias("n_input"))
-    agg_pruned = pruned.agg(
-        F.count(F.lit(1)).cast("long").alias("n_after_prune")
-    )
-    return (
-        agg_join.crossJoin(agg_in)
-        .crossJoin(agg_pruned)
-        .select(
-            "n_joined",
-            "revenue",
-            "n_input",
-            "n_after_prune",
-            F.expr("((n_input - n_after_prune) * 10000) DIV n_input").alias(
-                "pruned_bp"
-            ),
-        )
-    )
+# Runtime semi-join reduction.
+sql_query(
+    "bloom_pruned_join",
+    _PRUNED_JOIN_SQL,
+)
 
 
 #: Certification bound for the merged-HLL estimate (percent).
@@ -512,57 +303,20 @@ KMV_SALTS = 8
 #: The two sources whose sketches the set-operation audit combines.
 KMV_SRC_A, KMV_SRC_B = "src0", "src1"
 
-_KMV_EST = (
+_SQL_KMV_EST = (
     f"CAST(CASE WHEN n_kmv < {KMV_K} THEN n_kmv"
-    f" ELSE ({KMV_K - 1} * 4294967296) DIV (h_k + 1) END AS BIGINT)"
+    f" ELSE ({KMV_K - 1} * 4294967296) // (h_k + 1) END AS BIGINT)"
 )
-_SQL_KMV_EST = _KMV_EST.replace(" DIV ", " // ")
 
 from distributed_mapreduce_spark.workload.quality import (  # noqa: E402
     _sql_ngrams as _kmv_sql_ngrams,
 )
 
-#: The sketched domain: bigram strings of the token stream (see
-#: `_kmv_hashes` for why not unigrams).
+#: The sketched domain: bigram strings of the token stream, not unigrams:
+#: the harness vocabulary is only ~60 words, which would leave every
+#: sketch in its exact n<K regime; bigram cardinality ~700 per source
+#: exercises the estimator.
 _bigrams_sql = _kmv_sql_ngrams("toks", 2)
-
-
-def _kmv_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(source, h): the distinct BIGRAM-hash sets per source (bigrams,
-    not unigrams — the harness vocabulary is only ~60 words, which
-    would leave every sketch in its exact n<K regime; bigram
-    cardinality ~700/source actually exercises the estimator)."""
-    from distributed_mapreduce_spark.workload.dedup import _hash_u32, _tokens
-    from distributed_mapreduce_spark.workload.quality import _ngrams
-
-    docs = table(spark, sf_dir, "documents")
-    return (
-        # token array materialized once per row: _ngrams references it
-        # ~5x inside non-codegen HOF lambdas
-        docs.select("source", _tokens(F.col("text")).alias("__toks"))
-        .select(
-            "source",
-            F.explode(_ngrams(F.col("__toks"), 2)).alias("g"),
-        )
-        .select("source", _hash_u32(F.col("g"), "kv_").alias("h"))
-        .distinct()
-    )
-
-
-def _k_smallest(df: DataFrame, part: list[str], k: int) -> DataFrame:
-    """Salted two-stage k-smallest `h` per `part` group (exact)."""
-    from pyspark.sql import Window
-
-    s1 = Window.partitionBy(*(part + ["_s"])).orderBy("h")
-    s2 = Window.partitionBy(*part).orderBy("h") if part else Window.orderBy("h")
-    return (
-        df.withColumn("_s", F.col("h") % KMV_SALTS)
-        .withColumn("_r1", F.row_number().over(s1))
-        .filter(F.col("_r1") <= k)
-        .withColumn("_r2", F.row_number().over(s2))
-        .filter(F.col("_r2") <= k)
-        .drop("_s", "_r1", "_r2")
-    )
 
 
 _SQL_KMV_PER_SOURCE = f"""
@@ -594,9 +348,12 @@ _SQL_KMV_PER_SOURCE = f"""
 """
 
 
-@query(
+# Per-source KMV distinct-token estimate, certified against the exact
+# distinct count in the same plan (the HLL-audit pattern, but with a
+# mergeable-AND-intersectable sketch).
+sql_query(
     "kmv_distinct_by_source",
-    oracle=f"""
+    f"""
     WITH {_SQL_KMV_PER_SOURCE}
     SELECT sk.source, ex.n_distinct, sk.n_kmv, sk.h_k,
            {_SQL_KMV_EST} AS est_distinct,
@@ -605,42 +362,13 @@ _SQL_KMV_PER_SOURCE = f"""
     FROM sk JOIN ex USING (source)
     """,
 )
-def q_kmv_distinct_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source KMV distinct-token estimate, certified against the
-    exact distinct count in the same plan (the HLL-audit pattern, but
-    with a mergeable-AND-intersectable sketch). ≤|sources| rows."""
-    hs = _kmv_hashes(spark, sf_dir)
-    sk = (
-        _k_smallest(hs, ["source"], KMV_K)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_kmv"),
-            F.max("h").cast("long").alias("h_k"),
-        )
-    )
-    ex = hs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_distinct")
-    )
-    est = F.expr(_KMV_EST)
-    return (
-        sk.join(ex, "source")
-        .select(
-            "source",
-            "n_distinct",
-            "n_kmv",
-            "h_k",
-            est.alias("est_distinct"),
-            F.expr(
-                f"CAST(abs({_KMV_EST} - n_distinct) * 10000"
-                " DIV n_distinct AS BIGINT)"
-            ).alias("err_bp"),
-        )
-    )
 
 
-@query(
+# Union AND intersection estimates from KMV sketches of two sources'
+# token sets, certified against the exact counts in-plan.
+sql_query(
     "kmv_set_ops_audit",
-    oracle=f"""
+    f"""
     WITH hs0 AS MATERIALIZED (
       SELECT DISTINCT source,
              ('0x' || substr(md5('kv_' || tok), 1, 8))::BIGINT AS h
@@ -690,59 +418,6 @@ def q_kmv_distinct_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM usk, m, exact
     """,
 )
-def q_kmv_set_ops_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Union AND intersection estimates from KMV sketches of two
-    sources' token sets, certified against the exact counts in-plan:
-    the union estimate comes from the k-minimum of the combined set;
-    the intersection estimate is the theta-sketch rule
-    est_inter = |X ∩ A ∩ B| · est_union DIV |X| over the union sketch X.
-    1-row output; the only unbounded work is the distinct-hash
-    aggregate and two semi-joins against ≤K-row sketch relations."""
-    hs0 = _kmv_hashes(spark, sf_dir).filter(
-        F.col("source").isin(KMV_SRC_A, KMV_SRC_B)
-    )
-    ua = hs0.select("h").distinct()
-    x = _k_smallest(ua, [], KMV_K)
-    usk = x.agg(
-        F.count(F.lit(1)).cast("long").alias("n_kmv"),
-        F.max("h").cast("long").alias("h_k"),
-    )
-    a = hs0.filter(F.col("source") == KMV_SRC_A).select("h")
-    b = hs0.filter(F.col("source") == KMV_SRC_B).select("h")
-    m = (
-        x.join(a, "h", "left_semi")
-        .join(b, "h", "left_semi")
-        .agg(F.count(F.lit(1)).cast("long").alias("matched"))
-    )
-    exact = (
-        ua.agg(F.count(F.lit(1)).cast("long").alias("exact_union"))
-        .crossJoin(
-            F.broadcast(
-                a.join(b, "h", "left_semi").agg(
-                    F.count(F.lit(1)).cast("long").alias("exact_inter")
-                )
-            )
-        )
-    )
-    est = F.expr(_KMV_EST)
-    return (
-        usk.crossJoin(F.broadcast(m))
-        .crossJoin(F.broadcast(exact))
-        .select(
-            est.alias("est_union"),
-            "exact_union",
-            F.expr(
-                f"CAST(abs({_KMV_EST} - exact_union) * 10000"
-                " DIV exact_union AS BIGINT)"
-            ).alias("union_err_bp"),
-            "matched",
-            F.expr(
-                f"CAST(CASE WHEN n_kmv = 0 THEN 0"
-                f"     ELSE matched * {_KMV_EST} DIV n_kmv END AS BIGINT)"
-            ).alias("est_inter"),
-            "exact_inter",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

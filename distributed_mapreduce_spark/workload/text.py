@@ -70,22 +70,20 @@ def _sql_bp(num: str, den: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Whitespace token count per document.
+sql_query(
     "text_token_count",
-    oracle=f"""
+    f"""
     SELECT doc_id, CAST(len({_sql_tokens('text')}) AS INTEGER) AS n_tokens
     FROM documents
     """,
 )
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace token count per document."""
-    docs = table(spark, sf_dir, "documents")
-    return docs.select("doc_id", F.size(_tokens(F.col("text"))).alias("n_tokens"))
 
 
-@query(
+# Document quality signals.
+sql_query(
     "text_quality_score",
-    oracle=f"""
+    f"""
     WITH t AS (
       SELECT doc_id, text, {_sql_tokens('text')} AS toks,
              length(text) AS n_chars_m
@@ -100,21 +98,6 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t
     """,
 )
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document quality signals: length, token count, stopword ratio,
-    punctuation ratio (basis points). The standard cheap pre-filters a
-    corpus pipeline applies before model training."""
-    docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    n_chars = F.length(F.col("text"))
-    punct = n_chars - F.length(F.regexp_replace(F.col("text"), "[a-z0-9 ]", ""))
-    return docs.select(
-        "doc_id",
-        n_chars.cast("long").alias("n_chars_m"),
-        F.size(toks).alias("n_tokens"),
-        _bp(_count_in(toks, STOPWORDS), F.size(toks)).alias("stopword_bp"),
-        _bp(punct, n_chars).alias("punct_bp"),
-    )
 
 
 def _lang_case_sql() -> str:
@@ -132,30 +115,16 @@ def _lang_case_sql() -> str:
     """
 
 
-@query(
+# Marker-word language-ID heuristic with a deterministic argmax
+# preference order (en > de > es > fr), aggregated to a histogram.
+sql_query(
     "text_lang_id",
-    oracle=f"""
+    f"""
     SELECT lang_pred, count(*) AS cnt FROM (
       SELECT {_lang_case_sql()} AS lang_pred FROM documents
     ) GROUP BY lang_pred
     """,
 )
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Marker-word language-ID heuristic with a deterministic argmax
-    preference order (en > de > es > fr), aggregated to a histogram."""
-    docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    s = {k: _count_in(toks, v) for k, v in LANG_MARKERS.items()}
-    pred = (
-        F.when((s["en"] == 0) & (s["de"] == 0) & (s["es"] == 0) & (s["fr"] == 0), "unknown")
-        .when((s["en"] >= s["de"]) & (s["en"] >= s["es"]) & (s["en"] >= s["fr"]), "en")
-        .when((s["de"] >= s["es"]) & (s["de"] >= s["fr"]), "de")
-        .when(s["es"] >= s["fr"], "es")
-        .otherwise("fr")
-    )
-    return docs.select(pred.alias("lang_pred")).groupBy("lang_pred").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
 
 
 @query(
@@ -181,28 +150,16 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_REGEX = "[a-zA-Z]+|[0-9]|[^a-zA-Z0-9 ]+"
 
 
-@query(
+# BPE-ish token count.
+sql_query(
     "text_bpe_token_count",
-    oracle=f"""
+    f"""
     SELECT doc_id,
            CAST(len(regexp_extract_all(text, '{BPE_REGEX}')) AS INTEGER) AS n_bpe_tokens,
            CAST(len({_sql_tokens('text')}) AS INTEGER) AS n_ws_tokens
     FROM documents
     """,
 )
-def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish token count: regex pre-tokenization (letter runs, single
-    digits, symbol runs) next to the plain whitespace count — the pair a
-    corpus pipeline uses to estimate real tokenizer cost from cheap
-    JVM-side regex, without shipping text to Python."""
-    docs = table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_REGEX), F.lit(0))).alias(
-            "n_bpe_tokens"
-        ),
-        F.size(_tokens(F.col("text"))).alias("n_ws_tokens"),
-    )
 
 
 #: Rolling-hash base/mask: h = fold(acc*31 + tok_hash) & (2^32-1).
@@ -212,9 +169,10 @@ def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 ROLLING_MASK = 0xFFFFFFFF
 
 
-@query(
+# Order-sensitive document fingerprint.
+sql_query(
     "text_rolling_hash",
-    oracle=f"""
+    f"""
     WITH t AS (
       SELECT doc_id,
              list_transform({_sql_tokens('text')},
@@ -228,34 +186,16 @@ ROLLING_MASK = 0xFFFFFFFF
     FROM t
     """,
 )
-def q_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-sensitive document fingerprint: polynomial rolling hash
-    over the token stream (Rabin–Karp fold). Unlike the md5 fingerprint
-    (`text_fingerprint`, order-insensitive after normalization), this
-    distinguishes permuted documents — the standard shift-resistant
-    fingerprint for chunked dedup."""
-    docs = table(spark, sf_dir, "documents")
-    th = F.transform(
-        _tokens(F.col("text")),
-        lambda s: F.conv(
-            F.substring(F.md5(F.concat(F.lit("rh_"), s)), 1, 8), 16, 10
-        ).cast("long"),
-    )
-    fold = F.aggregate(
-        th,
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * 31 + x).bitwiseAND(F.lit(ROLLING_MASK)),
-    )
-    return docs.select("doc_id", fold.cast("long").alias("rolling_fp"))
 
 
 #: Deterministic split fractions (percent): train/val/test = 80/10/10.
 SPLIT_TRAIN_PCT, SPLIT_VAL_PCT = 80, 90
 
 
-@query(
+# Reproducible train/val/test assignment.
+sql_query(
     "text_split_assign",
-    oracle=f"""
+    f"""
     SELECT split, count(*) AS n_docs,
            CAST(sum(len({_sql_tokens('text')})) AS BIGINT) AS n_tokens
     FROM (
@@ -267,35 +207,6 @@ SPLIT_TRAIN_PCT, SPLIT_VAL_PCT = 80, 90
     ) GROUP BY split
     """,
 )
-def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible train/val/test assignment: md5-bucket the stable
-    doc key, cut at 80/90 — the standard deterministic split for
-    training corpora (same row lands in the same split on every engine,
-    every run, any cluster size — unlike `sample()`/`sampleBy()`, which
-    are seed- and partitioning-dependent). Reports doc and token counts
-    per split."""
-    docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    split = (
-        F.when(bucket < SPLIT_TRAIN_PCT, "train")
-        .when(bucket < SPLIT_VAL_PCT, "val")
-        .otherwise("test")
-    )
-    return (
-        docs.select(split.alias("split"), F.size(_tokens(F.col("text"))).alias("nt"))
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("nt").cast("long").alias("n_tokens"),
-        )
-    )
 
 
 # Top-3 distinctive terms per document: rank by (term frequency desc,
@@ -683,9 +594,10 @@ def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Classifier-quality audit.
+sql_query(
     "lang_id_confusion",
-    oracle=f"""
+    f"""
     WITH pred AS (
       SELECT lang AS lang_true, {_lang_case_sql()} AS lang_pred FROM documents
     )
@@ -694,33 +606,6 @@ def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pred GROUP BY lang_true, lang_pred
     """,
 )
-def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classifier-quality audit: confusion matrix of the declared
-    `lang` label vs the marker-word heuristic's prediction — the
-    model-vs-metadata certification pass (same spirit as
-    `ann_recall_audit`: an approximate component measured by an exact,
-    driver-checkable query). Off-diagonal mass tells the pipeline
-    where the cheap heuristic needs a stronger model.
-
-    Plan: one projection + one hash aggregate; scale-free."""
-    docs = table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
-    s = {k: _count_in(toks, v) for k, v in LANG_MARKERS.items()}
-    pred = (
-        F.when(
-            (s["en"] == 0) & (s["de"] == 0) & (s["es"] == 0) & (s["fr"] == 0),
-            "unknown",
-        )
-        .when((s["en"] >= s["de"]) & (s["en"] >= s["es"]) & (s["en"] >= s["fr"]), "en")
-        .when((s["de"] >= s["es"]) & (s["de"] >= s["fr"]), "de")
-        .when(s["es"] >= s["fr"], "es")
-        .otherwise("fr")
-    )
-    return (
-        docs.select(F.col("lang").alias("lang_true"), pred.alias("lang_pred"))
-        .groupBy("lang_true", "lang_pred")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
 
 
 # Grouped top-k over corpus counts: the 5 most frequent tokens per
@@ -869,9 +754,10 @@ BLOCK_SCORE_BLOCK = 8
 BLOCK_SCORE_REVIEW = 4
 
 
-@query(
+# Severity-weighted blocklist gate.
+sql_query(
     "text_blocklist_gate",
-    oracle=f"""
+    f"""
     WITH hits AS (
       SELECT doc_id,
              {_sql_count_in(_sql_tokens('text'), BLOCK_SEV3)} AS n_sev3,
@@ -893,48 +779,6 @@ BLOCK_SCORE_REVIEW = 4
     FROM hits
     """,
 )
-def q_text_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Severity-weighted blocklist gate: per document, hit counts
-    against three term tiers; any severity-3 hit or a weighted score
-    >= {BLOCK_SCORE_BLOCK} blocks, score >= {BLOCK_SCORE_REVIEW} sends
-    to human review, else pass — the standard tiered safety filter in
-    a corpus intake pipeline, here over exact whitespace tokens (a
-    production deployment swaps the tiny tier tuples for broadcast
-    lexicons; the plan shape is identical because `isin` over a
-    broadcast literal set is a JVM-side hash probe either way).
-
-    Plan: pure per-row array expressions (tokenize once, three
-    filtered counts) inside whole-stage codegen; no shuffle at all —
-    the gate is embarrassingly parallel and column-pruned to
-    (doc_id, text).
-
-    Reference parity: tiered extension of the reference's grep/filter
-    verbs (SURVEY.md section 2.2) to the weighted-verdict form.
-    """
-    docs = table(spark, sf_dir, "documents")
-    toked = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    out = toked.select(
-        "doc_id",
-        _count_in(F.col("toks"), BLOCK_SEV3).cast("long").alias("n_sev3"),
-        _count_in(F.col("toks"), BLOCK_SEV2).cast("long").alias("n_sev2"),
-        _count_in(F.col("toks"), BLOCK_SEV1).cast("long").alias("n_sev1"),
-    )
-    score = (3 * F.col("n_sev3") + 2 * F.col("n_sev2") + F.col("n_sev1")).cast(
-        "long"
-    )
-    return out.select(
-        "doc_id",
-        "n_sev3",
-        "n_sev2",
-        "n_sev1",
-        score.alias("score"),
-        F.when(
-            (F.col("n_sev3") > 0) | (score >= BLOCK_SCORE_BLOCK), F.lit("block")
-        )
-        .when(score >= BLOCK_SCORE_REVIEW, F.lit("review"))
-        .otherwise(F.lit("pass"))
-        .alias("verdict"),
-    )
 
 
 # ---------------------------------------------------------------------------

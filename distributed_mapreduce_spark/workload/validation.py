@@ -94,9 +94,13 @@ sql_query(
 )
 
 
-@query(
+# Exact join-size prediction from per-key histograms — the sum-of-
+# products identity |A ⋈ B| = Σ_k c_A(k)·c_B(k) every cost-based
+# optimizer approximates, computed exactly and certified against the
+# materialized join count in one plan.
+sql_query(
     "join_cardinality_audit",
-    oracle="""
+    """
     WITH a AS (
       SELECT o_orderkey AS k, CAST(count(*) AS BIGINT) AS ca
       FROM orders GROUP BY 1
@@ -114,40 +118,6 @@ sql_query(
     FROM p, c
     """,
 )
-def q_join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact join-size prediction from per-key histograms — the
-    sum-of-products identity |A ⋈ B| = Σ_k c_A(k)·c_B(k) every
-    cost-based optimizer approximates, computed exactly and certified
-    against the materialized join count in one plan. At scale you run
-    ONLY the histogram side (two hash aggregates + a counts-only join,
-    orders of magnitude cheaper than the join it predicts) to decide
-    strategy/capacity; the verification join exists here to prove the
-    estimator exact, which is what makes the op oracle-checkable.
-
-    Per-key counts multiply in DECIMAL(38,0)/HUGEINT (wide-arithmetic
-    policy: a hot key with 1e10 rows each side overflows BIGINT in the
-    product)."""
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    a = orders.groupBy(F.col("o_orderkey").alias("k")).agg(
-        F.count(F.lit(1)).cast("long").alias("ca")
-    )
-    b = li.groupBy(F.col("l_orderkey").alias("k")).agg(
-        F.count(F.lit(1)).cast("long").alias("cb")
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    predicted = a.join(b, "k").agg(
-        F.sum(dec(F.col("ca")) * dec(F.col("cb"))).cast("long").alias("predicted")
-    )
-    actual = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .agg(F.count(F.lit(1)).cast("long").alias("actual"))
-    )
-    return predicted.crossJoin(actual).select(
-        "predicted",
-        "actual",
-        (F.col("predicted") == F.col("actual")).alias("consistent"),
-    )
 
 
 # Cross-modal-table reconciliation: the documents↔embeddings id

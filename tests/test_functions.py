@@ -41,23 +41,18 @@ def test_pct_formatting_truncates_to_two_decimals(spark):
 
 
 def test_rolling_hash_is_order_sensitive(spark):
-    from distributed_mapreduce_spark.workload.text import q_rolling_hash  # noqa: F401
-    from pyspark.sql import functions as F
-    from distributed_mapreduce_spark.workload import text as wt
+    from distributed_mapreduce_spark.workload import ORACLES
+    from distributed_mapreduce_spark.workload.registry import to_spark
 
-    df = spark.createDataFrame(
+    spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "gamma beta alpha"), (3, "alpha beta gamma"), (4, "")],
         ["doc_id", "text"],
-    )
-    th = F.transform(
-        wt._tokens(F.col("text")),
-        lambda s: F.conv(F.substring(F.md5(F.concat(F.lit("rh_"), s)), 1, 8), 16, 10).cast("long"),
-    )
-    fold = F.aggregate(
-        th, F.lit(0).cast("long"),
-        lambda acc, x: (acc * 31 + x).bitwiseAND(F.lit(wt.ROLLING_MASK)),
-    )
-    got = {r["doc_id"]: r["fp"] for r in df.select("doc_id", fold.alias("fp")).collect()}
+    ).createOrReplaceTempView("documents")
+    try:
+        rows = spark.sql(to_spark(ORACLES["text_rolling_hash"])).collect()
+    finally:
+        spark.catalog.dropTempView("documents")
+    got = {r["doc_id"]: r["rolling_fp"] for r in rows}
     assert got[1] == got[3]          # identical text, identical fp
     assert got[1] != got[2]          # permuted tokens change the fp
     assert got[4] == 0               # empty text folds to the seed

@@ -246,7 +246,7 @@ def test_window_audit_detects_global_window_over_raw_rows(spark, sf_dir):
     # ... while the salted two-stage top-k idiom over that same distinct
     # (stage 1: rank within salt partitions, filter <= k → ≤|salts|·k
     # rows; stage 2: global rank) is the documented scale-safe shape
-    # and must stay clean (`sketches._k_smallest`).
+    # and must stay clean.
     two_stage = (
         orders.select("o_orderkey")
         .distinct()

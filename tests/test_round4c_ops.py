@@ -10,10 +10,7 @@ import decimal
 
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.workload.events import (
-    q_events_time_weighted_value,
-)
-from distributed_mapreduce_spark.workload.journey import q_user_active_streaks
+from distributed_mapreduce_spark.workload import QUERIES
 from distributed_mapreduce_spark.workload.registry import table
 from distributed_mapreduce_spark.workload.relational import (
     q_join_not_in_null_aware,
@@ -68,7 +65,7 @@ def test_streaks_match_bruteforce_per_user(spark, sf_dir):
     by_user: dict[int, set[dt.date]] = {}
     for r in ev.select("user_id", F.to_date("ts").alias("d")).collect():
         by_user.setdefault(r["user_id"], set()).add(r["d"])
-    got = {r["user_id"]: r for r in q_user_active_streaks(spark, sf_dir).collect()}
+    got = {r["user_id"]: r for r in QUERIES["user_active_streaks"](spark, sf_dir).collect()}
     assert set(got) == set(by_user)
     for uid, days in by_user.items():
         ordered = sorted(days)
@@ -120,11 +117,7 @@ def test_temperature_shares_damp_heads_boost_tails(spark, sf_dir):
     """alpha=0.5 must compress the share distribution: every source
     above the natural mean share is damped (boost < 1x), every source
     far below it is boosted, and temperature shares still sum to ~1."""
-    from distributed_mapreduce_spark.workload.corpus import (
-        q_mixture_temperature_shares,
-    )
-
-    rows = q_mixture_temperature_shares(spark, sf_dir).collect()
+    rows = QUERIES["mixture_temperature_shares"](spark, sf_dir).collect()
     assert rows
     mean_bp = 10000 // len(rows)
     assert abs(sum(r["temp_share_bp"] for r in rows) - 10000) <= len(rows)
@@ -168,7 +161,7 @@ def test_twap_matches_bruteforce(spark, sf_dir):
             s[0] += 1
             s[1] += w
             s[2] += v6 * w
-    got = {r["event_type"]: r for r in q_events_time_weighted_value(spark, sf_dir).collect()}
+    got = {r["event_type"]: r for r in QUERIES["events_time_weighted_value"](spark, sf_dir).collect()}
     assert set(got) == set(sums)
     for et, (n, sw, svw) in sums.items():
         row = got[et]

@@ -23,7 +23,6 @@ from distributed_mapreduce_spark.workload.graph import (
 )
 from distributed_mapreduce_spark.workload.mlprep import (
     TE_PRICE_CUT,
-    q_group_split_audit,
     q_target_encode_loo,
 )
 from distributed_mapreduce_spark.workload.registry import table
@@ -150,7 +149,7 @@ def test_target_encode_loo_excludes_own_label(spark, sf_dir):
 
 
 def test_group_split_no_leakage_and_full_coverage(spark, sf_dir):
-    rows = q_group_split_audit(spark, sf_dir).collect()
+    rows = QUERIES["group_split_audit"](spark, sf_dir).collect()
     assert rows
     ev = table(spark, sf_dir, "events")
     assert sum(r["n_events"] for r in rows) == ev.count()
@@ -227,15 +226,13 @@ def test_interpolation_endpoints_and_monotone_grid(spark, sf_dir):
 
 
 def test_drift_tv_matches_bruteforce(spark, sf_dir):
-    from distributed_mapreduce_spark.workload.robust import q_events_drift_tv
-
     ev = table(spark, sf_dir, "events")
     rows = ev.select(F.unix_micros("ts").alias("us"), "event_type").collect()
     mid = (min(r["us"] for r in rows) + max(r["us"] for r in rows)) // 2
     first = Counter(r["event_type"] for r in rows if r["us"] <= mid)
     second = Counter(r["event_type"] for r in rows if r["us"] > mid)
     t1, t2 = sum(first.values()), sum(second.values())
-    got = {r["event_type"]: r for r in q_events_drift_tv(spark, sf_dir).collect()}
+    got = {r["event_type"]: r for r in QUERIES["events_drift_tv"](spark, sf_dir).collect()}
     assert set(got) == set(first) | set(second)
     total = 0
     for et, r in got.items():
@@ -303,12 +300,9 @@ def test_attribution_credit_conserved_per_purchase(spark, sf_dir):
 
 
 def test_waterfill_caps_budget_tight_and_order_free(spark, sf_dir):
-    from distributed_mapreduce_spark.workload.corpus import (
-        WATERFILL_BUDGET_BP,
-        q_mixture_waterfill_caps,
-    )
+    from distributed_mapreduce_spark.workload.corpus import WATERFILL_BUDGET_BP
 
-    rows = q_mixture_waterfill_caps(spark, sf_dir).collect()
+    rows = QUERIES["mixture_waterfill_caps"](spark, sf_dir).collect()
     assert rows
     total = sum(r["n_tok"] for r in rows)
     budget = total * WATERFILL_BUDGET_BP // 10000
