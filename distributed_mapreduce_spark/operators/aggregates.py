@@ -15,23 +15,6 @@ from pyspark.sql import functions as F
 from distributed_mapreduce_spark.functions.strings import pct_of_total_str
 
 
-def agg_count_per_value(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """Within each key group, count occurrences of each distinct value.
-
-    Reference: data/juice-exe.go:26-31 (`fileContents[key][line]++`).
-    One shuffle on (key, value); partial counts combine map-side.
-    """
-    return df.groupBy(key_col, value_col).agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def agg_sum_counts(df: DataFrame, key_col: str, count_col: str) -> DataFrame:
-    """Sum partial counts per key (classic wordcount reduce).
-
-    Reference: hadoop/TrafficReducer.java:22-31.
-    """
-    return df.groupBy(key_col).agg(F.sum(F.col(count_col)).alias("total"))
-
-
 def agg_pct_of_total(
     df: DataFrame,
     group_col: str,

@@ -27,21 +27,6 @@ def filter_eq_param(df: DataFrame, column: str, param: str) -> DataFrame:
     return df.filter(trim_ws(column) == F.lit(param))
 
 
-def filter_rlike_line(df: DataFrame, regex: str, columns: list[str] | None = None) -> DataFrame:
-    """`SELECT ALL FROM ds WHERE <regex>` — regex over the WHOLE line.
-
-    Reference: data/sql-juice.go:42-60 applies the user regex to each raw
-    text line, so `Video,Radio` expresses column adjacency and
-    `Video|Radio` alternation (README.md:52-56). For a columnar table we
-    reconstruct the "line" as a comma-joined projection of the requested
-    columns (all columns if None), preserving whole-line match semantics.
-    """
-    if columns is None:
-        columns = df.columns
-    line = F.concat_ws(",", *[F.col(c).cast("string") for c in columns])
-    return df.filter(line.rlike(regex))
-
-
 def filter_min_arity(df: DataFrame, column: str, sep: str, min_fields: int) -> DataFrame:
     """Drop malformed delimited rows with too few fields.
 

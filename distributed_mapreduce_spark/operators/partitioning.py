@@ -41,26 +41,6 @@ def _local_row_number(with_pid: DataFrame, out_col: str) -> DataFrame:
     )
 
 
-def partition_hash(df: DataFrame, key_col: str, num_partitions: int) -> DataFrame:
-    """Physically hash-partition by key (HashPartitioner semantics).
-
-    This is the co-location primitive: two datasets repartitioned on the
-    same key column with the same count join/aggregate without another
-    exchange.
-    """
-    return df.repartition(num_partitions, F.col(key_col))
-
-
-def partition_range(df: DataFrame, key_col: str, num_partitions: int) -> DataFrame:
-    """Physically range-partition by key (sampled RangePartitioner).
-
-    Reference: sorted-key contiguous cuts at fileserver.py:700-732;
-    Spark samples bounds instead of collecting all keys — the only
-    version that works when keys don't fit on one node.
-    """
-    return df.repartitionByRange(num_partitions, F.col(key_col))
-
-
 def hash_bucket(df: DataFrame, key_col: str, num_buckets: int, bucket_col: str = "bucket") -> DataFrame:
     """Deterministic logical hash-bucket id: md5(key)[0:8] as uint32 % n.
 

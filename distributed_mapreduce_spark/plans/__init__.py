@@ -5,7 +5,6 @@ from distributed_mapreduce_spark.plans.checks import (
     broadcast_hint_audit,
     exchange_count,
     explain_str,
-    has_broadcast_join,
     pushed_filters,
     read_schema_columns,
     unbounded_scaling_broadcasts,
@@ -21,7 +20,6 @@ __all__ = [
     "explain_str",
     "pushed_filters",
     "read_schema_columns",
-    "has_broadcast_join",
     "unbounded_scaling_broadcasts",
     "unpartitioned_unbounded_windows",
     "wholestage_codegen_count",

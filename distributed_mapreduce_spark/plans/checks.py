@@ -41,10 +41,6 @@ def read_schema_columns(df: DataFrame) -> list[list[str]]:
     return out
 
 
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in explain_str(df) or "BroadcastNestedLoopJoin" in explain_str(df)
-
-
 def wholestage_codegen_count(df: DataFrame) -> int:
     """Number of WholeStageCodegen spans (wider/fewer = better fusion).
 

@@ -1,21 +1,6 @@
 """Sources and sinks (SURVEY.md §2.1)."""
 
-from distributed_mapreduce_spark.sources.readers import (
-    scan_csv,
-    scan_parquet,
-    scan_prefix_glob,
-    scan_text,
-)
-from distributed_mapreduce_spark.sources.sinks import (
-    sink_merged_csv,
-    sink_parquet,
-)
+from distributed_mapreduce_spark.sources.readers import scan_parquet
+from distributed_mapreduce_spark.sources.sinks import sink_merged_csv
 
-__all__ = [
-    "scan_csv",
-    "scan_parquet",
-    "scan_prefix_glob",
-    "scan_text",
-    "sink_merged_csv",
-    "sink_parquet",
-]
+__all__ = ["scan_parquet", "sink_merged_csv"]

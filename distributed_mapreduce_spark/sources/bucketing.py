@@ -41,7 +41,3 @@ def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
     """Read back with bucket metadata intact (must go through the
     catalog — a plain parquet path read loses bucketing)."""
     return spark.table(table_name)
-
-
-def drop_bucketed(spark: SparkSession, table_name: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")

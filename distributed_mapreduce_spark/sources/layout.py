@@ -9,7 +9,8 @@ range-partitioning + sorting by that code clusters BOTH dimensions:
 a box predicate (a_lo..a_hi AND b_lo..b_hi) lands in O(perimeter)
 files instead of O(all), and parquet min/max row-group stats skip the
 rest. This is the layout trick behind Delta/Iceberg `OPTIMIZE ZORDER
-BY` — here as a plain parquet writer.
+BY`; this module supplies the keys (`tests/test_layout.py` writes and
+prunes such a layout).
 
 The code path is pure integer arithmetic (quantize → interleave), so
 z-values are engine-portable and differentially checkable in DuckDB
@@ -57,64 +58,6 @@ def _sql_morton2(a: str, b: str, bits: int) -> str:
         parts.append(f"((({a} >> {i}) & 1) << {2 * i})")
         parts.append(f"((({b} >> {i}) & 1) << {2 * i + 1})")
     return "CAST(" + " + ".join(parts) + " AS BIGINT)"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    z: Column,
-    num_files: int,
-) -> None:
-    """Lay `df` out as `num_files` parquet files clustered by the given
-    z-code: range-partition on z (sampled bounds — parallel, no global
-    sort) and sort within each partition so every file covers a tight
-    z-interval and its per-column min/max footer stats are tight too.
-    One shuffle at write time buys every later multi-column range scan
-    its pruning — the same pay-once economics as bucketing."""
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(num_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def compact_small_files(
-    df: DataFrame,
-    out_dir: str,
-    target_rows_per_file: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> int:
-    """Small-file compaction: rewrite a dataset into
-    ceil(rows / target_rows_per_file) parquet files, optionally
-    clustered on ``sort_cols`` so row-group min/max stats stay
-    selective after the rewrite.
-
-    The streaming landing path (foreachBatch per micro-batch) and
-    over-parallel writers both produce file counts that grow without
-    bound; listing and opening millions of tiny files then dominates
-    scan time (the classic small-files problem). Compaction is the
-    maintenance pass every table format schedules (Delta/Iceberg
-    OPTIMIZE) — here as a plain parquet rewrite.
-
-    Row count is one metadata-cheap aggregate; the rewrite is a single
-    repartition (range repartition when clustering, so files hold
-    contiguous key ranges). Returns the file count written.
-    """
-    import math
-
-    n = df.count()
-    files = max(1, math.ceil(n / max(1, target_rows_per_file)))
-    if sort_cols:
-        out = df.repartitionByRange(files, *[F.col(c) for c in sort_cols])
-        out = out.sortWithinPartitions(*sort_cols)
-    else:
-        out = df.repartition(files)
-    out.write.mode(mode).parquet(out_dir)
-    return files
 
 
 def with_hilbert2(

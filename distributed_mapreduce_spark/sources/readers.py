@@ -19,61 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def scan_csv(
-    spark: SparkSession,
-    path: str,
-    header: bool = True,
-    schema: T.StructType | None = None,
-    infer: bool = False,
-) -> DataFrame:
-    """Read a CSV dataset (reference: csv.reader at fileserver.py:265-289;
-    header skip per hadoop/TrafficMapper.java:33-35 → `header=True`).
-
-    Default is all-StringType (the reference's untyped line model,
-    SURVEY.md §1.2): pass `schema` or `infer=True` for typed reads.
-    `infer` costs an extra full pass — never use it on production-scale
-    inputs; provide the schema.
-    """
-    reader = spark.read.option("header", header)
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif infer:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
-
-
-def scan_text(spark: SparkSession, path: str) -> DataFrame:
-    """Read files as raw lines → DataFrame[value: string].
-
-    Reference: bufio.Scanner loops (data/sql-juice.go:49-57,
-    data/maple-exe.go:82-93). Serves the grep / whole-line-regex paths.
-    """
-    return spark.read.text(path)
-
-
-def scan_prefix_glob(
-    spark: SparkSession,
-    directory: str,
-    prefix: str,
-    suffix: str = "",
-    fmt: str = "text",
-) -> DataFrame:
-    """Select input files by name prefix (+ optional suffix).
-
-    Reference: filepath.Walk + strings.HasPrefix
-    (data/maple-exe.go:114-126, data/juice-exe.go:45-60). Spark path
-    globs resolve on the driver against the file listing — no data read.
-    """
-    pattern = f"{directory}/{prefix}*{suffix}"
-    if fmt == "text":
-        return spark.read.text(pattern)
-    if fmt == "csv":
-        return spark.read.option("header", False).csv(pattern)
-    if fmt == "parquet":
-        return scan_parquet(spark, pattern)
-    raise ValueError(f"unsupported format: {fmt}")
-
-
 #: Bound on the inferred-schema LRU: one entry per (path, file
 #: listing, inference confs) version.
 SCHEMA_CACHE_SIZE = 256
@@ -150,51 +95,3 @@ def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
         if len(_SCHEMAS) > SCHEMA_CACHE_SIZE:
             _SCHEMAS.popitem(last=False)
     return df
-
-
-def scan_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet directory whose files were written with DIFFERENT
-    (evolving) schemas: `mergeSchema` unions the per-file schemas and
-    null-fills columns absent from older files.
-
-    Costs a footer read per file at planning time — fine for landing
-    dirs, wasteful on huge static tables (there, declare the schema).
-    """
-    return spark.read.option("mergeSchema", True).parquet(path)
-
-
-def scan_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Read newline-delimited JSON (the interchange format LLM corpora
-    actually ship in — one document object per line).
-
-    JSONL is splittable exactly like the reference's line model (the
-    record separator is the newline), so a 100 TB corpus parallelizes
-    per input split with no coordination. ALWAYS pass `schema` at
-    scale: without it Spark runs a full inference pass first, and
-    schema drift across files silently widens columns. Malformed lines
-    surface in `_corrupt_record` (PERMISSIVE default) instead of
-    failing the job — filter or count them as a data-quality signal.
-    CAVEAT: with an explicit `schema`, the `_corrupt_record` column
-    only materializes if the schema itself includes a
-    `StructField("_corrupt_record", StringType())`; otherwise corrupt
-    lines silently become all-null rows (tests/test_operators.py
-    `test_jsonl_corrupt_record_surface` shows the pattern).
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def scan_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar ORC scan (Spark-native reader — same predicate-pushdown
-    / column-pruning surface as parquet; ORC is the other standard
-    lakehouse file format, common in Hive-lineage warehouses). No
-    DuckDB oracle exists for ORC, so parity is certified by the
-    round-trip test (`tests/test_sources_formats.py`): parquet-read →
-    orc-write → orc-read must be content-identical."""
-    return spark.read.orc(path)

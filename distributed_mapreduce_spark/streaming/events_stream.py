@@ -13,13 +13,9 @@ is O(active windows), not O(stream length).
 
 from __future__ import annotations
 
-import importlib.util
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from distributed_mapreduce_spark.sources.readers import scan_parquet
 
 #: events schema with event-time as TimestampType (micros).
 EVENTS_SCHEMA = T.StructType(
@@ -32,29 +28,6 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-def _group_event_order(pdfs, by=("ts", "event_id")):
-    """Materialise ALL Arrow chunks for one state group and sort ONCE
-    by event order.
-
-    `applyInPandasWithState` hands the group's micro-batch rows as an
-    iterator of Arrow-sized chunks (~10k rows each). Sorting each chunk
-    independently only guarantees order WITHIN a chunk — a group
-    spanning multiple chunks could replay rows out of event-time order
-    across the chunk boundary and silently corrupt sequential state
-    (the stateful handlers update prev/tail unconditionally). One
-    concat + one stable sort restores the global per-group order; the
-    concat is bounded by the group's rows in THIS micro-batch, not the
-    stream length, so memory stays O(group x micro-batch).
-    """
-    import pandas as pd  # local: keep module import light
-
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if not chunks:
-        return None
-    whole = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    return whole.sort_values(list(by), kind="mergesort")
 
 
 def read_events_stream(
@@ -119,27 +92,6 @@ def windowed_counts(
     )
 
 
-def sessionized_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Session windows (gap-based) per user via the built-in
-    session_window — the streaming form of `events_sessionize`'s
-    lag+running-sum construction."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
 def stateful_user_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Custom stateful operator via `applyInPandasWithState`: cumulative
     per-user event count carried in the state store across micro-batches.
@@ -177,117 +129,6 @@ def stateful_user_counts(events: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def stateful_user_counts_tws(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """`stateful_user_counts` on the MODERN custom-state API
-    (`transformWithStateInPandas`, Spark 4): a `StatefulProcessor` with
-    a typed ValueState counter, update-mode emission — semantics
-    bit-identical to the applyInPandasWithState twin and to the batch
-    `groupBy(user_id).count()` on a closed input (certified in
-    tests/test_streaming_tws.py).
-
-    Why both APIs exist here: transformWithState is the forward path
-    (typed state variables, timers, TTL, initial state, and the RocksDB
-    state store requirement that also buys changelog checkpointing at
-    scale); applyInPandasWithState is the stable one. The per-group
-    Python overhead that bounds the old API (~93 µs/key/batch,
-    STATEFUL_PROFILE_r11.json) is measured for this one by the same
-    key-count sweep in tools/stateful_profile.py — see the artifact
-    for which to budget against at 100 TB ingest.
-
-    NOTE: requires (a) the RocksDB state store provider
-    (`spark.sql.streaming.stateStore.providerClass` =
-    ...RocksDBStateStoreProvider), set by callers before starting the
-    query (the conf is read at query start), and (b) the `protobuf`
-    Python package — the API's state protocol imports it in the TWS
-    driver worker. This container ships pyspark WITHOUT protobuf, so
-    the tests in tests/test_streaming_tws.py are skipif-gated on the
-    import; the operator itself is real and runs unchanged where the
-    dependency exists (verified here up to the worker's protobuf
-    import: the query plans, starts, and fails only inside
-    StateMessage_pb2)."""
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent 'google' namespace absent
-        has_protobuf = False
-    if not has_protobuf:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(pyspark's TWS state protocol); not installed in this "
-            "environment — use stateful_user_counts "
-            "(applyInPandasWithState) instead"
-        )
-    import pandas as pd  # local: keep module import light
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CountProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState("n", "n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._count.get()[0] if self._count.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._count.update((n,))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            CountProcessor(),
-            "user_id bigint, n_events bigint",
-            "update",
-            "None",
-        )
-    )
-
-
-def stream_stream_conversions(
-    events: DataFrame,
-    window_seconds: int = 300,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream ⋈ stream with watermarks: purchases joined to the clicks
-    that preceded them within `window_seconds`, both sides unbounded.
-
-    The interval condition + both watermarks is what makes this safe at
-    scale: each side's state store retains only rows newer than
-    (watermark - window), so state is bounded no matter how long the
-    streams run. On a closed input the result equals the batch interval
-    join (`range_join_conversions`) — asserted in tests.
-    """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    cond = (
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {window_seconds} SECONDS"))
-    )
-    return purchases.join(clicks, cond, "inner").select("purchase_id", "click_id")
-
-
 def dedup_events_stream(
     events: DataFrame, keys: list[str] | None = None, watermark: str = "2 hours"
 ) -> DataFrame:
@@ -305,46 +146,6 @@ def dedup_events_stream(
     )
 
 
-def parquet_batch_sink(out_dir: str, partition_col: str = "event_type"):
-    """foreachBatch writer with per-batch idempotence: the batch lands
-    under `partition_col/_batch_id=N`, and a replay of batch N
-    dynamically overwrites exactly its own partitions."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col, "_batch_id")
-            .parquet(out_dir)
-        )
-
-    return sink
-
-
-def write_partitioned_parquet(
-    stream_df: DataFrame, out_dir: str, checkpoint_dir: str, partition_col: str = "event_type"
-) -> None:
-    """Drain a stream into partitioned parquet via foreachBatch — the
-    production sink shape, as opposed to the memory sink used in tests.
-    Blocks until all available input is processed.
-
-    Delivery is AT-LEAST-ONCE append: each batch also lands in a
-    `_batch_id=N` subdirectory of its `partition_col` partition, so a
-    batch replayed after a checkpoint/sink race overwrites its own
-    output (dynamic partition overwrite) instead of duplicating rows —
-    the parquet-sink idempotence recipe when a transactional table
-    format isn't available."""
-    sink = parquet_batch_sink(out_dir, partition_col)
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete") -> None:
     """Drain all available input into an in-memory table (test/dev
     sink), blocking until complete. `output_mode` must match the query
@@ -360,440 +161,3 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete"
     )
     q.awaitTermination()
 
-
-#: Interval strings accepted by the late-audit pair below (a deliberate
-#: subset of Spark's interval syntax — enough for watermark delays).
-_INTERVAL_UNITS = {
-    "second": 1, "seconds": 1,
-    "minute": 60, "minutes": 60,
-    "hour": 3600, "hours": 3600,
-    "day": 86400, "days": 86400,
-}
-
-
-def _interval_seconds(interval: str) -> int:
-    n, unit = interval.strip().split()
-    return int(n) * _INTERVAL_UNITS[unit.lower()]
-
-
-def run_windowed_with_late_audit(
-    spark: SparkSession,
-    directory: str,
-    window: str = "1 hour",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int | None = 1,
-) -> tuple[dict, int]:
-    """Run `windowed_counts` over a landing directory (availableNow,
-    UPDATE mode) and account for late data: returns ``(final_rows,
-    dropped_total)`` where ``final_rows`` maps (ws, event_type) ->
-    (n_events, sum_value) from the LAST emission per window key and
-    ``dropped_total`` sums the state store's
-    ``numRowsDroppedByWatermark`` across micro-batches — the engine's
-    own count of input rows discarded behind the watermark, now a
-    certified output rather than a log curiosity (VERDICT r07 #6).
-
-    Update mode (not append) so every window's final accumulated count
-    is observable on a closed input — append holds back windows the
-    watermark has not passed. foreachBatch runs batches strictly in
-    order, so plain dict overwrite IS last-emission-wins. The upsert
-    collect is O(emitted window keys per batch), never O(events).
-    """
-    emitted: dict[tuple, tuple] = {}
-    n_batches = 0
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        for r in batch_df.collect():
-            emitted[(r["ws"], r["event_type"])] = (r["n_events"], r["sum_value"])
-
-    # recentProgress retains only the last
-    # spark.sql.streaming.numRecentProgressUpdates entries (default
-    # 100). With max_files_per_trigger=1 a landing directory with more
-    # files than that yields more micro-batches than the buffer holds,
-    # and summing over it would SILENTLY undercount the certified
-    # dropped_total. Raise the retention for this query's lifetime and
-    # hard-fail if the buffer still could not hold every batch —
-    # foreachBatch runs once per micro-batch, so its call count is the
-    # ground-truth batch count to check the progress log against.
-    prior = spark.conf.get(_PROGRESS_RETENTION_CONF, None)
-    spark.conf.set(_PROGRESS_RETENTION_CONF, str(_PROGRESS_RETENTION))
-    try:
-        q = (
-            windowed_counts(
-                read_events_stream(spark, directory, max_files_per_trigger),
-                window,
-                watermark,
-            )
-            .writeStream.outputMode("update")
-            .foreachBatch(upsert)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        dropped = _certified_dropped_total(q.recentProgress, n_batches)
-    finally:
-        if prior is None:
-            spark.conf.unset(_PROGRESS_RETENTION_CONF)
-        else:
-            spark.conf.set(_PROGRESS_RETENTION_CONF, prior)
-    return emitted, dropped
-
-
-_PROGRESS_RETENTION_CONF = "spark.sql.streaming.numRecentProgressUpdates"
-#: Generous per-query retention: one entry per micro-batch; at
-#: max_files_per_trigger=1 this certifies directories up to 10k files.
-_PROGRESS_RETENTION = 10_000
-
-
-def _certified_dropped_total(progress: list, n_batches: int) -> int:
-    """Sum numRowsDroppedByWatermark over the progress log, REFUSING to
-    answer when the log provably does not cover every micro-batch (the
-    retention buffer evicted entries). A certified total must never
-    silently undercount."""
-    stateful = [p for p in progress if p.get("stateOperators")]
-    if n_batches > len(stateful):
-        raise RuntimeError(
-            "watermark drop audit: progress log holds "
-            f"{len(stateful)} stateful entries but {n_batches} "
-            "micro-batches ran — retention buffer overflowed; raise "
-            f"{_PROGRESS_RETENTION_CONF} above {n_batches}"
-        )
-    return sum(
-        p["stateOperators"][0].get("numRowsDroppedByWatermark", 0)
-        for p in stateful
-    )
-
-
-def windowed_counts_batch_twin(
-    spark: SparkSession,
-    files_in_order: list[str],
-    window: str = "1 hour",
-    watermark: str = "1 hour",
-) -> tuple[DataFrame, int]:
-    """BATCH twin of :func:`run_windowed_with_late_audit`'s
-    admissibility predicate: replay the file sequence the stream source
-    takes (oldest first) and apply Spark's watermark semantics in plain
-    batch SQL. Returns ``(admitted_counts_df, n_dropped)``.
-
-    The predicate, stated exactly:
-
-    - the watermark in force while file i is processed is
-      ``max(event ts over files 0..i-1) - delay`` (watermarks update at
-      micro-batch END and are monotone non-decreasing; before the first
-      batch there is no watermark and everything is admitted);
-    - a row is DROPPED iff the END of its tumbling window is strictly
-      BEFORE that watermark. ``window.end == watermark`` is ADMITTED:
-      the window is evicted only once the watermark moves PAST its end
-      (end timestamps are exclusive), so the boundary row still finds
-      live state. Pinned empirically at the exact boundary by
-      tests/test_streaming.py::test_watermark_late_audit_matches_batch_twin
-      (two injected rows with window end == watermark must be counted,
-      not dropped).
-
-    The per-file max relation is |files| rows (bounded collect — the
-    file sequence is the unit of certification, not the data), and the
-    watermark table broadcast-joins back; everything row-scale stays
-    distributed.
-    """
-    delay_s = _interval_seconds(watermark)
-
-    parts = [
-        scan_parquet(spark, f).withColumn("_seq", F.lit(i))
-        for i, f in enumerate(files_in_order)
-    ]
-    allr = parts[0]
-    for p in parts[1:]:
-        allr = allr.unionAll(p)
-
-    maxes = {
-        r["_seq"]: r["m"]
-        for r in allr.groupBy("_seq").agg(F.max("ts").alias("m")).collect()
-    }
-    import datetime as _dt
-
-    wm_rows = []
-    running: _dt.datetime | None = None
-    for i in range(len(files_in_order)):
-        wm_rows.append((i, running - _dt.timedelta(seconds=delay_s) if running else None))
-        m = maxes.get(i)
-        if m is not None and (running is None or m > running):
-            running = m
-    wm_df = spark.createDataFrame(wm_rows, schema="_seq int, _wm timestamp")
-
-    annotated = allr.join(F.broadcast(wm_df), "_seq").withColumn(
-        "_wend", F.window("ts", window).getField("end")
-    )
-    is_dropped = F.col("_wm").isNotNull() & (F.col("_wend") < F.col("_wm"))
-    n_dropped = annotated.filter(is_dropped).count()
-    admitted = annotated.filter(~is_dropped)
-    counts = (
-        admitted.groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(30,6)")
-            .alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("ws"), "event_type", "n_events", "sum_value")
-    )
-    return counts, n_dropped
-
-
-def multi_grain_counts(events: DataFrame, watermark: str = "2 hours"):
-    """Streaming twin of `events_multi_rollup`'s grains, as parallel
-    streaming aggregations from one source (streaming cannot chain two
-    shuffling aggs in one query, so each grain is its own sink — the
-    standard fan-out pattern for multi-resolution dashboards).
-
-    Returns (hourly_by_type, by_type): the first is watermarked and
-    append-capable; the second is an unbounded running aggregate
-    (complete/update sinks only)."""
-    hourly = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n_events")
-    )
-    by_type = events.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    return hourly, by_type
-
-
-def stratified_sample_stream(events: DataFrame, sample_bp: dict[str, int]) -> DataFrame:
-    """Streaming twin of `events_stratified_sample`'s row gate: the
-    same order-independent md5 hash-gate filter, applied per record —
-    stateless, so it composes with any downstream streaming aggregate
-    and yields EXACTLY the batch-selected row set (same rows whatever
-    the micro-batch boundaries — the property rand()-based sampling
-    lacks)."""
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("samp_"), F.col("event_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10000
-    )
-    bp = F.lit(10000)
-    for etype, v in sample_bp.items():
-        bp = F.when(F.col("event_type") == etype, v).otherwise(bp)
-    return events.filter(h < bp)
-
-
-def quota_limit_stream(events: DataFrame, n_per_hour: int = 3) -> DataFrame:
-    """Per-key ingestion quota: keep only the first ``n_per_hour``
-    events per (user, hour), decided by keyed state across
-    micro-batches (`applyInPandasWithState`, append mode — emits the
-    KEPT events themselves, not an aggregate). The rate-limiting /
-    abuse-damping primitive an ingestion edge applies before expensive
-    enrichment.
-
-    Within a batch, events are processed in (ts, event_id) order; the
-    state carries the per-(user, hour) admitted count, so the decision
-    is deterministic whenever arrival order respects event time (the
-    closed-input twin test constructs exactly that, and the batch
-    equivalent is a row_number-over-window rank filter).
-
-    Scale shape: state is one counter per active (user, hour) — add a
-    watermark-driven timeout to retire old hours in production."""
-    import pandas as pd  # local: keep module import light
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "user_id bigint, hour timestamp, event_id bigint, ts timestamp"
-    state_schema = "n bigint"
-
-    keyed = events.withColumn("hour", F.date_trunc("hour", F.col("ts")))
-
-    def fn(key, pdfs, state):
-        (n,) = state.get if state.exists else (0,)
-        kept = []
-        pdf = _group_event_order(pdfs)
-        if pdf is not None:
-            for _, row in pdf.iterrows():
-                if n < n_per_hour:
-                    n += 1
-                    kept.append((row["user_id"], row["hour"], row["event_id"], row["ts"]))
-        state.update((n,))
-        yield pd.DataFrame(kept, columns=["user_id", "hour", "event_id", "ts"])
-
-    return keyed.groupBy("user_id", "hour").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def ewma_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of the batch `events_ewma_trailing` query: per
-    user, the alpha=1/2 EWMA over the trailing 8 events, emitted per
-    event with keyed state carrying the previous <=7 values across
-    micro-batches (`applyInPandasWithState`, append mode).
-
-    Exactness across the batch/stream boundary: state values round-trip
-    through `float.hex()` (lossless), the weights are powers of two
-    (pure exponent shifts), and the left-fold order matches the batch
-    query's `aggregate` — so on closed input, arriving in event-time
-    order, every emitted `ewma_micro` is bit-identical to the batch
-    window computation (asserted in tests/test_streaming.py).
-
-    Scale shape: state is <=7 doubles per active user; add a
-    watermark-driven timeout to retire idle users in production."""
-    import math
-
-    import pandas as pd  # local: keep module import light
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "event_id bigint, user_id bigint, ewma_micro bigint"
-    state_schema = "vals_hex string"
-
-    def fn(key, pdfs, state):
-        tail: list[float] = []
-        if state.exists:
-            (hexes,) = state.get
-            if hexes:
-                tail = [float.fromhex(h) for h in hexes.split(";")]
-        rows = []
-        pdf = _group_event_order(pdfs)
-        if pdf is not None:
-            for _, row in pdf.iterrows():
-                vals = tail + [float(row["value"])]
-                n = len(vals)
-                num = 0.0
-                for i, v in enumerate(vals, start=1):
-                    num = num + v * float(1 << (7 - (n - i)))
-                den = 256 - (1 << (8 - n))
-                rows.append(
-                    (
-                        int(row["event_id"]),
-                        int(row["user_id"]),
-                        int(math.floor(num * 1000000 / den)),
-                    )
-                )
-                tail = vals[-7:]
-        state.update((";".join(f.hex() for f in tail),))
-        yield pd.DataFrame(rows, columns=["event_id", "user_id", "ewma_micro"])
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def interpolate_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of the batch `events_gap_fill_interpolate` query:
-    per user, every hourly grid instant strictly inside the gap between
-    two consecutive events is emitted with the integer time-weighted
-    blend of the surrounding readings, with keyed state carrying the
-    previous event's (micros, value_e6) across micro-batches
-    (`applyInPandasWithState`, append mode).
-
-    Exactness across the batch/stream boundary: state is two BIGINTs
-    (no float round-trips at all); values quantize through the same
-    double→DECIMAL(18,6) half-away-from-zero cast as both engines; the
-    blend divides with explicit truncation-toward-zero to mirror
-    Spark's DECIMAL `DIV` — so on closed input arriving in event-time
-    order, every emitted grid row is bit-identical to the batch
-    lead()+sequence() computation (asserted in tests/test_streaming.py).
-
-    Scale shape: state is 2 longs per active user; add a
-    watermark-driven timeout to retire idle users in production."""
-    import decimal
-
-    import pandas as pd  # local: keep module import light
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    hour_us = 3_600_000_000
-    out_schema = "user_id bigint, g_us bigint, value_e6 bigint"
-    state_schema = "prev_us bigint, prev_v6 bigint"
-
-    def _v6(value: float) -> int:
-        return int(
-            decimal.Decimal(value).scaleb(6).quantize(
-                decimal.Decimal("1"), rounding=decimal.ROUND_HALF_UP
-            )
-        )
-
-    def _tdiv(a: int, b: int) -> int:
-        # truncate toward zero, matching DECIMAL DIV / DuckDB //
-        q = abs(a) // b
-        return q if a >= 0 else -q
-
-    def fn(key, pdfs, state):
-        prev = state.get if state.exists else None
-        (uid,) = key
-        rows = []
-        pdf = _group_event_order(pdfs)
-        if pdf is not None:
-            for _, row in pdf.iterrows():
-                us = int(row["ts"].value) // 1000  # pandas ns -> us
-                v6 = _v6(float(row["value"]))
-                if prev is not None and us > prev[0]:
-                    pus, pv6 = prev
-                    h = pus // hour_us + 1
-                    while h * hour_us < us:
-                        g = h * hour_us
-                        rows.append(
-                            (
-                                int(uid),
-                                g,
-                                _tdiv(pv6 * (us - g) + v6 * (g - pus), us - pus),
-                            )
-                        )
-                        h += 1
-                prev = (us, v6)
-        if prev is not None:
-            state.update(tuple(prev))
-        yield pd.DataFrame(rows, columns=["user_id", "g_us", "value_e6"])
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def cusum_stream(hourly: DataFrame, ref_e6_by_type: dict[str, int]) -> DataFrame:
-    """Streaming twin of the batch `events_cusum_changepoint` detector:
-    per event type, the upward-CUSUM excursion C_h emitted for EVERY
-    hour of a dense hourly metric stream, with keyed state carrying the
-    running sum and running minimum across micro-batches
-    (`applyInPandasWithState`, append mode).
-
-    The reference rate `ref_e6_by_type` is a calibration input (in
-    production: the control-period mean the monitor was armed with; in
-    the twin test: the batch query's own ref_e6) — a sequential monitor
-    cannot know the full-window mean upfront, so the closed form's
-    C_h = S_h − min(0, min_{j≤h} S_j) runs against the armed reference.
-    Input is the dense (event_type, h, n) hourly grid — the shape a
-    metric pipeline emits every interval including zeros — so state
-    stays two BIGINTs per type and every arithmetic step is integer
-    (bit-identical to the batch windows on closed, time-ordered input;
-    asserted in tests/test_streaming.py)."""
-    import pandas as pd  # local: keep module import light
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "event_type string, h timestamp, c_e6 bigint"
-    state_schema = "s_e6 bigint, min_s_e6 bigint"
-
-    def fn(key, pdfs, state):
-        (etype,) = key
-        if etype not in ref_e6_by_type:
-            # un-armed type (appeared after calibration): emit nothing
-            # and keep no state rather than killing the whole query —
-            # the monitor covers exactly the armed set
-            yield pd.DataFrame(columns=["event_type", "h", "c_e6"])
-            return
-        ref = int(ref_e6_by_type[etype])
-        s, min_s = state.get if state.exists else (0, 0)
-        rows = []
-        pdf = _group_event_order(pdfs, by=("h",))
-        if pdf is not None:
-            for _, row in pdf.iterrows():
-                s += int(row["n"]) * 1_000_000 - ref
-                if s < min_s:
-                    min_s = s
-                c = s - min(0, min_s)
-                rows.append((etype, row["h"], c))
-        state.update((s, min_s))
-        yield pd.DataFrame(rows, columns=["event_type", "h", "c_e6"])
-
-    return hourly.groupBy("event_type").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )

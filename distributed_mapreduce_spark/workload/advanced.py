@@ -445,7 +445,7 @@ _Z_TP = (0, 600_000)
 )
 def q_zorder_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) code over (o_custkey, o_totalprice) — the
-    multi-column-layout key behind `sources.layout.write_zordered`.
+    multi-column-layout key (range-partition and sort a write on it).
     Quantize each dimension to 8 bits, interleave: pure JVM bit
     arithmetic, differentially checked against DuckDB's independent
     `>>`/`<<`/`&` evaluation. Clustering files by this key gives box

@@ -36,7 +36,7 @@ from distributed_mapreduce_spark.workload.similarity import (
     N_QUERIES as _N_QUERIES,
 )
 from distributed_mapreduce_spark.workload.similarity import TOP_K as _TOP_K
-from distributed_mapreduce_spark.workload.similarity import _sql_cos_u, _sql_dot, dot
+from distributed_mapreduce_spark.workload.similarity import _sql_cos_u
 
 #: Number of clusters; centroids seed from vec_id < KMEANS_K.
 KMEANS_K = 8
@@ -193,63 +193,6 @@ def q_kmeans_centroid_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("centroid_micro"),
     )
-
-
-def lloyd_iterations(spark: SparkSession, sf_dir: str, n_iter: int = 3) -> list[int]:
-    """Run ``n_iter`` full Lloyd iterations (assign → recompute
-    centroids) and return the fixed-point inertia after each
-    assignment — the iterative driver loop the reference runs by
-    re-submitting maple/juice commands to the fileserver
-    (`file_server/fileserver.py`), expressed as a
-    DataFrame loop with `localCheckpoint` lineage truncation (same
-    treatment as connected components; without it the plan nests every
-    iteration).
-
-    Centroids round-trip through the fixed-point micro representation
-    so each iteration's arithmetic stays deterministic."""
-    emb = table(spark, sf_dir, "embeddings")
-    cents = (
-        emb.filter(F.col("vec_id") < KMEANS_K)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-    )
-    inertias: list[int] = []
-    for _ in range(n_iter):
-        scored = emb.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            "cid",
-            "embedding",
-            _sqdist(F.col("embedding"), F.col("cvec")).alias("d"),
-        )
-        w = Window.partitionBy("vec_id").orderBy("d", "cid")
-        assigned = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                "vec_id",
-                "cid",
-                "embedding",
-                F.floor(F.col("d") * MICRO).cast("long").alias("dist_micro"),
-            )
-        )
-        inertias.append(assigned.agg(F.sum("dist_micro")).first()[0])
-        ex = assigned.select("cid", F.posexplode("embedding").alias("dim0", "val")).select(
-            "cid",
-            "dim0",
-            F.floor(F.col("val").cast("double") * MICRO).cast("long").alias("v"),
-        )
-        upd = ex.groupBy("cid", "dim0").agg(
-            (F.sum("v").cast("double") / F.count(F.lit(1)) / MICRO).alias("cv")
-        )
-        cents = (
-            upd.groupBy("cid")
-            .agg(F.sort_array(F.collect_list(F.struct("dim0", "cv"))).alias("ps"))
-            .select(
-                "cid",
-                F.transform("ps", lambda s: s["cv"].cast("float")).alias("cvec"),
-            )
-            .localCheckpoint()
-        )
-    return inertias
 
 
 _TRAINED_IVF_SQL = f"""

@@ -35,7 +35,6 @@ from distributed_mapreduce_spark.operators.filters import (
     grep_filter,
 )
 from distributed_mapreduce_spark.operators.partitioning import hash_bucket, range_bucket
-from distributed_mapreduce_spark.operators.setops import distinct_rows
 from distributed_mapreduce_spark.workload.registry import query, sql_query, table
 
 # SQL fragment twins of functions.strings (oracle side).
@@ -261,14 +260,12 @@ sql_query(
 )
 
 
-@query(
+# Deduplicate (data/maple-exe.go:132-141): the scan reads one column and
+# the shuffle carries distinct keys only.
+sql_query(
     "distinct_values",
-    oracle="SELECT DISTINCT p_brand FROM part",
+    "SELECT DISTINCT p_brand FROM part",
 )
-def q_distinct_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deduplicate (data/maple-exe.go:132-141). Projection-first so the
-    scan reads one column and the shuffle carries distinct keys only."""
-    return distinct_rows(table(spark, sf_dir, "part"), ["p_brand"])
 
 
 @query(

@@ -410,15 +410,6 @@ PAIR_MAX_PARTITIONS = 4096
 _PAIR_ROWS_CACHE: dict[tuple, int] = {}
 
 
-def clear_pair_volume_cache() -> None:
-    """Explicit invalidation hook for the memoized pair-volume sizing
-    aggregate (the fingerprint key makes staleness impossible for
-    on-disk regeneration; this covers remote stores, which ``os.stat``
-    cannot fingerprint, and remounts whose mtimes are not
-    trustworthy)."""
-    _PAIR_ROWS_CACHE.clear()
-
-
 def _pair_shuffle_parts(rare: DataFrame, cache_key: tuple | None) -> int | None:
     """Partition count for the shared-gram pair aggregate, or None to
     keep the session default (when no cache key is supplied — plan-only

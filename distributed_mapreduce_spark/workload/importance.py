@@ -62,12 +62,6 @@ IR_KEEP_MIN_PPM = 1_000_000
 _SQL_TARGET_IN = "(" + ", ".join(f"'{s}'" for s in IR_TARGET_SOURCES) + ")"
 
 
-def _grams(col) -> F.Column:
-    """Unigrams + bigrams of a text column (the DSIR feature space)."""
-    toks = _tokens(col)
-    return F.concat(toks, _ngrams(toks, 2))
-
-
 def _sql_grams(c: str) -> str:
     toks = _sql_tokens(c)
     return f"list_concat({toks}, {_sql_ngrams(toks, 2)})"
@@ -117,7 +111,7 @@ def _ex_df(docs: DataFrame) -> DataFrame:
     """(doc_id, source, b): one row per gram occurrence, bucketed.
 
     The token array is materialized in its own projection first:
-    `_grams` references it ~6x (concat + _ngrams' element_at/size
+    the gram expression references it ~6x (concat + _ngrams' element_at/size
     refs, some inside non-codegen HOF lambdas), so an inlined
     tokenizer expression would re-run per reference — measured ~4x
     whole-query cost on `dsir_importance_weights`."""
@@ -163,27 +157,6 @@ def _lam_df(bt: DataFrame) -> DataFrame:
             f" DIV (CAST(c_g + 1 AS DECIMAL(38,0)) * (t_all + {IR_DIM})) AS BIGINT)"
         ).alias("l_ppm"),
     )
-
-
-def train_dsir_model(spark: SparkSession, sf_dir: str) -> dict[int, int]:
-    """Freeze the batch model for online gating: collect the bucket
-    counts (≤{IR_DIM} rows — the broadcast-variable shape, NOT a corpus
-    collect) and compute every bucket's λ_ppm in exact integer
-    arithmetic (Python `//` on non-negative ints truncates identically
-    to Spark `DIV`/DuckDB `//`), including the add-one default for
-    buckets unseen in training, so the returned table is total over
-    [0, {IR_DIM})."""
-    docs = table(spark, sf_dir, "documents")
-    rows = _bt_df(_ex_df(docs)).collect()
-    c_all = sum(r.c_g for r in rows)
-    t_all = sum(r.t_g for r in rows)
-    by_b = {r.b: (r.c_g, r.t_g) for r in rows}
-    return {
-        b: (1_000_000 * (t + 1) * (c_all + IR_DIM))
-        // ((c + 1) * (t_all + IR_DIM))
-        for b in range(IR_DIM)
-        for c, t in (by_b.get(b, (0, 0)),)
-    }
 
 
 def _scored_df(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1119,7 +1119,7 @@ SESSION_GAP_SWEEP_MIN = (5, 15, 30, 60)
 # and mean events per session in exact micro-units. The elbow of this
 # table is how the sessionize threshold gets picked from data instead of
 # folklore; the engine's actual sessionizers (`events_sessionize`,
-# `sessionize_sql`, streaming `sessionized_counts`) consume the winner.
+# `sessionize_sql`) consume the winner.
 sql_query(
     "sessionize_gap_sweep",
     f"""

@@ -229,9 +229,17 @@ def _spell_div(s: str) -> str:
     return s
 
 
+def _unhide(text: str) -> str:
+    r"""A quoted literal as Spark's parser must read it: Spark unescapes
+    a backslash (``'\s+'`` reads ``s+``) where DuckDB keeps it, so each
+    one is doubled. A raw ``r'…'`` would not do: ``r'it''s'`` reads
+    ``its``."""
+    return text.replace("\\", "\\\\") if text.startswith("'") else text
+
+
 def to_spark(sql: str) -> str:
     """Spell a DuckDB oracle for Spark's parser with a closed map of
-    twenty-one rules. Renames: ``a // b`` -> ``a DIV b``; ``AS
+    twenty-two rules. Renames: ``a // b`` -> ``a DIV b``; ``AS
     MATERIALIZED (`` -> ``AS (``; ``unnest``, ``string_split``,
     ``list_filter``, ``regexp_matches``, ``quantile_cont``,
     ``epoch_us``, ``len`` and ``list_transform`` -> ``explode``,
@@ -250,14 +258,15 @@ def to_spark(sql: str) -> str:
     ``array(a, b)``; DuckDB's 1-based ``x[i]`` -> ``try_element_at(x,
     nullif(i, 0))``, which like DuckDB reads NULL past either end and
     counts a negative ``i`` from the back (a ``'key'`` or a slice is
-    left as it is). Quoted literals and comments pass through verbatim,
-    so a ``/*+ … */`` hint survives.
+    left as it is). Literals: each backslash in a quoted literal is
+    doubled, since Spark's parser unescapes it and DuckDB does not.
+    Otherwise literals and comments pass through verbatim, so a
+    ``/*+ … */`` hint survives.
 
     Not every rule keeps the value: DuckDB's ``//`` on a DOUBLE divides
     exactly where ``DIV`` truncates, a ``HUGEINT`` that reaches ``//``
     through a column still meets ``DIV``, ``split`` takes a Java regex
-    where ``string_split`` takes a plain separator, Spark's parser
-    unescapes a backslash in a literal that DuckDB keeps, and the regex
+    where ``string_split`` takes a plain separator, and the regex
     dialects differ (RE2 against Java). A query runs through this map
     only once its rows and dtypes equal the oracle's."""
     opaque: list[str] = []
@@ -305,7 +314,7 @@ def to_spark(sql: str) -> str:
             j = _name_start(s, j)
             s = f"{s[:j]}try_element_at({s[j:i].rstrip()}, nullif({body}, 0)){s[end + 1:]}"
             pos = j + len("try_element_at(")
-    return _HOLE.sub(lambda m: opaque[int(m.group(1))], s)
+    return _HOLE.sub(lambda m: _unhide(opaque[int(m.group(1))]), s)
 
 
 def _ensure_package_on_workers(spark: SparkSession) -> None:

@@ -452,9 +452,12 @@ sql_query(
 )
 
 
-@query(
+# Null-safe equi-join (`IS NOT DISTINCT FROM`): NULL keys match each
+# other instead of vanishing — required when a join key is legitimately
+# absent (here: status 'P' nulled out).
+sql_query(
     "join_null_safe",
-    oracle="""
+    """
     WITH keyed AS (
       SELECT o_orderkey,
              CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_orderstatus END AS k
@@ -466,26 +469,6 @@ sql_query(
     GROUP BY a.k
     """,
 )
-def q_join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-safe equi-join (`<=>` ≡ `IS NOT DISTINCT FROM`): NULL keys
-    match each other instead of vanishing — required when a join key is
-    legitimately absent (here: status 'P' nulled out). Catalyst still
-    plans a hash join on the null-safe key."""
-    orders = table(spark, sf_dir, "orders")
-    keyed = orders.select(
-        "o_orderkey",
-        F.when(F.col("o_orderstatus") == "P", None)
-        .otherwise(F.col("o_orderstatus"))
-        .alias("k"),
-    )
-    a = keyed.alias("a")
-    b = keyed.alias("b")
-    j = a.join(
-        b,
-        F.col("a.k").eqNullSafe(F.col("b.k"))
-        & (F.col("a.o_orderkey") == F.col("b.o_orderkey")),
-    )
-    return j.groupBy(F.col("a.k").alias("k")).agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
 @query(
@@ -892,29 +875,18 @@ ORDER BY ancestor
 sql_query("sql_recursive_hierarchy_rollup", _RECURSIVE_ROLLUP_SQL)
 
 
-@query(
+# INTERSECT ALL (bag semantics): each customer key appears
+# min(#finished, #open) times — the multiset counterpart of
+# `intersect_customers`. Spark plans it as a count-aggregate + generate,
+# shuffled on the key, never a join of the raw relations.
+sql_query(
     "intersect_all_customers",
-    oracle="""
+    """
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
     INTERSECT ALL
     SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
     """,
 )
-def q_intersect_all_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT ALL (bag semantics): each customer key appears
-    min(#finished, #open) times — the multiset counterpart of
-    `intersect_customers`, completing the SQL set-op surface. Spark
-    plans `intersectAll` as a count-aggregate + generate (no pairwise
-    matching), the same shape DuckDB uses — shuffle on the key, never
-    a join of the raw relations."""
-    orders = table(spark, sf_dir, "orders")
-    f = orders.filter(F.col("o_orderstatus") == "F").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    o = orders.filter(F.col("o_orderstatus") == "O").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return f.intersectAll(o)
 
 
 # EXCEPT ALL (bag semantics): each customer key appears max(#finished −

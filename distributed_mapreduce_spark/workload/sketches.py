@@ -24,7 +24,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_mapreduce_spark.workload.registry import query, sql_query, table
@@ -121,15 +121,6 @@ CMS_W = 1024
 
 #: Heavy hitters reported (exact top terms by frequency).
 CMS_TOPK = 20
-
-
-def _cms_bucket(term: Column, j: int) -> Column:
-    """Row-j counter index of a term (portable md5-u32 % CMS_W)."""
-    return (
-        F.conv(F.substring(F.md5(F.concat(F.lit(f"cm{j}_"), term)), 1, 8), 16, 10)
-        .cast("long")
-        % CMS_W
-    )
 
 
 def _sql_cms_bucket(expr: str, j: int) -> str:
@@ -425,12 +416,11 @@ sql_query(
 # ---------------------------------------------------------------------------
 
 #: Grid geometry: power-of-two bin width over a fixed, data-independent
-#: domain [0, QGRID_BINS * QGRID_W). Dividing an IEEE double by a power
+#: domain [0, 1024 * QGRID_W). Dividing an IEEE double by a power
 #: of two is EXACT (pure exponent shift), so `floor(p / 128.0)` is
 #: bit-identical on every engine — the whole "probabilistic" structure
 #: stays differentially testable, like the Bloom filter above.
 QGRID_W = 128
-QGRID_BINS = 1024
 
 #: Percentiles audited (lower empirical quantile, rank = ceil(p*N/100)).
 QGRID_PCTS = (50, 90, 99)

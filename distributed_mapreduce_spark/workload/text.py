@@ -127,20 +127,16 @@ sql_query(
 )
 
 
-@query(
+# Document fingerprint: md5 of whitespace-normalized lowercased text —
+# the exact-dedup key at corpus scale (hash once, group on the 128-bit
+# key instead of the full text).
+sql_query(
     "text_fingerprint",
-    oracle="""
+    """
     SELECT doc_id, md5(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp
     FROM documents
     """,
 )
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint: md5 of whitespace-normalized lowercased
-    text — the exact-dedup key at corpus scale (hash once, group on the
-    128-bit key instead of the full text)."""
-    docs = table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    return docs.select("doc_id", F.md5(norm).alias("fp"))
 
 
 #: BPE-ish pre-tokenizer regex (GPT-2-style splitting, simplified to
@@ -273,9 +269,16 @@ def _sql_scrub(c: str) -> str:
     return out
 
 
-@query(
+# PII scrub, differentially verified end-to-end. The fixture corpus
+# contains no digits or '@', so the query first injects deterministic
+# doc_id-derived PII (an email, a phone, an SSN-shaped id, an IPv4),
+# then scrubs in the PII_PATTERNS order and returns the scrubbed text
+# plus a `clean` audit bit (no digit or '@' may survive). Spark runs the
+# text with Java regex and DuckDB with RE2, so equal values prove the
+# patterns mean the same in both engines.
+sql_query(
     "text_scrub_pii",
-    oracle=f"""
+    f"""
     WITH injected AS (
       SELECT doc_id,
              text || ' reach user' || CAST(doc_id AS STRING)
@@ -291,34 +294,6 @@ def _sql_scrub(c: str) -> str:
     FROM injected
     """,
 )
-def q_text_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub, differentially verified end-to-end. The fixture corpus
-    contains no digits or '@' (checked: zero across all SFs), so the
-    query first INJECTS deterministic doc_id-derived PII — an email, a
-    phone, an SSN-shaped id, an IPv4 — then scrubs, and returns the
-    scrubbed text plus a `clean` audit bit (no digit or '@' may
-    survive). The oracle re-runs injection + scrub in DuckDB's RE2
-    engine, so the value hash proves both the redaction order and the
-    pattern semantics match across two regex engines."""
-    docs = table(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    dirty = F.concat(
-        F.col("text"),
-        F.lit(" reach user"),
-        did.cast("string"),
-        F.lit("@example.com or 415-555-"),
-        F.lpad((did % 10000).cast("string"), 4, "0"),
-        F.lit(" ssn 987-65-4321 from 192.168."),
-        (did % 256).cast("string"),
-        F.lit("."),
-        ((did * 7) % 256).cast("string"),
-    )
-    scrubbed = scrub_pii(dirty)
-    return docs.select(
-        "doc_id",
-        scrubbed.alias("scrubbed"),
-        (~scrubbed.rlike("[0-9@]")).alias("clean"),
-    )
 
 
 def build_corpus_prep(docs: DataFrame, with_telemetry: bool = False):

@@ -5,11 +5,7 @@ from __future__ import annotations
 import pytest
 
 from distributed_mapreduce_spark.plans import explain_str
-from distributed_mapreduce_spark.sources.bucketing import (
-    drop_bucketed,
-    read_bucketed,
-    write_bucketed,
-)
+from distributed_mapreduce_spark.sources.bucketing import read_bucketed, write_bucketed
 
 
 @pytest.fixture()
@@ -21,8 +17,8 @@ def bucketed_pair(spark, sf_dir, tmp_path):
     write_bucketed(orders, "b_orders", "o_orderkey", 4, str(tmp_path / "bo"))
     write_bucketed(lineitem, "b_lineitem", "o_orderkey", 4, str(tmp_path / "bl"))
     yield "b_orders", "b_lineitem"
-    drop_bucketed(spark, "b_orders")
-    drop_bucketed(spark, "b_lineitem")
+    spark.sql("DROP TABLE IF EXISTS b_orders")
+    spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
 def test_bucketed_join_has_no_exchange(spark, bucketed_pair):
@@ -48,18 +44,3 @@ def test_bucketed_aggregation_has_no_exchange(spark, bucketed_pair):
     a, _ = bucketed_pair
     agg = read_bucketed(spark, a).groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("c"))
     assert "Exchange" not in explain_str(agg)
-
-
-def test_scan_parquet_evolving_merges_schemas(spark, tmp_path):
-    """Files written before/after a column was added read back as one
-    relation with nulls for the missing column."""
-    from distributed_mapreduce_spark.sources.readers import scan_parquet_evolving
-
-    out = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], ["id", "v1"]).write.mode("append").parquet(out)
-    spark.createDataFrame([(2, "b", 7)], ["id", "v1", "v2"]).write.mode("append").parquet(out)
-
-    df = scan_parquet_evolving(spark, out)
-    assert set(df.columns) == {"id", "v1", "v2"}
-    rows = {r["id"]: (r["v1"], r["v2"]) for r in df.collect()}
-    assert rows == {1: ("a", None), 2: ("b", 7)}

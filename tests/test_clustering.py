@@ -45,18 +45,6 @@ def test_centroid_update_shape(spark, sf_dir):
     c.unpersist()
 
 
-def test_lloyd_iterations_monotone_inertia(spark, sf_dir):
-    from distributed_mapreduce_spark.workload.clustering import lloyd_iterations
-
-    inertias = lloyd_iterations(spark, sf_dir, n_iter=3)
-    assert len(inertias) == 3
-    # Lloyd monotonically decreases inertia; fixed-point rounding can
-    # wiggle the last micro-digits, so allow 0.1% slack.
-    for a, b in zip(inertias, inertias[1:]):
-        assert b <= a * 1.001
-    assert inertias[-1] < inertias[0]
-
-
 def test_lloyd_converge_query_monotone(spark, sf_dir):
     """The driver-checkable Lloyd loop's inertia is nonincreasing
     across iterations and the vector count is constant."""

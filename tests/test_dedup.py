@@ -202,7 +202,7 @@ def test_pair_volume_cache_invalidates_on_data_regeneration(spark, tmp_path):
     mis-size the shuffle."""
     import os
 
-    from distributed_mapreduce_spark.workload.dedup import clear_pair_volume_cache
+    from distributed_mapreduce_spark.workload.dedup import _PAIR_ROWS_CACHE
 
     d = tmp_path / "sfX"
     d.mkdir()
@@ -220,7 +220,7 @@ def test_pair_volume_cache_invalidates_on_data_regeneration(spark, tmp_path):
     st = os.stat(f)
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
     assert sorted(_pair_volumes(spark, key, [11]).values()) == [3, 4, 5]
-    clear_pair_volume_cache()
+    _PAIR_ROWS_CACHE.clear()
     assert list(_pair_volumes(spark, key, [3]).values()) == [1]
 
 

@@ -6,11 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from distributed_mapreduce_spark.sources.layout import (
-    morton2,
-    quantize,
-    write_zordered,
-)
+from distributed_mapreduce_spark.sources.layout import morton2, quantize
 
 N, BITS, FILES = 20_000, 8, 16
 
@@ -21,6 +17,20 @@ def _grid(spark):
     return spark.range(N).select(
         F.pmod(F.xxhash64(F.col("id")), F.lit(1000)).alias("x"),
         F.pmod(F.xxhash64(F.col("id") + N), F.lit(1000)).alias("y"),
+    )
+
+
+def _write_zordered(df, path, z):
+    """``FILES`` parquet files clustered by the z-code: range-partition
+    on z and sort within each partition, so every file covers a tight
+    z-interval."""
+    (
+        df.withColumn("_z", z)
+        .repartitionByRange(FILES, F.col("_z"))
+        .sortWithinPartitions("_z")
+        .drop("_z")
+        .write.mode("overwrite")
+        .parquet(path)
     )
 
 
@@ -38,7 +48,7 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
     df = _grid(spark)
     z = morton2(quantize(F.col("x"), 0, 999, BITS), quantize(F.col("y"), 0, 999, BITS), BITS)
     zpath = str(tmp_path / "zorder")
-    write_zordered(df, zpath, z, FILES)
+    _write_zordered(df, zpath, z)
 
     # single-column sort layout (the x-optimised strawman)
     xpath = str(tmp_path / "xsort")
@@ -74,7 +84,7 @@ def test_zorder_files_have_tight_minmax_footers(spark, tmp_path):
     df = _grid(spark)
     z = morton2(quantize(F.col("x"), 0, 999, BITS), quantize(F.col("y"), 0, 999, BITS), BITS)
     zpath = str(tmp_path / "zorder")
-    write_zordered(df, zpath, z, FILES)
+    _write_zordered(df, zpath, z)
 
     spans = (
         spark.read.parquet(zpath)
@@ -91,42 +101,6 @@ def test_zorder_files_have_tight_minmax_footers(spark, tmp_path):
     avg_dx = sum(r["dx"] for r in spans) / len(spans)
     avg_dy = sum(r["dy"] for r in spans) / len(spans)
     assert avg_dx < 600 and avg_dy < 600
-
-
-def test_compact_small_files_reduces_count_and_preserves_rows(spark, sf_dir, tmp_path):
-    from distributed_mapreduce_spark.sources.layout import compact_small_files
-    from distributed_mapreduce_spark.workload.registry import table
-
-    frag_dir = str(tmp_path / "fragmented")
-    orders = table(spark, sf_dir, "orders")
-    orders.repartition(64).write.parquet(frag_dir)  # simulate landing debris
-    import glob
-
-    assert len(glob.glob(f"{frag_dir}/part-*.parquet")) == 64
-
-    out_dir = str(tmp_path / "compacted")
-    n = orders.count()
-    files = compact_small_files(
-        spark.read.parquet(frag_dir), out_dir, target_rows_per_file=n // 3,
-        sort_cols=["o_orderdate"],
-    )
-    produced = glob.glob(f"{out_dir}/part-*.parquet")
-    assert len(produced) == files <= 5
-    back = spark.read.parquet(out_dir)
-    assert back.count() == n
-    # clustering kept: each file's o_orderdate range is disjoint-ish —
-    # min/max stats prune: a narrow date filter must not read all files
-    from pyspark.sql import functions as F
-
-    per_file = (
-        back.withColumn("f", F.input_file_name())
-        .groupBy("f")
-        .agg(F.min("o_orderdate").alias("lo"), F.max("o_orderdate").alias("hi"))
-        .collect()
-    )
-    spans = sorted([(r.lo, r.hi) for r in per_file])
-    for (a_lo, a_hi), (b_lo, b_hi) in zip(spans, spans[1:]):
-        assert a_hi <= b_lo  # contiguous, non-interleaved ranges
 
 
 def _xy2d_ref(n, x, y):

@@ -111,7 +111,7 @@ def test_sink_merged_csv_single_file_roundtrip(spark, tmp_path):
     """conglomerate parity: exactly ONE csv part file, content intact."""
     import glob
 
-    from distributed_mapreduce_spark.sources.sinks import sink_merged_csv, sink_parquet
+    from distributed_mapreduce_spark.sources.sinks import sink_merged_csv
 
     df = spark.createDataFrame(
         [("Video", 3, "60.00%"), ("Loop", 2, "40.00%")], ["detection", "cnt", "pct"]
@@ -128,7 +128,7 @@ def test_sink_merged_csv_single_file_roundtrip(spark, tmp_path):
 
     # and the at-scale default keeps partitioning
     pq = str(tmp_path / "pq")
-    sink_parquet(df, pq, partition_by=["detection"])
+    df.write.partitionBy("detection").parquet(pq)
     import os
     assert any(d.startswith("detection=") for d in os.listdir(pq))
 

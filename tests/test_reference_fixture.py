@@ -20,9 +20,9 @@ from distributed_mapreduce_spark.functions.strings import (
     normalize_empty,
     pct_of_total_sql,
 )
+from distributed_mapreduce_spark.maplejuice import select_where
 from distributed_mapreduce_spark.operators.aggregates import agg_pct_of_total
 from distributed_mapreduce_spark.operators.filters import filter_eq_param
-from distributed_mapreduce_spark.sources.readers import scan_csv
 
 TRAFFIC = "/root/reference/data/traffic.csv"
 
@@ -32,7 +32,7 @@ _NORM = "CASE WHEN {c} IS NULL OR " + _T + " = '' THEN 'empty' ELSE " + _T + " E
 
 def _oracle(param: str):
     con = duckdb.connect()
-    # all_varchar mirrors scan_csv's untyped StringType line model.
+    # all_varchar mirrors Catalog.put's untyped StringType CSV read.
     return con.execute(
         f"""
         WITH t AS (
@@ -52,7 +52,7 @@ def _oracle(param: str):
 
 @pytest.mark.parametrize("param", ["Fiber/Radio", "Radio", "Fiber"])
 def test_flagship_on_reference_traffic_csv(spark, param):
-    df = scan_csv(spark, TRAFFIC, header=True)
+    df = spark.read.option("header", True).csv(TRAFFIC)
     filtered = filter_eq_param(df, "Interconne", param)
     got = {
         (r["detection"], r["cnt"], r["pct"])
@@ -74,11 +74,7 @@ def test_select_regex_on_reference_traffic_csv(spark, pattern):
     identical Java/PCRE semantics)."""
     import re
 
-    from distributed_mapreduce_spark.operators.filters import filter_rlike_line
-    from distributed_mapreduce_spark.sources.readers import scan_text
-
-    lines = scan_text(spark, TRAFFIC)
-    got = filter_rlike_line(lines, pattern).count()
+    got = select_where(spark.read.text(TRAFFIC), pattern).count()
     with open(TRAFFIC, encoding="utf-8") as fh:
         expected = sum(1 for line in fh if re.search(pattern, line.rstrip("\n")))
     assert got == expected and got > 0

@@ -1,54 +1,22 @@
-"""Format-breadth round trips: ORC read/write parity with parquet, and
-gzip-compressed CSV ingestion (both Spark-native — no extra packages)."""
+"""Format breadth: gzip-compressed CSV ingestion through `Catalog.put`
+(Spark-native, no extra packages)."""
 
 from __future__ import annotations
 
 import gzip
 import os
 
-from pyspark.sql import functions as F
-
-from distributed_mapreduce_spark.sources.readers import scan_csv, scan_orc
-from distributed_mapreduce_spark.sources.sinks import sink_orc
-from distributed_mapreduce_spark.workload.registry import table
+from distributed_mapreduce_spark.catalog import Catalog
 
 
-def _checksum(df):
-    enc = F.concat_ws("|", *[F.col(c).cast("string") for c in sorted(df.columns)])
-    h = F.conv(F.substring(F.md5(enc), 1, 8), 16, 10).cast("long")
-    r = df.agg(F.count(F.lit(1)).alias("n"), F.sum(h).alias("c")).first()
-    return r["n"], r["c"]
-
-
-def test_orc_roundtrip_matches_parquet(spark, sf_dir, tmp_path):
-    src = table(spark, sf_dir, "orders")
-    out = str(tmp_path / "orders_orc")
-    sink_orc(src, out)
-    back = scan_orc(spark, out)
-    assert sorted(back.columns) == sorted(src.columns)
-    assert _checksum(back) == _checksum(src)
-
-
-def test_orc_partitioned_prunes(spark, sf_dir, tmp_path):
-    src = table(spark, sf_dir, "orders").withColumn(
-        "status", F.col("o_orderstatus")
-    )
-    out = str(tmp_path / "orders_orc_part")
-    sink_orc(src, out, partition_by=["status"])
-    back = scan_orc(spark, out).filter(F.col("status") == "F")
-    # partition filter must reach the scan, not a post-filter
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "status" in plan
-    expect = src.filter(F.col("o_orderstatus") == "F").count()
-    assert back.count() == expect
-
-
-def test_gzip_csv_scan(spark, sf_dir, tmp_path):
+def test_gzip_csv_scan(spark, tmp_path):
     rows = [f"{i},val{i}" for i in range(100)]
     gz = tmp_path / "part-000.csv.gz"
     with gzip.open(gz, "wt") as f:
         f.write("id,v\n" + "\n".join(rows) + "\n")
-    df = scan_csv(spark, str(gz), header=True)
+    cat = Catalog(spark, str(tmp_path / "store"))
+    cat.put(str(gz), "gz", fmt="csv")
+    df = cat.get("gz")
     assert df.count() == 100
     got = {r["id"] for r in df.collect()}
     assert got == {str(i) for i in range(100)}

@@ -8,7 +8,6 @@ import pytest
 from distributed_mapreduce_spark.streaming.events_stream import (
     read_events_stream,
     run_to_memory,
-    sessionized_counts,
     stateful_user_counts,
     windowed_counts,
 )
@@ -71,15 +70,6 @@ def test_stateful_user_counts_final_state_matches_batch(spark, events_dir):
         .withColumnRenamed("count", "n").collect()
     }
     assert got == expected and len(got) > 0
-
-
-def test_sessionized_counts_total_events_preserved(spark, events_dir):
-    stream = sessionized_counts(read_events_stream(spark, events_dir), "30 minutes", "2 hours")
-    run_to_memory(stream, "sess_stream")
-    rows = spark.table("sess_stream").collect()
-    total = sum(r["n_events"] for r in rows)
-    assert total == spark.read.parquet(events_dir).count()
-    assert all(r["session_start"] <= r["session_end"] for r in rows)
 
 
 def test_watermark_drops_late_events_in_append_mode(spark, tmp_path):
@@ -152,83 +142,6 @@ def test_watermark_drops_late_events_in_append_mode(spark, tmp_path):
     assert dropped == 1
 
 
-def test_watermark_late_audit_matches_batch_twin(spark, tmp_path):
-    """Event-time watermark + late-data ACCOUNTING certification
-    (VERDICT r07 #6): run the windowed aggregation over four
-    micro-batches with late rows injected — including two rows whose
-    window end falls EXACTLY on the watermark, pinning the boundary
-    (they are ADMITTED: eviction requires the watermark to pass the
-    exclusive window end) — and certify BOTH outputs against the batch
-    twin computing the same admissibility predicate: the final
-    per-window counts must be bit-equal over admitted rows, and the
-    stream's own numRowsDroppedByWatermark total must equal the twin's
-    predicate count. admitted + dropped = total closes the
-    accounting."""
-    import datetime as dt
-    import glob
-    import shutil
-    import time
-
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        run_windowed_with_late_audit,
-        windowed_counts_batch_twin,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-
-    def land(rows, name):
-        staging = str(tmp_path / f"stage_{name}")
-        spark.createDataFrame(rows, schema=schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        shutil.copy(
-            glob.glob(f"{staging}/part-*.parquet")[0], str(landing / f"{name}.parquet")
-        )
-
-    T = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def ev(i, minutes, etype="click"):
-        return (i, T + dt.timedelta(minutes=minutes), 1, etype, float(i), "{}")
-
-    # Window 1h, watermark delay 1h. Batch-end watermarks: none, 11:00,
-    # 12:00, 12:40.
-    land([ev(1, 0), ev(2, 10), ev(3, 20, "view"), ev(4, 120)], "a")
-    time.sleep(1.1)
-    # 10:30 -> [10,11) end 11:00 == wm 11:00: EXACT boundary (ADMITTED
-    # — eviction needs wm PAST the exclusive end); 11:40 -> end 12:00 >
-    # 11:00: admitted; 13:00 advances wm to 12:00.
-    land([ev(5, 30), ev(6, 100, "view"), ev(7, 180)], "b")
-    time.sleep(1.1)
-    # 11:30 -> end 12:00 == wm 12:00: boundary (ADMITTED); 10:40 -> end
-    # 11:00 < 12:00: late (DROPPED); 13:40 advances wm to 12:40.
-    land([ev(8, 90), ev(9, 40, "view"), ev(10, 220)], "c")
-    time.sleep(1.1)
-    # 12:10 -> end 13:00 > 12:40: late-but-within-watermark (admitted);
-    # 10:50 -> end 11:00 < 12:40: late (DROPPED); 14:00 on time.
-    land([ev(11, 130, "view"), ev(12, 240), ev(13, 50, "view")], "d")
-
-    got, dropped = run_windowed_with_late_audit(
-        spark, str(landing), "1 hour", "1 hour"
-    )
-    files = [str(landing / f"{n}.parquet") for n in "abcd"]
-    twin_df, twin_dropped = windowed_counts_batch_twin(
-        spark, files, "1 hour", "1 hour"
-    )
-    expected = {
-        (r["ws"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in twin_df.collect()
-    }
-    assert got == expected and len(got) > 0
-    assert dropped == twin_dropped
-    # Late rows really were injected and dropped (ids 9 and 13); the
-    # two boundary rows (5 and 8) were admitted, not dropped.
-    assert dropped == 2
-    # Accounting closes: every input row is either counted or dropped.
-    assert sum(n for n, _ in got.values()) + dropped == 13
-
-
 def test_stream_dedup_within_watermark_removes_redelivery(spark, tmp_path):
     """The same event_id delivered in two micro-batches survives once."""
     import datetime as dt
@@ -236,10 +149,7 @@ def test_stream_dedup_within_watermark_removes_redelivery(spark, tmp_path):
     import shutil
     import time
 
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        dedup_events_stream,
-        write_partitioned_parquet,
-    )
+    from distributed_mapreduce_spark.streaming.events_stream import dedup_events_stream
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -266,39 +176,12 @@ def test_stream_dedup_within_watermark_removes_redelivery(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(landing))
     )
-    deduped = dedup_events_stream(stream)
-    out = str(tmp_path / "out")
-    write_partitioned_parquet(deduped, out, str(tmp_path / "ckpt"))
+    run_to_memory(dedup_events_stream(stream), "dedup_sink", output_mode="append")
 
-    got = spark.read.parquet(out)
+    got = spark.table("dedup_sink")
     assert got.count() == 3  # e1 once, e2, e3
     assert got.filter("event_id = 1").count() == 1
-    # The foreachBatch sink produced a partition-pruned layout.
     assert got.filter("event_type = 'click'").count() == 2
-    import os
-    assert any(d.startswith("event_type=") for d in os.listdir(out))
-    # Each batch landed under its own _batch_id partition (the replay
-    # idempotence key).
-    assert "_batch_id" in got.columns
-
-
-def test_partitioned_parquet_sink_batch_replay_is_idempotent(spark, tmp_path):
-    """A replayed micro-batch (same batch_id) must overwrite its own
-    partitions, not append duplicates — the foreachBatch parquet-sink
-    idempotence contract."""
-    from distributed_mapreduce_spark.streaming.events_stream import parquet_batch_sink
-
-    out = str(tmp_path / "out")
-    batch = spark.createDataFrame(
-        [(1, "click", 1.0), (2, "view", 2.0)], ["event_id", "event_type", "value"]
-    )
-    sink = parquet_batch_sink(out)
-    sink(batch, 0)
-    sink(batch, 0)  # replay of the same batch
-    assert spark.read.parquet(out).count() == 2
-    # a NEW batch id appends rather than clobbering earlier batches
-    sink(batch.filter("event_id = 1"), 1)
-    assert spark.read.parquet(out).count() == 3
 
 
 def test_stream_static_join_enriches_events(spark, events_dir):
@@ -326,896 +209,3 @@ def test_stream_static_join_enriches_events(spark, events_dir):
         for r in batch.groupBy("type_code").count().collect()
     }
     assert got == expected and len(got) > 0
-
-
-def test_stream_stream_join_matches_batch_range_join(spark, events_dir):
-    """Stream-stream interval join on a closed input == the batch
-    interval join (the workload's range_join_conversions plan)."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        stream_stream_conversions,
-    )
-
-    stream = read_events_stream(spark, events_dir)
-    joined = stream_stream_conversions(stream)
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ss_join_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["purchase_id"], r["click_id"])
-        for r in spark.table("ss_join_sink").collect()
-    }
-
-    ev = spark.read.parquet(events_dir)
-    p = ev.filter("event_type = 'purchase'").select(
-        F.col("user_id").alias("pu"), F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    c = ev.filter("event_type = 'click'").select(
-        F.col("user_id").alias("cu"), F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    batch = p.join(
-        c,
-        (F.col("pu") == F.col("cu"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 300 SECONDS")),
-    )
-    expected = {
-        (r["purchase_id"], r["click_id"])
-        for r in batch.select("purchase_id", "click_id").collect()
-    }
-    assert got == expected and len(got) > 0
-
-
-def test_multi_grain_counts_match_batch(spark, events_dir):
-    from distributed_mapreduce_spark.streaming.events_stream import multi_grain_counts
-
-    from pyspark.sql import functions as F
-
-    hourly, by_type = multi_grain_counts(read_events_stream(spark, events_dir))
-    run_to_memory(hourly, "mg_hourly", output_mode="append")
-    run_to_memory(by_type, "mg_type", output_mode="complete")
-    ev = table(spark, "/root/testdata/sf0.001", "events")
-    batch_hourly = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n_events")
-    )
-    got_h = {tuple(r) for r in spark.table("mg_hourly").collect()}
-    want_h = {tuple(r) for r in batch_hourly.collect()}
-    # Append mode emits only watermark-closed windows; every emitted
-    # window must match batch exactly and the final tail may be held
-    # back. availableNow advances the watermark to max(ts)-2h.
-    assert got_h <= want_h
-    assert len(got_h) > 0
-    got_t = {tuple(r) for r in spark.table("mg_type").collect()}
-    want_t = {
-        tuple(r)
-        for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert got_t == want_t
-
-
-def test_stratified_sample_stream_equals_batch_gate(spark, events_dir):
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        stratified_sample_stream,
-    )
-    from distributed_mapreduce_spark.workload.events import SAMPLE_BP
-
-    from pyspark.sql import functions as F
-
-    sampled = stratified_sample_stream(
-        read_events_stream(spark, events_dir), dict(SAMPLE_BP)
-    )
-    run_to_memory(sampled.select("event_id"), "strat_sample", output_mode="append")
-    got = {r.event_id for r in spark.table("strat_sample").collect()}
-    from distributed_mapreduce_spark.workload import QUERIES
-
-    batch_counts = {
-        r.event_type: r.n_sampled
-        for r in QUERIES["events_stratified_sample"](
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    ev = table(spark, "/root/testdata/sf0.001", "events")
-    got_counts = (
-        ev.filter(F.col("event_id").isin(got) if got else F.lit(False))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    assert {(r.event_type, r.n) for r in got_counts.collect()} == set(
-        batch_counts.items()
-    )
-
-
-@pytest.fixture(scope="module")
-def docs_dir(spark, tmp_path_factory):
-    """Land the sf0.001 documents as a 4-file parquet directory so
-    maxFilesPerTrigger=1 yields four micro-batches."""
-    out = str(tmp_path_factory.mktemp("docs_stream") / "landing")
-    docs = table(spark, "/root/testdata/sf0.001", "documents")
-    docs.repartition(4).write.mode("overwrite").parquet(out)
-    return out
-
-
-def test_streaming_dedup_matches_batch_dedup_exact(spark, docs_dir):
-    """Final per-hash state of the streaming dedup == the batch
-    dedup_exact answer (fp, keep_id, cnt) on the same closed corpus,
-    with state genuinely carried across micro-batches."""
-    from distributed_mapreduce_spark.streaming.documents_stream import (
-        dedup_docs_stream,
-        read_documents_stream,
-    )
-    from distributed_mapreduce_spark.workload import QUERIES
-
-    stream = dedup_docs_stream(
-        read_documents_stream(spark, docs_dir, max_files_per_trigger=1)
-    )
-    run_to_memory(stream, "dedup_stream", output_mode="update")
-    # Update-mode sink appends per batch; keep_id is monotone
-    # nonincreasing and cnt monotone nondecreasing, so the final state
-    # per key is (min keep_id, max cnt).
-    got: dict[str, tuple[int, int]] = {}
-    n_emissions = 0
-    for r in spark.table("dedup_stream").collect():
-        n_emissions += 1
-        k, c = got.get(r["fp"], (r["keep_id"], 0))
-        got[r["fp"]] = (min(k, r["keep_id"]), max(c, r["cnt"]))
-
-    expected = {
-        r["fp"]: (r["keep_id"], r["cnt"])
-        for r in QUERIES["dedup_exact"](spark, "/root/testdata/sf0.001").collect()
-    }
-    assert got == expected and len(got) > 0
-    # multi-batch: more emissions than distinct keys proves state
-    # carried across micro-batches (same key touched in >1 batch) OR
-    # every key arrived once; either way the four batches ran.
-    assert n_emissions >= len(got)
-
-
-def test_streaming_lsh_candidates_match_batch(spark, docs_dir):
-    """Union of streamed candidate pairs (distinct) == the batch
-    MinHash-LSH candidate set on the same closed corpus."""
-    from distributed_mapreduce_spark.streaming.documents_stream import (
-        lsh_candidates_stream,
-        read_documents_stream,
-    )
-    from distributed_mapreduce_spark.workload.dedup import (
-        minhash_candidate_pairs,
-        shingle_table,
-    )
-
-    stream = lsh_candidates_stream(
-        read_documents_stream(spark, docs_dir, max_files_per_trigger=1)
-    )
-    run_to_memory(stream, "lsh_stream", output_mode="append")
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in spark.table("lsh_stream").collect()
-    }
-
-    docs = spark.read.parquet(docs_dir)
-    sh = shingle_table(docs)
-    expected = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_candidate_pairs(sh).collect()
-    }
-    sh.unpersist()
-    assert got == expected and len(got) > 0
-
-
-def test_streaming_restart_resumes_from_checkpoint_exactly_once(spark, tmp_path):
-    """Stop-and-restart semantics: drain batch 1, stop, land more
-    files, restart with the SAME checkpoint — the resumed query
-    processes only the new files and the final state equals the batch
-    answer over everything (no duplicates, no loss). Uses the
-    foreachBatch parquet sink (the memory sink cannot recover from a
-    checkpoint)."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.documents_stream import (
-        dedup_docs_stream,
-        read_documents_stream,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    sink_dir = str(tmp_path / "sink")
-
-    def drain():
-        stream = dedup_docs_stream(
-            read_documents_stream(spark, str(landing), max_files_per_trigger=1)
-        )
-
-        def sink(batch_df, batch_id):
-            (
-                batch_df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(sink_dir)
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    src.filter("doc_id % 2 = 0").coalesce(1).write.mode("append").parquet(str(landing))
-    drain()
-    n_batches_first = len(glob.glob(f"{sink_dir}/_batch_id=*"))
-    src.filter("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(str(landing))
-    drain()
-    # the restart resumed batch numbering instead of reprocessing run 1
-    assert len(glob.glob(f"{sink_dir}/_batch_id=*")) > n_batches_first
-
-    got = {}
-    for r in (
-        spark.read.parquet(sink_dir)
-        .groupBy("fp")
-        .agg(F.min("keep_id").alias("k"), F.max("cnt").alias("c"))
-        .collect()
-    ):
-        got[r["fp"]] = (r["k"], r["c"])
-    exp = {
-        r["fp"]: (r["k"], r["c"])
-        for r in src.groupBy(F.md5("text").alias("fp"))
-        .agg(F.min("doc_id").alias("k"), F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    assert got == exp and len(got) > 0
-
-
-def test_corpus_prep_stream_matches_batch_pipeline(spark, docs_dir):
-    """Streaming scrub→filter→dedup final state, rolled up by the
-    deterministic split gate, equals the batch pipeline_corpus_prep
-    per-split counts on the same closed corpus."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.documents_stream import (
-        corpus_prep_stream,
-        read_documents_stream,
-    )
-    from distributed_mapreduce_spark.workload import QUERIES
-    from distributed_mapreduce_spark.workload.text import (
-        SPLIT_TRAIN_PCT,
-        SPLIT_VAL_PCT,
-    )
-
-    stream = corpus_prep_stream(
-        read_documents_stream(spark, docs_dir, max_files_per_trigger=1)
-    )
-    run_to_memory(stream, "prep_stream", output_mode="update")
-    final: dict[str, int] = {}
-    for r in spark.table("prep_stream").collect():
-        final[r["fp"]] = min(final.get(r["fp"], r["keep_id"]), r["keep_id"])
-
-    rows = spark.createDataFrame(
-        [(v,) for v in final.values()], "doc_id long"
-    ).select(
-        "doc_id",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("split_"), F.col("doc_id").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 100
-        ).alias("b"),
-    )
-    got = {}
-    for r in rows.collect():
-        split = (
-            "train" if r["b"] < SPLIT_TRAIN_PCT
-            else "val" if r["b"] < SPLIT_VAL_PCT
-            else "test"
-        )
-        got[split] = got.get(split, 0) + 1
-
-    expected = {
-        r["split"]: r["n_docs"]
-        for r in QUERIES["pipeline_corpus_prep"](spark, "/root/testdata/sf0.001").collect()
-    }
-    assert got == expected and sum(got.values()) > 0
-
-
-def test_quota_limit_stream_matches_batch_rank(spark, tmp_path):
-    """Keyed-quota admission across two time-ordered micro-batches
-    equals the batch first-N-per-(user, hour) rank rule."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        quota_limit_stream,
-        read_events_stream,
-        run_to_memory,
-    )
-    from distributed_mapreduce_spark.workload.registry import table
-
-    ev = table(spark, "/root/testdata/sf0.001", "events")
-    cut = ev.agg(F.expr("percentile(unix_micros(ts), 0.5)")).first()[0]
-    landing = tmp_path / "landing"
-    landing.mkdir()
-
-    early = ev.filter(F.unix_micros("ts") <= cut)
-    late = ev.filter(F.unix_micros("ts") > cut)
-    early.coalesce(1).write.mode("append").parquet(str(landing))
-    stream = quota_limit_stream(read_events_stream(spark, str(landing)), 3)
-    run_to_memory(stream, "quota1", output_mode="append")
-    got = {r["event_id"] for r in spark.table("quota1").collect()}
-    late.coalesce(1).write.mode("append").parquet(str(landing))
-    # second drain continues the same in-memory state via a new query
-    # over the same landing dir: re-running from scratch would re-admit
-    # early events, so instead drain everything in ts order in one go
-    # and assert the union equals the batch rule.
-    # one file per micro-batch; the file source processes oldest file
-    # first, so batch order follows the ts split and the (user, hour)
-    # counters genuinely carry across batches
-    stream2 = quota_limit_stream(
-        read_events_stream(spark, str(landing), max_files_per_trigger=1), 3
-    )
-    run_to_memory(stream2, "quota2", output_mode="append")
-    got_all = {r["event_id"] for r in spark.table("quota2").collect()}
-
-    w = Window.partitionBy(
-        "user_id", F.date_trunc("hour", F.col("ts"))
-    ).orderBy("ts", "event_id")
-    expected = {
-        r["event_id"]
-        for r in ev.withColumn("rn", F.row_number().over(w))
-        .filter("rn <= 3")
-        .collect()
-    }
-    assert got_all == expected and len(got_all) > 0
-    # the first drain's admissions are a subset decided by the same rule
-    assert got <= expected
-
-
-def test_cdc_upsert_stream_reproduces_v2(spark, tmp_path):
-    """Streaming CDC apply (twin of the batch cdc_apply_patch query):
-    land v1 as the state table, write the v1->v2 change feed as 4 files
-    (4 micro-batches via maxFilesPerTrigger=1), drain with availableNow,
-    and assert the final state equals v2 row-for-row. Batch boundaries
-    are arbitrary; each key appears once in the feed, so the final
-    state must be batching-invariant."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.cdc_stream import run_cdc_stream
-    from distributed_mapreduce_spark.workload.registry import table
-    from distributed_mapreduce_spark.workload.versioning import (
-        _snapshot_v1,
-        snapshot_diff,
-    )
-
-    orders = table(spark, "/root/testdata/sf0.001", "orders")
-    v2 = orders.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    v1 = _snapshot_v1(orders)
-
-    state_dir = str(tmp_path / "state")
-    v1.write.mode("overwrite").parquet(state_dir)
-
-    # change feed: diff rows + the full new image for inserts/updates
-    diff = snapshot_diff(v1, v2).select("o_orderkey", "change_type")
-    feed = diff.join(v2, "o_orderkey", "left").select(
-        "o_orderkey", "change_type", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    feed_dir = str(tmp_path / "feed")
-    feed.repartition(4).write.mode("overwrite").parquet(feed_dir)
-
-    run_cdc_stream(
-        spark, feed_dir, state_dir, "o_orderkey", str(tmp_path / "ckpt")
-    )
-
-    got = sorted(map(tuple, spark.read.parquet(state_dir).collect()))
-    want = sorted(map(tuple, v2.collect()))
-    assert got == want
-
-
-def test_cdc_upsert_batch_replay_is_idempotent(spark, tmp_path):
-    """Failure-recovery contract: foreachBatch may REPLAY a batch after
-    a crash-restart; applying the same change batch twice must leave
-    the state table exactly where one application left it (anti-join
-    removes the touched keys, union re-adds identical images)."""
-    from distributed_mapreduce_spark.streaming.cdc_stream import cdc_upsert_sink
-    from distributed_mapreduce_spark.workload.registry import table
-    from distributed_mapreduce_spark.workload.versioning import (
-        _snapshot_v1,
-        snapshot_diff,
-    )
-
-    orders = table(spark, "/root/testdata/sf0.001", "orders")
-    v2 = orders.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    v1 = _snapshot_v1(orders)
-    state_dir = str(tmp_path / "state")
-    v1.write.mode("overwrite").parquet(state_dir)
-
-    diff = snapshot_diff(v1, v2).select("o_orderkey", "change_type")
-    feed = diff.join(v2, "o_orderkey", "left").select(
-        "o_orderkey", "change_type", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    batch = feed.limit(200).cache()
-    batch.count()
-
-    apply_batch = cdc_upsert_sink(state_dir, "o_orderkey")
-    apply_batch(batch, 0)
-    once = sorted(map(tuple, spark.read.parquet(state_dir).collect()))
-    apply_batch(batch, 0)  # replay after simulated crash
-    twice = sorted(map(tuple, spark.read.parquet(state_dir).collect()))
-    assert once == twice
-
-
-def test_ewma_stream_matches_batch_bitwise(spark, events_dir):
-    """Single closed batch: every per-event EWMA from the keyed-state
-    stream equals the batch trailing-window computation exactly."""
-    from distributed_mapreduce_spark.streaming.events_stream import ewma_stream
-    from distributed_mapreduce_spark.workload.events import q_events_ewma_trailing
-
-    stream = ewma_stream(read_events_stream(spark, events_dir))
-    run_to_memory(stream, "ewma_stream_t", output_mode="append")
-    got = {
-        r["event_id"]: r["ewma_micro"]
-        for r in spark.table("ewma_stream_t").collect()
-    }
-    expected = {
-        r["event_id"]: r["ewma_micro"]
-        for r in q_events_ewma_trailing(spark, "/root/testdata/sf0.001").collect()
-    }
-    assert got == expected and len(got) > 0
-
-
-def test_ewma_stream_state_survives_batch_boundary(spark, tmp_path):
-    """Two micro-batches split on event time: the second batch's EWMAs
-    must still see the first batch's trailing values through state."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.events_stream import ewma_stream
-    from distributed_mapreduce_spark.workload.events import q_events_ewma_trailing
-    from distributed_mapreduce_spark.workload.registry import table as load
-
-    ev = load(spark, "/root/testdata/sf0.001", "events")
-    cutoff = ev.agg(F.expr("percentile_approx(unix_micros(ts), 0.5)")).first()[0]
-    src = str(tmp_path / "ev_src")
-    # one file per half, fed one per trigger, in event-time order
-    ev.filter(F.unix_micros("ts") <= cutoff).coalesce(1).write.parquet(
-        src + "/b1"
-    )
-    ev.filter(F.unix_micros("ts") > cutoff).coalesce(1).write.parquet(
-        src + "/b2"
-    )
-    flat = str(tmp_path / "ev_flat")
-    import os
-
-    os.makedirs(flat)
-    import time as _time
-
-    now = _time.time()
-    for i, sub in enumerate(["b1", "b2"]):
-        for f in os.listdir(src + "/" + sub):
-            if f.endswith(".parquet"):
-                dst = f"{flat}/{i:03d}.parquet"
-                shutil.copy(f"{src}/{sub}/{f}", dst)
-                # FileStreamSource orders pending files by modification
-                # time and breaks ties arbitrarily — pin strictly
-                # increasing mtimes so batch 1 provably precedes batch 2.
-                os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream_src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    run_to_memory(ewma_stream(stream_src), "ewma_stream_2b", output_mode="append")
-    got = {
-        r["event_id"]: r["ewma_micro"]
-        for r in spark.table("ewma_stream_2b").collect()
-    }
-    expected = {
-        r["event_id"]: r["ewma_micro"]
-        for r in q_events_ewma_trailing(spark, "/root/testdata/sf0.001").collect()
-    }
-    assert got == expected and len(got) > 0
-
-
-def test_interpolate_stream_matches_batch_bitwise(spark, events_dir):
-    """Single closed batch: every interpolated grid row from the
-    keyed-state stream equals the batch lead()+sequence() computation
-    exactly (same grid instants, same integer blends)."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        interpolate_stream,
-    )
-    from distributed_mapreduce_spark.workload.events import (
-        q_events_gap_fill_interpolate,
-    )
-
-    stream = interpolate_stream(read_events_stream(spark, events_dir))
-    run_to_memory(stream, "interp_stream_t", output_mode="append")
-    got = {
-        (r["user_id"], r["g_us"]): r["value_e6"]
-        for r in spark.table("interp_stream_t").collect()
-    }
-    expected = {
-        (r["user_id"], r["g_us"]): r["value_e6"]
-        for r in q_events_gap_fill_interpolate(spark, "/root/testdata/sf0.001")
-        .select("user_id", F.unix_micros("ts").alias("g_us"), "value_e6")
-        .collect()
-    }
-    assert got == expected and len(got) > 0
-
-
-def test_stateful_handlers_survive_multi_chunk_groups(spark, tmp_path):
-    """Adversarial Arrow chunking: with maxRecordsPerBatch=7 and the
-    landing file written in DESCENDING event-time order, every state
-    group spans many chunks and each chunk arrives internally
-    out-of-order relative to the next. The handlers must concat+sort
-    the whole group before folding state (a per-chunk sort would
-    replay rows out of event-time order across chunk boundaries and
-    corrupt prev/tail state) — both stream outputs must still be
-    bit-identical to their batch twins."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        ewma_stream,
-        interpolate_stream,
-    )
-    from distributed_mapreduce_spark.workload.events import (
-        q_events_ewma_trailing,
-        q_events_gap_fill_interpolate,
-    )
-    from distributed_mapreduce_spark.workload.registry import table as load
-
-    landing = str(tmp_path / "desc_landing")
-    ev = load(spark, "/root/testdata/sf0.001", "events")
-    # one file, globally DESC by ts: chunks arrive newest-first
-    ev.orderBy(F.desc("ts"), F.desc("event_id")).coalesce(1).write.parquet(landing)
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        src = spark.readStream.schema(ev.schema).parquet(landing)
-        run_to_memory(ewma_stream(src), "ewma_chunked_t", output_mode="append")
-        got_ewma = {
-            r["event_id"]: r["ewma_micro"]
-            for r in spark.table("ewma_chunked_t").collect()
-        }
-        src2 = spark.readStream.schema(ev.schema).parquet(landing)
-        run_to_memory(
-            interpolate_stream(src2), "interp_chunked_t", output_mode="append"
-        )
-        got_interp = {
-            (r["user_id"], r["g_us"]): r["value_e6"]
-            for r in spark.table("interp_chunked_t").collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    exp_ewma = {
-        r["event_id"]: r["ewma_micro"]
-        for r in q_events_ewma_trailing(spark, "/root/testdata/sf0.001").collect()
-    }
-    exp_interp = {
-        (r["user_id"], r["g_us"]): r["value_e6"]
-        for r in q_events_gap_fill_interpolate(spark, "/root/testdata/sf0.001")
-        .select("user_id", F.unix_micros("ts").alias("g_us"), "value_e6")
-        .collect()
-    }
-    assert got_ewma == exp_ewma and len(got_ewma) > 0
-    assert got_interp == exp_interp and len(got_interp) > 0
-
-
-def test_interpolate_stream_state_survives_batch_boundary(spark, tmp_path):
-    """Two micro-batches split on event time: gaps STRADDLING the
-    boundary must still interpolate — the second batch's first event
-    pairs with the first batch's last event through keyed state."""
-    import os
-    import shutil
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        interpolate_stream,
-    )
-    from distributed_mapreduce_spark.workload.events import (
-        q_events_gap_fill_interpolate,
-    )
-    from distributed_mapreduce_spark.workload.registry import table as load
-
-    ev = load(spark, "/root/testdata/sf0.001", "events")
-    cutoff = ev.agg(F.expr("percentile_approx(unix_micros(ts), 0.5)")).first()[0]
-    src = str(tmp_path / "iv_src")
-    ev.filter(F.unix_micros("ts") <= cutoff).coalesce(1).write.parquet(src + "/b1")
-    ev.filter(F.unix_micros("ts") > cutoff).coalesce(1).write.parquet(src + "/b2")
-    flat = str(tmp_path / "iv_flat")
-    os.makedirs(flat)
-    now = _time.time()
-    for i, sub in enumerate(["b1", "b2"]):
-        for f in os.listdir(src + "/" + sub):
-            if f.endswith(".parquet"):
-                dst = f"{flat}/{i:03d}.parquet"
-                shutil.copy(f"{src}/{sub}/{f}", dst)
-                os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream_src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    run_to_memory(
-        interpolate_stream(stream_src), "interp_stream_2b", output_mode="append"
-    )
-    got = {
-        (r["user_id"], r["g_us"]): r["value_e6"]
-        for r in spark.table("interp_stream_2b").collect()
-    }
-    expected = {
-        (r["user_id"], r["g_us"]): r["value_e6"]
-        for r in q_events_gap_fill_interpolate(spark, "/root/testdata/sf0.001")
-        .select("user_id", F.unix_micros("ts").alias("g_us"), "value_e6")
-        .collect()
-    }
-    assert got == expected and len(got) > 0
-    # the boundary invariant proper: at least one emitted grid instant
-    # lies in a gap that straddles the cutoff
-    straddling = [g for (_, g) in got if g > cutoff]
-    assert straddling
-
-
-def test_cusum_stream_matches_batch_closed_form(spark, tmp_path):
-    """Streaming CUSUM (keyed running sum + running min) over the dense
-    hourly grid, split into two micro-batches on event time, must
-    reproduce the batch closed form C_h = S_h - min(0, min S_j)
-    bit-exactly for EVERY hour, and its max excursion must equal the
-    batch changepoint query's answer."""
-    import os
-    import shutil
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        cusum_stream,
-        run_to_memory,
-    )
-    from distributed_mapreduce_spark.workload.registry import table as load
-    from distributed_mapreduce_spark.workload.robust import (
-        q_events_cusum_changepoint,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    ev = load(spark, sf, "events")
-    b = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    types = ev.select("event_type").distinct()
-    spine = types.crossJoin(F.broadcast(b)).select(
-        "event_type",
-        F.explode(F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))).alias("h"),
-    )
-    cnt = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    dense = spine.join(cnt, ["event_type", "h"], "left").select(
-        "event_type", "h", F.coalesce("n", F.lit(0)).alias("n")
-    )
-    ref = {
-        r.event_type: r.ref_e6
-        for r in dense.groupBy("event_type")
-        .agg(
-            F.expr(
-                "CAST(CAST(sum(n) AS DECIMAL(38,0)) * 1000000"
-                " DIV count(*) AS BIGINT)"
-            ).alias("ref_e6")
-        )
-        .collect()
-    }
-
-    cutoff = dense.agg(F.expr("percentile_approx(unix_micros(h), 0.5)")).first()[0]
-    src = str(tmp_path / "grid_src")
-    dense.filter(F.unix_micros("h") <= cutoff).coalesce(1).write.parquet(src + "/b1")
-    dense.filter(F.unix_micros("h") > cutoff).coalesce(1).write.parquet(src + "/b2")
-    flat = str(tmp_path / "grid_flat")
-    os.makedirs(flat)
-    now = _time.time()
-    for i, sub in enumerate(["b1", "b2"]):
-        for f in os.listdir(src + "/" + sub):
-            if f.endswith(".parquet"):
-                dst = f"{flat}/{i:03d}.parquet"
-                shutil.copy(f"{src}/{sub}/{f}", dst)
-                os.utime(dst, (now + 10 * i, now + 10 * i))
-    stream_src = (
-        spark.readStream.schema(dense.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    run_to_memory(cusum_stream(stream_src, ref), "cusum_stream_t", output_mode="append")
-    got = {
-        (r.event_type, r.h): r.c_e6
-        for r in spark.table("cusum_stream_t").collect()
-    }
-
-    # independent Python recompute of the full excursion series
-    exp = {}
-    series: dict[str, list] = {}
-    for r in dense.collect():
-        series.setdefault(r.event_type, []).append((r.h, r.n))
-    for et, rows in series.items():
-        s = mins = 0
-        for h, n in sorted(rows):
-            s += n * 1_000_000 - ref[et]
-            mins = min(mins, s)
-            exp[(et, h)] = s - min(0, mins)
-    assert got == exp and len(got) > 0
-
-    # the streamed series' max excursion equals the batch query's row
-    batch = {
-        r.event_type: (r.max_cusum_e6, r.peak_hour)
-        for r in q_events_cusum_changepoint(spark, sf).collect()
-    }
-    best: dict[str, tuple] = {}
-    for (et, h), c in got.items():
-        cur = best.get(et)
-        if cur is None or c > cur[0] or (c == cur[0] and h < cur[1]):
-            best[et] = (c, h)
-    assert best == batch
-
-
-def test_streaming_dsir_gate_matches_batch_weights(spark, docs_dir):
-    """Frozen-model online gating == the batch in-plan scoring, bit for
-    bit: train λ offline (bounded collect), stream the same closed
-    corpus through the stateless gate in 4 micro-batches, and compare
-    every (n_grams, weight_sum, weight_pg_ppm, dsir_keep) row to
-    `dsir_importance_weights`."""
-    from distributed_mapreduce_spark.streaming.documents_stream import (
-        dsir_gate_stream,
-        read_documents_stream,
-    )
-    from distributed_mapreduce_spark.workload import QUERIES
-    from distributed_mapreduce_spark.workload.importance import train_dsir_model
-
-    lam = train_dsir_model(spark, "/root/testdata/sf0.001")
-    stream = dsir_gate_stream(
-        read_documents_stream(spark, docs_dir, max_files_per_trigger=1), lam
-    )
-    run_to_memory(stream, "dsir_stream", output_mode="append")
-    got = {
-        r.doc_id: (r.n_grams, r.weight_sum, r.weight_pg_ppm, r.dsir_keep)
-        for r in spark.table("dsir_stream").collect()
-    }
-    expected = {
-        r.doc_id: (r.n_grams, r.weight_sum, r.weight_pg_ppm, r.dsir_keep)
-        for r in QUERIES["dsir_importance_weights"](
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    assert got == expected and len(got) == 500
-    # model totality is enforced, not assumed
-    import pytest
-
-    with pytest.raises(ValueError):
-        dsir_gate_stream(
-            read_documents_stream(spark, docs_dir), {0: 1_000_000}
-        )
-
-
-def test_streaming_kmv_sketch_matches_batch(spark, docs_dir):
-    """Mergeable-sketch certification: after streaming the closed
-    corpus in 4 micro-batches, each source's FINAL emitted sketch row
-    (n_kmv, h_k, est_distinct) is bit-equal to the batch
-    `kmv_distinct_by_source` sketch, with state genuinely merged
-    across batches (more emissions than sources)."""
-    from distributed_mapreduce_spark.streaming.documents_stream import (
-        kmv_sketch_stream,
-        read_documents_stream,
-    )
-    from distributed_mapreduce_spark.workload import QUERIES
-
-    stream = kmv_sketch_stream(
-        read_documents_stream(spark, docs_dir, max_files_per_trigger=1)
-    )
-    run_to_memory(stream, "kmv_stream", output_mode="update")
-    emitted = spark.table("kmv_stream").collect()
-    # update-mode sink appends one row per touched key per batch; the
-    # final state per source has the largest n_kmv and, at equal n_kmv,
-    # the smallest h_k (the k-min set only ever improves)
-    final: dict[str, tuple[int, int, int]] = {}
-    for r in emitted:
-        cur = final.get(r.source)
-        cand = (r.n_kmv, -r.h_k, r.est_distinct)
-        if cur is None or (cand[0], cand[1]) > (cur[0], cur[1]):
-            final[r.source] = cand
-    got = {s: (v[0], -v[1], v[2]) for s, v in final.items()}
-    expected = {
-        r.source: (r.n_kmv, r.h_k, r.est_distinct)
-        for r in QUERIES["kmv_distinct_by_source"](
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    assert got == expected and len(got) == 20
-    assert len(emitted) > len(got), "state must carry across micro-batches"
-
-
-def test_streaming_cms_sketch_matches_batch(spark, docs_dir):
-    """Additive-merge certification for the streaming count-min
-    sketch: after streaming the closed corpus in micro-batches, the
-    final count per touched (row, bucket) cell equals the batch
-    counter grid built with the identical md5 row hashes — CMS state
-    merges by plain addition, so a closed stream must land exactly on
-    the batch grid."""
-    from pyspark.sql import functions as F
-
-    from distributed_mapreduce_spark.streaming.documents_stream import (
-        cms_sketch_stream,
-        read_documents_stream,
-    )
-    from distributed_mapreduce_spark.workload.sketches import CMS_D, _cms_bucket
-
-    stream = cms_sketch_stream(
-        read_documents_stream(spark, docs_dir, max_files_per_trigger=1)
-    )
-    run_to_memory(stream, "cms_stream", output_mode="update")
-    emitted = spark.table("cms_stream").collect()
-    # update mode: one row per touched cell per batch; counters only
-    # grow, so the final state per cell is the max emitted count
-    final: dict[tuple[int, int], int] = {}
-    for r in emitted:
-        k = (r.j, r.b)
-        final[k] = max(final.get(k, 0), r.c)
-    toks = table(spark, "/root/testdata/sf0.001", "documents").select(
-        F.explode(
-            F.filter(F.split(F.col("text"), " ", -1), lambda x: x != "")
-        ).alias("term")
-    )
-    expected: dict[tuple[int, int], int] = {}
-    for j in range(CMS_D):
-        for r in (
-            toks.select(_cms_bucket(F.col("term"), j).alias("b"))
-            .groupBy("b")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        ):
-            expected[(j, r.b)] = r.c
-    assert final == expected
-    assert len(emitted) > len(final), "state must carry across micro-batches"
-
-
-def test_certified_dropped_total_refuses_evicted_progress_log():
-    """The certified dropped_total must hard-fail, never silently
-    undercount, when recentProgress provably evicted entries: its
-    retention (numRecentProgressUpdates) caps the log, and with
-    max_files_per_trigger=1 a >cap landing dir runs more micro-batches
-    than the buffer holds (ADVICE r08)."""
-    import pytest as _pytest
-
-    from distributed_mapreduce_spark.streaming.events_stream import (
-        _certified_dropped_total,
-    )
-
-    entry = lambda n: {"stateOperators": [{"numRowsDroppedByWatermark": n}]}
-    # full coverage: plain sum (idle entries without stateOperators ignored)
-    log = [entry(2), {"stateOperators": []}, entry(3), {}]
-    assert _certified_dropped_total(log, n_batches=2) == 5
-    # eviction: 3 batches ran but only 2 stateful entries retained
-    with _pytest.raises(RuntimeError, match="retention buffer overflowed"):
-        _certified_dropped_total([entry(1), entry(1)], n_batches=3)

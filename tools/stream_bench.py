@@ -1,10 +1,10 @@
 """Streaming throughput/latency bench (VERDICT r08 #4).
 
-The nine streaming twins are bit-certified for correctness (batch-twin
-differentials in tests/test_streaming.py) but were never perf-measured.
-This harness drives Spark's `rate` source — a deterministic in-engine
-generator, no disk bottleneck — at fixed rows/sec through the three
-state-store-bearing operators:
+tests/test_streaming.py checks the streaming operators' results
+against batch twins; this harness measures their speed. It drives
+Spark's `rate` source — a deterministic in-engine generator, no disk
+bottleneck — at fixed rows/sec through the three state-store-bearing
+operators:
 
   - windowed_counts        (watermarked tumbling window aggregate)
   - dedup_events_stream    (dropDuplicatesWithinWatermark keyed state)
@@ -111,14 +111,13 @@ def main() -> int:
     )
     from distributed_mapreduce_spark.session import get_spark
     from distributed_mapreduce_spark.streaming.events_stream import (
-        _PROGRESS_RETENTION_CONF,
         dedup_events_stream,
         stateful_user_counts,
         windowed_counts,
     )
 
     spark = get_spark("stream_bench", cpus=32, shuffle_partitions=32)
-    spark.conf.set(_PROGRESS_RETENTION_CONF, "10000")
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
 
     # (operator, builder, output mode): update mode for the stateful
     # aggregates (append would hold rows until the watermark closes a
